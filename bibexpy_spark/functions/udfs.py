@@ -42,12 +42,6 @@ def for_config(cfg: DedupConfig):
         bh = kernels.band_hashes(sig, cfg)
         return pd.Series(list(bh))
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(shingles: pd.Series) -> pd.Series:
-        sets = [np.asarray(s, dtype=np.int64).view(np.uint64) for s in shingles]
-        sig = kernels.minhash_signatures(sets, cfg)
-        return pd.Series(list(sig.view(np.int64)))
-
     @pandas_udf(T.LongType())
     def simhash_udf(norm: pd.Series) -> pd.Series:
         return pd.Series(kernels.simhash64(norm, cfg))
@@ -56,7 +50,6 @@ def for_config(cfg: DedupConfig):
         "normalize": normalize_udf,
         "shingles": shingles_udf,
         "bands": bands_udf,
-        "minhash": minhash_udf,
         "simhash": simhash_udf,
     }
 

@@ -1,27 +1,15 @@
 """Vector math over `array<float/double>` embedding columns.
 
-Two interchangeable cosine backends (equal after the callers' ROUND(.,4) —
-property-tested in tests/test_training_ops.py):
+Cosine runs as an Arrow-batched pandas UDF: one ``np.einsum`` per batch for
+dot and both norms, float64 math.  Callers round at 4 decimals, which
+absorbs summation-order differences — the same tolerance the DuckDB
+oracles rely on.  At 100-TB ANN scale the cosine evaluation is the
+per-candidate inner loop, so it stays vectorized.
 
-- ``hof``   — JVM expression: ``aggregate(zip_with(a, b, *), 0.0, +)``.
-  HigherOrderFunctions are CodegenFallback, so the whole projection runs on
-  Catalyst's interpreted expression path — per-ELEMENT virtual dispatch and
-  boxing in the per-pair hot loop (the gram-stage first-run-cliff class,
-  PLANS.md r4), plus the norms are recomputed per PAIR.
-- ``kernel`` — Arrow-batched pandas UDF: one ``np.einsum`` per batch for
-  dot and both norms; float64 math like the HOF path.  Rounding at 4
-  decimals (done by the callers) absorbs summation-order differences, the
-  same tolerance the DuckDB oracles already rely on.
-
-At 100-TB ANN scale the cosine evaluation is the per-candidate inner loop:
-the kernel path is the designed default; ``hof`` stays selectable as the
-no-Python fallback and for A/B measurement (tools/profile_cosine.py).
-
-Both backends: a null endpoint or a zero-norm vector yields a NULL cosine
-(``try_divide`` on the HOF side, masked Float64 on the kernel side), so
-downstream ``cos >= t`` filters drop it — never NaN (NaN compares greater
-than every double in Spark and would leak through thresholds), and never an
-ANSI DIVIDE_BY_ZERO error.
+A null endpoint, a zero-norm vector or a length-mismatched pair yields a
+NULL cosine (masked Float64), so downstream ``cos >= t`` filters drop it —
+never NaN (NaN compares greater than every double in Spark and would leak
+through thresholds), and never an ANSI DIVIDE_BY_ZERO error.
 """
 
 from __future__ import annotations
@@ -32,18 +20,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: default backend for all entry queries (see module docstring)
-DEFAULT_BACKEND = "kernel"
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    """JVM HigherOrderFunction dot product (interpreted path; see above)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
 
 # DataType object, not a DDL string: string return types are parsed via the
 # active SparkContext, which would make this module unimportable before a
@@ -51,9 +27,8 @@ def dot_expr(a: Column, b: Column) -> Column:
 @F.pandas_udf(T.DoubleType())
 def _cos_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     # Ragged batches (length drift between the two sides, or between rows —
-    # a truncated write, schema evolution) must DEGRADE, not crash: the HOF
-    # backend yields NULL for a length-mismatched pair (zip_with pads with
-    # null → null dot), so this path does too, and rows are einsum'd in
+    # a truncated write, schema evolution) must DEGRADE, not crash: a
+    # length-mismatched pair yields NULL, and rows are einsum'd in
     # per-length groups (one group — the plain np.stack — in healthy data).
     ok = a.notna() & b.notna()
     out = pd.array(np.full(len(a), np.nan), dtype="Float64")
@@ -84,15 +59,7 @@ def _cos_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return res.mask(res.isna(), pd.NA)
 
 
-def cosine(a: Column, b: Column, backend: str = DEFAULT_BACKEND) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two embedding columns (unrounded; callers apply
     ``F.round(cos, 4)`` so results are reproducible across engines)."""
-    if backend == "hof":
-        # try_divide: NULL (not an ANSI DIVIDE_BY_ZERO error, not NaN) on a
-        # zero-norm vector — the kernel backend's semantics exactly
-        return F.try_divide(
-            dot_expr(a, b), F.sqrt(dot_expr(a, a)) * F.sqrt(dot_expr(b, b))
-        )
-    if backend != "kernel":
-        raise ValueError(f"unknown cosine backend: {backend!r}")
     return _cos_udf(a, b)

@@ -5,7 +5,9 @@ The operational mode at 10^12-turn scale is not one batch run but a daily
 delta: sign and candidate-join ONLY the new conversations, reuse the prior
 corpus's persisted signatures (the pipeline's ``signed`` stage table) and
 cluster assignments, and emit the updated clustering plus a remap of any
-prior clusters that merged.
+prior clusters that merged.  ``fold_state`` wraps this for a state
+directory: it reads the prior tables, runs the delta and returns the next
+state (the submit job's --incremental mode and the stream both use it).
 
 Deltas may also GROW conversations already clustered (the common shape for
 live transcript tables: a batch appends turns to an open ``conv_id`` —
@@ -52,20 +54,77 @@ Scale shape:
 
 from __future__ import annotations
 
+import os
+from functools import reduce
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
 from bibexpy_spark.functions import udfs
-from bibexpy_spark.operators import assembly, components, containment, exact, lsh
+from bibexpy_spark.operators import assembly, components, containment, exact
 from bibexpy_spark.operators import simhash as simhash_op
 from bibexpy_spark.operators import verify as verify_op
-from bibexpy_spark.pipeline import surrogate_id
+from bibexpy_spark.pipeline import check_extra_cluster_edges, surrogate_id
 
 _SIG_COLS = ["conv_id", "content_sha", "shingles", "band_hashes"]
+
+
+# -- delta-state layout ------------------------------------------------------
+# A state directory (a batch run's output, an incremental run's output, the
+# stream's state dir) holds ``signed``, ``clusters`` and one pair table per
+# enabled pass.  Each pair table is named after its pipeline.run_dedup
+# result key; run_incremental_dedup emits the delta under the same key plus
+# ``_new``.  fold_state is the only reader and composer of this layout.
+
+
+_PAIR_ENDS = {
+    "containment_prefix": ("inner_id", "outer_id"),
+    "containment_pairs": ("inner_id", "outer_id"),
+    "simhash_pairs": ("a_id", "b_id"),
+}
+
+
+def _pair_tables(
+    with_containment: bool, with_simhash_pass: bool, containment_mode: str
+) -> list[str]:
+    """Names of the enabled passes' pair tables (endpoints in _PAIR_ENDS)."""
+    tables = []
+    if with_containment:
+        tables.append("containment_prefix")
+        if containment_mode != "prefix":
+            tables.append("containment_pairs")
+    if with_simhash_pass:
+        tables.append("simhash_pairs")
+    return tables
+
+
+def _signed_columns(with_containment: bool, with_simhash_pass: bool) -> list[str]:
+    """Columns of the ``signed`` state: the signature set plus what the
+    enabled passes read on the old side of a later delta."""
+    return (
+        _SIG_COLS
+        + (["norm_text"] if with_containment else [])
+        + (["simhash"] if with_simhash_pass else [])
+    )
+
+
+def batch_state(
+    res: dict[str, Any],
+    with_containment: bool,
+    with_simhash_pass: bool,
+    containment_mode: str,
+) -> dict[str, DataFrame]:
+    """The state tables of a pipeline.run_dedup result, by name — exactly
+    what a later fold_state over the written directory reads back."""
+    sig_cols = _signed_columns(with_containment, with_simhash_pass)
+    state = {"signed": res["signed"].select(*sig_cols), "clusters": res["clusters"]}
+    for name in _pair_tables(with_containment, with_simhash_pass, containment_mode):
+        state[name] = res[name]
+    return state
 
 
 def compose_pair_state(
@@ -76,11 +135,11 @@ def compose_pair_state(
     b: str,
 ) -> DataFrame:
     """The pair-state composition contract, single-sourced (it is
-    equivalence-critical and consumed by both the spark-submit job and the
-    streaming handler): prior pairs MINUS pairs touching a re-signed
-    conversation (their live successors are re-emitted by the delta ops)
-    UNION the delta pairs == the batch pass over old ∪ new
-    (operators/containment.py + operators/simhash.py delta-op contract).
+    equivalence-critical; fold_state applies it per pair table): prior
+    pairs MINUS pairs touching a re-signed conversation (their live
+    successors are re-emitted by the delta ops) UNION the delta pairs ==
+    the batch pass over old ∪ new (operators/containment.py +
+    operators/simhash.py delta-op contract).
 
     ``resigned_ids`` is a single-column ``conv_id`` frame; ``a``/``b`` name
     the pair endpoint columns (inner_id/outer_id or a_id/b_id)."""
@@ -173,13 +232,7 @@ def run_incremental_dedup(
     """
     from pyspark.sql import types as T
 
-    bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
-    if bad_sources:
-        raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
-    if "containment" in extra_cluster_edges and not with_containment:
-        raise ValueError("extra_cluster_edges='containment' needs with_containment")
-    if "simhash" in extra_cluster_edges and not with_simhash_pass:
-        raise ValueError("extra_cluster_edges='simhash' needs with_simhash_pass")
+    check_extra_cluster_edges(extra_cluster_edges, with_containment, with_simhash_pass)
     if with_containment and containment_mode not in ("prefix", "general", "general_sa"):
         raise ValueError(f"unknown containment_mode: {containment_mode!r}")
 
@@ -619,3 +672,102 @@ def run_incremental_dedup(
     }
     out.update(delta_passes)
     return out
+
+
+def _read_state(spark: SparkSession, prior_dir: str, name: str) -> DataFrame:
+    try:
+        return spark.read.parquet(os.path.join(prior_dir, name))
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        raise ValueError(
+            f"prior state {prior_dir!r} has no {name}/ table: it was written "
+            "with that pass off or in another containment mode — rebuild it "
+            "with a batch run that has the same passes on"
+        ) from None
+
+
+def fold_state(
+    spark: SparkSession,
+    new_turns: DataFrame,
+    prior_dir: str | None,
+    cfg: DedupConfig = CANONICAL,
+    prior_turns: DataFrame | None = None,
+    with_containment: bool = False,
+    with_simhash_pass: bool = False,
+    containment_mode: str = "prefix",
+    extra_cluster_edges: tuple[str, ...] = (),
+) -> tuple[dict[str, Any], dict[str, DataFrame]]:
+    """Fold ``new_turns`` into the state under ``prior_dir`` (``None``:
+    bootstrap from empty state) via run_incremental_dedup.
+
+    Reads ``signed``, ``clusters`` and each enabled pass's pair table, and
+    raises ValueError before computing anything when one is missing or
+    ``signed`` lacks a column an enabled pass reads — composing against a
+    missing table would silently truncate the next state to delta-only
+    pairs.  The prior pair tables of ``extra_cluster_edges`` sources feed
+    ``prior_extra_pairs``.
+
+    Returns ``(res, next_state)``: the run_incremental_dedup result and the
+    next state tables by name — ``signed`` (prior rows minus re-signed ones,
+    plus the delta's), ``clusters`` and each pair table composed via
+    compose_pair_state.  Writing every table of ``next_state`` to a fresh
+    directory gives the ``prior_dir`` of the next delta."""
+    check_extra_cluster_edges(extra_cluster_edges, with_containment, with_simhash_pass)
+    pairs = _pair_tables(with_containment, with_simhash_pass, containment_mode)
+    sig_cols = _signed_columns(with_containment, with_simhash_pass)
+    prior: dict[str, DataFrame] = {}
+    prior_extra = None
+    if prior_dir is not None:
+        for name in ["signed", "clusters", *pairs]:
+            prior[name] = _read_state(spark, prior_dir, name)
+        missing = [c for c in sig_cols if c not in prior["signed"].columns]
+        if missing:
+            raise ValueError(
+                f"prior state {prior_dir!r}: signed/ lacks {missing}, which "
+                "the enabled passes read — it was written with those passes "
+                "off"
+            )
+        edge_table = {
+            "containment": "containment_prefix"
+            if containment_mode == "prefix" else "containment_pairs",
+            "simhash": "simhash_pairs",
+        }
+        legs = []
+        for source in extra_cluster_edges:
+            table = edge_table[source]
+            a, b = _PAIR_ENDS[table]
+            legs.append(
+                prior[table].select(F.col(a).alias("a_id"), F.col(b).alias("b_id"))
+            )
+        if legs:
+            prior_extra = reduce(DataFrame.unionByName, legs)
+
+    res = run_incremental_dedup(
+        spark, new_turns, prior.get("signed"), prior.get("clusters"), cfg=cfg,
+        prior_turns=prior_turns,
+        with_containment=with_containment,
+        with_simhash_pass=with_simhash_pass,
+        containment_mode=containment_mode,
+        extra_cluster_edges=extra_cluster_edges,
+        prior_extra_pairs=prior_extra,
+    )
+    # upsert: a re-signed (grown) conversation replaces its prior row
+    signed = res["signed_new"].select(*sig_cols)
+    if prior:
+        signed = (
+            prior["signed"].select(*sig_cols)
+            .join(res["signed_new"].select("conv_id"), "conv_id", "left_anti")
+            .unionByName(signed)
+        )
+    next_state = {"signed": signed, "clusters": res["clusters"]}
+    for table in pairs:
+        delta = res[table + "_new"]
+        next_state[table] = (
+            compose_pair_state(
+                prior[table], delta, res["resigned_prior_ids"], *_PAIR_ENDS[table]
+            )
+            if prior
+            else delta
+        )
+    return res, next_state

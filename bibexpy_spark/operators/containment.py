@@ -411,8 +411,8 @@ def containment_index_stats(
     signed: DataFrame, max_shingle_freq: int = 10_000
 ) -> DataFrame:
     """Dropped-shingle metrics for the containment inverted index (the
-    never-silent contract _oriented_containment_candidates promises —
-    ngram.gram_index_stats analogue): ONE row with n_shingles (distinct),
+    never-silent contract _oriented_containment_candidates promises):
+    ONE row with n_shingles (distinct),
     n_hot_shingles (df > cap, dropped from the index), n_allhot_rows (rows
     whose EVERY shingle is hot — invisible to the interior leg; the prefix
     leg still covers their prefix-anchored pairs), max_df.  Single-job

@@ -42,6 +42,22 @@ def surrogate_id(col):
     )
 
 
+def check_extra_cluster_edges(
+    extra_cluster_edges: tuple[str, ...],
+    with_containment: bool,
+    with_simhash_pass: bool,
+) -> None:
+    """Raise ValueError when an extra cluster-edge source is unknown or its
+    pass is off (shared by the batch, delta and submit-job entry points)."""
+    bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
+    if bad_sources:
+        raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
+    if "containment" in extra_cluster_edges and not with_containment:
+        raise ValueError("extra_cluster_edges='containment' needs with_containment")
+    if "simhash" in extra_cluster_edges and not with_simhash_pass:
+        raise ValueError("extra_cluster_edges='simhash' needs with_simhash_pass")
+
+
 def run_dedup(
     spark: SparkSession,
     turns: DataFrame,
@@ -70,6 +86,7 @@ def run_dedup(
     edges use whichever pass ``containment_mode`` selects; each source
     requires its pass to be enabled.
     """
+    check_extra_cluster_edges(extra_cluster_edges, with_containment, with_simhash_pass)
 
     def materialize(stage: str, build) -> DataFrame:
         if run is not None:
@@ -149,14 +166,6 @@ def run_dedup(
         surrogate_id(F.col("b_id")).alias("b_id"),
     )
     all_edges = exact_edges_nid.unionByName(dup_edges_nid)
-
-    bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
-    if bad_sources:
-        raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
-    if "containment" in extra_cluster_edges and not with_containment:
-        raise ValueError("extra_cluster_edges='containment' needs with_containment")
-    if "simhash" in extra_cluster_edges and not with_simhash_pass:
-        raise ValueError("extra_cluster_edges='simhash' needs with_simhash_pass")
 
     # optional passes (signals by default; edge sources when opted in) —
     # built before clustering so their pairs can join the edge set

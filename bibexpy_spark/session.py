@@ -9,6 +9,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """A quarter of host MemTotal, never above 48g: a fixed 48g heap lets
+    the JVM grow past what a small host has and get killed mid-session."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{max(512, min(48 * 1024, kib // 4 // 1024))}m"
+
+
 def build_spark(
     app_name: str = "bibexpy_spark",
     cores: int | None = None,
@@ -37,7 +48,7 @@ def build_spark(
         # 4k rows/batch)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -17,16 +17,16 @@ re-signs grown conversations (latest-wins on (conv_id, turn_idx)) instead
 of corrupting the state with duplicate conv_id rows.
 
 State layout under ``state_dir``:
-    signed/    conv_id, content_sha, shingles, band_hashes  (grows per batch;
-               re-signed conversations replace their prior row)
-    clusters/  conv_id, cluster_id                          (full assignment)
+    signed/ · clusters/ · containment_prefix/ · containment_pairs/ ·
+    simhash_pairs/
+               the delta state, read and composed by
+               ``incremental.fold_state`` (the same layout every submit-job
+               output has; a pair table is present only when its pass is on,
+               and a restart with a pass whose table is missing fails the
+               batch before anything is staged)
     turns/     ingested turn rows (latest-wins on (conv_id, turn_idx)) —
                the prior_turns source for grown-conversation re-signing
     remaps/    batch_id, old_cluster_id, cluster_id         (append-only audit)
-    containment_prefix/ · containment_pairs/ · simhash_pairs/
-               composed pair state of the optional passes (prior minus
-               resigned-touching ∪ delta each batch — equals the batch pass
-               over everything ingested; only present when the pass is on)
     _committed/<batch_id>  marker files — a batch with a marker is skipped on
                checkpoint replay (the swap already committed)
     _swap_intent  write-ahead intent for the multi-table swap: written only
@@ -49,12 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
-from bibexpy_spark.incremental import (
-    _SIG_COLS,
-    compose_pair_state,
-    merge_turns_latest_wins,
-    run_incremental_dedup,
-)
+from bibexpy_spark.incremental import fold_state, merge_turns_latest_wins
 from bibexpy_spark.streaming.ingest import read_turn_stream
 
 
@@ -183,19 +178,11 @@ def foreach_batch_incremental_dedup(
     ``max_files_per_trigger=1`` gives one micro-batch per dropped file —
     the deterministic shape the equivalence test uses.
 
-    With ``with_containment`` / ``with_simhash_pass`` the state additionally
-    carries the composed PAIR tables of those passes (containment_prefix/,
-    containment_pairs/ for general modes, simhash_pairs/), folded per batch
-    as prior-minus-resigned ∪ delta — the same composition the submit job's
-    --incremental mode performs, so after any batch the pair state equals
-    the batch pass over everything ingested so far.  The signed state then
-    also carries the columns those passes read (norm_text / simhash).
-
-    ``extra_cluster_edges`` folds the named passes' pairs into the
-    clustering edge set per batch (mirrors ``pipeline.run_dedup``); the
-    handler feeds its own maintained pair state back as
-    ``prior_extra_pairs``, so the chain stays batch-equivalent to a full
-    run with the same sources."""
+    The pass flags and ``extra_cluster_edges`` mean what they mean for
+    ``incremental.fold_state``, which each batch calls on ``state_dir``:
+    after any batch the pair state equals the batch pass over everything
+    ingested so far, and the clustering equals a full run with the same
+    edge sources."""
     # exclusive writer lease on the state dir: batch markers serialize
     # replays WITHIN one stream, but a second stream/job pointed at the
     # same state dir would interleave the multi-table swaps undetected
@@ -208,28 +195,8 @@ def foreach_batch_incremental_dedup(
         spark, source_path, max_files_per_trigger=max_files_per_trigger
     )
     signed_p = os.path.join(state_dir, "signed")
-    clusters_p = os.path.join(state_dir, "clusters")
     turns_p = os.path.join(state_dir, "turns")
     remaps_p = os.path.join(state_dir, "remaps")
-
-    sig_cols = list(_SIG_COLS)
-    if with_containment:
-        sig_cols.append("norm_text")
-    if with_simhash_pass:
-        sig_cols.append("simhash")
-    # (delta-output key, state subdir, endpoint column names)
-    pair_states: list[tuple[str, str, str, str]] = []
-    if with_containment:
-        pair_states.append(
-            ("containment_prefix_new", "containment_prefix", "inner_id", "outer_id")
-        )
-        if containment_mode != "prefix":
-            pair_states.append(
-                ("containment_pairs_new", "containment_pairs", "inner_id", "outer_id")
-            )
-    if with_simhash_pass:
-        pair_states.append(("simhash_pairs_new", "simhash_pairs", "a_id", "b_id"))
-
     marker_dir = os.path.join(state_dir, "_committed")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -254,8 +221,6 @@ def foreach_batch_incremental_dedup(
         if os.path.exists(marker):
             return
         have_state = os.path.exists(signed_p)
-        prior_s = spark.read.parquet(signed_p) if have_state else None
-        prior_c = spark.read.parquet(clusters_p) if have_state else None
         if have_state and not os.path.exists(turns_p):
             # refuse loudly rather than seed turns/ from this batch alone: a
             # PARTIAL turns state would later let a grown conversation from
@@ -272,66 +237,26 @@ def foreach_batch_incremental_dedup(
                 "incomplete turn set)"
             )
         prior_t = spark.read.parquet(turns_p) if have_state else None
-        prior_extra = None
-        if extra_cluster_edges and have_state:
-            legs = []
-            if "containment" in extra_cluster_edges:
-                sub = (
-                    "containment_pairs"
-                    if containment_mode != "prefix"
-                    else "containment_prefix"
-                )
-                p = os.path.join(state_dir, sub)
-                if os.path.exists(p):
-                    legs.append(
-                        spark.read.parquet(p).select(
-                            F.col("inner_id").alias("a_id"),
-                            F.col("outer_id").alias("b_id"),
-                        )
-                    )
-            if "simhash" in extra_cluster_edges:
-                p = os.path.join(state_dir, "simhash_pairs")
-                if os.path.exists(p):
-                    legs.append(spark.read.parquet(p).select("a_id", "b_id"))
-            for leg in legs:
-                prior_extra = leg if prior_extra is None else prior_extra.unionByName(leg)
-        res = run_incremental_dedup(
-            spark, batch_df, prior_s, prior_c, cfg=cfg, prior_turns=prior_t,
+        res, next_state = fold_state(
+            spark, batch_df, state_dir if have_state else None, cfg=cfg,
+            prior_turns=prior_t,
             with_containment=with_containment,
             with_simhash_pass=with_simhash_pass,
             containment_mode=containment_mode,
             extra_cluster_edges=extra_cluster_edges,
-            prior_extra_pairs=prior_extra,
         )
         try:
-            # upsert semantics: a re-signed (grown) conversation REPLACES its
-            # prior signature row; new conversations append
-            new_signed = res["signed_new"].select(*sig_cols)
-            if have_state:
-                new_signed = (
-                    prior_s.select(*sig_cols)
-                    .join(res["signed_new"].select("conv_id"), "conv_id", "left_anti")
-                    .unionByName(new_signed)
-                )
-            new_turns_state = batch_df
-            if prior_t is not None:
-                new_turns_state = merge_turns_latest_wins(prior_t, batch_df)
+            next_state["turns"] = (
+                batch_df if prior_t is None
+                else merge_turns_latest_wins(prior_t, batch_df)
+            )
             # STAGE every output (remap delta included) while the prior state
             # dirs are still readable — their lineage reads those parquets —
             # THEN commit all swaps together and drop the marker last, so a
             # crash at any point either replays the whole batch or skips it
-            _stage(res["clusters"], clusters_p)
-            _stage(new_signed, signed_p)
-            _stage(new_turns_state, turns_p)
-            for delta_key, subdir, a, b in pair_states:
-                p = os.path.join(state_dir, subdir)
-                composed = res[delta_key]
-                if have_state and os.path.exists(p):
-                    composed = compose_pair_state(
-                        spark.read.parquet(p), composed,
-                        res["resigned_prior_ids"], a, b,
-                    )
-                _stage(composed, p)
+            swap_paths = [os.path.join(state_dir, name) for name in next_state]
+            for path, df in zip(swap_paths, next_state.values()):
+                _stage(df, path)
             remap_tmp = os.path.join(state_dir, f"_remap_delta_{batch_id}")
             res["cluster_remap"].withColumn("batch_id", F.lit(batch_id)).write.mode(
                 "overwrite"
@@ -340,9 +265,6 @@ def foreach_batch_incremental_dedup(
             # THEN swap.  A crash anywhere from here to the intent removal is
             # rolled FORWARD by recover_pending_swap (start of handle / stream
             # start) — the state can never be read mixed old/new by a replay
-            swap_paths = [clusters_p, signed_p, turns_p] + [
-                os.path.join(state_dir, subdir) for _k, subdir, _a, _b in pair_states
-            ]
             _write_intent(state_dir, batch_id, swap_paths)
             for path in swap_paths:
                 _commit(path)

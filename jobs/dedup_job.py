@@ -11,16 +11,17 @@ The north rule's deployment contract: the pipeline runs via
         [--no-simhash] [--containment] [--containment-mode prefix|general|general_sa] \\
         [--cluster-edges containment,simhash] [--shuffle-partitions N]
 
-Delta mode (daily increments; each run writes the state the next needs —
-signed signatures, clusters, and when the passes are on, the composed
-containment / SimHash pair tables):
+Delta mode (daily increments; every run, batch or delta, writes the state
+the next delta needs — signed signatures, clusters, and when the passes are
+on, the containment / SimHash pair tables; layout in
+bibexpy_spark.incremental.fold_state):
 
     ... dedup_job.py --incremental \\
-        --input <new turns> --output <out2> \\
-        --prior-signed <out1>/signed --prior-clusters <out1>/clusters \\
-        [--prior-containment-prefix <out1>/containment_prefix] \\
-        [--prior-containment-pairs <out1>/containment_pairs] \\
-        [--prior-simhash-pairs <out1>/simhash_pairs]
+        --input <new turns> --output <out2> --prior-state <out1> \\
+        [--prior-turns <turns parquet>]
+
+<out1> is any earlier --output run with the same passes on; each run writes
+a fresh directory.
 
 The script takes the ambient SparkSession from spark-submit (no master
 override — the cluster manager decides), runs the full
@@ -80,30 +81,18 @@ def main(argv: list[str] | None = None) -> None:
              "to union into connected components — the reference's "
              "merge_references fold-into-container semantics; default: those "
              "passes stay separate signals.  In --incremental mode the "
-             "matching --prior-* pair state is required and the result "
-             "equals a batch run with the same sources",
+             "result equals a batch run with the same sources",
     )
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--incremental", action="store_true",
                     help="treat --input as a DELTA batch against prior state")
-    ap.add_argument("--prior-signed", default=None,
-                    help="prior corpus signatures parquet (a previous run's "
-                         "<output>/signed)")
-    ap.add_argument("--prior-clusters", default=None,
-                    help="prior cluster assignments parquet (a previous "
-                         "run's <output>/clusters)")
+    ap.add_argument("--prior-state", default=None,
+                    help="state dir of an earlier run (its --output) to fold "
+                         "the delta into in --incremental mode")
     ap.add_argument("--prior-turns", default=None,
                     help="previously ingested turn rows (parquet) — required "
                          "when the delta appends turns to conversations "
-                         "already in --prior-signed (retract-and-resign)")
-    ap.add_argument("--prior-containment-prefix", default=None,
-                    help="prior containment_prefix pair state (a previous "
-                         "run's <output>/containment_prefix); composed with "
-                         "this delta's pairs in --incremental mode")
-    ap.add_argument("--prior-containment-pairs", default=None,
-                    help="prior containment_pairs state (general modes)")
-    ap.add_argument("--prior-simhash-pairs", default=None,
-                    help="prior simhash_pairs state")
+                         "already in --prior-state (retract-and-resign)")
     ap.add_argument("--make-zip", action="store_true",
                     help="write bibexpy_spark.zip for --py-files and exit")
     ap.add_argument("--bench-json", default=None,
@@ -120,49 +109,28 @@ def main(argv: list[str] | None = None) -> None:
     if not args.input or not args.output:
         ap.error("--input and --output are required (or use --make-zip)")
 
-    edges = tuple(e for e in args.cluster_edges.split(",") if e)
-    bad = set(edges) - {"containment", "simhash"}
-    if bad:
-        ap.error(f"unknown --cluster-edges source(s): {sorted(bad)}")
-    if "containment" in edges and not args.containment:
-        ap.error("--cluster-edges containment needs --containment")
-    if "simhash" in edges and args.no_simhash:
-        ap.error("--cluster-edges simhash conflicts with --no-simhash")
-    if args.incremental:
-        # the composed pair tables written to <output> ARE the state the
-        # NEXT delta run reads — composing against a missing prior table
-        # would silently truncate them to delta-only pairs and every later
-        # run would inherit the loss, so each enabled pass hard-requires
-        # its prior pair state here (any prior run with the pass on wrote
-        # it; a prior state written WITHOUT the pass cannot serve a run
-        # WITH it anyway — the signed-column checks below enforce that)
-        if args.containment and not args.prior_containment_prefix:
-            ap.error("--containment with --incremental needs "
-                     "--prior-containment-prefix (the prior run's "
-                     "containment_prefix output)")
-        if (args.containment and args.containment_mode != "prefix"
-                and not args.prior_containment_pairs):
-            ap.error("--containment-mode general/general_sa with "
-                     "--incremental needs --prior-containment-pairs (the "
-                     "prior run's containment_pairs output; a prior run in "
-                     "prefix mode never produced one — re-run the batch in "
-                     "a general mode first)")
-        if not args.no_simhash and not args.prior_simhash_pairs:
-            ap.error("the SimHash pass with --incremental needs "
-                     "--prior-simhash-pairs (the prior run's simhash_pairs "
-                     "output); pass --no-simhash to skip the pass")
+    from bibexpy_spark.pipeline import check_extra_cluster_edges
 
-        # refuse in-place state updates: every prior table is read LAZILY
-        # while the matching output is written with mode("overwrite") — if a
-        # --prior-* path sits at/under --output, the overwrite deletes the
-        # state mid-read (Spark's self-overwrite detection only covers
-        # catalog tables, not file sources), corrupting the very state the
-        # next delta run needs.  Daily increments must write a fresh
+    edges = tuple(e for e in args.cluster_edges.split(",") if e)
+    try:
+        check_extra_cluster_edges(edges, args.containment, not args.no_simhash)
+    except ValueError as e:
+        ap.error(str(e))
+    if args.incremental:
+        if not args.prior_state:
+            ap.error("--incremental requires --prior-state (an earlier run's "
+                     "--output)")
+
+        # refuse in-place state updates: the prior tables are read LAZILY
+        # while the outputs are written with mode("overwrite") — if the
+        # prior state and --output overlap, the overwrite deletes the state
+        # mid-read (Spark's self-overwrite detection only covers catalog
+        # tables, not file sources).  Daily increments must write a fresh
         # directory per run (docstring: out1 -> out2).
         def _norm(p: str) -> str:
             # a file:// scheme names the same local path realpath sees —
             # strip it first so mixed forms (--output file:///x/out vs
-            # --prior-signed /x/out/signed) cannot evade the guard
+            # --prior-state /x/out) cannot evade the guard
             import re as _re
 
             m = _re.match(r"^file:/+", p)
@@ -171,18 +139,12 @@ def main(argv: list[str] | None = None) -> None:
             return p.rstrip("/") if "://" in p else os.path.realpath(p)
 
         out_n = _norm(args.output)
-        for flag, path in [
-            ("--prior-signed", args.prior_signed),
-            ("--prior-clusters", args.prior_clusters),
-            ("--prior-turns", args.prior_turns),
-            ("--prior-containment-prefix", args.prior_containment_prefix),
-            ("--prior-containment-pairs", args.prior_containment_pairs),
-            ("--prior-simhash-pairs", args.prior_simhash_pairs),
-        ]:
-            if path and (_norm(path) == out_n
-                         or _norm(path).startswith(out_n + os.sep)
-                         or _norm(path).startswith(out_n + "/")):
-                ap.error(f"{flag} {path!r} lies inside --output "
+        for flag, path in [("--prior-state", args.prior_state),
+                           ("--prior-turns", args.prior_turns)]:
+            p_n = _norm(path) if path else None
+            if p_n and (p_n == out_n or p_n.startswith(out_n + "/")
+                        or out_n.startswith(p_n + "/")):
+                ap.error(f"{flag} {path!r} overlaps --output "
                          f"{args.output!r}: the overwrite would delete the "
                          "prior state while it is still being read lazily — "
                          "each incremental run must write a fresh output "
@@ -197,114 +159,33 @@ def main(argv: list[str] | None = None) -> None:
         )
     spark = builder.getOrCreate()
 
-    from bibexpy_spark import pipeline
+    from bibexpy_spark import incremental, pipeline
     from bibexpy_spark.config import CANONICAL
     from bibexpy_spark.lineage import RunContext, input_token_for_paths
 
     turns = (
         spark.table(args.input) if args.table else spark.read.parquet(args.input)
     )
-    # signed-state columns: the base signature set, plus what the enabled
-    # passes need to run delta-mode later (containment reads norm_text,
-    # the fuzzy pass reads simhash) — a prior state written WITHOUT a pass
-    # cannot serve an --incremental run WITH it
-    _sig_cols = ["conv_id", "content_sha", "shingles", "band_hashes"]
-    if args.containment:
-        _sig_cols.append("norm_text")
-    if not args.no_simhash:
-        _sig_cols.append("simhash")
-
     if args.incremental:
-        # delta mode: cluster the new batch against prior state; every run
-        # writes the state the NEXT delta run needs (signed = old ∪ new,
-        # pair tables = prior-minus-resigned ∪ delta), so daily increments
-        # compose without ever re-reading the corpus
-        if not args.prior_signed or not args.prior_clusters:
-            ap.error("--incremental requires --prior-signed and --prior-clusters")
-        from bibexpy_spark import incremental
-
-        prior_signed = spark.read.parquet(args.prior_signed)
-        prior_clusters = spark.read.parquet(args.prior_clusters)
-        prior_turns = (
-            spark.read.parquet(args.prior_turns) if args.prior_turns else None
-        )
-        if args.containment and "norm_text" not in prior_signed.columns:
-            ap.error("--containment in --incremental mode needs a prior "
-                     "signed state written with --containment (norm_text "
-                     "column missing)")
-        if not args.no_simhash and "simhash" not in prior_signed.columns:
-            ap.error("the SimHash pass in --incremental mode needs a prior "
-                     "signed state written without --no-simhash (simhash "
-                     "column missing); pass --no-simhash to skip the pass")
-        prior_extra = None
-        if edges:
-            from pyspark.sql import functions as F
-
-            legs = []
-            if "containment" in edges:
-                cpath = (args.prior_containment_pairs
-                         if args.containment_mode != "prefix"
-                         else args.prior_containment_prefix)
-                legs.append(
-                    spark.read.parquet(cpath).select(
-                        F.col("inner_id").alias("a_id"),
-                        F.col("outer_id").alias("b_id"),
-                    )
-                )
-            if "simhash" in edges:
-                legs.append(
-                    spark.read.parquet(args.prior_simhash_pairs)
-                    .select("a_id", "b_id")
-                )
-            prior_extra = legs[0]
-            for leg in legs[1:]:
-                prior_extra = prior_extra.unionByName(leg)
-        res = incremental.run_incremental_dedup(
-            spark, turns, prior_signed, prior_clusters, cfg=CANONICAL,
-            prior_turns=prior_turns,
-            with_containment=args.containment,
-            with_simhash_pass=not args.no_simhash,
-            containment_mode=args.containment_mode,
-            extra_cluster_edges=edges,
-            prior_extra_pairs=prior_extra,
-        )
-        res["clusters"].write.mode("overwrite").parquet(
-            os.path.join(args.output, "clusters")
-        )
-        res["cluster_remap"].write.mode("overwrite").parquet(
-            os.path.join(args.output, "cluster_remap")
-        )
-        # next-delta state: signed_new supersedes any prior row for the same
-        # conv_id (grown conversations were retracted and re-signed)
-        prior_signed.select(*_sig_cols).join(
-            res["signed_new"].select("conv_id"), "conv_id", "left_anti"
-        ).unionByName(
-            res["signed_new"].select(*_sig_cols)
-        ).write.mode("overwrite").parquet(os.path.join(args.output, "signed"))
-
-        def compose_pairs(delta_key: str, prior_path: str,
-                          out_name: str, a: str, b: str) -> None:
-            """Write the composed pair state via the single-sourced
-            incremental.compose_pair_state (delta-op equivalence contract).
-            prior_path is hard-required by the flag validation above —
-            composing without it would silently truncate the state the
-            next delta run reads to delta-only pairs."""
-            incremental.compose_pair_state(
-                spark.read.parquet(prior_path), res[delta_key],
-                res["resigned_prior_ids"], a, b,
-            ).write.mode("overwrite").parquet(
-                os.path.join(args.output, out_name)
+        # delta mode: cluster the new batch against the prior state; the
+        # next state (signed = old ∪ new, pair tables = prior-minus-resigned
+        # ∪ delta) is written so daily increments compose without ever
+        # re-reading the corpus
+        try:
+            res, state = incremental.fold_state(
+                spark, turns, args.prior_state, cfg=CANONICAL,
+                prior_turns=(spark.read.parquet(args.prior_turns)
+                             if args.prior_turns else None),
+                with_containment=args.containment,
+                with_simhash_pass=not args.no_simhash,
+                containment_mode=args.containment_mode,
+                extra_cluster_edges=edges,
             )
-
-        if args.containment:
-            compose_pairs("containment_prefix_new", args.prior_containment_prefix,
-                          "containment_prefix", "inner_id", "outer_id")
-            if args.containment_mode != "prefix":
-                compose_pairs("containment_pairs_new", args.prior_containment_pairs,
-                              "containment_pairs", "inner_id", "outer_id")
-        if not args.no_simhash:
-            compose_pairs("simhash_pairs_new", args.prior_simhash_pairs,
-                          "simhash_pairs", "a_id", "b_id")
+        except ValueError as e:
+            ap.error(str(e))
+        state["cluster_remap"] = res["cluster_remap"]
+        for name, df in state.items():
+            df.write.mode("overwrite").parquet(os.path.join(args.output, name))
         stats = res["stats"].first().asDict()
         print(f"dedup_job (incremental): {stats}", file=sys.stderr)
         spark.stop()
@@ -368,28 +249,13 @@ def main(argv: list[str] | None = None) -> None:
             F.countDistinct("cluster_id").alias("n")
         ).collect()[0]["n"]
         wall_compute = time.time() - t_bench
-    res["clusters"].write.mode("overwrite").parquet(
-        os.path.join(args.output, "clusters")
+    # corpus state for later --incremental runs, plus the dup edges
+    state = incremental.batch_state(
+        res, args.containment, not args.no_simhash, args.containment_mode
     )
-    if args.containment:
-        res["containment_prefix"].write.mode("overwrite").parquet(
-            os.path.join(args.output, "containment_prefix")
-        )
-        if args.containment_mode != "prefix":
-            res["containment_pairs"].write.mode("overwrite").parquet(
-                os.path.join(args.output, "containment_pairs")
-            )
-    if not args.no_simhash:
-        res["simhash_pairs"].write.mode("overwrite").parquet(
-            os.path.join(args.output, "simhash_pairs")
-        )
-    res["dup_edges"].write.mode("overwrite").parquet(
-        os.path.join(args.output, "dup_edges")
-    )
-    # corpus state for later --incremental runs
-    res["signed"].select(*_sig_cols).write.mode("overwrite").parquet(
-        os.path.join(args.output, "signed")
-    )
+    state["dup_edges"] = res["dup_edges"]
+    for name, df in state.items():
+        df.write.mode("overwrite").parquet(os.path.join(args.output, name))
     if t_bench is not None:
         import json
         import time

@@ -9,6 +9,8 @@ star-bucket caveat).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -370,3 +372,33 @@ def test_prior_signed_without_prior_clusters_raises(spark, split_corpus):
         incremental.run_incremental_dedup(
             spark, new_turns, prior["signed"], None
         )
+
+
+def test_fold_state_refuses_incomplete_prior_state(spark, split_corpus, tmp_path):
+    """fold_state reads the whole state layout before it computes anything:
+    a prior state written without an enabled pass's pair table, or whose
+    signed/ lacks a column an enabled pass reads, raises — composing
+    against it would truncate the next state to delta-only pairs."""
+    old_turns, new_turns, _ = split_corpus
+    kw = dict(with_containment=True, with_simhash_pass=False,
+              containment_mode="prefix")
+    prior = pipeline.run_dedup(spark, old_turns, **kw)
+    state = str(tmp_path / "state")
+    for name, df in incremental.batch_state(prior, **kw).items():
+        df.write.parquet(os.path.join(state, name))
+    written = sorted(os.listdir(state))
+    assert written == ["clusters", "containment_prefix", "signed"]
+
+    with pytest.raises(ValueError, match="no containment_pairs/ table"):
+        incremental.fold_state(spark, new_turns, state, **{
+            **kw, "containment_mode": "general"})
+    with pytest.raises(ValueError, match="no simhash_pairs/ table"):
+        incremental.fold_state(spark, new_turns, state, **{
+            **kw, "with_simhash_pass": True})
+    assert sorted(os.listdir(state)) == written
+    # the pair table exists, but signed/ was written without the pass
+    spark.createDataFrame([], "a_id string, b_id string, hamming int") \
+        .write.parquet(os.path.join(state, "simhash_pairs"))
+    with pytest.raises(ValueError, match="signed/ lacks \\['simhash'\\]"):
+        incremental.fold_state(spark, new_turns, state, **{
+            **kw, "with_simhash_pass": True})

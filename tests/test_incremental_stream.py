@@ -145,6 +145,50 @@ def test_stream_extra_edges_equals_batch(spark, tmp_path):
     assert got == want
 
 
+def test_stream_restart_with_missing_pair_table_fails(spark, tmp_path):
+    """A stream restarted with containment_mode="general" over state written
+    in "prefix" mode has no containment_pairs/ to compose against: the batch
+    must fail before staging anything, not write a pair table built from
+    the delta's pairs alone (which silently loses every earlier pair)."""
+    src = tmp_path / "feed"
+    src.mkdir()
+    state = str(tmp_path / "state")
+
+    all_path = corpus.corpus_path_for_sf("sf0.001")
+    turns = spark.read.parquet(all_path)
+    bucket = F.abs(F.xxhash64("conv_id")) % 2
+    import glob
+    import shutil
+
+    for i in range(2):
+        turns.filter(bucket == i).coalesce(1).write.mode("overwrite").parquet(
+            str(tmp_path / f"part{i}")
+        )
+
+    def drop(i):
+        f = glob.glob(str(tmp_path / f"part{i}" / "part-*.parquet"))[0]
+        shutil.copy(f, str(src / f"delta_{i}.parquet"))
+
+    drop(0)
+    istream.foreach_batch_incremental_dedup(
+        spark, str(src), state, max_files_per_trigger=1,
+        with_containment=True, containment_mode="prefix",
+    ).awaitTermination(300)
+    assert os.path.exists(os.path.join(state, "containment_prefix"))
+
+    drop(1)
+    q = istream.foreach_batch_incremental_dedup(
+        spark, str(src), state, max_files_per_trigger=1,
+        with_containment=True, containment_mode="general",
+    )
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    with pytest.raises(StreamingQueryException, match="no containment_pairs/ table"):
+        q.awaitTermination(300)
+    assert not os.path.exists(os.path.join(state, "containment_pairs"))
+    assert not os.path.exists(os.path.join(state, "containment_pairs.tmp"))
+
+
 def test_recover_pending_swap_rolls_forward(spark, tmp_path):
     """Crash-atomicity of the multi-table state swap (r4 review): a crash
     BETWEEN the per-table commits leaves the write-ahead intent on disk;

@@ -1,6 +1,6 @@
-"""Two-phase n-gram Jaccard plan: losslessness vs brute force, including the
-all-hot-gram fallback (ADVICE r1: boilerplate rows whose every gram exceeds
-df_cap must still pair — at minimum exact duplicates)."""
+"""Two-phase n-gram Jaccard plan: losslessness vs brute force, including
+boilerplate corpora (ADVICE r1: rows whose every gram is frequent must
+still pair — at minimum exact duplicates)."""
 
 from __future__ import annotations
 
@@ -30,23 +30,6 @@ def _brute_pairs(rows, k, t):
     return out
 
 
-def test_allhot_boilerplate_rows_still_pair(spark):
-    """df_cap=2 makes every gram of the boilerplate 'hot'; the rarest-gram
-    fallback must still catch the exact duplicates."""
-    boiler = "the same exact boilerplate text repeated verbatim"
-    rows = [(f"b{i}", boiler) for i in range(6)]
-    rows += [("u1", "a unique document about spark shuffles and joins here"),
-             ("u2", "another unique document about partition pruning here")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    pairs = ngram.gram_jaccard_pairs(
-        df, "doc_id", "text", k=3, t_num=4, t_den=5, df_cap=2
-    )
-    got = {tuple(sorted((r["a_id"], r["b_id"]))) for r in pairs.collect()}
-    expected = _brute_pairs(rows, 3, 0.8)
-    assert got == expected
-    assert len(got) == 15  # all 6-choose-2 boilerplate pairs
-
-
 def test_mixed_corpus_equals_bruteforce(spark):
     rows = [
         ("a", "spark shuffle partitions and broadcast joins in practice"),
@@ -60,19 +43,10 @@ def test_mixed_corpus_equals_bruteforce(spark):
     assert got == _brute_pairs(rows, 3, 0.5)
 
 
-def test_gram_index_stats(spark):
-    rows = [(f"b{i}", "same boiler text here") for i in range(5)]
-    rows.append(("u", "one unique document text"))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    st = ngram.gram_index_stats(df, "doc_id", "text", 3, df_cap=2).collect()[0]
-    assert st["n_hot_grams"] >= 1
-    assert st["n_allhot_rows"] == 5
-
-
 def test_prefix_filter_equals_bruteforce_random(spark):
     """Prefix-filter losslessness (SSJoin/ppjoin theorem) under a random
-    deterministic corpus with planted near-duplicates: the prefix plan, the
-    rare-index plan and python brute force must agree exactly."""
+    deterministic corpus with planted near-duplicates: the prefix plan and
+    python brute force must agree exactly."""
     import random
 
     rng = random.Random(31)
@@ -95,32 +69,28 @@ def test_prefix_filter_equals_bruteforce_random(spark):
         got_prefix = {
             tuple(sorted((r["a_id"], r["b_id"])))
             for r in ngram.gram_jaccard_pairs(
-                df, "doc_id", "text", 3, t_num, t_den, candidates="prefix"
-            ).collect()
-        }
-        got_rare = {
-            tuple(sorted((r["a_id"], r["b_id"])))
-            for r in ngram.gram_jaccard_pairs(
-                df, "doc_id", "text", 3, t_num, t_den, candidates="rare_index"
+                df, "doc_id", "text", 3, t_num, t_den
             ).collect()
         }
         assert got_prefix == want, f"prefix plan diverged at t={t_num}/{t_den}"
-        assert got_rare == want
 
 
 def test_prefix_filter_boilerplate_corpus(spark):
-    """Every doc keeps >= 1 prefix gram, so all-boilerplate corpora (the
-    rare-index plan's fallback case) work without any fallback."""
+    """Every doc keeps >= 1 prefix gram, so all-boilerplate corpora pair
+    without any df cap or fallback: the exact duplicates are all caught,
+    with and without unrelated unique docs beside them."""
     boiler = "the same exact boilerplate text repeated verbatim"
-    rows = [(f"b{i}", boiler) for i in range(6)]
-    rows += [("u1", "a unique document about spark shuffles and joins here")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    pairs = ngram.gram_jaccard_pairs(
-        df, "doc_id", "text", 3, 4, 5, candidates="prefix"
-    )
-    got = {tuple(sorted((r["a_id"], r["b_id"]))) for r in pairs.collect()}
-    assert got == _brute_pairs(rows, 3, 0.8)
-    assert len(got) == 15
+    base = [(f"b{i}", boiler) for i in range(6)]
+    for rows in (
+        base + [("u1", "a unique document about spark shuffles and joins here")],
+        base + [("u1", "a unique document about spark shuffles and joins here"),
+                ("u2", "another unique document about partition pruning here")],
+    ):
+        df = spark.createDataFrame(rows, ["doc_id", "text"])
+        pairs = ngram.gram_jaccard_pairs(df, "doc_id", "text", 3, 4, 5)
+        got = {tuple(sorted((r["a_id"], r["b_id"]))) for r in pairs.collect()}
+        assert got == _brute_pairs(rows, 3, 0.8)
+        assert len(got) == 15  # all 6-choose-2 boilerplate pairs
 
 
 def test_prefix_index_stats(spark):
@@ -221,9 +191,9 @@ def test_verify_guard_drops_degenerate_self_pair(spark):
 
 
 def test_cache_registry_and_stats_hashed_reuse(spark):
-    """gram_jaccard_pairs exposes its persisted frames through
-    cache_registry so a long-lived session can release them, and the stats
-    companions accept the precomputed gram-hash frame instead of re-running
+    """gram_jaccard_pairs exposes its persisted frame through
+    cache_registry so a long-lived session can release it, and the stats
+    companion accepts the precomputed gram-hash frame instead of re-running
     the most expensive stage (r4 review)."""
     rows = [
         ("a", "spark shuffle partitions and broadcast joins in practice"),
@@ -244,23 +214,9 @@ def test_cache_registry_and_stats_hashed_reuse(spark):
         df, "doc_id", "text", 3, 1, 2, hashed=hashed
     ).collect()[0]
     assert a.asDict() == b.asDict()
-    c = ngram.gram_index_stats(df, "doc_id", "text", 3, df_cap=2).collect()[0]
-    d = ngram.gram_index_stats(
-        df, "doc_id", "text", 3, df_cap=2, hashed=hashed
-    ).collect()[0]
-    assert c.asDict() == d.asDict()
     for f in reg:
         f.unpersist()
     assert not hashed.is_cached
-    # rare_index mode registers both persisted frames
-    reg2 = []
-    ngram.gram_jaccard_pairs(
-        df, "doc_id", "text", 3, 1, 2, candidates="rare_index",
-        cache_registry=reg2,
-    ).collect()
-    assert len(reg2) == 2
-    for f in reg2:
-        f.unpersist()
 
 
 def test_sketched_rowwise_verify_equals_plain(spark):

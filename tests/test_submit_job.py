@@ -152,10 +152,7 @@ def test_spark_submit_incremental_mode(tmp_path):
     assert r.returncode == 0, r.stderr[-3000:]
     r = submit([
         "--input", new_p, "--output", out_incr, "--incremental",
-        "--prior-signed", os.path.join(out_old, "signed"),
-        "--prior-clusters", os.path.join(out_old, "clusters"),
-        "--prior-containment-prefix", os.path.join(out_old, "containment_prefix"),
-        "--prior-containment-pairs", os.path.join(out_old, "containment_pairs"),
+        "--prior-state", out_old,
     ])
     assert r.returncode == 0, r.stderr[-3000:]
 
@@ -199,36 +196,8 @@ def test_spark_submit_incremental_mode(tmp_path):
     assert n_state == n_conv
 
 
-def test_incremental_hard_requires_prior_pair_state_flags():
-    """Regression (r4 review): --incremental with a pass enabled but its
-    --prior-* pair flag missing used to compose the next-delta state from
-    the delta pairs ALONE, silently dropping every prior pair; the job must
-    refuse up front instead."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "dedup_job_validation", os.path.join(REPO, "jobs", "dedup_job.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    base = ["--input", "in.parquet", "--output", "out", "--incremental"]
-    # containment on, prefix state flag missing
-    with pytest.raises(SystemExit):
-        mod.main(base + ["--containment", "--no-simhash"])
-    # general mode: prefix state present, general pair state missing
-    with pytest.raises(SystemExit):
-        mod.main(base + [
-            "--containment", "--containment-mode", "general", "--no-simhash",
-            "--prior-containment-prefix", "p",
-        ])
-    # simhash pass on (default), its pair state missing
-    with pytest.raises(SystemExit):
-        mod.main(base)
-
-
 def test_incremental_refuses_in_place_state_overwrite(tmp_path):
-    """Regression (r4 review): --incremental with a --prior-* path at/under
+    """Regression (r4 review): --incremental with --prior-state at/under
     --output would lazily read the prior state while write.mode("overwrite")
     deletes it (Spark's self-overwrite detection covers only catalog tables,
     not file sources) — the next delta's state silently corrupts.  The job
@@ -244,35 +213,32 @@ def test_incremental_refuses_in_place_state_overwrite(tmp_path):
     out = str(tmp_path / "state")
     base = ["--input", "in.parquet", "--output", out, "--incremental",
             "--no-simhash"]
-    # prior table directly inside the output dir
+    # prior state directly inside the output dir
     with pytest.raises(SystemExit):
-        mod.main(base + ["--prior-signed", os.path.join(out, "signed"),
-                         "--prior-clusters", str(tmp_path / "c")])
+        mod.main(base + ["--prior-state", os.path.join(out, "prev")])
+    # ... or the output inside the prior state
+    with pytest.raises(SystemExit):
+        mod.main(base + ["--prior-state", str(tmp_path)])
     # symlink alias of the output dir must not evade the guard
     (tmp_path / "state").mkdir()
     alias = tmp_path / "alias"
     alias.symlink_to(tmp_path / "state")
     with pytest.raises(SystemExit):
-        mod.main(base + ["--prior-signed", str(tmp_path / "s"),
-                         "--prior-clusters", str(alias / "clusters")])
+        mod.main(base + ["--prior-state", str(alias)])
     # scheme'd URIs compare textually (realpath must not mangle them)
     with pytest.raises(SystemExit):
         mod.main(["--input", "in.parquet", "--output", "s3://bkt/out/",
                   "--incremental", "--no-simhash",
-                  "--prior-signed", "s3://bkt/out/signed",
-                  "--prior-clusters", "s3://bkt/prior/clusters"])
+                  "--prior-state", "s3://bkt/out/prev"])
     # mixed-form aliases (ADVICE r4): file:// scheme'd output vs plain
     # local prior path — and the reverse — name the same directory and
     # must not evade the guard
     with pytest.raises(SystemExit):
         mod.main(base[:2] + ["--output", "file://" + out, "--incremental",
                              "--no-simhash",
-                             "--prior-signed", os.path.join(out, "signed"),
-                             "--prior-clusters", str(tmp_path / "c")])
+                             "--prior-state", os.path.join(out, "prev")])
     with pytest.raises(SystemExit):
-        mod.main(base + ["--prior-signed", "file://" + out + "/signed",
-                         "--prior-clusters", str(tmp_path / "c")])
+        mod.main(base + ["--prior-state", "file://" + out + "/prev"])
     # single-slash scheme form (Hadoop accepts file:/x) also normalizes
     with pytest.raises(SystemExit):
-        mod.main(base + ["--prior-signed", "file:" + out + "/signed",
-                         "--prior-clusters", str(tmp_path / "c")])
+        mod.main(base + ["--prior-state", "file:" + out + "/prev"])

@@ -143,17 +143,17 @@ def test_cosine_lsh_high_threshold_knobs_are_selective(spark):
 
 
 def test_cosine_backends_agree(spark):
-    """The Arrow einsum kernel and the JVM HOF expression must produce the
-    SAME cosine after the callers' ROUND(.,4) — including NULL (not NaN) for
-    null endpoints and zero-norm vectors, so `cos >= t` filters drop them
-    under both backends."""
+    """The Arrow einsum kernel must match a float64 numpy cosine after the
+    callers' ROUND(.,4) — and read NULL (not NaN) for null endpoints,
+    zero-norm vectors and ragged dimensions, so `cos >= t` filters drop
+    them."""
     from bibexpy_spark.functions import vector_ops
 
     rng = np.random.default_rng(7)
     rows = [(i, rng.standard_normal(16).tolist()) for i in range(60)]
     # degenerates: zero-norm, null endpoint, RAGGED dim (a truncated write /
-    # schema drift row — must degrade to NULL like the HOF zip_with path,
-    # never crash the kernel batch's np.stack)
+    # schema drift row — must degrade to NULL, never crash the kernel
+    # batch's np.stack)
     rows += [(60, [0.0] * 16), (61, None),
              (62, rng.standard_normal(8).tolist())]
     df = spark.createDataFrame(rows, "id long, emb array<double>")
@@ -161,20 +161,23 @@ def test_cosine_backends_agree(spark):
     b = df.select(F.col("id").alias("b_id"), F.col("emb").alias("b"))
     j = a.crossJoin(b).filter(F.col("a_id") < F.col("b_id"))
 
-    out = j.select(
-        "a_id",
-        "b_id",
-        F.round(vector_ops.cosine(F.col("a"), F.col("b"), "kernel"), 4).alias("ck"),
-        F.round(vector_ops.cosine(F.col("a"), F.col("b"), "hof"), 4).alias("ch"),
-    ).toPandas()
+    ck = F.round(vector_ops.cosine(F.col("a"), F.col("b")), 4)
+    # toPandas reads NULL as NaN, so NaN is told apart on the Spark side
+    out = j.select("a_id", "b_id", ck.alias("ck"), F.isnan(ck).alias("nan")).toPandas()
     assert len(out) == 63 * 62 // 2
-    # null where either endpoint is degenerate, equal everywhere else
+    assert not out.nan.any()
+    # null where either endpoint is degenerate
     degen = (out.a_id >= 60) | (out.b_id >= 60)
     assert out.loc[degen, "ck"].isna().all()
-    assert out.loc[degen, "ch"].isna().all()
     good = out.loc[~degen]
     assert not good.ck.isna().any()
-    assert (good.ck == good.ch).all()
+    vecs = {i: np.asarray(v, dtype=np.float64) for i, v in rows[:60]}
+    want = [
+        round(float(vecs[x] @ vecs[y])
+              / (np.linalg.norm(vecs[x]) * np.linalg.norm(vecs[y])), 4)
+        for x, y in zip(good.a_id, good.b_id)
+    ]
+    assert np.allclose(good.ck.to_numpy(float), want, rtol=0, atol=1e-4)
 
 
 def test_ann_and_lsh_queries_on_empty_corpus(spark, tmp_path):
