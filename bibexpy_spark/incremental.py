@@ -39,11 +39,12 @@ approximation the batch path already makes.
 
 Scale shape:
   * signing cost is O(|delta|), never O(|corpus|);
-  * the band join touches only buckets CONTAINING a new member, and the
-    touched-bucket set is derived from the DELTA's own band hashes before
-    any aggregation — the old corpus is scanned (narrow conv_id+bands
-    projection, semi-join) but never wide-shuffled: the bucket groupBy is
-    O(|touched|), not O(|corpus|·bands);
+  * the band join is ``lsh.bucket_pairs`` with a new-flag — the batch
+    pass's bucket policy, restricted to buckets CONTAINING a new member;
+    the touched-bucket set is derived from the DELTA's own band hashes
+    before any aggregation — the old corpus is scanned (narrow
+    conv_id+bands projection, semi-join) but never wide-shuffled: the
+    bucket groupBy is O(|touched|), not O(|corpus|·bands);
   * prior clusters enter connected components CONTRACTED to one super-node
     per cluster (its cluster_id, which is already the min conv_id of its
     members), so CC size is O(|delta| + |touched clusters|), not
@@ -61,14 +62,13 @@ from typing import Any
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
 from bibexpy_spark.functions import udfs
-from bibexpy_spark.operators import assembly, components, containment, exact
+from bibexpy_spark.operators import assembly, components, containment, exact, lsh
 from bibexpy_spark.operators import simhash as simhash_op
 from bibexpy_spark.operators import verify as verify_op
-from bibexpy_spark.pipeline import check_extra_cluster_edges, surrogate_id
+from bibexpy_spark.pipeline import check_pass_options, surrogate_id
 
 _SIG_COLS = ["conv_id", "content_sha", "shingles", "band_hashes"]
 
@@ -232,9 +232,9 @@ def run_incremental_dedup(
     """
     from pyspark.sql import types as T
 
-    check_extra_cluster_edges(extra_cluster_edges, with_containment, with_simhash_pass)
-    if with_containment and containment_mode not in ("prefix", "general", "general_sa"):
-        raise ValueError(f"unknown containment_mode: {containment_mode!r}")
+    check_pass_options(
+        extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
+    )
 
     carried: DataFrame | None = None
     touched_cluster_ids: DataFrame | None = None
@@ -370,22 +370,15 @@ def run_incremental_dedup(
     new_exact_edges = exact.exact_edges(grouped)
     new_reps = exact.representatives(grouped).select(*_SIG_COLS)
 
-    # 3) LSH band join, delta-driven: only buckets containing >= 1 new rep
-    #    participate; within them, new members pair with every co-member
-    #    (small buckets) or with the bucket representative (star fallback —
-    #    including old members when the rep itself is new, matching the
-    #    batch policy's edge set for the combined corpus)
-    #    Shuffle shape (r4): a bucket participates iff it CONTAINS a new
-    #    member, and a bucket's key (band_idx, band_hash) is carried by
-    #    every one of its members — so the touched-bucket set is exactly
-    #    the delta reps' own band hashes.  Semi-joining the old side down
-    #    to touched rows BEFORE any aggregation turns the bucket groupBy
-    #    from an O(|corpus|·bands) shuffle into an O(|touched|) one; the
-    #    old corpus is only ever SCANNED (narrow conv_id+bands projection,
-    #    broadcast/AQE semi-join, no wide shuffle).  The surviving bucket
-    #    set, bucket_n, and bucket_rep are IDENTICAL to the unpruned agg:
-    #    every member of a touched bucket matches new_bands on that very
-    #    (band_idx, band_hash), so no member row is lost.
+    # 3) LSH band join, delta-driven (lsh.bucket_pairs with the new-flag):
+    #    only buckets containing >= 1 new rep participate, and only pairs
+    #    with a new endpoint come out — the batch policy's edge set for the
+    #    combined corpus, restricted to the delta.  A bucket's key is carried
+    #    by every member, so the touched buckets are exactly the delta reps'
+    #    own band hashes: ``combined`` keeps only the old reps sharing one
+    #    (a broadcast/AQE semi-join over a narrow conv_id+bands projection —
+    #    the old corpus is scanned, never wide-shuffled), and it is also the
+    #    signature side of the verify below.
     new_bands = (
         new_reps.select(
             F.posexplode("band_hashes").alias("band_idx", "band_hash")
@@ -405,50 +398,14 @@ def run_incremental_dedup(
         .unionByName(new_reps.withColumn("_is_new", F.lit(True)))
         .persist()
     )
-    ex_all = combined.select(
-        "conv_id", "_is_new", F.posexplode("band_hashes").alias("band_idx", "band_hash")
-    ).join(new_bands, ["band_idx", "band_hash"], "left_semi")
-    buckets = ex_all.groupBy("band_idx", "band_hash").agg(
-        F.count("*").alias("bucket_n"),
-        F.min("conv_id").alias("bucket_rep"),
-        F.max("_is_new").alias("_has_new"),
+    band_pairs, _ = lsh.bucket_pairs(
+        combined.select(
+            "conv_id", "_is_new",
+            F.posexplode("band_hashes").alias("band_idx", "band_hash"),
+        ),
+        ("band_idx", "band_hash"), "conv_id", cfg.hot_band_cap, new_col="_is_new",
     )
-    active = buckets.filter((F.col("bucket_n") >= 2) & F.col("_has_new"))
-    ex2 = ex_all.join(active, ["band_idx", "band_hash"]).persist()
-
-    small = ex2.filter(F.col("bucket_n") <= cfg.hot_band_cap)
-    a = small.filter("_is_new").select(
-        "band_idx", "band_hash", F.col("conv_id").alias("x_id")
-    )
-    b = small.select("band_idx", "band_hash", F.col("conv_id").alias("y_id"))
-    small_pairs = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("x_id") != F.col("y_id"))
-        .select(
-            F.least("x_id", "y_id").alias("a_id"),
-            F.greatest("x_id", "y_id").alias("b_id"),
-        )
-    )
-    hot = ex2.filter(F.col("bucket_n") > cfg.hot_band_cap)
-    hot_pairs = (
-        hot.withColumn(
-            "_rep_new",
-            F.max(
-                F.when(F.col("conv_id") == F.col("bucket_rep"), F.col("_is_new"))
-            ).over(W.partitionBy("band_idx", "band_hash")),
-        )
-        .filter(
-            (F.col("conv_id") != F.col("bucket_rep"))
-            & (F.col("_is_new") | F.coalesce(F.col("_rep_new"), F.lit(False)))
-        )
-        .select(
-            F.least("conv_id", "bucket_rep").alias("a_id"),
-            F.greatest("conv_id", "bucket_rep").alias("b_id"),
-        )
-    )
-    cand = (
-        small_pairs.unionByName(hot_pairs).dropDuplicates(["a_id", "b_id"])
-    )
+    cand = band_pairs.dropDuplicates(["a_id", "b_id"])
 
     # 4) exact Jaccard verification against the combined rep signatures
     verified = verify_op.verify_pairs(cand, combined, cfg, id_col="conv_id")
@@ -474,7 +431,8 @@ def run_incremental_dedup(
             delta_passes["containment_prefix_new"] = (
                 containment.prefix_containment_pairs_delta(old_full, signed_new, cfg)
             )
-            if containment_mode != "prefix":
+            backend = containment.MODE_BACKEND[containment_mode]
+            if backend is not None:
                 # delta-sized: persist so the general pass's prefix leg and
                 # the caller's own materialization share one computation
                 # (released by the cleanup hook)
@@ -486,9 +444,7 @@ def run_incremental_dedup(
                         old_full,
                         signed_new,
                         cfg,
-                        backend="contains"
-                        if containment_mode == "general"
-                        else "suffix_array",
+                        backend=backend,
                         # the prefix leg just computed above — don't run
                         # its blocked self-join a second time
                         prefix_pairs=delta_passes["containment_prefix_new"],
@@ -654,7 +610,7 @@ def run_incremental_dedup(
         are materialized (ADVICE r3: a long micro-batch delta chain would
         otherwise accumulate three cached DataFrames per batch in executor
         storage for the session lifetime)."""
-        for df in (signed_new, new, combined, ex2):
+        for df in (signed_new, new, combined):
             df.unpersist()
         pref = delta_passes.get("containment_prefix_new")
         if pref is not None and "containment_pairs_new" in delta_passes:
@@ -713,7 +669,9 @@ def fold_state(
     plus the delta's), ``clusters`` and each pair table composed via
     compose_pair_state.  Writing every table of ``next_state`` to a fresh
     directory gives the ``prior_dir`` of the next delta."""
-    check_extra_cluster_edges(extra_cluster_edges, with_containment, with_simhash_pass)
+    check_pass_options(
+        extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
+    )
     pairs = _pair_tables(with_containment, with_simhash_pass, containment_mode)
     sig_cols = _signed_columns(with_containment, with_simhash_pass)
     prior: dict[str, DataFrame] = {}

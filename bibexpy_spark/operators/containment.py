@@ -36,6 +36,10 @@ from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
 
+# pipeline ``containment_mode`` -> verify backend of the complete pass
+# (``"prefix"`` runs the prefix pass only)
+MODE_BACKEND = {"prefix": None, "general": "contains", "general_sa": "suffix_array"}
+
 
 def _prefix_chars(cfg: DedupConfig) -> int:
     """Char width of the prefix block key (≈ 8 chars per configured token)."""
@@ -547,6 +551,21 @@ def _verify_with_pos(cand: DataFrame, backend: str) -> DataFrame:
     return cand.groupBy("outer_id").applyInPandas(_verify, _SUFFIX_VERIFY_SCHEMA)
 
 
+def _complete_pairs(
+    prefix_pairs: DataFrame, cand: DataFrame, backend: str
+) -> DataFrame:
+    """Prefix pairs at pos 0 unioned with the backend-verified interior
+    candidates, one row per pair at its leftmost offset (min pos)."""
+    pref = prefix_pairs.select("inner_id", "outer_id").withColumn(
+        "pos", F.lit(0).cast("bigint")
+    )
+    return (
+        pref.unionByName(_verify_with_pos(cand, backend))
+        .groupBy("inner_id", "outer_id")
+        .agg(F.min("pos").alias("pos"))
+    )
+
+
 def general_containment_pairs(
     signed: DataFrame,
     cfg: DedupConfig,
@@ -569,19 +588,12 @@ def general_containment_pairs(
     pipeline always does) — passing it avoids executing the prefix-key
     self-join a second time here.
     """
-    pref = (
-        prefix_pairs
-        if prefix_pairs is not None
-        else prefix_containment_pairs(signed, cfg)
-    ).select("inner_id", "outer_id").withColumn("pos", F.lit(0).cast("bigint"))
+    if prefix_pairs is None:
+        prefix_pairs = prefix_containment_pairs(signed, cfg)
     cand = _oriented_containment_candidates(
         signed, sample_m, containment_threshold, max_shingle_freq
     )
-    return (
-        pref.unionByName(_verify_with_pos(cand, backend))
-        .groupBy("inner_id", "outer_id")
-        .agg(F.min("pos").alias("pos"))
-    )
+    return _complete_pairs(prefix_pairs, cand, backend)
 
 
 def general_containment_pairs_delta(
@@ -622,11 +634,8 @@ def general_containment_pairs_delta(
     maintain shingle-df state (the 10^12-row note in
     :func:`_oriented_containment_candidates`).
     """
-    pref = (
-        prefix_pairs
-        if prefix_pairs is not None
-        else prefix_containment_pairs_delta(old_signed, new_signed, cfg)
-    ).select("inner_id", "outer_id").withColumn("pos", F.lit(0).cast("bigint"))
+    if prefix_pairs is None:
+        prefix_pairs = prefix_containment_pairs_delta(old_signed, new_signed, cfg)
     cand = _oriented_containment_candidates(
         old_signed,
         sample_m,
@@ -634,8 +643,4 @@ def general_containment_pairs_delta(
         max_shingle_freq,
         new_signed=new_signed,
     )
-    return (
-        pref.unionByName(_verify_with_pos(cand, backend))
-        .groupBy("inner_id", "outer_id")
-        .agg(F.min("pos").alias("pos"))
-    )
+    return _complete_pairs(prefix_pairs, cand, backend)

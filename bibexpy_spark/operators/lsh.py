@@ -1,21 +1,26 @@
-"""LSH candidate-pair generation with explicit hot-band (skew) handling.
+"""Skew-guarded bucket pairing, and the LSH candidate join built on it.
 
 The reference's blocking join (smart_merger.py:185-198, 624-655) has a known
 skew hazard: rows with empty keys pile into one block.  At LSH scale the
 analogue is a hot band bucket (boilerplate text shared by millions of rows).
-Policy here (SURVEY.md §4, §7.4 #2):
+:func:`bucket_pairs` is the one owner of the policy (SURVEY.md §4, §7.4 #2)
+for every bucketed join — the batch and delta LSH band joins and the SimHash
+chunk joins (operators/simhash.py, incremental.py):
 
-  * buckets with <= ``hot_band_cap`` members generate ALL intra-bucket pairs
-    via a self-equi-join on (band_idx, band_hash) — AQE skew-join splits any
-    moderately large bucket's join tasks;
+  * buckets of size 1 generate no pairs and are dropped;
+  * buckets with <= ``cap`` members generate ALL intra-bucket pairs via an
+    equi-join on the bucket key — AQE skew-join splits any moderately large
+    bucket's join tasks;
   * buckets larger than the cap switch to a STAR pattern: every member pairs
     with the bucket minimum only (n-1 pairs instead of n(n-1)/2).  For
     connected-components clustering this preserves connectivity through the
-    representative while bounding pair volume; the switch is recorded in the
-    metrics output — truncation is never silent.
+    representative while bounding pair volume; the switch is reported in the
+    per-bucket size frame (``star_mode``) — truncation is never silent.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,6 +35,105 @@ def explode_bands(signed: DataFrame, id_col: str = "conv_id") -> DataFrame:
     )
 
 
+def bucket_pairs(
+    keyed: DataFrame,
+    keys: Sequence[str],
+    id_col: str,
+    cap: int,
+    new_col: str | None = None,
+    carry: Sequence[str] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Pair the members of each bucket under the skew policy above.
+
+    ``keyed`` holds one row per (id, bucket key), plus the ``carry`` columns
+    to bring along for each endpoint.  Returns ``(pairs, sizes)``:
+
+      * ``pairs``: ``a_id < b_id`` with ``a_<c>``/``b_<c>`` per carried
+        column, one row per (bucket, pair) — a pair sharing several buckets
+        repeats, so callers dedupe after their own filters;
+      * ``sizes``: one row per bucket of size >= 2 — the key columns,
+        ``bucket_n`` and ``star_mode`` (``bucket_n > cap``).
+
+    ``new_col`` (a boolean column) makes the join delta-driven: only
+    buckets holding a new row take part, and only pairs with >= 1 new
+    endpoint come out.  A bucket's key is carried by every member, so
+    semi-joining the rows to the new rows' keys BEFORE the bucket aggregate
+    keeps every member of a touched bucket (its size and rep equal the
+    unpruned aggregate's) while the old rows are only scanned, never
+    aggregated.  Without ``new_col`` every row counts as new: the batch
+    join is the same plan with the delta filters constant-folded away.
+
+    The star rep's carried values and new-flag ride the bucket aggregate
+    (``min_by`` on the id), so the star is a filter over the member rows —
+    no window, no second join.  Nothing is persisted.
+    """
+    keys, carry = list(keys), list(carry)
+    rows = keyed.select(
+        *keys,
+        F.col(id_col).alias("_id"),
+        *carry,
+        (F.col(new_col) if new_col else F.lit(True)).alias("_new"),
+    )
+    if new_col:
+        rows = rows.join(
+            rows.filter(F.col("_new")).select(*keys).distinct(), keys, "left_semi"
+        )
+    sizes = (
+        rows.groupBy(*keys)
+        .agg(
+            F.count("*").alias("bucket_n"),
+            F.min_by(F.struct("_id", *carry, "_new"), F.col("_id")).alias("_rep"),
+        )
+        .filter(F.col("bucket_n") >= 2)
+        .withColumn("star_mode", F.col("bucket_n") > cap)
+    )
+    members = rows.join(sizes, keys)
+
+    # small buckets: each new member x against every co-member y; when both
+    # are new only the x < y orientation is kept, so a pair appears once
+    small = members.filter(~F.col("star_mode"))
+    x = small.filter(F.col("_new")).select(
+        *keys, F.col("_id").alias("x_id"), *[F.col(c).alias(f"x_{c}") for c in carry]
+    )
+    y = small.select(
+        *keys,
+        F.col("_id").alias("y_id"),
+        F.col("_new").alias("y_new"),
+        *[F.col(c).alias(f"y_{c}") for c in carry],
+    )
+    x_lo = F.col("x_id") < F.col("y_id")
+
+    def _end(lo_tag: str, hi_tag: str, c: str):
+        return F.when(x_lo, F.col(f"{lo_tag}_{c}")).otherwise(F.col(f"{hi_tag}_{c}"))
+
+    small_pairs = (
+        x.join(y, keys)
+        .filter((F.col("x_id") != F.col("y_id")) & (~F.col("y_new") | x_lo))
+        .select(
+            _end("x", "y", "id").alias("a_id"),
+            _end("y", "x", "id").alias("b_id"),
+            *[_end("x", "y", c).alias(f"a_{c}") for c in carry],
+            *[_end("y", "x", c).alias(f"b_{c}") for c in carry],
+        )
+    )
+    # hot buckets: each member against the bucket's min-id rep, so the rep
+    # is always the a side
+    star_pairs = members.filter(
+        F.col("star_mode")
+        & (F.col("_id") != F.col("_rep._id"))
+        & (F.col("_new") | F.col("_rep._new"))
+    ).select(
+        F.col("_rep._id").alias("a_id"),
+        F.col("_id").alias("b_id"),
+        *[F.col(f"_rep.{c}").alias(f"a_{c}") for c in carry],
+        *[F.col(c).alias(f"b_{c}") for c in carry],
+    )
+    return (
+        small_pairs.unionByName(star_pairs),
+        sizes.select(*keys, "bucket_n", "star_mode"),
+    )
+
+
 def candidate_pairs(
     signed: DataFrame, cfg: DedupConfig, id_col: str = "conv_id"
 ) -> tuple[DataFrame, DataFrame]:
@@ -38,50 +142,8 @@ def candidate_pairs(
     Returns (pairs, band_stats); band_stats carries per-bucket member counts
     and the hot/star flag for the metrics table.
     """
-    ex = explode_bands(signed, id_col)
-
-    bucket_sizes = ex.groupBy("band_idx", "band_hash").agg(
-        F.count("*").alias("bucket_n"), F.min(id_col).alias("bucket_rep")
+    pairs, band_stats = bucket_pairs(
+        explode_bands(signed, id_col), ("band_idx", "band_hash"), id_col,
+        cfg.hot_band_cap,
     )
-    # Buckets of size 1 generate no pairs — drop their rows before the join
-    # (the overwhelming majority at scale; this is the big pruning step).
-    # Persist: ex2 feeds both the small-bucket self-join (twice) and the
-    # hot-bucket star path; without it the band explode + bucket-size join
-    # recompute 3-4x.
-    ex2 = ex.join(
-        bucket_sizes.filter(F.col("bucket_n") >= 2), ["band_idx", "band_hash"]
-    ).persist()
-
-    small = ex2.filter(F.col("bucket_n") <= cfg.hot_band_cap)
-    hot = ex2.filter(F.col("bucket_n") > cfg.hot_band_cap)
-
-    a = small.select(
-        "band_idx", "band_hash", F.col(id_col).alias("a_id")
-    )
-    b = small.select(
-        "band_idx", "band_hash", F.col(id_col).alias("b_id")
-    )
-    small_pairs = a.join(b, ["band_idx", "band_hash"]).filter(
-        F.col("a_id") < F.col("b_id")
-    )
-
-    hot_pairs = hot.filter(F.col(id_col) != F.col("bucket_rep")).select(
-        "band_idx",
-        "band_hash",
-        F.least(id_col, "bucket_rep").alias("a_id"),
-        F.greatest(id_col, "bucket_rep").alias("b_id"),
-    )
-
-    pairs = (
-        small_pairs.select("a_id", "b_id")
-        .unionByName(hot_pairs.select("a_id", "b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-
-    band_stats = bucket_sizes.filter(F.col("bucket_n") >= 2).select(
-        "band_idx",
-        "band_hash",
-        "bucket_n",
-        (F.col("bucket_n") > cfg.hot_band_cap).alias("star_mode"),
-    )
-    return pairs, band_stats
+    return pairs.dropDuplicates(["a_id", "b_id"]), band_stats

@@ -7,8 +7,10 @@ distance ``simhash_hamming_max``.
 
 Candidate generation uses the pigeonhole principle: split the 64-bit hash
 into ``simhash_chunks`` chunks; two hashes within distance d < chunks must
-agree exactly on at least one chunk -> one equi-join per chunk index, then a
-JVM-native verify ``bit_count(a ^ b) <= d`` (no Python in the join path).
+agree exactly on at least one chunk -> one equi-join per chunk index (the
+skew-guarded ``lsh.bucket_pairs``, with the simhash carried per endpoint),
+then a JVM-native verify ``bit_count(a ^ b) <= d`` (no Python in the join
+path).
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
 from bibexpy_spark.functions import udfs
+from bibexpy_spark.operators import lsh
 
 
 def with_simhash(conversations: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -38,13 +41,13 @@ def with_simhash(conversations: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def _chunked(simmed: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
-    """Explode each 64-bit simhash into (chunk_idx, chunk_val) rows."""
+def _chunked(simmed: DataFrame, cfg: DedupConfig, *cols: str) -> DataFrame:
+    """Explode each 64-bit simhash into (chunk_idx, chunk_val) rows, keeping
+    ``cols`` (the id and simhash, plus any flag the caller needs)."""
     width = 64 // cfg.simhash_chunks
     mask = (1 << width) - 1
     return simmed.select(
-        id_col,
-        "simhash",
+        *cols,
         F.explode(
             F.array(
                 *[
@@ -58,66 +61,35 @@ def _chunked(simmed: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
                 ]
             )
         ).alias("c"),
-    ).select(id_col, "simhash", F.col("c.chunk_idx"), F.col("c.chunk_val"))
+    ).select(*cols, F.col("c.chunk_idx"), F.col("c.chunk_val"))
 
 
-def _bucketed_chunk_pairs(
-    chunks: DataFrame, cfg: DedupConfig, id_col: str,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Shared skew-guarded chunk join (r4 review): the former unguarded
-    self-join blew up quadratically on a hot (chunk_idx, chunk_val) bucket
-    — e.g. 100k boilerplate docs all hashing to simhash 0 — the exact
-    hazard lsh.candidate_pairs already defuses.  Same policy here:
-
-      * size-1 buckets are pruned before the join (the bulk at scale);
-      * buckets <= ``hot_chunk_cap`` generate all intra-bucket pairs;
-      * larger buckets degrade to a STAR on the bucket's min id: n-1 pairs
-        instead of n(n-1)/2.  Star pairs still pass the Hamming verify, so
-        connectivity through the representative is preserved exactly for
-        the identical-simhash pile-ups that cause the blowup; a member
-        beyond the radius from the rep drops out (bounded, never-silent:
-        :func:`simhash_chunk_stats` reports hot buckets).
-    """
-    sizes = chunks.groupBy("chunk_idx", "chunk_val").agg(
-        F.count("*").alias("bucket_n"), F.min(id_col).alias("bucket_rep")
+def _chunk_pairs(
+    chunks: DataFrame, cfg: DedupConfig, id_col: str, new_col: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The chunk equi-join under the shared skew policy (lsh.bucket_pairs):
+    a hot (chunk_idx, chunk_val) bucket — e.g. 100k boilerplate docs all
+    hashing to simhash 0 — degrades to a star on the bucket's min id.  Star
+    pairs still pass the Hamming verify, so connectivity through the rep is
+    kept exactly for the identical-simhash pile-ups that cause the blowup; a
+    member beyond the radius from the rep drops out (bounded, never-silent:
+    :func:`simhash_chunk_stats` reports hot buckets)."""
+    return lsh.bucket_pairs(
+        chunks, ("chunk_idx", "chunk_val"), id_col, cfg.hot_chunk_cap,
+        new_col=new_col, carry=("simhash",),
     )
-    ex2 = chunks.join(
-        sizes.filter(F.col("bucket_n") >= 2), ["chunk_idx", "chunk_val"]
-    )
-    small = ex2.filter(F.col("bucket_n") <= cfg.hot_chunk_cap)
-    hot = ex2.filter(F.col("bucket_n") > cfg.hot_chunk_cap)
 
-    def _side(df: DataFrame, tag: str) -> DataFrame:
-        cols = [
-            F.col(id_col).alias(f"{tag}_id"),
-            F.col("simhash").alias(f"{tag}_sim"),
-            "chunk_idx", "chunk_val",
-        ] + [F.col(c).alias(f"{tag}{c}") for c in extra_cols]
-        return df.select(*cols)
 
-    small_pairs = (
-        _side(small, "a")
-        .join(_side(small, "b"), ["chunk_idx", "chunk_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-    )
-    # star: member vs the bucket's min-id rep only (rep row excluded).
-    # The rep is the bucket minimum, so member id > rep id always; swap to
-    # the canonical a_id < b_id orientation — hamming and the delta's
-    # new-endpoint OR filter are both symmetric, so only ids swap.
-    hot_pairs = (
-        _side(hot.filter(F.col(id_col) != F.col("bucket_rep")), "b")
-        .join(
-            _side(hot.filter(F.col(id_col) == F.col("bucket_rep")), "a"),
-            ["chunk_idx", "chunk_val"],
-        )
-    )
+def _within_radius(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Hamming verify, then one row per pair: (a_id, b_id, hamming)."""
     return (
-        small_pairs.unionByName(hot_pairs.select(*small_pairs.columns))
-        .withColumn(
-            "hamming", F.bit_count(F.col("a_sim").bitwiseXOR(F.col("b_sim")))
+        pairs.withColumn(
+            "hamming",
+            F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))),
         )
         .filter(F.col("hamming") <= cfg.simhash_hamming_max)
+        .select("a_id", "b_id", "hamming")
+        .dropDuplicates(["a_id", "b_id"])
     )
 
 
@@ -125,32 +97,22 @@ def simhash_pairs(simmed: DataFrame, cfg: DedupConfig, id_col: str = "conv_id") 
     """(id, simhash) -> pairs (a_id, b_id, hamming) within the radius.
 
     Buckets above ``cfg.hot_chunk_cap`` degrade to the star fallback (see
-    :func:`_bucketed_chunk_pairs`); below the cap the pair set is exactly
-    the all-pairs-within-radius definition."""
-    chunks = _chunked(simmed, cfg, id_col)
-    return (
-        _bucketed_chunk_pairs(chunks, cfg, id_col)
-        .select("a_id", "b_id", "hamming")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    :func:`_chunk_pairs`); below the cap the pair set is exactly the
+    all-pairs-within-radius definition."""
+    pairs, _ = _chunk_pairs(_chunked(simmed, cfg, id_col, "simhash"), cfg, id_col)
+    return _within_radius(pairs, cfg)
 
 
 def simhash_chunk_stats(
     simmed: DataFrame, cfg: DedupConfig, id_col: str = "conv_id"
 ) -> DataFrame:
     """Never-silent metrics for the chunk index: ONE row with n_buckets
-    (size >= 2), n_hot_buckets (> hot_chunk_cap, i.e. star mode), and
-    max_bucket_n."""
+    (size >= 2), n_hot_buckets (star mode), and max_bucket_n."""
+    _, sizes = _chunk_pairs(_chunked(simmed, cfg, id_col, "simhash"), cfg, id_col)
     return (
-        _chunked(simmed, cfg, id_col)
-        .groupBy("chunk_idx", "chunk_val")
-        .agg(F.count("*").alias("bucket_n"))
-        .filter(F.col("bucket_n") >= 2)
-        .agg(
+        sizes.agg(
             F.count("*").alias("n_buckets"),
-            F.sum(
-                (F.col("bucket_n") > cfg.hot_chunk_cap).cast("long")
-            ).alias("n_hot_buckets"),
+            F.sum(F.col("star_mode").cast("long")).alias("n_hot_buckets"),
             F.max("bucket_n").alias("max_bucket_n"),
         )
         .select(
@@ -174,29 +136,20 @@ def simhash_pairs_delta(
         prior_pairs(minus pairs touching re-signed ids) ∪ delta_pairs
             == simhash_pairs(old ∪ new).
 
-    Only chunk buckets containing a new row enter the join (semi-join
-    pruning) — cost O(|delta| + touched buckets), never O(|corpus|).
-    A touched bucket carries ALL its members through the semi-join, so the
-    star-cap decision and bucket rep match the batch op exactly; as with
-    the containment df cap, the equality above is exact while no bucket
-    CROSSES ``hot_chunk_cap`` between batches (a bucket going hot leaves
-    previously captured verified pairs in state that a fresh batch's star
-    would no longer emit — never-silent via simhash_chunk_stats)."""
-    allc = (
-        _chunked(old_simmed.select(id_col, "simhash"), cfg, id_col)
-        .withColumn("_is_new", F.lit(False))
-        .unionByName(
-            _chunked(new_simmed.select(id_col, "simhash"), cfg, id_col)
-            .withColumn("_is_new", F.lit(True))
-        )
+    Only chunk buckets containing a new row enter the join (lsh.bucket_pairs
+    with a new-flag) — cost O(|delta| + touched buckets), never
+    O(|corpus|).  A touched bucket keeps ALL its members, so the star-cap
+    decision and bucket rep match the batch op exactly; as with the
+    containment df cap, the equality above is exact while no bucket CROSSES
+    ``hot_chunk_cap`` between batches (a bucket going hot leaves previously
+    captured verified pairs in state that a fresh batch's star would no
+    longer emit — never-silent via simhash_chunk_stats)."""
+    both = (
+        old_simmed.select(id_col, "simhash", F.lit(False).alias("_is_new"))
+        .unionByName(new_simmed.select(id_col, "simhash", F.lit(True).alias("_is_new")))
     )
-    new_buckets = (
-        allc.filter(F.col("_is_new")).select("chunk_idx", "chunk_val").distinct()
+    pairs, _ = _chunk_pairs(
+        _chunked(both, cfg, id_col, "simhash", "_is_new"), cfg, id_col,
+        new_col="_is_new",
     )
-    active = allc.join(new_buckets, ["chunk_idx", "chunk_val"], "left_semi")
-    return (
-        _bucketed_chunk_pairs(active, cfg, id_col, extra_cols=("_is_new",))
-        .filter(F.col("a_is_new") | F.col("b_is_new"))
-        .select("a_id", "b_id", "hamming")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    return _within_radius(pairs, cfg)

@@ -42,13 +42,17 @@ def surrogate_id(col):
     )
 
 
-def check_extra_cluster_edges(
+def check_pass_options(
     extra_cluster_edges: tuple[str, ...],
     with_containment: bool,
     with_simhash_pass: bool,
+    containment_mode: str,
 ) -> None:
-    """Raise ValueError when an extra cluster-edge source is unknown or its
-    pass is off (shared by the batch, delta and submit-job entry points)."""
+    """Raise ValueError when the containment mode is unknown (with the pass
+    on), or an extra cluster-edge source is unknown or its pass is off
+    (shared by the batch, delta, state-fold and submit-job entry points)."""
+    if with_containment and containment_mode not in containment.MODE_BACKEND:
+        raise ValueError(f"unknown containment_mode: {containment_mode!r}")
     bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
     if bad_sources:
         raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
@@ -86,14 +90,14 @@ def run_dedup(
     edges use whichever pass ``containment_mode`` selects; each source
     requires its pass to be enabled.
     """
-    check_extra_cluster_edges(extra_cluster_edges, with_containment, with_simhash_pass)
+    check_pass_options(
+        extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
+    )
 
     def materialize(stage: str, build) -> DataFrame:
         if run is not None:
             return run.materialize(stage, build)
-        df = build()
-        # cache stages reused by multiple downstream consumers
-        return df
+        return build()
 
     if run is not None and not run.stage_fresh("assemble"):
         # contract guard (input_hint: turn_idx is the stable order key):
@@ -171,13 +175,11 @@ def run_dedup(
     # built before clustering so their pairs can join the edge set
     containment_prefix = containment_general = simhash_pair_df = None
     if with_containment:
-        if containment_mode not in ("prefix", "general", "general_sa"):
-            raise ValueError(f"unknown containment_mode: {containment_mode!r}")
         containment_prefix = materialize(
             "contain_prefix", lambda: containment.prefix_containment_pairs(signed, cfg)
         )
-        if containment_mode != "prefix":
-            backend = "contains" if containment_mode == "general" else "suffix_array"
+        backend = containment.MODE_BACKEND[containment_mode]
+        if backend is not None:
             containment_general = materialize(
                 "contain_general",
                 # the prefix leg rides the stage just materialized above

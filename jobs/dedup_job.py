@@ -109,11 +109,13 @@ def main(argv: list[str] | None = None) -> None:
     if not args.input or not args.output:
         ap.error("--input and --output are required (or use --make-zip)")
 
-    from bibexpy_spark.pipeline import check_extra_cluster_edges
+    from bibexpy_spark.pipeline import check_pass_options
 
     edges = tuple(e for e in args.cluster_edges.split(",") if e)
     try:
-        check_extra_cluster_edges(edges, args.containment, not args.no_simhash)
+        check_pass_options(
+            edges, args.containment, not args.no_simhash, args.containment_mode
+        )
     except ValueError as e:
         ap.error(str(e))
     if args.incremental:

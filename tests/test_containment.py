@@ -283,13 +283,29 @@ def test_containment_edges_fold_contained_into_cluster(spark):
     assert got2["solo"] == "solo"
 
 
-def test_extra_edges_validation_and_simhash_monotone(spark, turns_df):
-    """Unknown/unavailable edge sources raise; adding simhash edges can only
-    merge clusters (edge-superset monotonicity), never split them."""
+def test_extra_edges_validation_and_simhash_monotone(spark, turns_df, tmp_path):
+    """Unknown/unavailable edge sources and an unknown containment mode
+    raise — fold_state before it reads the state; adding simhash edges can
+    only merge clusters (edge-superset monotonicity), never split them."""
     import pytest  # noqa: PLC0415
 
-    from bibexpy_spark import pipeline
+    from bibexpy_spark import incremental, pipeline
 
+    with pytest.raises(ValueError, match="unknown containment_mode"):
+        pipeline.run_dedup(spark, turns_df, containment_mode="nope")
+    # over a prefix-mode state a misspelt mode is an unknown mode, not a
+    # missing containment_pairs/ table
+    state = incremental.batch_state(
+        pipeline.run_dedup(spark, turns_df, with_simhash_pass=False),
+        True, False, "prefix",
+    )
+    for name, df in state.items():
+        df.write.parquet(str(tmp_path / name))
+    with pytest.raises(ValueError, match="unknown containment_mode"):
+        incremental.fold_state(
+            spark, turns_df, str(tmp_path), with_containment=True,
+            containment_mode="nope",
+        )
     with pytest.raises(ValueError, match="unknown extra_cluster_edges"):
         pipeline.run_dedup(spark, turns_df, extra_cluster_edges=("nope",))
     with pytest.raises(ValueError, match="needs with_containment"):

@@ -45,6 +45,17 @@ def test_full_run_then_resume_skips_all_stages(spark, turns_df, warehouse, golde
     assert clusters2.equals(want)
 
 
+def test_run_context_run_leaves_nothing_cached(spark, turns_df, warehouse):
+    """Every stage of a RunContext run is read back from its checkpoint, so
+    the run must leave no cached frame behind — a long-lived session runs
+    many of them."""
+    spark.catalog.clearCache()
+    run = RunContext(spark, CANONICAL, warehouse, run_id="runC", input_token="tok1")
+    pipeline.run_dedup(spark, turns_df, CANONICAL, run=run)
+    run.close()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_mid_run_kill_resumes_from_checkpoint(spark, turns_df, warehouse):
     """Simulate a crash after the sign stage: delete downstream manifests,
     relaunch, and assert the completed stages report checkpoint hits."""

@@ -10,7 +10,10 @@ star fallback MUST activate; the assertions pin:
   * candidate volume stays bounded — far below the all-pairs blowup the
     pile-up would otherwise cause;
   * dup-pair recall vs a brute-force exact-Jaccard oracle holds at 1.0
-    (star edges chain through connected components, so no pair is lost).
+    (star edges chain through connected components, so no pair is lost);
+  * the delta-driven bucket join (the incremental path's band join and
+    the SimHash delta) over the corpus split old/new emits exactly the
+    batch join's pairs that touch a new row, star buckets included.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from pyspark.sql import functions as F
 
 from bibexpy_spark import corpus, pipeline
 from bibexpy_spark.config import DedupConfig
-from bibexpy_spark.operators import exact, lsh
+from bibexpy_spark.operators import assembly, exact, lsh, simhash
 
 
 @pytest.fixture(scope="module")
@@ -31,7 +34,8 @@ def skew_corpus(spark, tmp_path_factory):
 
 
 def test_star_fallback_bounds_candidates_and_keeps_recall(spark, skew_corpus):
-    cfg = DedupConfig(hot_band_cap=20)  # force star mode at fixture scale
+    # force star mode at fixture scale
+    cfg = DedupConfig(hot_band_cap=20, hot_chunk_cap=20)
     res = pipeline.run_dedup(
         spark, skew_corpus, cfg=cfg, with_containment=False, with_simhash_pass=False
     )
@@ -94,3 +98,40 @@ def test_star_fallback_bounds_candidates_and_keeps_recall(spark, skew_corpus):
         .select("cluster_id").distinct().count()
     )
     assert hot_clusters == 1
+
+    # delta leg: split the corpus in two; the delta-driven join over the
+    # same keyed rows must emit exactly the batch join's pairs that have a
+    # new endpoint — star buckets included — for the LSH band frame and a
+    # SimHash chunk frame
+    def _split(df):
+        return df.withColumn("_is_new", F.xxhash64("conv_id") % 2 == 0)
+
+    band_keyed = _split(reps).select(
+        "conv_id", "_is_new",
+        F.posexplode("band_hashes").alias("band_idx", "band_hash"),
+    )
+    simmed = _split(
+        simhash.with_simhash(
+            assembly.assemble_docs(skew_corpus, include_roles_tools=True), cfg
+        )
+    )
+    chunk_keyed = simhash._chunked(simmed, cfg, "conv_id", "simhash", "_is_new")
+    for keyed, keys, cap, carry in (
+        (band_keyed, ("band_idx", "band_hash"), cfg.hot_band_cap, ()),
+        (chunk_keyed, ("chunk_idx", "chunk_val"), cfg.hot_chunk_cap, ("simhash",)),
+    ):
+        new_ids = {
+            r["conv_id"] for r in keyed.filter("_is_new").select("conv_id").collect()
+        }
+        assert 0 < len(new_ids) < keyed.select("conv_id").distinct().count()
+        batch, _ = lsh.bucket_pairs(keyed, keys, "conv_id", cap, carry=carry)
+        delta, sizes = lsh.bucket_pairs(
+            keyed, keys, "conv_id", cap, new_col="_is_new", carry=carry
+        )
+        assert sizes.filter(F.col("star_mode")).count() > 0, keys
+        want = sorted(
+            tuple(r) for r in batch.collect()
+            if r["a_id"] in new_ids or r["b_id"] in new_ids
+        )
+        got = sorted(tuple(r) for r in delta.select(*batch.columns).collect())
+        assert got == want, keys
