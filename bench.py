@@ -1,71 +1,14 @@
-"""Benchmark harness.
+"""Spark stderr taxonomy and the paired-cycle scaling estimator.
 
-Structure (r4): every measured unit runs as its OWN subprocess with stderr
-captured to a file and classified against an error taxonomy (task retries /
-OOM / fetch failures / executor loss / python-worker death / DAG-scheduler
-stacks / shutdown noise) — a leg can no longer print a stack trace without
-the report noticing (VERDICT r3 "what's wrong" #1).
-
-Scaling protocol (north rule: same job, same input, N vs 4N parallelism):
-
-* PRIMARY pair — the amortized 4x corpus (480k conversations, ~4.5M turns,
-  seed 45): at the r3 corpus size the optimized pipeline finishes so fast at
-  8+ cores that per-job scheduling and session-fixed costs dominate the
-  wall (Amdahl on a fixed floor that vanishes at production scale); the 4x
-  corpus restores the compute-dominated regime the 100-TB target lives in
-  (VERDICT r3 next-round #1).  Reported pairs: local[2]->local[8] (the
-  host-LINEAR pair — the honest code-scaling signal; the mp-pool sweep in
-  data/host_baseline.json is near-linear to ~8 procs) and
-  local[8]->local[32] (the driver-instructed N-vs-4N proxy, which mostly
-  measures this VM's ~13-16-effective-core aggregate ceiling).
-* SECONDARY — the r3 standard corpus (120k conversations, seed 43) for
-  round-over-round continuity.
-
-Each leg primes the Python worker pool with one tiny Arrow-UDF job BEFORE
-the timed region: worker fork + numpy/pandas import is a session-fixed cost
-(paid once per executor on a real cluster, amortized to zero over a 100-TB
-run), not pipeline cost.  Legs are interleaved and minima estimate
-capability (the host shows 2-10x phase throttling; every raw run is
-reported).
-
-Prints ONE JSON line at the end; also refreshes BENCH.md.  A full run
-folds its fresh legs into the cross-session record
-(data/bench_r4_session.json, override via SPARK_GRAFT_BENCH_RECORD) and
-publishes the merged minima — one session cannot estimate capability on
-a phase-throttled host — while keeping its own numbers under
-``fresh_session``.  Set SPARK_GRAFT_BENCH_FAST=1 to skip the scaling
-legs (dev loop).
+``classify_stderr`` labels a captured Spark stderr file by error class
+(perfbench reports it per run; ``tools/submit_scaling.py`` per leg).
+``paired_best`` is the capability estimate ``tools/submit_scaling.py``
+takes over paired N -> 4N cycles.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import re
-import subprocess
-import sys
-import time
-
-REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO)
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-FAST = os.environ.get("SPARK_GRAFT_BENCH_FAST", "") == "1"
-
-#: headline operator queries (subset of the driver-contract registry)
-HEADLINE = [
-    "t_assemble",
-    "t_exact_dup_groups",
-    "t_gram_dup_pairs",
-    "t_clusters",
-    "q_sum_decimal",
-    "q_blocking_join",
-    "q_topk_per_group",
-    "d_ngram_jaccard_pairs",
-    "d_text_stats",
-    "e_knn_bruteforce",
-]
 
 #: (category, regex) — counted per captured stderr; "none" when all zero
 ERROR_TAXONOMY = [
@@ -111,1334 +54,3 @@ def paired_best(cycles: list) -> float | None:
     best-cycle capability claim."""
     ok = [c for c in cycles if c <= PHASE_FLIP_TOL]
     return max(ok) if ok else None
-
-
-def _force(df) -> int:
-    """Fully materialize a DataFrame without driver-side collect."""
-    df.write.format("noop").mode("overwrite").save()
-    return 0
-
-
-def _warm_python_workers(spark, cores: int) -> None:
-    """Delegates to bibexpy_spark.session.warm_python_workers (moved there
-    so jobs/dedup_job.py --bench-json shares the identical warmup)."""
-    from bibexpy_spark.session import warm_python_workers
-
-    warm_python_workers(spark, cores)
-
-
-# ---------------------------------------------------------------------------
-# subprocess units
-# ---------------------------------------------------------------------------
-
-def run_leg(
-    cores: int, turns_path: str, out_json: str, kernel_path: str | None = None
-) -> None:
-    """One scaling leg: full pipeline wall + a kernel-stage pass.
-
-    ``kernel_s`` isolates the CPU-bound signature stage (normalize +
-    shingle + MinHash UDFs over a cached input, shuffle-free): end-to-end
-    scaling is bounded by the host's memory-bandwidth ceiling on shuffles,
-    kernel scaling shows what the code does when the substrate scales.
-    The kernel pass runs over ``kernel_path`` when given (a CONSTANT
-    reference slice across all legs of a corpus — the kernel ratio only
-    needs per-level relative timing, and the smaller slice frees the leg
-    budget for pipeline repeats).
-    """
-    from pyspark.sql import functions as F
-
-    from bibexpy_spark import pipeline
-    from bibexpy_spark.config import CANONICAL
-    from bibexpy_spark.functions import udfs
-    from bibexpy_spark.operators import assembly
-    from bibexpy_spark.session import build_spark
-
-    spark = build_spark(
-        app_name=f"bench_dedup_{cores}", cores=cores, shuffle_partitions=cores
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    turns = spark.read.parquet(turns_path)
-    n_turns = turns.count()
-    _warm_python_workers(spark, cores)
-
-    t0 = time.time()
-    res = pipeline.run_dedup(
-        spark, turns, with_containment=False, with_simhash_pass=False
-    )
-    n_clusters = res["clusters"].agg(
-        F.countDistinct("cluster_id").alias("n")
-    ).collect()[0]["n"]
-    wall = time.time() - t0
-
-    # kernel-stage pass over cached docs (compute-bound, shuffle-free)
-    kturns = spark.read.parquet(kernel_path) if kernel_path else turns
-    kernel_n = kturns.count()
-    conv = assembly.assemble_docs(kturns).persist()
-    conv.count()
-    t0 = time.time()
-    udfs.with_signature_columns(conv, CANONICAL).select(
-        F.sum(F.size("band_hashes"))
-    ).collect()
-    kernel = time.time() - t0
-    conv.unpersist()
-    spark.stop()
-
-    with open(out_json, "w") as f:
-        json.dump(
-            {
-                "cores": cores,
-                "n_turns": n_turns,
-                "kernel_n_turns": int(kernel_n),
-                "wall_s": round(wall, 2),
-                "kernel_s": round(kernel, 2),
-                "n_clusters": n_clusters,
-            },
-            f,
-        )
-
-
-def run_headline_round(rnd: int, out_json: str) -> None:
-    """One headline round: every HEADLINE query, fully materialized, in a
-    fresh session (the registry's gram/pipeline caches are keyed by
-    applicationId, so a reused session would time a cache hit).  A tiny
-    shuffle job + the Python-worker warmup run first: this subprocess
-    boots a COLD JVM.
-
-    Timed pass = the SECOND execution of each query (r5).  The r4
-    protocol timed the first pass, which front-loads JVM/codegen/scan-path
-    warmup onto the round's first queries — measured 2.51s -> 0.53s for
-    t_assemble and 1.20 -> 0.87 for t_exact_dup_groups first-vs-steady in
-    one session (tools/headline_steady.py; the whole apparent r4
-    regression of those two minima, VERDICT r4 #6, was this).  The warm
-    pass runs the full list first (so the timed pass still starts from a
-    comparable mid-session state for every query); steady-state is the
-    quantity that matters at 100 TB — the session-fixed cold cost is
-    measured separately by the fixed-floor analysis in BENCH.md.  The
-    registry caches keyed by applicationId (gram pairs) are cleared
-    between the passes so the timed pass re-executes the real DAG."""
-    import __spark_entry__ as entrymod
-
-    from pyspark.sql import functions as F
-
-    from bibexpy_spark.entry_queries import transcripts
-    from bibexpy_spark.session import build_spark
-
-    spark = build_spark(
-        app_name=f"bench_queries_{rnd}", cores=CPUS, shuffle_partitions=CPUS
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    _warm_python_workers(spark, CPUS)
-    spark.range(0, 100_000, 1, CPUS).groupBy(
-        (F.col("id") % 97).alias("k")
-    ).count().write.format("noop").mode("overwrite").save()
-    qs = entrymod.queries()
-    for name in HEADLINE:          # warm pass: codegen/JIT/scan-path
-        _force(qs[name](spark, SF_DIR))
-    # drop the per-session gram-pair cache so the timed pass re-executes
-    # the real candidate/verify DAG instead of reading a persisted RDD
-    for df in transcripts._GRAM_CACHE.values():
-        df.unpersist()
-    transcripts._GRAM_CACHE.clear()
-    out = {}
-    for name in HEADLINE:
-        t0 = time.time()
-        _force(qs[name](spark, SF_DIR))
-        out[name] = round(time.time() - t0, 2)
-    spark.stop()
-    with open(out_json, "w") as f:
-        json.dump(out, f)
-
-
-#: the currently running bench subprocess — the SIGTERM handler kills its
-#: process group before publishing the partial artifact (the child's JVM
-#: would otherwise outlive the bench and keep the driver window busy)
-_ACTIVE_PROC: subprocess.Popen | None = None
-
-
-def _subprocess_unit(args: list[str], tag: str, scratch: str) -> tuple[dict | None, str]:
-    """Run a bench subprocess; return (parsed result json, errors summary).
-
-    Hard per-unit timeout (SPARK_GRAFT_LEG_TIMEOUT_S, default 1800s):
-    PySpark launch can deadlock outright on this host (observed r4: python
-    driver blocked in py4j recv, JVM main blocked reading its launch pipe,
-    zero CPU on an otherwise idle machine) — without a timeout one stuck
-    leg hangs the whole bench run.  The unit runs in its own process group
-    so the kill takes the orphaned JVM down with it; the leg is recorded
-    as errors="hang_timeout" and the scheduler moves on."""
-    global _ACTIVE_PROC
-    timeout_s = int(os.environ.get("SPARK_GRAFT_LEG_TIMEOUT_S", "1800"))
-    out_json = os.path.join(scratch, f"{tag}.json")
-    err_path = os.path.join(scratch, f"{tag}.stderr")
-    with open(err_path, "w") as errf:
-        proc = subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), *args, out_json],
-            stdout=subprocess.DEVNULL, stderr=errf,
-            env={**os.environ, "PYTHONPATH": REPO},
-            start_new_session=True,
-        )
-        _ACTIVE_PROC = proc
-        try:
-            rc = proc.wait(timeout=timeout_s)
-        except subprocess.TimeoutExpired:
-            import signal
-
-            try:
-                os.killpg(proc.pid, signal.SIGKILL)
-            except (ProcessLookupError, PermissionError):
-                proc.kill()
-            proc.wait()
-            return None, "hang_timeout"
-        finally:
-            _ACTIVE_PROC = None
-    errors = classify_stderr(err_path)
-    if rc != 0:
-        errors = (errors + "," if errors != "none" else "") + f"exit:{rc}"
-        return None, errors
-    try:
-        return json.load(open(out_json)), errors
-    except (OSError, json.JSONDecodeError):
-        return None, errors + ",no_output"
-
-
-# ---------------------------------------------------------------------------
-# orchestrator
-# ---------------------------------------------------------------------------
-
-def _scaling_summary(
-    runs: dict[int, list[dict]], kernel_best_by_level: dict[int, float] | None = None
-) -> tuple[dict, dict]:
-    """Per-level best-of summary + efficiency pairs for one corpus.
-
-    ``kernel_best_by_level`` (session-wide minima of the constant kernel
-    slice, across ALL corpora) adds a per-level ``phase_quality`` column:
-    best-seen kernel at that core count / this level's best kernel — 1.0
-    means at least one run landed in the cleanest phase the session saw,
-    lower means every run of this leg was throttle-contaminated."""
-    scaling = {}
-    for c, rs in runs.items():
-        if not rs:
-            continue
-        best = min(rs, key=lambda r: r["wall_s"])
-        s = dict(best)
-        s["all_runs_s"] = [r["wall_s"] for r in rs]
-        s["kernel_all_runs_s"] = [r["kernel_s"] for r in rs]
-        s["kernel_s"] = min(r["kernel_s"] for r in rs)
-        s["turns_per_sec"] = round(s["n_turns"] / s["wall_s"], 1)
-        s["kernel_turns_per_sec"] = round(
-            s.get("kernel_n_turns", s["n_turns"]) / s["kernel_s"], 1
-        )
-        s["errors"] = sorted({r.get("errors", "none") for r in rs})
-        # per-run labels (r5): parallel to all_runs_s, so the merge can AGE
-        # OUT legacy runs whose stderr was never captured once enough
-        # labeled runs accumulate at a leg position (VERDICT r4 #8)
-        s["errors_per_run"] = [r.get("errors", "none") for r in rs]
-        if kernel_best_by_level and kernel_best_by_level.get(c):
-            s["phase_quality"] = round(kernel_best_by_level[c] / s["kernel_s"], 2)
-        scaling[c] = s
-
-    def _eff(lo: int, hi: int, key: str):
-        if lo not in scaling or hi not in scaling:
-            return None
-        return round((scaling[hi][key] / scaling[lo][key]) / (hi / lo), 3)
-
-    pairs = {}
-    for plo, phi, label in (
-        (1, 4, "linear_1_4"),        # PRIMARY north-rule N->4N pair: the only
-                                     # one whose 4N cores all physically exist
-                                     # on this ~14-effective-core VM
-        (2, 8, "linear_2_8"),
-        (8, 32, "instructed_8_32"),
-    ):
-        e = _eff(plo, phi, "turns_per_sec")
-        if e is not None:
-            pairs[label] = {
-                "efficiency": e,
-                "kernel_efficiency": _eff(plo, phi, "kernel_turns_per_sec"),
-            }
-            # paired-cycle estimator: the leg order launches the lo and hi
-            # legs of a pair back-to-back, so runs at ADJACENT launch slots
-            # share a throttle phase — the within-cycle ratio controls for
-            # the phase in a way cross-run minima cannot (minima can combine
-            # a clean hi with a throttled lo and overshoot, or vice versa).
-            # Pair by recorded launch slot, never list index: a failed or
-            # budget-skipped leg would desynchronize positional zip and
-            # ratio walls from different phases (r4 review); adaptive
-            # top-up runs launch solo and correctly form no cycle
-            cycles = [
-                round((lo_r["wall_s"] / hi_r["wall_s"]) / (phi / plo), 3)
-                for lo_r in runs[plo]
-                for hi_r in runs[phi]
-                if hi_r.get("slot") == lo_r.get("slot", -2) + 1
-            ]
-            if cycles:
-                pairs[label]["paired_cycles"] = cycles
-                pb = paired_best(cycles)
-                if pb is not None:
-                    pairs[label]["paired_best"] = pb
-    return scaling, pairs
-
-
-def _data_dir() -> str:
-    """Artifact dir — SPARK_GRAFT_BENCH_WORKDIR isolates dev/test runs
-    (tiny-scale integration tests must not clobber the accumulated corpora,
-    record, or BENCH.md of the real repo)."""
-    return os.environ.get("SPARK_GRAFT_BENCH_WORKDIR") or os.path.join(
-        REPO, "data"
-    )
-
-
-def _bench_md_path() -> str:
-    wd = os.environ.get("SPARK_GRAFT_BENCH_WORKDIR")
-    return os.path.join(wd or REPO, "BENCH.md")
-
-
-def _partial_path() -> str:
-    return os.path.join(_data_dir(), "bench_partial.json")
-
-
-def _atomic_json(path: str, obj) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1)
-    os.replace(tmp, path)
-
-
-def _build_result(
-    runs: dict, corpora: dict, all_rounds: dict, headline_errors: list,
-    sf: str,
-) -> tuple[dict, dict]:
-    """Assemble the publishable result dict + per-corpus view from whatever
-    has accumulated so far.  Callable after EVERY leg/round: the partial
-    artifact on disk and the SIGTERM summary line always reflect the
-    session state (VERDICT r4 #1 — an outer timeout left BENCH_r04.json
-    with parsed=null because the only JSON line printed at the very end)."""
-    kernel_best_by_level: dict[int, float] = {}
-    for name in runs:
-        for c, rs in runs[name].items():
-            for r in rs:
-                prev = kernel_best_by_level.get(c)
-                kernel_best_by_level[c] = (
-                    r["kernel_s"] if prev is None else min(prev, r["kernel_s"])
-                )
-    per_corpus: dict[str, dict] = {}
-    for name in corpora:
-        scaling, pairs = _scaling_summary(runs[name], kernel_best_by_level)
-        if scaling:
-            per_corpus[name] = {"scaling": scaling, "pairs": pairs}
-
-    per_query = {name: min(ts) for name, ts in all_rounds.items() if ts}
-    total = round(sum(per_query.values()), 2)
-    # primary = amortized 4x corpus (compute-dominated regime; see leg_order
-    # comment), north-rule pair local[1]->local[4]; its 2->8 and 8->32
-    # pairs ride along unprefixed.  2x corpus = secondary continuity series.
-    # the published primary_corpus must name the corpus that ACTUALLY
-    # served as primary: if every xl4 leg failed and the 2x corpus takes
-    # over, labeling it "xl4" would publish 240k-conv legs under the 4x
-    # narrative and let merge_bench_sessions mix corpora (r4 review)
-    primary_name = next(
-        (n for n in ("xl4", "xl") if per_corpus.get(n)), None
-    )
-    primary = per_corpus.get(primary_name) or {}
-    p_scaling = primary.get("scaling", {})
-    p_pairs = dict(primary.get("pairs", {}))
-    if primary_name != "xl":
-        for label, p in per_corpus.get("xl", {}).get("pairs", {}).items():
-            p_pairs.setdefault(f"xl_{label}", p)
-    result = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": per_query,
-        "query_all_runs": {k: v for k, v in all_rounds.items() if v},
-        "headline_errors": headline_errors,
-        "sf": float(sf.replace("sf", "")) if sf.startswith("sf") else sf,
-        # FAST mode runs no legs; keep the current-scheme label there so
-        # --refresh-md picks the right branch for an empty session
-        "primary_corpus": primary_name or "xl4",
-        "pipeline": {f"local[{c}]": p_scaling[c] for c in p_scaling},
-        # when the 2x corpus itself is primary (xl4 fully failed), its legs
-        # live in "pipeline" only — duplicating them here would double-merge
-        "pipeline_xl": {
-            f"local[{c}]": v
-            for c, v in per_corpus.get("xl", {}).get("scaling", {}).items()
-        } if primary_name != "xl" else {},
-        "pipeline_std": {
-            f"local[{c}]": v
-            for c, v in per_corpus.get("std", {}).get("scaling", {}).items()
-        },
-        # best across legs, not highest-core: on this VM local[32] is SLOWER
-        # than local[8] (effective-core ceiling), and the metric is
-        # throughput, not core count — the level is published alongside
-        "throughput_turns_per_sec": (
-            max(s["turns_per_sec"] for s in p_scaling.values())
-            if p_scaling else None
-        ),
-        "throughput_level": (
-            f"local[{max(p_scaling, key=lambda c: p_scaling[c]['turns_per_sec'])}]"
-            if p_scaling else None
-        ),
-        "scaling_efficiency": p_pairs.get("linear_1_4", {}).get("efficiency"),
-        "scaling_efficiency_paired_best": p_pairs.get("linear_1_4", {}).get(
-            "paired_best"
-        ),
-        "kernel_scaling_efficiency": p_pairs.get("linear_1_4", {}).get(
-            "kernel_efficiency"
-        ),
-        "scaling_pairs": p_pairs,
-        "scaling_pairs_std": per_corpus.get("std", {}).get("pairs", {}),
-    }
-    return result, per_corpus
-
-
-def main() -> None:
-    import signal as _signal
-
-    from bibexpy_spark import corpus
-
-    sf = os.path.basename(SF_DIR.rstrip("/"))
-    corpus.corpus_path_for_sf(SF_DIR)
-    scratch = os.path.join(_data_dir(), "bench_scratch")
-    os.makedirs(scratch, exist_ok=True)
-
-    data = _data_dir()
-    corpora: dict[str, str] = {}
-    runs: dict[str, dict[int, list[dict]]] = {}
-    all_rounds: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    headline_errors: list[str] = []
-    t_start = time.time()
-
-    # --- budget (VERDICT r4 #1) --------------------------------------------
-    # total_budget bounds the WHOLE run (corpora + legs + headline +
-    # publish) so it fits inside the driver's outer window (r4's artifact
-    # died rc=124 because the leg/adaptive gates only checked elapsed time
-    # at LAUNCH — a leg starting at t=budget-1 could run 700s past it, and
-    # the headline rounds queued after had no reserved room at all).
-    # Gates are ESTIMATE-based: a repeat unit launches only if its
-    # estimated duration (observed max at that (corpus, level) x 1.25 +
-    # 45s margin; measured subprocess wall incl. JVM boot) still fits.
-    total_budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "4200"))
-    headline_reserve = float(
-        os.environ.get("SPARK_GRAFT_HEADLINE_RESERVE_S", "900")
-    )
-    legs_deadline = total_budget - headline_reserve
-    leg_walltime: dict[tuple[str, int], float] = {}
-
-    def _leg_estimate(name: str, c: int) -> float:
-        seen = leg_walltime.get((name, c))
-        return (seen * 1.25 + 45.0) if seen else 600.0
-
-    record_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_RECORD",
-        os.path.join(_data_dir(), "bench_r4_session.json"),
-    )
-    _terminating = []
-
-    def _publish_and_print(partial: bool) -> None:
-        result, per_corpus = _build_result(
-            runs, corpora, all_rounds, headline_errors, sf
-        )
-        if partial:
-            result["partial"] = True
-        if not FAST:
-            # a FAST smoke (single leg, no scaling pairs) must not clobber
-            # the committed full-run BENCH.md (code-review r2 finding)
-            try:
-                result = _publish(result, per_corpus, record_path)
-            except Exception as e:  # publish must never eat the summary line
-                print(f"[bench] publish failed ({e}); printing raw session",
-                      file=sys.stderr, flush=True)
-            if partial:
-                result["partial"] = True  # the merge drops unknown keys
-        _atomic_json(_partial_path(), result)
-        print(json.dumps(result))
-        sys.stdout.flush()
-
-    def _checkpoint() -> None:
-        """Atomic partial artifact after every completed unit — a hard
-        kill (SIGKILL skips even the SIGTERM path) still leaves the last
-        checkpoint parseable on disk."""
-        result, _pc = _build_result(
-            runs, corpora, all_rounds, headline_errors, sf
-        )
-        result["partial"] = True
-        _atomic_json(_partial_path(), result)
-
-    def _on_term(signum, frame):
-        if _terminating:
-            return
-        _terminating.append(signum)
-        print(f"[bench] signal {signum} at "
-              f"{round(time.time() - t_start, 1)}s — publishing partial "
-              "results", file=sys.stderr, flush=True)
-        proc = _ACTIVE_PROC
-        if proc is not None:
-            try:
-                os.killpg(proc.pid, _signal.SIGKILL)
-            except (ProcessLookupError, PermissionError):
-                proc.kill()
-        try:
-            _publish_and_print(partial=True)
-        finally:
-            os._exit(0)
-
-    _signal.signal(_signal.SIGTERM, _on_term)
-    _signal.signal(_signal.SIGINT, _on_term)
-
-    # corpus scale is a DEV/TEST knob (tiny end-to-end runs of the whole
-    # orchestrator); the record merge refuses mismatched n_turns, so a
-    # scaled session can never pollute the accumulated evidence
-    cscale = float(os.environ.get("SPARK_GRAFT_BENCH_CORPUS_SCALE", "1"))
-    if not FAST:
-        corpora["xl"] = corpus.write_parquet(
-            os.path.join(data, "transcripts_bench_xl.parquet"),
-            max(50, int(240_000 * cscale)), seed=44
-        )
-        corpora["xl4"] = corpus.write_parquet(
-            os.path.join(data, "transcripts_bench_xl4.parquet"),
-            max(100, int(480_000 * cscale)), seed=45
-        )
-        corpora["std"] = corpus.write_parquet(
-            os.path.join(data, "transcripts_bench.parquet"),
-            max(25, int(120_000 * cscale)), seed=43
-        )
-
-    # --- scaling legs -------------------------------------------------------
-    # PRIMARY pair = 4x corpus local[1]->local[4].  The pair must be
-    # compute-dominated for the N->4N ratio to measure the PLAN rather than
-    # the per-session fixed floor (Spark session + codegen compile +
-    # per-job scheduling, measured 18-26s on this host via the
-    # F = (4*T4 - T1)/3 identity across clean cycles).  The r4 interpreted-
-    # path eliminations roughly halved the pipeline's compute at equal
-    # output, which silently demoted the 2x corpus out of that regime
-    # (fixed floor grew to ~25-33% of its local[4] wall -> clean-phase
-    # cycles read 0.75 there) and, by the same factor, made the 4x corpus's
-    # local[1] leg measurable under a minima protocol (~7-10 min, what the
-    # 2x leg cost before the speedups).  The 2x corpus stays as the
-    # secondary continuity series; 4x also carries 2->8 and the
-    # driver-instructed 8->32.
-    #
-    # Scheduling: the host throttles in multi-minute phases (2-10x), so a
-    # leg's wall time is only trustworthy if it ran in a CLEAN phase.  The
-    # constant kernel slice timed inside every leg is the phase detector:
-    # a run whose kernel_s is within CLEAN_FACTOR of the session-best
-    # kernel at that core count ran clean.  The fixed order spreads the
-    # primary cycles across the session (phase diversity); the adaptive
-    # tail then keeps re-running any primary leg that still lacks a clean
-    # run until it gets one, the repeat cap, or the legs deadline.  Budget
-    # gates are estimate-based (r5): a repeat leg launches only if its
-    # estimated duration fits the legs deadline, and a first run only if
-    # it fits the TOTAL budget — the artifact (a complete summary line)
-    # now outranks last-leg coverage (VERDICT r4 #1).  Primary cycles run
-    # FIRST so they always get their full depth even when a throttle
-    # phase eats the early budget.
-    leg_order = [
-        ("xl4", 1), ("xl4", 4),
-        ("xl", 1), ("xl", 4),
-        ("xl4", 1), ("xl4", 4),
-        ("std", 1), ("std", 4),
-        ("xl", 1), ("xl", 4),
-        ("std", 2), ("std", 8),
-        ("xl4", 2), ("xl4", 8), ("xl4", 32),
-    ]
-    # targeted sessions (e.g. "xl4:1,xl4:4,xl4:1,xl4:4" to deepen the
-    # primary pair's labeled-run count for the aging protocol) — the
-    # record merge accepts any subset of levels, and cycles still pair by
-    # launch slot
-    if os.environ.get("SPARK_GRAFT_BENCH_LEG_ORDER"):
-        leg_order = [
-            (n, int(c))
-            for n, c in (
-                tok.split(":")
-                for tok in os.environ["SPARK_GRAFT_BENCH_LEG_ORDER"].split(",")
-            )
-        ]
-    runs.update({
-        name: {1: [], 2: [], 4: [], 8: [], 32: []} for name in corpora
-    })
-    # kernel pass always times the SAME reference slice (std corpus) so the
-    # per-level kernel ratio is comparable and XL legs don't spend their
-    # budget re-signing 4.5M turns outside the timed pipeline
-    kernel_ref = corpora.get("std", "")
-
-    def _do_leg(name: str, c: int, i: int, total: int) -> None:
-        t_leg = time.time()
-        r, errors = _subprocess_unit(
-            ["--leg", str(c), corpora[name], kernel_ref],
-            f"leg_{i}_{name}_{c}", scratch,
-        )
-        leg_walltime[(name, c)] = max(
-            leg_walltime.get((name, c), 0.0), time.time() - t_leg
-        )
-        if r is None:
-            print(f"[bench] leg {i + 1} {name} local[{c}] FAILED: {errors}",
-                  file=sys.stderr, flush=True)
-            return
-        r["errors"] = errors
-        r["at_s"] = round(time.time() - t_start, 1)  # phase forensics
-        r["slot"] = i  # launch slot: paired cycles require slot adjacency
-        runs[name][c].append(r)
-        print(
-            f"[bench] leg {i + 1}/{total} {name} local[{c}]: "
-            f"wall={r['wall_s']}s kernel={r['kernel_s']}s errors={errors}",
-            file=sys.stderr, flush=True,
-        )
-        _checkpoint()
-
-    for i, (name, c) in enumerate([] if FAST else leg_order):
-        elapsed = time.time() - t_start
-        est = _leg_estimate(name, c)
-        if runs[name][c] and elapsed + est > legs_deadline:
-            print(
-                f"[bench] legs deadline {legs_deadline}s (est {est:.0f}s, "
-                f"elapsed {elapsed:.0f}s) — skipping repeat leg "
-                f"{i + 1}/{len(leg_order)} {name} local[{c}]",
-                file=sys.stderr, flush=True,
-            )
-            continue
-        if not runs[name][c] and elapsed + est > total_budget - 120:
-            # even a FIRST run at a level yields to the artifact: a leg
-            # that would overrun the whole window risks parsed=null for
-            # everything already measured
-            print(
-                f"[bench] total budget {total_budget}s cannot fit first "
-                f"run of {name} local[{c}] (est {est:.0f}s, elapsed "
-                f"{elapsed:.0f}s) — skipping", file=sys.stderr, flush=True,
-            )
-            continue
-        _do_leg(name, c, i, len(leg_order))
-
-    # adaptive tail: top up primary legs that never saw a clean phase
-    PRIMARY_LEGS = [("xl4", 1), ("xl4", 4)]
-    CLEAN_FACTOR = 1.2
-    max_runs = int(os.environ.get("SPARK_GRAFT_PRIMARY_MAX_RUNS", "6"))
-
-    def _kernel_best(level: int) -> float | None:
-        vals = [
-            r["kernel_s"] for n in runs for r in runs[n].get(level, [])
-        ]
-        return min(vals) if vals else None
-
-    def _leg_clean(name: str, c: int) -> bool:
-        kb = _kernel_best(c)
-        rs = runs[name][c]
-        return bool(rs) and kb is not None and (
-            min(r["kernel_s"] for r in rs) <= CLEAN_FACTOR * kb
-        )
-
-    i = len(leg_order)
-    attempts = {leg: 0 for leg in PRIMARY_LEGS}
-    while not FAST:
-        pending = [
-            (n, c) for (n, c) in PRIMARY_LEGS
-            if len(runs[n][c]) < max_runs and attempts[(n, c)] < max_runs
-            and not _leg_clean(n, c)
-        ]
-        if not pending:
-            break
-        name, c = min(pending, key=lambda t: len(runs[t[0]][t[1]]))
-        if time.time() - t_start + _leg_estimate(name, c) > legs_deadline:
-            print(
-                f"[bench] adaptive tail: {name} local[{c}] est "
-                f"{_leg_estimate(name, c):.0f}s does not fit the legs "
-                f"deadline {legs_deadline}s — stopping",
-                file=sys.stderr, flush=True,
-            )
-            break
-        attempts[(name, c)] += 1
-        print(
-            f"[bench] adaptive: {name} local[{c}] has no clean-phase run "
-            f"(best kernel {min((r['kernel_s'] for r in runs[name][c]), default=None)} "
-            f"vs session-best {_kernel_best(c)}) — repeating",
-            file=sys.stderr, flush=True,
-        )
-        _do_leg(name, c, i, len(leg_order))
-        i += 1
-
-    # --- headline queries ---------------------------------------------------
-    # round 0 always runs (the headline reserve held room for it); later
-    # rounds launch only if the observed round duration still fits the
-    # total budget
-    repeats = 1 if FAST else int(os.environ.get("SPARK_GRAFT_HEADLINE_REPEATS", "3"))
-    round_est = 300.0
-    for rnd in range(repeats):
-        if rnd > 0 and time.time() - t_start + round_est > total_budget - 60:
-            print(
-                f"[bench] total budget {total_budget}s cannot fit headline "
-                f"round {rnd + 1}/{repeats} (est {round_est:.0f}s) — "
-                "stopping", file=sys.stderr, flush=True,
-            )
-            break
-        t_round = time.time()
-        if FAST:
-            run_headline_round(rnd, os.path.join(scratch, "headline_fast.json"))
-            r = json.load(open(os.path.join(scratch, "headline_fast.json")))
-            errors = "none"
-        else:
-            r, errors = _subprocess_unit(
-                ["--headline-round", str(rnd)], f"headline_{rnd}", scratch
-            )
-        round_est = max(round_est, (time.time() - t_round) * 1.15)
-        headline_errors.append(errors)
-        if r is None:
-            print(f"[bench] headline round {rnd} FAILED: {errors}",
-                  file=sys.stderr, flush=True)
-            continue
-        for name, sec in r.items():
-            all_rounds[name].append(sec)
-        print(f"[bench] headline round {rnd + 1}/{repeats}: "
-              f"total={round(sum(r.values()), 2)}s errors={errors}",
-              file=sys.stderr, flush=True)
-        if not FAST:
-            _checkpoint()
-
-    _publish_and_print(partial=False)
-
-
-# ---------------------------------------------------------------------------
-# BENCH.md writer
-# ---------------------------------------------------------------------------
-
-def _scaling_table(scaling: dict, pairs: dict) -> list[str]:
-    lines = [
-        "| leg | pipeline wall (s) | all runs (s) | turns/sec | kernel (s) | kernel turns/sec | phase | errors |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    for c in sorted(scaling):
-        s = scaling[c]
-        aged = (
-            f" (+{s['aged_out_runs']} pre-forensics runs aged out)"
-            if s.get("aged_out_runs") else ""
-        )
-        lines.append(
-            f"| local[{c}] | {s['wall_s']} | {s['all_runs_s']} | "
-            f"{s['turns_per_sec']} | {s['kernel_s']} | "
-            f"{s['kernel_turns_per_sec']} | {s.get('phase_quality', '—')} | "
-            f"{'; '.join(s['errors'])}{aged} |"
-        )
-    if pairs:
-        lines += [
-            "",
-            "(phase = session-best kernel at that core count / this leg's",
-            "best kernel; 1.0 = at least one run saw the cleanest phase the",
-            "session observed, lower = every run was throttled.  Paired",
-            "cycles = within-cycle wall ratio of the back-to-back lo/hi legs,",
-            "matched by launch slot — a failed or skipped run drops its cycle",
-            "instead of pairing walls from different phases.  Each cycle",
-            "shares a throttle phase, so it cannot combine a clean numerator",
-            "with a throttled denominator the way cross-run minima can;",
-            "best-cycle is the capability estimate.  A cycle measuring",
-            f"above {PHASE_FLIP_TOL} broke the shared-phase assumption",
-            "mid-leg — the lo leg throttled while the hi leg ran clean;",
-            "superlinear N->4N is not physically available on one host —",
-            "so it stays listed but is excluded from best-cycle.)",
-            "",
-            "| pair | end-to-end efficiency (minima) | kernel efficiency | paired cycles | best cycle |",
-            "|---|---|---|---|---|",
-        ]
-        for label, p in pairs.items():
-            lines.append(
-                f"| {label.replace('_', ' ')} | {p['efficiency']} | "
-                f"{p['kernel_efficiency']} | "
-                f"{p.get('paired_cycles', '—')} | {p.get('paired_best', '—')} |"
-            )
-    return lines
-
-
-def _write_bench_md(result, per_corpus) -> None:
-    """Regenerate BENCH.md, folding in the host-capability baseline
-    (tools/host_baseline.py) and the per-stage scaling breakdown
-    (tools/stage_breakdown.py) when their JSONs exist."""
-    lines = [
-        "# BENCH — measured results",
-        "",
-        "Every leg runs as its own subprocess with stderr captured and",
-        "classified (taxonomy: task_retry, oom, fetch_failure, executor_lost,",
-        "python_worker, dag_stack, cancelled, shutdown_noise); the errors",
-        "column is explicit per leg — `none` means the captured stderr",
-        "matched nothing.  Legs are interleaved; minima estimate capability",
-        "(this host shows 2-10x phase throttling, see the host baseline",
-        "below).  Each leg primes the Python worker pool with one tiny",
-        "Arrow-UDF job before the timed region (worker fork + library import",
-        "is session-fixed cost, paid once per executor on a real cluster).",
-        "The kernel column times the shuffle-free signature stage over a",
-        "CONSTANT reference slice (the 1.12M-turn std corpus) at every",
-        "level — only the per-level ratio matters, and it isolates host",
-        "throttling from plan scaling.",
-    ]
-    if "xl4" in per_corpus:
-        sc = per_corpus["xl4"]["scaling"]
-        n = next(iter(sc.values()))["n_turns"]
-        lines += [
-            "",
-            "## PRIMARY scaling pair — local[1]→local[4] on the amortized 4x "
-            f"corpus ({n} turns, 480k conversations, seed 45)",
-            "",
-            "**local[1]→local[4] is the north-rule N-vs-4N pair on this",
-            "host**: the VM has ~13-16 effective cores with memory bandwidth",
-            "saturating around 4-6 streaming cores (host baseline below), so",
-            "1→4 is the only N→4N step whose 4N cores all physically exist —",
-            "the host itself scales these kernels 1→4 at ~0.93 of ideal,",
-            "making ≥0.8 pipeline efficiency a meaningful CODE property",
-            "there.  The 4x corpus keeps the pair compute-dominated: the",
-            "per-session fixed floor (Spark session + codegen compile +",
-            "per-job scheduling; measured 18-26s via F = (4·T4 − T1)/3",
-            "across clean cycles) stays ≈15% of the local[4] wall.  The r4",
-            "speedups halved the pipeline's compute at equal output, which",
-            "pushed the former 2x primary OUT of that regime (floor ≈25-33%",
-            "of its local[4] wall → clean-phase cycles read ~0.75 there even",
-            "though the plan is unchanged) and made the 4x local[1] leg",
-            "measurable under a minima protocol (~7-10 min — what the 2x",
-            "leg cost before the speedups).  2→8 on the same corpus runs",
-            "near the substrate ceiling: the host itself delivers only",
-            "~0.78-0.83 of the 4x ideal on these kernels WITHOUT Spark",
-            "(baseline below), so clean 2→8 cycles at/above 0.8 mean the",
-            "plan loses essentially nothing to Spark on that step.",
-            "8→32 is the driver-instructed proxy and mostly measures the",
-            "VM's effective-core ceiling.  On a real multi-executor cluster",
-            "every executor brings its own memory bus; nothing in the DAG",
-            "serializes (per-stage breakdown below).",
-            "",
-            *_scaling_table(sc, per_corpus["xl4"]["pairs"]),
-        ]
-    if "xl" in per_corpus:
-        sc = per_corpus["xl"]["scaling"]
-        n = next(iter(sc.values()))["n_turns"]
-        lines += [
-            "",
-            "## Secondary — 2x corpus "
-            f"({n} turns, 240k conversations, seed 44; r3/r4 continuity)",
-            "",
-            "Primary through r4-early; demoted when the r4 speedups made",
-            "the fixed floor ≈25-33% of its local[4] wall (see above) —",
-            "its 1→4 ratio now reads floor amortization, not plan scaling.",
-            "Kept for round-over-round throughput continuity.",
-            "",
-            *_scaling_table(sc, per_corpus["xl"]["pairs"]),
-        ]
-    if "std" in per_corpus:
-        sc = per_corpus["std"]["scaling"]
-        n = next(iter(sc.values()))["n_turns"]
-        lines += [
-            "",
-            f"## Secondary — r3 standard corpus ({n} turns, 120k "
-            "conversations, seed 43; round-over-round continuity)",
-            "",
-            *_scaling_table(sc, per_corpus["std"]["pairs"]),
-        ]
-    lines += [
-        "",
-        "On a real multi-executor cluster the shuffle runs on N machines'",
-        "disks/NICs, not one VM's memory bus; the plan-level scale design",
-        "(fixed-width 128-bit keys, size-1-bucket pruning, salted hot bands,",
-        "map-side combine, broadcast dims, one blocking job per CC round) is",
-        "what carries the 0.8 target there.",
-    ]
-
-    # Weak scaling (Gustafson): constant per-core work — the std corpus at
-    # local[N] vs the 4x corpus (4.004x the turns) at local[4N].  This is
-    # the production question for a 100-TB deployment: data grows WITH the
-    # executor count, so flat wall time (efficiency T_lo/T_hi near 1) is
-    # the target, and it sidesteps the fixed-floor arithmetic that makes
-    # strong scaling hard to read at bench scale (both legs carry one
-    # session's floor).  Corpora are same-generator, same-distribution,
-    # different seeds (43/45).
-    std_sc = per_corpus.get("std", {}).get("scaling") or {}
-    xl4_sc = per_corpus.get("xl4", {}).get("scaling") or {}
-    weak_rows = []
-    weak_effs: dict[str, float] = {}
-    for lo, hi in ((1, 4), (2, 8), (8, 32)):
-        a, b = std_sc.get(lo), xl4_sc.get(hi)
-        if not (a and b):
-            continue
-        ratio = b["n_turns"] / a["n_turns"]
-        weff = round(a["wall_s"] / b["wall_s"] * (ratio / (hi / lo)), 3)
-        weak_effs[f"{lo}->{hi}"] = weff
-        weak_rows.append(
-            f"| local[{lo}] @ {a['n_turns']} | local[{hi}] @ {b['n_turns']} "
-            f"| {a['wall_s']} | {b['wall_s']} "
-            f"| {weff} |"
-        )
-    if weak_rows:
-        lines += [
-            "",
-            "## Weak scaling (constant per-core work: std corpus @ N cores vs 4x corpus @ 4N)",
-            "",
-            "The production regime for a 100-TB deployment: data grows WITH",
-            "the executor count.  Efficiency = (T_lo / T_hi) x (turns ratio /",
-            "core ratio); 1.0 = perfectly flat wall as data and cores scale",
-            "together.  Both legs carry one session's fixed floor, so this",
-            "estimator is immune to the floor-amortization arithmetic that",
-            "distorts strong scaling at bench scale.  Corpora are",
-            "same-generator, same-distribution, different seeds (43/45),",
-            "4.004x the turns; walls are cross-session minima.",
-            "",
-            "| lo leg | hi leg | lo wall (s) | hi wall (s) | weak efficiency |",
-            "|---|---|---|---|---|",
-            *weak_rows,
-            "",
-            "Reading: "
-            + "; ".join(f"{k} measures {v}" for k, v in weak_effs.items())
-            + " — 1.0 = quadrupling data and cores together keeps the",
-            "wall flat, the Gustafson form of the north rule's N-vs-4N",
-            "criterion.  1->4 is the pair whose 4N cores physically exist",
-            "on this VM; 2->8 tracks the substrate's own ~0.83-of-ideal",
-            "ceiling there, and both legs being cross-session minima makes",
-            "the estimator conservative (a cleaner lo-leg phase lowers the",
-            "ratio).  8->32 collapses for the same substrate reason as",
-            "every 32-thread number here: the VM exposes 32 threads but",
-            "~13-16 effective cores and one memory bus (host baseline: the",
-            "no-Spark kernel gets 1.69x from 8->32 workers of an ideal 4x).",
-        ]
-
-    hb_path = os.path.join(_data_dir(), "host_baseline.json")
-    if os.path.exists(hb_path):
-        hb = json.load(open(hb_path))
-        lines += [
-            "",
-            "## Host-capability baseline (same kernels, multiprocessing, no Spark)",
-            "",
-            f"Workload: {hb['workload']}.",
-            "",
-            "| workers | best (s) | all runs (s) |",
-            "|---|---|---|",
-        ]
-        for n, v in hb["levels"].items():
-            lines.append(f"| {n} | {v['best_s']} | {v['all_runs_s']} |")
-        sp14 = hb.get("host_speedup_1_to_4")
-        sp28, sp832 = hb["host_speedup_2_to_8"], hb["host_speedup_8_to_32"]
-        e2e = result.get("scaling_efficiency")
-        rel = round(e2e * 4 / sp14, 3) if (e2e and sp14) else None
-        lines += [
-            "",
-            f"Host speedup 1→4 workers: **{sp14}x** (of 4x ideal); "
-            f"2→8: **{sp28}x**; 8→32: **{sp832}x**.",
-            f"Primary-pair (1→4) end-to-end efficiency relative to what the",
-            f"HOST delivers on the same workload (spark_speedup /",
-            f"host_speedup): **{rel if rel is not None else 'n/a'}** (near or",
-            "above 1 means the distributed plan scales as well as the",
-            "substrate allows).",
-        ]
-
-    sb_path = os.path.join(_data_dir(), "stage_breakdown.json")
-    if os.path.exists(sb_path):
-        sb = json.load(open(sb_path))
-        lvls = sorted(int(x) for x in sb["levels"])
-        lines += [
-            "",
-            "## Per-stage scaling breakdown",
-            "",
-            "| stage | " + " | ".join(f"local[{c}] best (s)" for c in lvls)
-            + " | speedup |",
-            "|---|" + "---|" * (len(lvls) + 1),
-        ]
-        for stage in sb["levels"][str(lvls[0])]:
-            cells = [str(sb["levels"][str(c)][stage]) for c in lvls]
-            lines.append(
-                f"| {stage} | " + " | ".join(cells)
-                + f" | {sb['speedup_per_stage'].get(stage)} |"
-            )
-        lines += [
-            "",
-            "Reading: no stage is a serial bottleneck of the PLAN — the",
-            "compute-bound `sign` stage (Arrow kernels in parallel Python",
-            "workers) runs SLOWER with 32 host threads than with 8 (memory-",
-            "bandwidth thrash), and the shuffle stages scale or hold flat.",
-            "`cluster` at bench scale runs the driver union-find shortcut",
-            "(edge count < threshold): constant driver work + per-job fixed",
-            "cost that more host threads cannot shrink — the distributed",
-            "star loop is the scale path and is plan/golden-tested",
-            "separately.  More executors on separate machines would scale",
-            "`sign` linearly (it is embarrassingly parallel per partition);",
-            "nothing in the DAG serializes.",
-        ]
-
-    skew_path = os.path.join(_data_dir(), "skew_stress.json")
-    if os.path.exists(skew_path):
-        sk = json.load(open(skew_path))
-        lines += [
-            "",
-            "## Skew stress (hot-band pile-up under boilerplate-heavy data)",
-            "",
-            f"Corpus: {sk['corpus']} — {sk['n_conversations']} conversations, "
-            f"{sk['hot_fraction'] * 100:.0f}% sharing one boilerplate opener "
-            "(the smart_merger.py:189-197 pile-up analogue).",
-            "",
-            "| metric | value |",
-            "|---|---|",
-        ]
-        for k in (
-            "n_turns", "wall_s", "star_buckets", "active_buckets",
-            "candidate_pairs", "candidate_rate_vs_allpairs", "dup_pairs",
-            "recall_vs_golden", "errors",
-        ):
-            if k in sk:
-                lines.append(f"| {k} | {sk[k]} |")
-        lines += [
-            "",
-            "Reading: the hot LSH bands trip the star fallback (bounded",
-            "candidates per bucket instead of |bucket|² pairs); recall vs",
-            "the brute-force golden pairs holds at 1.0 because star edges",
-            "chain through connected components.  Candidate volume stays",
-            "linear in corpus size — the pile-up never goes quadratic.",
-        ]
-
-    incr_path = os.path.join(_data_dir(), "incremental_bench.json")
-    if os.path.exists(incr_path):
-        ib = json.load(open(incr_path))
-        lines += [
-            "",
-            "## Incremental delta-mode vs full-batch recompute",
-            "",
-            f"Corpus: {ib['corpus']} — {ib['n_conversations']} conversations"
-            f" ({ib['n_turns']} turns), delta = {ib['delta_pct']}% of"
-            f" conversations ({ib['n_delta_conversations']} convs /"
-            f" {ib['n_delta_turns']} turns), local[{ib['cores']}].  Each"
-            " cycle runs both legs back-to-back with order alternating;"
-            " a constant shuffle-free probe (kernel-reference signing pass)"
-            " runs immediately before each leg to sample the host phase, so"
-            " the NORMALIZED ratio (full_s/full_probe)/(incr_s/incr_probe)"
-            " survives the mid-cycle throttle flips this VM exhibits."
-            "  Cluster counts asserted equal every cycle.",
-            "",
-            "| cycle | full (s) | incr (s) | probes f/i (s) | raw | normalized |",
-            "|---|---|---|---|---|---|",
-        ]
-        for i, r in enumerate(ib["cycles"]):
-            probes = (
-                f"{r['full_probe_s']} / {r['incr_probe_s']}"
-                if "full_probe_s" in r else "—"
-            )
-            lines.append(
-                f"| {i + 1} ({r['order']}) | {r['full_s']} | {r['incr_s']} "
-                f"| {probes} | {r['speedup']}x "
-                f"| {r.get('speedup_normalized', '—')}x |"
-            )
-        ds = ib.get("delta_stats", {})
-        lines += [
-            "",
-            f"Minima: full {ib['full_batch_s_min']}s vs incremental "
-            f"{ib['incremental_s_min']}s — **{ib['speedup_minima']}x**; "
-            f"paired per-cycle speedups {ib['speedup_paired']}"
-            + (
-                f" (best paired cycle **{ib['speedup_paired_best']}x**)"
-                if "speedup_paired_best" in ib else ""
-            )
-            + (
-                f"; probe-normalized {ib['speedup_normalized']} — median "
-                f"**{ib['speedup_normalized_median']}x**."
-                if "speedup_normalized_median" in ib else "."
-            ),
-            "",
-            f"Delta volume: {ds.get('n_new')} new conversations signed, "
-            f"{ds.get('n_candidates')} candidate pairs, "
-            f"{ds.get('n_dup_edges')} verified dup edges, "
-            f"{ds.get('n_merged_prior_clusters')} prior clusters merged.",
-            "",
-            "Reading: the incremental leg signs ONLY the delta and prunes",
-            "quiet LSH buckets before the band join, so its wall tracks",
-            "|delta|, not |corpus|.  The residual full-corpus terms",
-            f"({ib['residual_full_corpus_terms']}) keep the measured ratio",
-            "an UNDERSTATEMENT of the production gap, where those scans",
-            "become maintained state tables and the corpus is 10^6x the",
-            "delta instead of 100x.",
-        ]
-
-    import glob as _glob
-
-    submit_paths = sorted(
-        p for p in _glob.glob(os.path.join(_data_dir(), "submit_scaling*.json"))
-        if "quarantine" not in os.path.basename(p)
-        and not p.endswith(".tmp")
-    )
-    for si, submit_path in enumerate(submit_paths):
-        sb = json.load(open(submit_path))
-        lo, hi = sb["pair"]
-        if si == 0:
-            lines += [
-                "",
-                "## spark-submit deployment scaling (the north rule's literal mode)",
-                "",
-                "The in-process legs above measure the pipeline; these series "
-                "run the ACTUAL deployment artifact — `spark-submit --master "
-                "local[N] --py-files bibexpy_spark.zip jobs/dedup_job.py` — "
-                "in alternating lo/hi cycles.  Timed inside the "
-                "job after the python-worker warmup: COMPUTE wall = cluster "
-                "materialization (countDistinct over the persisted clusters "
-                "table — the bench legs' exact "
-                "protocol); TOTAL wall adds all output writes (clusters, dup "
-                "edges, signed state — a near-constant single-disk I/O term "
-                "in this sandbox that measures the disk, not the plan; a real "
-                "cluster writes through per-executor disks/object-store "
-                "parallelism).  Same DAG config as the bench legs "
-                "(--no-simhash, no containment).  Each r5+ leg carries its "
-                "own host-phase PROBE (constant no-Spark "
-                "normalize+shingle+minhash kernel, fixed 4-process pool, run "
-                "immediately before the launch); the probe-normalized cycle "
-                "ratio ((wall_lo/probe_lo)/(wall_hi/probe_hi))/(hi/lo) "
-                "cancels mid-cycle throttle flips, and its MEDIAN is the "
-                "headline claim.  Legs accumulate across sessions under the "
-                "same minima protocol as the main record (legs predating "
-                "the probe carry no probe_s and contribute only to the raw "
-                "series; pre-compute/total-split legs only the total wall).",
-            ]
-        lines += [
-            "",
-            f"### pair local[{lo}] → local[{hi}] on {sb['corpus']} "
-            f"({sb['n_turns']} turns; cluster counts asserted equal across "
-            f"every leg: {sb['n_clusters']})",
-            "",
-            "| leg | cores | probe (s) | compute wall (s) | total wall (s) | errors |",
-            "|---|---|---|---|---|---|",
-        ]
-        for i, r in enumerate(sb["legs"]):
-            if r.get("failed"):
-                lines.append(
-                    f"| {i} | {r['cores']} | {r.get('probe_s', '—')} "
-                    f"| FAILED | FAILED | {r['errors']} |"
-                )
-            else:
-                lines.append(
-                    f"| {i} | {r['cores']} | {r.get('probe_s', '—')} "
-                    f"| {r.get('wall_compute_s', '—')} "
-                    f"| {r['wall_s']} | {r['errors']} |"
-                )
-        norm = sb.get("normalized_cycles_compute") or []
-        norm_line = (
-            f"**Probe-normalized compute cycles {norm} — median "
-            f"**{sb.get('normalized_median_compute')}**, best "
-            f"{sb.get('normalized_best_compute')}**.  "
-            if norm else
-            "No probed legs yet in this record — normalized series starts "
-            "accumulating from r5.  "
-        )
-        lines += [
-            "",
-            norm_line
-            + f"Raw compute-wall paired cycles {sb['paired_cycles_compute']} — "
-            f"best **{sb['paired_best_compute']}**, minima-based "
-            f"{sb['efficiency_minima_compute']} (walls "
-            f"{sb['wall_compute_s_min']}).  Total-wall paired cycles "
-            f"{sb['paired_cycles_total']} — best "
-            f"**{sb['paired_best_total']}**, minima-based "
-            f"{sb['efficiency_minima_total']} (walls {sb['wall_s_min']}).  "
-            f"{sb['protocol']}.",
-        ]
-
-    grown_path = os.path.join(_data_dir(), "incremental_bench_grown.json")
-    if os.path.exists(grown_path):
-        gb = json.load(open(grown_path))
-        ds = gb.get("delta_stats", {})
-        lines += [
-            "",
-            "### Grown-conversation delta (retract-and-resign)",
-            "",
-            f"Same protocol, but the delta also APPENDS turns to "
-            f"{gb.get('n_grown_conversations')} existing conversations "
-            f"({gb.get('grown_pct')}% of the corpus) alongside "
-            f"{gb['n_delta_conversations'] - gb.get('n_grown_conversations', 0)}"
-            " new ones — the open-conversation ingest shape: each grown"
-            " conversation's prior cluster is dissolved, the conversation"
-            " re-signed over its merged turn set, and its former co-members"
-            " re-enter candidate/verify/cluster with their existing"
-            " signatures (re-signing stays O(|grown|)).  Cluster counts"
-            " asserted equal to the full-batch run every cycle.",
-            "",
-            "| cycle | full (s) | incr (s) | probes f/i (s) | raw | normalized |",
-            "|---|---|---|---|---|---|",
-        ]
-        for i, r in enumerate(gb["cycles"]):
-            probes = (
-                f"{r['full_probe_s']} / {r['incr_probe_s']}"
-                if "full_probe_s" in r else "—"
-            )
-            lines.append(
-                f"| {i + 1} ({r['order']}) | {r['full_s']} | {r['incr_s']} "
-                f"| {probes} | {r['speedup']}x "
-                f"| {r.get('speedup_normalized', '—')}x |"
-            )
-        lines += [
-            "",
-            f"Minima: full {gb['full_batch_s_min']}s vs incremental "
-            f"{gb['incremental_s_min']}s — **{gb['speedup_minima']}x**; "
-            f"probe-normalized median "
-            f"**{gb.get('speedup_normalized_median', '—')}x**.  "
-            f"Retraction volume: {ds.get('n_retracted_clusters')} prior "
-            f"clusters dissolved, {ds.get('n_carried')} co-member "
-            f"signatures carried (re-entered clustering without "
-            f"re-signing), {ds.get('n_merged_prior_clusters')} prior "
-            f"clusters remapped.",
-        ]
-
-    lines += [
-        "",
-        "## Headline queries (sf0.1, local[32], fully materialized)",
-        "",
-        "Minima over interleaved subprocess rounds (fresh session per round",
-        "so the registry's per-session caches can't hide recomputation);",
-        f"per-round errors: {result.get('headline_errors')}.",
-        "",
-        "| query | best (s) | all runs (s) |",
-        "|---|---|---|",
-    ]
-    runs_by_q = result.get("query_all_runs", {})
-    for k, v in result["queries"].items():
-        lines.append(f"| {k} | {v} | {runs_by_q.get(k, [v])} |")
-    lines.append("")
-    lines.append(f"Total (best-of): {result['value']} s")
-    with open(_bench_md_path(), "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
-def _session_per_corpus(result: dict) -> dict:
-    """Reconstruct the per-corpus {scaling, pairs} view from a saved
-    session-result dict (the session scheme is keyed by primary_corpus;
-    see the PIPE_KEYS note in tools/merge_bench_sessions.py)."""
-
-    def _scal(key: str) -> dict:
-        return {
-            int(k[len("local["):-1]): v for k, v in result.get(key, {}).items()
-        }
-
-    all_pairs = result.get("scaling_pairs", {})
-    per_corpus: dict[str, dict] = {}
-    if result.get("primary_corpus") == "xl4":
-        # current scheme: "pipeline" IS the 4x primary, 2x rides prefixed
-        if result.get("pipeline"):
-            per_corpus["xl4"] = {
-                "scaling": _scal("pipeline"),
-                "pairs": {
-                    k: v for k, v in all_pairs.items()
-                    if not k.startswith("xl_")
-                },
-            }
-        if result.get("pipeline_xl"):
-            per_corpus["xl"] = {
-                "scaling": _scal("pipeline_xl"),
-                "pairs": {
-                    k[len("xl_"):]: v for k, v in all_pairs.items()
-                    if k.startswith("xl_")
-                },
-            }
-    else:
-        # pre-r4-late sessions: "pipeline" was the 2x primary
-        if result.get("pipeline"):
-            per_corpus["xl"] = {
-                "scaling": _scal("pipeline"),
-                "pairs": {
-                    k: v for k, v in all_pairs.items()
-                    if not k.startswith("xl4_")
-                },
-            }
-        if result.get("pipeline_xl4"):
-            per_corpus["xl4"] = {
-                "scaling": _scal("pipeline_xl4"),
-                "pairs": {
-                    k[len("xl4_"):]: v for k, v in all_pairs.items()
-                    if k.startswith("xl4_")
-                },
-            }
-    if result.get("pipeline_std"):
-        per_corpus["std"] = {
-            "scaling": _scal("pipeline_std"),
-            "pairs": result.get("scaling_pairs_std", {}),
-        }
-    return per_corpus
-
-
-def refresh_md(session_path: str) -> None:
-    """Rewrite BENCH.md from a saved session-result JSON (the dict main()
-    prints) — lets the report fold in refreshed side evidence (skew /
-    incremental / host-baseline JSONs) without re-running the scaling legs."""
-    result = json.load(open(session_path))
-    _write_bench_md(result, _session_per_corpus(result))
-
-
-def _publish(result: dict, per_corpus: dict, record_path: str) -> dict:
-    """Fold the fresh session into the cross-session record before
-    reporting.
-
-    Why: this host throttles in multi-minute phases where identical legs
-    vary 2-10x, so any SINGLE session — including the round-end driver
-    run — systematically understates capability; the documented protocol
-    (tools/merge_bench_sessions.py) concatenates run lists across sessions
-    and takes minima, while BENCH.md reports every raw run.  Without this
-    fold, the round-end run would clobber the accumulated BENCH.md with
-    one session's (possibly fully-throttled) legs.  The published dict
-    keeps this run's own numbers under ``fresh_session`` so the round
-    JSON still shows exactly what THIS session measured.  Any merge
-    incompatibility (corpus-scheme change, unreadable record) falls back
-    to publishing the fresh session alone.
-    """
-    published = result
-    if os.path.exists(record_path):
-        try:
-            from tools.merge_bench_sessions import merge
-
-            published = merge([json.load(open(record_path)), result])
-        except (Exception, SystemExit) as e:
-            published = result
-            print(
-                f"[bench] session-record merge failed ({e}); publishing "
-                "the fresh session only",
-                file=sys.stderr, flush=True,
-            )
-    if published is not result:
-        lin = result.get("scaling_pairs", {}).get("linear_1_4", {})
-        published["fresh_session"] = {
-            "value": result.get("value"),
-            "scaling_efficiency": lin.get("efficiency"),
-            "kernel_scaling_efficiency": lin.get("kernel_efficiency"),
-            "paired_cycles": lin.get("paired_cycles"),
-            "headline_errors": result.get("headline_errors"),
-        }
-        print(
-            f"[bench] merged fresh session into {record_path} "
-            f"({published.get('merged_sessions')} sessions)",
-            file=sys.stderr, flush=True,
-        )
-        _write_bench_md(published, _session_per_corpus(published))
-    else:
-        _write_bench_md(result, per_corpus)
-    # persist the merged record (or create one on a fresh checkout) so
-    # evidence keeps accumulating; a FAILED merge must never overwrite
-    # the accumulated record with a single session.  A degraded session
-    # (primary_corpus != the canonical xl4 scheme — every xl4 leg failed
-    # and main() fell back to the 2x corpus) must also never CREATE the
-    # record: a fallback-scheme record would reject every future healthy
-    # session's merge and silently freeze evidence accumulation (r4
-    # review)
-    if result.get("primary_corpus") != "xl4" and not os.path.exists(
-        record_path
-    ):
-        print(
-            "[bench] fallback-scheme session (primary_corpus="
-            f"{result.get('primary_corpus')}) — not creating the "
-            "cross-session record from it",
-            file=sys.stderr, flush=True,
-        )
-        return published
-    if published is not result or not os.path.exists(record_path):
-        tmp = record_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(published, f, indent=1)
-        os.replace(tmp, record_path)
-    return published
-
-
-if __name__ == "__main__":
-    if len(sys.argv) >= 2 and sys.argv[1] == "--refresh-md":
-        refresh_md(
-            sys.argv[2] if len(sys.argv) > 2
-            else os.path.join(_data_dir(), "bench_r4_session.json")
-        )
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--leg":
-        if len(sys.argv) >= 6:
-            # --leg cores turns_path kernel_path out_json
-            run_leg(int(sys.argv[2]), sys.argv[3], sys.argv[5],
-                    kernel_path=sys.argv[4] or None)
-        else:
-            run_leg(int(sys.argv[2]), sys.argv[3], sys.argv[4])
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--headline-round":
-        run_headline_round(int(sys.argv[2]), sys.argv[3])
-    else:
-        main()

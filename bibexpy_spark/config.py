@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -33,8 +33,7 @@ class DedupConfig:
     stopwords: tuple[str, ...] = ()     # transcripts config keeps stopwords
 
     # -- shingling
-    shingle_k: int = 5                  # word k-grams
-    min_tokens: int = 1                 # rows shorter than k still get 1 shingle
+    shingle_k: int = 5                  # word k-grams; a row shorter than k still gets 1 shingle
 
     # -- MinHash
     num_perm: int = 128
@@ -47,8 +46,8 @@ class DedupConfig:
     # -- verification
     jaccard_threshold: float = 0.8      # exact Jaccard on shingle sets
 
-    # -- SimHash (fuzzy-field pass: role/tool sequence + text features)
-    simhash_bits: int = 64
+    # -- SimHash (fuzzy-field pass: role/tool sequence + text features;
+    # the hash is 64 bits wide, kernels.simhash64)
     simhash_hamming_max: int = 3
     simhash_chunks: int = 4             # pigeonhole: one chunk must be equal
 

@@ -1,27 +1,5 @@
-"""Driver-contract query registry.
+"""Operators left from the removed 50-query contract registry.
 
-Each module contributes ``QUERIES`` (name -> callable(spark, sf_dir) ->
-DataFrame) and ``ORACLES`` (name -> DuckDB SQL).  Names without an oracle
-entry get the driver's weaker rows-only check (reserved for genuinely
-non-SQL-expressible ops: MinHash/LSH, SimHash, canonical NFKD pipeline).
+Only ``training`` remains; it goes with the training code (ROADMAP item
+4(b)).
 """
-
-from __future__ import annotations
-
-from bibexpy_spark.entry_queries import extended, relational, training, transcripts
-
-_MODULES = (transcripts, relational, training, extended)
-
-
-def all_queries():
-    q = {}
-    for mod in _MODULES:
-        q.update(mod.QUERIES)
-    return q
-
-
-def all_oracles():
-    o = {}
-    for mod in _MODULES:
-        o.update(mod.ORACLES)
-    return o

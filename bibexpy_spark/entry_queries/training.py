@@ -1,12 +1,9 @@
 """Training-data pipeline operators over the documents/embeddings tables:
-deduplication, similarity search, text analysis — the large-scale-pipeline
-surface beyond the reference's own operators (driver brief).
+deduplication, similarity search, text analysis.
 
-SQL-expressible variants carry inline DuckDB-SQL oracles; the
-probabilistic/kernel variants (MinHash-LSH, SimHash, winnowing, ANN) carry
-golden-parquet oracles recomputed by the fully independent single-process
-implementation in bibexpy_spark.golden (plus pytest brute-force recall
-gates in tests/test_training_ops.py).
+No entry point of the transcript dedup system calls these; they are checked
+by brute-force recall gates in tests/test_training_ops.py and go with the
+rest of the training code (ROADMAP item 4(b)).
 """
 
 from __future__ import annotations
@@ -608,144 +605,3 @@ def e_cosine_dup_pairs(spark, sf_dir, threshold: float = 0.4):
         F.round(vector_ops.cosine(F.col("a_emb"), F.col("b_emb")), 4),
     )
     return j.filter(F.col("cos") >= threshold).select("a_id", "b_id", "cos")
-
-
-QUERIES = {
-    "e_cosine_dup_pairs": e_cosine_dup_pairs,
-    "e_cosine_lsh": e_cosine_lsh,
-    "d_exact_dedup": d_exact_dedup,
-    "d_ngram_jaccard_pairs": d_ngram_jaccard_pairs,
-    "d_minhash_lsh_pairs": d_minhash_lsh_pairs,
-    "d_simhash": d_simhash,
-    "d_text_stats": d_text_stats,
-    "d_fingerprints": d_fingerprints,
-    "d_winnow_overlap_pairs": d_winnow_overlap_pairs,
-    "e_knn_bruteforce": e_knn_bruteforce,
-    "e_lsh_ann": e_lsh_ann,
-    "e_ivf_ann": e_ivf_ann,
-}
-
-_NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-_TOKS_SQL = f"string_split({_NORM_SQL}, ' ')"
-
-
-def _hits_sql(words) -> str:
-    lst = "[" + ", ".join(f"'{w}'" for w in words) + "]"
-    return f"CAST(len(list_filter(toks, t -> list_contains({lst}, t))) AS INT)"
-
-
-ORACLES = {
-    "e_cosine_dup_pairs": """
-      WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             ROUND(list_dot_product(a.emb, b.emb)
-                   / (sqrt(list_dot_product(a.emb, a.emb))
-                      * sqrt(list_dot_product(b.emb, b.emb))), 4) AS cos
-      FROM v a JOIN v b ON a.vec_id < b.vec_id
-      WHERE ROUND(list_dot_product(a.emb, b.emb)
-                  / (sqrt(list_dot_product(a.emb, a.emb))
-                     * sqrt(list_dot_product(b.emb, b.emb))), 4) >= 0.4
-    """,
-    "d_exact_dedup": f"""
-      SELECT sha256({_NORM_SQL}) AS content_sha,
-             CAST(count(*) AS BIGINT) AS n_members,
-             min(doc_id) AS rep_id
-      FROM documents GROUP BY 1
-    """,
-    "d_ngram_jaccard_pairs": f"""
-      WITH normed AS (SELECT doc_id, {_NORM_SQL} AS norm FROM documents),
-      toks AS (SELECT doc_id, norm, string_split(norm, ' ') AS t FROM normed),
-      grams AS (
-        SELECT doc_id,
-               unnest(list_distinct(
-                 CASE WHEN len(t) >= {K_DOC}
-                      THEN list_transform(range(1, len(t) - {K_DOC} + 2),
-                           i -> array_to_string(list_slice(t, i, i + {K_DOC} - 1), ' '))
-                      ELSE [norm] END)) AS g
-        FROM toks
-      ),
-      sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM grams GROUP BY doc_id),
-      shared AS (
-        SELECT x.doc_id AS a_id, y.doc_id AS b_id, CAST(count(*) AS BIGINT) AS inter
-        FROM grams x JOIN grams y ON x.g = y.g AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-      )
-      SELECT a_id, b_id, inter, sa.n + sb.n - inter AS union_n
-      FROM shared
-      JOIN sizes sa ON sa.doc_id = a_id
-      JOIN sizes sb ON sb.doc_id = b_id
-      WHERE inter * 2 >= (sa.n + sb.n - inter)
-    """,
-    "d_text_stats": f"""
-      WITH toked AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents),
-      scored AS (
-        SELECT doc_id, text, toks,
-               {_hits_sql(_EN_STOP)} AS en_hits,
-               {_hits_sql(_DE_STOP)} AS de_hits,
-               {_hits_sql(_FR_STOP)} AS fr_hits
-        FROM toked
-      )
-      SELECT doc_id, en_hits, de_hits, fr_hits,
-             CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits > 0 THEN 'en'
-                  WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de'
-                  WHEN fr_hits > 0 THEN 'fr'
-                  ELSE 'unknown' END AS pred_lang,
-             CAST(length(text) AS INT) AS n_chars_raw,
-             CAST(len(toks) AS INT) AS n_tokens,
-             CAST(len(list_distinct(toks)) AS INT) AS n_distinct_tokens,
-             CASE WHEN len(toks) < 5 THEN 'too_short'
-                  WHEN len(list_distinct(toks)) * 2 < len(toks) THEN 'repetitive'
-                  ELSE 'keep' END AS quality_bucket,
-             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS INT) AS n_ws_tokens,
-             CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS INT)
-               AS n_bpeish_tokens
-      FROM scored
-    """,
-    "e_knn_bruteforce": """
-      WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-                 FROM embeddings WHERE vec_id < 10),
-      c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS c_emb
-            FROM embeddings),
-      sims AS (
-        SELECT query_id, cand_id,
-               ROUND(
-                 list_dot_product(q_emb, c_emb)
-                 / (sqrt(list_dot_product(q_emb, q_emb))
-                    * sqrt(list_dot_product(c_emb, c_emb))), 4) AS cos
-        FROM q, c WHERE query_id <> cand_id
-      )
-      SELECT query_id, cand_id, cos, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos DESC, cand_id ASC) AS rank
-        FROM sims
-      ) WHERE rank <= 5
-    """,
-}
-
-
-# Golden-parquet oracles for the kernel-backed entries (independent
-# single-process recomputation in bibexpy_spark.golden; DuckDB reads the
-# expected parquet back — the driver's standard comparison applies).
-from bibexpy_spark import golden as _golden  # noqa: E402
-
-ORACLES.update(
-    {
-        "d_minhash_lsh_pairs": _golden.oracle_sql_for("d_minhash_lsh_pairs"),
-        "d_simhash": _golden.oracle_sql_for("d_simhash"),
-        "d_winnow_overlap_pairs": _golden.oracle_sql_for("d_winnow_overlap_pairs"),
-        "e_lsh_ann": _golden.oracle_sql_for("e_lsh_ann"),
-        "e_ivf_ann": _golden.oracle_sql_for("e_ivf_ann"),
-        "e_cosine_lsh": _golden.oracle_sql_for("e_cosine_lsh"),
-        # mixed oracle: sha/prefix recomputed by DuckDB SQL, winnowing sketch
-        # from the independent golden recomputation
-        "d_fingerprints": f"""
-          SELECT d.doc_id,
-                 sha256({_NORM_SQL}) AS fingerprint,
-                 substr({_NORM_SQL}, 1, 64) AS prefix_key,
-                 g.n_fps, g.fp_min, g.fp_max, g.fp_xor
-          FROM documents d
-          JOIN read_parquet('{_golden.expected_path("d_fingerprints_winnow")}') g
-            ON d.doc_id = g.doc_id
-        """,
-    }
-)

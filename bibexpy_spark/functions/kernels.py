@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import hashlib
 import re
-import unicodedata
 
 import numpy as np
 import pandas as pd

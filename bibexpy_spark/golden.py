@@ -1,140 +1,29 @@
-"""Golden-parquet oracle builder for the driver entries that plain SQL
-cannot express (MinHash/LSH, SimHash, hyperplane ANN, source scans,
-UDF-heavy pipelines).
+"""Independent reference implementations of the engine kernels.
 
-Every query registered in entry_queries is DETERMINISTIC (fixed seeds, fixed
-kernels, deterministic sample generators), so ground truth can be
-precomputed in pure pandas/numpy at fixture-build time and read back by
-DuckDB via ``read_parquet(...)`` — the same mechanism the transcript fixture
-already uses.  The driver then compares the DISTRIBUTED Spark plan against a
-single-process reference computation end-to-end.
-
-Independence level, per family (documented so the judge can weigh it):
-
-  * transcripts/documents dedup, simhash, winnowing, ANN — recomputed here
-    from the raw parquet through INDEPENDENT reimplementations of every
-    kernel (section "independent kernel reimplementations" below: naive
-    per-row loops / one-line numpy, no import from bibexpy_spark.functions)
-    and an INDEPENDENT single-process pipeline (python dict buckets +
-    union-find vs Spark shuffles/joins/iterative CC).  Bit-equality between
-    these reimplementations and the engine kernels is itself pytest-gated
-    (tests/test_golden_independent.py) — so an engine-kernel bug can no
-    longer pass both sides.
-  * WoS/Scopus scans — fully independent pandas parsers in this module,
-    written against the reference's isi2df/csvScopus2df semantics.
-  * smart merge / disambiguation / entity blocks — independent pandas
-    implementations of the reference's sequential algorithms (blocks,
-    staged matching, union-find clustering), with the scalar normalizers,
-    Jaro-Winkler, and the C1 address parser all reimplemented below.
-    The C1 dictionaries (country variants, org keywords) are duplicated as
-    DATA — they are the spec; the parsing LOGIC is written independently.
-  * media features — independent recomputation of the deterministic
-    synthesis + sha256 feature path.
+Each function below recomputes one engine kernel (functions/kernels.py,
+bibex_norms.py, c1_address.py) from its SPEC — seeds, mixing constants and
+dictionaries are the contract and appear verbatim; the code paths are
+deliberately naive (per-row loops, one-line numpy) so an implementation bug
+in the engine's blocked/buffered fast paths cannot be reproduced here.
+tests/test_golden_independent.py checks engine-vs-golden bit-equality for
+normalization, sha256, shingles, MinHash, band hashes, SimHash, winnowing,
+Jaro-Winkler and C1 address parsing.
 
 This module imports NOTHING from bibexpy_spark.functions (enforced by
-tests/test_golden_independent.py).
-
-Rebuild policy: goldens are versioned by GOLDEN_VERSION; bump it whenever
-any computation here or in the covered queries changes.
+tests/test_golden_independent.py): the golden side and the engine may share
+specs, never code.
 """
 
 from __future__ import annotations
 
 import hashlib
-import itertools
-import os
 import re
 import unicodedata
-from fractions import Fraction
 
 import numpy as np
 import pandas as pd
 
-from bibexpy_spark import corpus, oracle
 from bibexpy_spark.config import CANONICAL, DedupConfig
-
-EXPECTED_DIR = "/root/repo/data/expected"
-GOLDEN_VERSION = "r3-v2"
-SF_DIR = "/root/testdata/sf0.01"  # the driver's correctness scale
-DATA_DIR = "/root/repo/data"
-
-
-def expected_path(name: str) -> str:
-    return os.path.join(EXPECTED_DIR, f"{name}.parquet")
-
-
-def oracle_sql_for(name: str) -> str:
-    return f"SELECT * FROM read_parquet('{expected_path(name)}')"
-
-
-# ---------------------------------------------------------------------------
-# scalar normalizer ports (pandas-side, reference semantics)
-# ---------------------------------------------------------------------------
-
-def _fold(s: str) -> str:
-    return unicodedata.normalize("NFKD", str(s or "")).encode("ascii", "ignore").decode("ascii")
-
-
-def norm_doi(v) -> str | None:
-    s = str(v or "").strip().lower()
-    if not s or s == "nan":
-        return None
-    s = re.sub(r"^https?://(dx\.)?doi\.org/", "", s)
-    s = re.sub(r"^doi:\s*", "", s)
-    s = re.sub(r"[/\.\s]+$", "", s)
-    return s if s.startswith("10.") else None
-
-
-def norm_year(v) -> int | None:
-    try:
-        y = int(float(str(v)))
-    except (TypeError, ValueError):
-        return None
-    return y if 1900 <= y <= 2100 else None
-
-
-def norm_title(v) -> str:
-    s = str(v or "")
-    s = re.sub(r"\\[a-zA-Z]+\s*", " ", s)
-    s = re.sub(r"[{}$]", " ", s)
-    s = _fold(s).lower()
-    s = re.sub(r"[^a-z0-9]+", " ", s)
-    stop = ("a an and are as at be by for from has in is it of on or that "
-            "the to").split()
-    s = re.sub(r"\b(?:" + "|".join(stop) + r")\b", " ", s)
-    return re.sub(r"\s+", " ", s).strip()
-
-
-def norm_surname(v) -> str:
-    s = str(v or "").split(";")[0].split(",")[0]
-    s = _fold(s).upper()
-    s = re.sub(r"[^A-Z]+", " ", s)
-    return re.sub(r"\s+", " ", s).strip()
-
-
-def norm_name(v) -> str:
-    s = _fold(v).lower()
-    s = re.sub(r"[^a-z0-9]+", " ", s)
-    return re.sub(r"\s+", " ", s).strip()
-
-
-def _is_empty(v) -> bool:
-    if v is None or (isinstance(v, float) and pd.isna(v)):
-        return True
-    s = str(v).strip()
-    return s == "" or s.lower() == "nan"
-
-
-# ---------------------------------------------------------------------------
-# independent kernel reimplementations (NO bibexpy_spark.functions imports)
-#
-# Each function below recomputes one engine kernel (functions/kernels.py /
-# bibex_norms.py / c1_address.py) from its SPEC — seeds, mixing constants,
-# and dictionaries are the contract and appear verbatim; the code paths are
-# deliberately naive (per-row loops, one-line numpy) so an implementation
-# bug in the engine's blocked/buffered fast paths cannot be reproduced here.
-# Bit-equality engine-vs-golden is pytest-gated (test_golden_independent.py).
-# ---------------------------------------------------------------------------
 
 _M64 = (1 << 64) - 1
 # splitmix64 finalizer constants (public domain) — the hash spec
@@ -268,10 +157,6 @@ def _g_simhash(norm: str) -> int:
         if 2 * ones[bit] > n:
             out |= 1 << bit
     return out
-
-
-def _g_hamming(a: int, b: int) -> int:
-    return bin((a ^ b) & _M64).count("1")
 
 
 def _g_winnow(s: str, k_chars: int = 7, window: int = 4) -> np.ndarray:
@@ -484,927 +369,3 @@ def _g_parse_address(addr) -> dict:
                 break
     return {"authors": authors, "institution": institution,
             "country": country, "raw": raw}
-
-
-def _g_simhash_pairs(conv: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
-    """All-pairs SimHash Hamming <= max over (text + role/tool sequence) —
-    independent replica of the engine's fuzzy-field pass feature recipe."""
-    feat = _g_norm_series(
-        conv["doc"] + " " + conv["roles"].fillna("") + " " + conv["tools"].fillna(""),
-        cfg,
-    )
-    sims = [_g_simhash(s) for s in feat]
-    ids = conv["conv_id"].tolist()
-    out = []
-    for i in range(len(ids)):
-        for j in range(i + 1, len(ids)):
-            d = _g_hamming(sims[i], sims[j])
-            if d <= cfg.simhash_hamming_max:
-                a, b = sorted((ids[i], ids[j]))
-                out.append((a, b, d))
-    return pd.DataFrame(out, columns=["a_id", "b_id", "hamming"])
-
-
-# ---------------------------------------------------------------------------
-# transcript dedup family (independent kernels, independent pipeline)
-# ---------------------------------------------------------------------------
-
-def _threshold_fraction(t: float) -> tuple[int, int]:
-    fr = Fraction(t).limit_denominator(10_000)
-    return fr.numerator, fr.denominator
-
-
-def _lsh_pairs(ids: list, shingles: list[np.ndarray], cfg: DedupConfig,
-               hot_cap: int | None = None, strict: bool = False) -> list[tuple]:
-    """Band-bucket candidates + exact Jaccard verify (single-process truth
-    for operators/lsh.py + operators/verify.py).  Star fallback replicated
-    for buckets above ``hot_cap`` (bucket rep = min id); ``strict`` raises
-    instead when the Spark side would pick its rep by surrogate-id order
-    (transcripts pipeline) — the golden cannot reproduce that choice."""
-    cap = hot_cap if hot_cap is not None else cfg.hot_band_cap
-    sig = _g_signatures(shingles, cfg)
-    bands = _g_band_hashes(sig, cfg)  # (n, bands) int64
-    buckets: dict[tuple[int, int], list[int]] = {}
-    for i in range(len(ids)):
-        for bi in range(cfg.bands):
-            buckets.setdefault((bi, int(bands[i, bi])), []).append(i)
-    cand: set[tuple[int, int]] = set()
-    for (_bi, _h), members in buckets.items():
-        if len(members) < 2:
-            continue
-        if len(members) <= cap:
-            for a, b in itertools.combinations(members, 2):
-                cand.add((a, b) if ids[a] < ids[b] else (b, a))
-        else:
-            if strict:
-                raise AssertionError(
-                    f"band bucket of {len(members)} exceeds hot_band_cap={cap}: "
-                    "golden cannot reproduce the surrogate-id star rep"
-                )
-            rep = min(members, key=lambda i: ids[i])
-            for m in members:
-                if m != rep:
-                    cand.add((rep, m) if ids[rep] < ids[m] else (m, rep))
-    t_num, t_den = _threshold_fraction(cfg.jaccard_threshold)
-    out = []
-    for a, b in cand:
-        sa, sb = shingles[a], shingles[b]
-        inter = len(np.intersect1d(sa, sb, assume_unique=True))
-        union = len(sa) + len(sb) - inter
-        if inter * t_den >= union * t_num:
-            out.append((ids[a], ids[b], inter / union))
-    return out
-
-
-def build_transcript_goldens() -> dict[str, pd.DataFrame]:
-    cfg = CANONICAL
-    turns = pd.read_parquet(corpus.corpus_path_for_sf(SF_DIR))
-    conv = oracle.assemble(turns)
-    ids = conv["conv_id"].tolist()
-    norm = _g_norm_series(conv["doc"], cfg)
-    sha = _g_sha256_series(norm).tolist()
-    shingles = _g_shingle_sets(norm, cfg)
-
-    # exact groups: rep = min conv_id per content hash
-    by_sha: dict[str, list[int]] = {}
-    for i, h in enumerate(sha):
-        by_sha.setdefault(h, []).append(i)
-    rep_of = {}
-    exact_edges: list[tuple[str, str]] = []
-    for h, members in by_sha.items():
-        rep = min(members, key=lambda i: ids[i])
-        for m in members:
-            rep_of[m] = rep
-            if m != rep:
-                exact_edges.append((ids[rep], ids[m]))
-    reps = sorted({rep_of[i] for i in range(len(ids))})
-
-    dup = _lsh_pairs([ids[i] for i in reps], [shingles[i] for i in reps], cfg, strict=True)
-    dup_pairs = pd.DataFrame(
-        sorted((a, b) for a, b, _ in dup), columns=["a_id", "b_id"]
-    )
-
-    # connected components over exact ∪ dup edges, cluster = min conv_id
-    pairs_df = pd.DataFrame(
-        exact_edges + [(a, b) for a, b, _ in dup], columns=["a_id", "b_id"]
-    )
-    clusters = oracle.transitive_closure(ids, pairs_df)
-
-    sim_pairs = _g_simhash_pairs(conv, cfg)
-
-    return {
-        "t_minhash_dup_pairs": dup_pairs,
-        "t_canonical_clusters": clusters,
-        "t_simhash_pairs": sim_pairs,
-    }
-
-
-# ---------------------------------------------------------------------------
-# documents dedup family
-# ---------------------------------------------------------------------------
-
-def build_document_goldens() -> dict[str, pd.DataFrame]:
-    cfg = CANONICAL
-    d = pd.read_parquet(os.path.join(SF_DIR, "documents.parquet"))
-    ids = d["doc_id"].tolist()  # int64 — Spark's a<b ordering is numeric
-    norm = _g_norm_series(d["text"], cfg)
-    shingles = _g_shingle_sets(norm, cfg)
-
-    dup = _lsh_pairs(ids, shingles, cfg)
-    lsh_pairs = pd.DataFrame(
-        sorted(dup), columns=["a_doc", "b_doc", "jaccard"]
-    )
-
-    simhash = pd.DataFrame(
-        {
-            "doc_id": d["doc_id"],
-            "simhash": np.array([_g_simhash(s) for s in norm], dtype=np.uint64).view(np.int64),
-        }
-    )
-
-    # d_rolling_fingerprint: SQL-style normalization (the query's
-    # _norm_tokens), then the shared winnowing kernel
-    sql_norm = (
-        d["text"].fillna("").astype(str).str.lower()
-        .str.replace(r"[^a-z0-9]+", " ", regex=True).str.strip()
-    )
-    fps = _g_winnow_series(sql_norm)
-    rolling = pd.DataFrame(
-        {
-            "doc_id": d["doc_id"],
-            "n_fps": np.array([len(f) for f in fps], dtype=np.int64),
-            "fp_min": np.array([f.min() for f in fps], dtype=np.uint64).view(np.int64),
-            "fp_max": np.array([f.max() for f in fps], dtype=np.uint64).view(np.int64),
-            "fp_xor": np.array(
-                [np.bitwise_xor.reduce(f) for f in fps], dtype=np.uint64
-            ).view(np.int64),
-        }
-    )
-    # d_winnow_overlap_pairs: inverted index over the same fps, df-cap 50,
-    # pair threshold 20 shared fingerprints
-    from collections import defaultdict
-
-    inv: dict[int, list[int]] = defaultdict(list)
-    for i, f in enumerate(fps):
-        for h in np.unique(f):
-            inv[int(h)].append(i)
-    pair_counts: dict[tuple[int, int], int] = defaultdict(int)
-    for h, docs in inv.items():
-        if len(docs) > 50:
-            continue
-        for x, y in itertools.combinations(docs, 2):
-            a, b = (x, y) if ids[x] < ids[y] else (y, x)
-            pair_counts[(a, b)] += 1
-    overlap = pd.DataFrame(
-        sorted(
-            (ids[a], ids[b], c) for (a, b), c in pair_counts.items() if c >= 20
-        ),
-        columns=["a_id", "b_id", "n_shared"],
-    )
-    overlap["n_shared"] = overlap["n_shared"].astype(np.int64)
-
-    return {
-        "d_minhash_lsh_pairs": lsh_pairs,
-        "d_simhash": simhash,
-        "d_fingerprints_winnow": rolling,
-        "d_winnow_overlap_pairs": overlap,
-    }
-
-
-# ---------------------------------------------------------------------------
-# embedding ANN family
-# ---------------------------------------------------------------------------
-
-def _spark_round(x: float, digits: int = 4) -> float:
-    """Spark F.round semantics on doubles: BigDecimal(double) HALF_UP."""
-    from decimal import Decimal, ROUND_HALF_UP
-
-    q = Decimal(1).scaleb(-digits)
-    return float(Decimal(x).quantize(q, rounding=ROUND_HALF_UP))
-
-
-def _seq_dot(a: np.ndarray, b: np.ndarray) -> float:
-    """Left-fold float64 sum — matches Spark's F.aggregate fold order."""
-    return float(np.cumsum(a * b)[-1])
-
-
-def _hyperplane_buckets(m: np.ndarray, n_planes: int, n_tables: int) -> np.ndarray:
-    """(n, tables) int32 bucket codes — exact replica of the query UDF."""
-    rng = np.random.default_rng(CANONICAL.minhash_seed)
-    planes = rng.standard_normal((n_tables, n_planes, m.shape[1]))
-    out = np.empty((len(m), n_tables), dtype=np.int32)
-    for t in range(n_tables):
-        bits = (m @ planes[t].T) > 0
-        out[:, t] = np.packbits(bits, axis=1, bitorder="little")[:, 0].astype(np.int32)
-    return out
-
-
-def build_embedding_goldens() -> dict[str, pd.DataFrame]:
-    e = pd.read_parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    m = np.stack(e["embedding"].to_numpy()).astype(np.float64)
-    vec_ids = e["vec_id"].to_numpy()
-    n = len(m)
-
-    # e_lsh_ann: p=4, L=8, k=5, queries vec_id < 10 (the query's defaults)
-    buckets = _hyperplane_buckets(m, n_planes=4, n_tables=8)
-    qmask = vec_ids < 10
-    cand: set[tuple[int, int]] = set()  # (query_idx, cand_idx)
-    for t in range(buckets.shape[1]):
-        bt: dict[int, list[int]] = {}
-        for i in range(n):
-            bt.setdefault(int(buckets[i, t]), []).append(i)
-        for members in bt.values():
-            qs = [i for i in members if qmask[i]]
-            for qi in qs:
-                for ci in members:
-                    if ci != qi:
-                        cand.add((qi, ci))
-    rows = []
-    for qi, ci in cand:
-        cos = _seq_dot(m[qi], m[ci]) / (
-            np.sqrt(_seq_dot(m[qi], m[qi])) * np.sqrt(_seq_dot(m[ci], m[ci]))
-        )
-        rows.append((int(vec_ids[qi]), int(vec_ids[ci]), _spark_round(cos)))
-    cdf = pd.DataFrame(rows, columns=["query_id", "cand_id", "cos"])
-    cdf = cdf.sort_values(
-        ["query_id", "cos", "cand_id"], ascending=[True, False, True]
-    )
-    cdf["rank"] = cdf.groupby("query_id").cumcount() + 1
-    ann = cdf[cdf["rank"] <= 5].reset_index(drop=True)
-    ann["rank"] = ann["rank"].astype(np.int32)
-
-    # e_cosine_lsh: p=6, L=64, threshold 0.4 over all pairs
-    b2 = _hyperplane_buckets(m, n_planes=6, n_tables=64)
-    pair_cand: set[tuple[int, int]] = set()
-    for t in range(b2.shape[1]):
-        bt2: dict[int, list[int]] = {}
-        for i in range(n):
-            bt2.setdefault(int(b2[i, t]), []).append(i)
-        for members in bt2.values():
-            for a, b in itertools.combinations(members, 2):
-                pair_cand.add((a, b) if vec_ids[a] < vec_ids[b] else (b, a))
-    prows = []
-    for a, b in pair_cand:
-        cos = _seq_dot(m[a], m[b]) / (
-            np.sqrt(_seq_dot(m[a], m[a])) * np.sqrt(_seq_dot(m[b], m[b]))
-        )
-        cos = _spark_round(cos)
-        if cos >= 0.4:
-            prows.append((int(vec_ids[a]), int(vec_ids[b]), cos))
-    lsh_pairs = pd.DataFrame(
-        sorted(prows), columns=["a_id", "b_id", "cos"]
-    )
-
-    # e_ivf_ann: seeded sampled-centroid IVF, n_cells=16, n_probe=4, k=5
-    # centroid sample = n_cells smallest sha2(seed || vec_id) — the exact
-    # distributed top-k the query computes
-    n_cells, n_probe, seed = 16, 6, 7
-    hashes = {
-        int(v): hashlib.sha256(f"{seed}#{int(v)}".encode()).hexdigest()
-        for v in vec_ids
-    }
-    centroid_ids = sorted(
-        sorted(hashes, key=lambda v: hashes[v])[:n_cells]
-    )
-    id_to_idx = {int(v): i for i, v in enumerate(vec_ids)}
-    cent = np.stack([m[id_to_idx[c]] for c in centroid_ids])
-    cent_unit = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-    m_unit = m / np.linalg.norm(m, axis=1, keepdims=True)
-    cells = np.argmax(m_unit @ cent_unit.T, axis=1)
-    sims_c = m_unit @ cent_unit.T
-    probe = np.sort(
-        np.argsort(-sims_c, axis=1, kind="stable")[:, :n_probe], axis=1
-    )
-    irows = []
-    for qi in range(n):
-        if vec_ids[qi] >= 10:
-            continue
-        probed = set(probe[qi].tolist())
-        for ci in range(n):
-            if ci == qi or int(cells[ci]) not in probed:
-                continue
-            cos = _seq_dot(m[qi], m[ci]) / (
-                np.sqrt(_seq_dot(m[qi], m[qi])) * np.sqrt(_seq_dot(m[ci], m[ci]))
-            )
-            irows.append((int(vec_ids[qi]), int(vec_ids[ci]), _spark_round(cos)))
-    idf = pd.DataFrame(irows, columns=["query_id", "cand_id", "cos"])
-    idf = idf.sort_values(
-        ["query_id", "cos", "cand_id"], ascending=[True, False, True]
-    )
-    idf["rank"] = idf.groupby("query_id").cumcount() + 1
-    ivf = idf[idf["rank"] <= 5].reset_index(drop=True)
-    ivf["rank"] = ivf["rank"].astype(np.int32)
-
-    return {"e_lsh_ann": ann, "e_cosine_lsh": lsh_pairs, "e_ivf_ann": ivf}
-
-
-# ---------------------------------------------------------------------------
-# WoS / Scopus scans (independent pandas parsers)
-# ---------------------------------------------------------------------------
-
-def parse_wos_pandas(path: str) -> pd.DataFrame:
-    """Independent isi2df-semantics parser (reference wos2xlsx.py:21-114)."""
-    with open(path) as f:
-        lines = [ln for ln in f.read().split("\n") if len(ln.strip()) > 1]
-    lines = [ln for ln in lines if not ln.startswith(("FN ", "VR "))]
-    for i in range(1, len(lines)):
-        if lines[i].startswith("   "):
-            lines[i] = lines[i - 1][:3] + lines[i][3:]
-    recs: list[dict[str, list[str]]] = []
-    for ln in lines:
-        tag = ln[:3].strip()
-        content = ln[3:].strip()
-        if tag == "PT":
-            recs.append({})
-        if not recs or tag in ("ER", "EF"):
-            continue
-        recs[-1].setdefault(tag, []).append(content)
-    rows = []
-    for di, rec in enumerate(recs, start=1):
-        row = {"doc_id": di}
-        for tag, vals in rec.items():
-            row[tag] = "---".join(vals)
-        rows.append(row)
-    df = pd.DataFrame(rows)
-    comma_tags = ("AU", "AF", "CR")
-    for col in df.columns:
-        if col == "doc_id":
-            continue
-        if col in comma_tags:
-            df[col] = df[col].map(lambda x: x.replace("---", ";") if pd.notna(x) else x)
-        else:
-            df[col] = df[col].map(
-                lambda x: x.replace("---", " ").strip() if pd.notna(x) else x
-            )
-    if "C1" in df.columns:
-        df["C1raw"] = df["C1"].copy()
-        df["C1"] = df["C1"].map(
-            lambda x: re.sub(r"\[.*?\]", "", str(x)).replace(".", ".;")
-            if pd.notna(x) else x
-        )
-    df["DB"] = "ISI"
-    if "AU" in df.columns:
-        df["AU"] = df["AU"].map(
-            lambda x: str(x).replace(",", " ").strip() if pd.notna(x) else x
-        )
-    for col in df.columns:
-        if col in ("doc_id", "DI"):
-            continue
-        df[col] = df[col].map(lambda x: str(x).upper() if pd.notna(x) else x)
-    df.insert(0, "file", "file:" + os.path.abspath(path))
-    return df
-
-
-def parse_scopus_pandas(paths: list[str]) -> pd.DataFrame:
-    """Independent csvScopus2df-semantics parser (scp2xlsx.py:65-150)."""
-    from bibexpy_spark.sources.scopus import SCOPUS_TO_WOS
-
-    dfs = [pd.read_csv(p, dtype=str, keep_default_na=False) for p in paths]
-    common = set(dfs[0].columns)
-    for d in dfs[1:]:
-        common &= set(d.columns)
-    ordered = [c for c in dfs[0].columns if c in common]
-    out = pd.concat([d[ordered] for d in dfs], ignore_index=True)
-    out = out.rename(columns={c: SCOPUS_TO_WOS[c] for c in ordered if c in SCOPUS_TO_WOS})
-    for col in out.columns:
-        if col not in ("DI", "UR", "C1raw"):
-            out[col] = out[col].map(lambda x: str(x).upper() if pd.notna(x) else x)
-    return out
-
-
-def _wos_sample_path() -> str:
-    from bibexpy_spark.sources import wos
-
-    return wos.write_sample_wos(os.path.join(DATA_DIR, "wos_sample.txt"), n_docs=25)
-
-
-def _scopus_sample_paths() -> list[str]:
-    from bibexpy_spark.sources import scopus
-
-    return scopus.write_sample_scopus(os.path.join(DATA_DIR, "scopus_samples"))
-
-
-# ---------------------------------------------------------------------------
-# smart merge (independent pandas staging + symmetric-best assignment)
-# ---------------------------------------------------------------------------
-
-SHARED_FIELDS = ["AU", "DI", "PY", "SO", "TC", "TI"]
-
-
-def _compute_match_pd(w: dict, s: dict) -> tuple[int, float] | None:
-    """compute_match (smart_merger.py:243-350) for the shared-field subset
-    (no PM/SN/VL/BP in the sample -> stages 1, 3, 5)."""
-    if w["_doi"] and s["_doi"] and w["_doi"] != s["_doi"]:
-        return None
-    if w["_doi"] and s["_doi"] and w["_doi"] == s["_doi"]:
-        return (1, 1.0)
-    if w["_title"] and s["_title"]:
-        jw = _g_jaro_winkler(w["_title"], s["_title"])
-        year_ok = (
-            w["_year"] is not None and s["_year"] is not None
-            and abs(w["_year"] - s["_year"]) <= 1
-        )
-        surname_ok = bool(w["_sur"] and s["_sur"] and w["_sur"] == s["_sur"])
-        if jw >= 0.92 and year_ok and surname_ok:
-            return (3, 0.95)
-        if 0.80 <= jw < 0.92:
-            conf = 0.70 + (jw - 0.80) * (0.85 - 0.70) / (0.92 - 0.80)
-            return (5, round(conf, 3))
-    return None
-
-
-def build_smart_merge_golden(wos_df: pd.DataFrame, scp_df: pd.DataFrame) -> pd.DataFrame:
-    def prep(df: pd.DataFrame, prefix: str) -> list[dict]:
-        rows = []
-        for _, r in df.iterrows():
-            rows.append(
-                {
-                    "id": prefix + str(r["DI"]),
-                    "_doi": norm_doi(r.get("DI")),
-                    "_year": norm_year(r.get("PY")),
-                    "_title": norm_title(r.get("TI")),
-                    "_sur": norm_surname(r.get("AU")),
-                    **{f: r.get(f) for f in SHARED_FIELDS},
-                }
-            )
-        return rows
-
-    wrows = prep(wos_df[SHARED_FIELDS], "w")
-    srows = prep(scp_df[SHARED_FIELDS], "s")
-
-    def block_key(r: dict) -> str:
-        y = str(r["_year"]) if r["_year"] is not None else "?"
-        ini = r["_sur"][:1] if r["_sur"] else "?"
-        return f"{y}|{ini}"
-
-    # staged matching over blocked pairs
-    scored = []
-    sblocks: dict[str, list[dict]] = {}
-    for s in srows:
-        sblocks.setdefault(block_key(s), []).append(s)
-    for w in wrows:
-        for s in sblocks.get(block_key(w), []):
-            m = _compute_match_pd(w, s)
-            if m and m[0] != 5:
-                scored.append((w, s, m[0], m[1]))
-
-    # exact-greedy assignment (reference smart_merger.py:654-711, parity
-    # mode): confidence desc, deterministic (w_id, s_id) tie-break
-    assigned = []
-    used_w: set[str] = set()
-    used_s: set[str] = set()
-    for w, s, st, conf in sorted(
-        scored, key=lambda x: (-x[3], x[0]["id"], x[1]["id"])
-    ):
-        if w["id"] in used_w or s["id"] in used_s:
-            continue
-        used_w.add(w["id"])
-        used_s.add(s["id"])
-        assigned.append((w, s, st, conf))
-
-    out = []
-    for w, s, st, conf in assigned:
-        row = {"w_id": w["id"], "s_id": s["id"], "stage": st, "confidence": conf}
-        for f in SHARED_FIELDS:
-            wv, sv = w.get(f), s.get(f)
-            pref = "scopus" if f in ("AU",) else "wos_first"
-            if pref == "scopus":
-                chosen = sv if not _is_empty(sv) else wv
-            else:
-                chosen = wv if not _is_empty(wv) else sv
-            row[f] = None if _is_empty(chosen) else str(chosen)
-        out.append(row)
-    cols = ["w_id", "s_id", "stage", "confidence", *SHARED_FIELDS]
-    df = pd.DataFrame(out, columns=cols)
-    df["stage"] = df["stage"].astype(np.int32)
-    return df.sort_values(["w_id", "s_id"]).reset_index(drop=True)
-
-
-# ---------------------------------------------------------------------------
-# author disambiguation clusters (independent pandas union-find)
-# ---------------------------------------------------------------------------
-
-def build_disambiguation_golden(wos_df: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for _, r in wos_df.iterrows():
-        rid = f'{r["file"]}_{r["doc_id"]}'
-        for raw in str(r["AU"] or "").split(";"):
-            raw = raw.strip()
-            if not raw:
-                continue
-            clean = re.sub(r"\s*\(([a-z]|\d+)\)\s*$", "", raw).strip()
-            nm = norm_name(clean)
-            folded = _fold(clean).strip()
-            if "," in folded:
-                sur, _, given = folded.partition(",")
-                surname = norm_name(sur).upper()
-                initials = "".join(
-                    t[0] for t in re.sub(r"[.\-]", " ", norm_name(given)).split() if t
-                ).upper()
-            else:
-                parts = folded.split()
-                surname = norm_name(parts[0]).upper() if parts else ""
-                initials = "".join(p[0] for p in parts[1:] if p).upper()
-            rows.append(
-                {
-                    "record_id": rid,
-                    "norm_name": nm,
-                    "block": f"{surname}|{initials[:1]}",
-                }
-            )
-    df = pd.DataFrame(rows)
-    out = []
-    for block, grp in df.groupby("block", sort=True):
-        variants = sorted(set(v for v in grp["norm_name"] if v))
-        parent = {v: v for v in variants}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        sims = {}
-        for a, b in itertools.combinations(variants, 2):
-            jw = _g_jaro_winkler(a, b)
-            sims[(a, b)] = jw
-            if jw >= 0.88:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = sorted((ra, rb))
-                    parent[hi] = lo
-        members: dict[str, list[str]] = {}
-        for v in variants:
-            members.setdefault(find(v), []).append(v)
-        tier_of = {}
-        for root, ms in members.items():
-            t1 = all(
-                sims.get(tuple(sorted((a, b))), 1.0) >= 0.95
-                for a, b in itertools.combinations(ms, 2)
-            )
-            tier_of[root] = 1 if t1 else 2
-        for _, r in grp.iterrows():
-            v = r["norm_name"]
-            out.append(
-                {
-                    "record_id": r["record_id"],
-                    "norm_name": v,
-                    "cluster_id": f"{block}::{find(v)}" if v in parent else None,
-                    "tier": tier_of.get(find(v)) if v in parent else None,
-                }
-            )
-    res = pd.DataFrame(out)
-    res["tier"] = res["tier"].astype("Int32")
-    return res.sort_values(["record_id", "norm_name"]).reset_index(drop=True)
-
-
-# ---------------------------------------------------------------------------
-# media features
-# ---------------------------------------------------------------------------
-
-def build_media_golden(n: int = 64, seed: int = 5) -> pd.DataFrame:
-    """Independent replay of the deterministic media synthesis + sha256
-    feature path (training/multimodal.py: same rng call order)."""
-    rng = np.random.default_rng(seed)
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = rng.bytes(int(rng.integers(64, 2048)))
-        # consume the rng exactly as synthesize_media's meta block does
-        if kind != "audio":
-            rng.integers(16, 512)
-            rng.integers(16, 512)
-        if kind != "image":
-            rng.integers(100, 60_000)
-        rows.append(
-            {
-                "media_id": i,
-                "kind": kind,
-                "n_bytes": np.int32(len(payload)),
-                "content_sha": hashlib.sha256(payload).hexdigest(),
-            }
-        )
-    return pd.DataFrame(rows)
-
-
-# ---------------------------------------------------------------------------
-# C1 / entity-block goldens (pandas replication of the relational logic;
-# scalar parse functions shared with the Spark UDFs, separately pytest-
-# verified against reference micro-fixtures)
-# ---------------------------------------------------------------------------
-
-def build_c1_goldens(wos_df: pd.DataFrame) -> dict[str, pd.DataFrame]:
-    uid = wos_df["file"] + "_" + wos_df["doc_id"].astype(str)
-    cells = wos_df["C1raw"].fillna("")
-
-    parsed_rows = []
-    for rid, cell in zip(uid, cells):
-        for pos, addr in enumerate(_g_split_c1(cell)):
-            info = _g_parse_address(addr)
-            parsed_rows.append(
-                {
-                    "UID": rid,
-                    "addr_pos": np.int32(pos),
-                    "institution": info["institution"],
-                    "country": info["country"],
-                }
-            )
-    parsed = pd.DataFrame(parsed_rows)
-
-    # country blocks (build_country_blocks semantics)
-    tok_rows = []
-    for rid, cell in zip(uid, cells):
-        stripped = re.sub(r"\[.*?\]", "", str(cell))
-        for addr in stripped.split(";"):
-            parts = [p.strip() for p in addr.split(",") if p.strip()]
-            if parts:
-                tok_rows.append({"UID": rid, "token": parts[-1]})
-    toks = pd.DataFrame(tok_rows)
-    toks["canonical"] = toks["token"].map(_g_canonical_country)
-    res = toks[toks["canonical"].notna()]
-    t1 = (
-        res.groupby("canonical")
-        .agg(
-            variants=("token", lambda s: "; ".join(sorted(set(s)))),
-            n_records=("UID", "nunique"),
-        )
-        .reset_index()
-    )
-    keep = [
-        any(v.strip().lower() != c.lower() for v in vs.split("; "))
-        for c, vs in zip(t1["canonical"], t1["variants"])
-    ]
-    t1 = t1[keep].assign(tier=np.int32(1))
-    unres = toks[toks["canonical"].isna()]
-    _orgish = unres["token"].map(
-        lambda t: _g_is_org(str(t)) or any(ch.isdigit() for ch in str(t))
-    ).astype(bool)
-    unres = unres[~_orgish]
-    t2 = (
-        unres.assign(_k=unres["token"].str.strip().str.lower())
-        .groupby("_k")
-        .agg(
-            variants=("token", lambda s: "; ".join(sorted(set(s)))),
-            n_records=("UID", "nunique"),
-        )
-        .reset_index(drop=True)
-        .assign(tier=np.int32(2), canonical=None)
-    )
-    cb = pd.concat([t1, t2], ignore_index=True)[
-        ["tier", "canonical", "variants", "n_records"]
-    ]
-    cb["n_records"] = cb["n_records"].astype(np.int64)
-
-    # affiliation blocks (build_affiliation_blocks semantics)
-    stopset = {"the", "of", "and", "for", "univ", "university"}
-    m_rows = []
-    for rid, cell in zip(uid, cells):
-        stripped = re.sub(r"\[.*?\]", "", str(cell))
-        for aff in stripped.split(";"):
-            aff = aff.strip()
-            if not aff:
-                continue
-            nm = norm_name(aff)
-            if not nm:
-                continue
-            meaningful = [t for t in nm.split() if t not in stopset]
-            m_rows.append(
-                {
-                    "record_id": rid,
-                    "raw": aff,
-                    "norm": nm,
-                    "block": meaningful[0] if meaningful else nm[:5],
-                }
-            )
-    mentions = pd.DataFrame(m_rows)
-    ab_rows = []
-    for block, grp in mentions.groupby("block", sort=True):
-        variants = sorted(set(grp["norm"]))
-        parent = {v: v for v in variants}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in itertools.combinations(variants, 2):
-            if _g_jaro_winkler(a, b) >= 0.85:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = sorted((ra, rb))
-                    parent[hi] = lo
-        grp = grp.assign(_root=grp["norm"].map(find))
-        for ci, (root, g) in enumerate(sorted(grp.groupby("_root"))):
-            norms = set(g["norm"])
-            if len(norms) < 2:
-                continue
-            mjw = min(
-                _g_jaro_winkler(a, b) for a, b in itertools.combinations(sorted(norms), 2)
-            )
-            ab_rows.append(
-                {
-                    "block": block,
-                    "cluster_id": f"{block}_{ci}",
-                    "tier": np.int32(1 if mjw >= 0.95 else 2),
-                    "min_jw": mjw,
-                    "variants": "; ".join(sorted(set(g["raw"]))),
-                    "records": "; ".join(sorted(set(g["record_id"]))),
-                }
-            )
-    ab = pd.DataFrame(
-        ab_rows,
-        columns=["block", "cluster_id", "tier", "min_jw", "variants", "records"],
-    )
-
-    # author splits (build_author_splits semantics over AU + WC)
-    au_rows = []
-    for _, r in wos_df.iterrows():
-        rid = f'{r["file"]}_{r["doc_id"]}'
-        fields = {
-            t.strip().lower()
-            for t in str(r.get("WC") or "").split(";")
-            if t.strip() and t.strip().lower() != "nan"
-        }
-        for raw in str(r["AU"] or "").split(";"):
-            raw = raw.strip()
-            if not raw or re.search(r"\(([a-z]|\d+)\)\s*$", raw):
-                continue
-            nm = norm_name(raw)
-            if nm:
-                au_rows.append(
-                    {"record_id": rid, "raw_name": raw, "norm": nm,
-                     "fields": frozenset(fields)}
-                )
-    au = pd.DataFrame(au_rows)
-    sp_rows = []
-    suffixes = ["", "(b)", "(c)", "(d)", "(e)", "(f)", "(g)"]
-    for nm, grp in au.groupby("norm", sort=True):
-        per_rec: dict[str, set] = {}
-        for _, r in grp.iterrows():
-            per_rec.setdefault(r["record_id"], set()).update(r["fields"])
-        recs = [{"record": k, "fields": v} for k, v in sorted(per_rec.items())]
-        if len(recs) < 2:
-            continue
-        with_fields = [r for r in recs if r["fields"]]
-        unknown = [r for r in recs if not r["fields"]]
-        if len(with_fields) < 2:
-            continue
-        comps: list[list[dict]] = []
-        for r in with_fields:
-            hit = [
-                ci for ci, comp in enumerate(comps)
-                if any(r["fields"] & x["fields"] for x in comp)
-            ]
-            if not hit:
-                comps.append([r])
-            else:
-                first = hit[0]
-                comps[first].append(r)
-                for ci in sorted(hit[1:], reverse=True):
-                    comps[first].extend(comps[ci])
-                    del comps[ci]
-        if len(comps) < 2:
-            continue
-        comps.sort(key=lambda c: (-len(c), min(x["record"] for x in c)))
-        name = sorted(grp["raw_name"])[0]
-        tier = 2 if unknown else 1
-        for gi, comp in enumerate(comps):
-            sp_rows.append(
-                {
-                    "split_id": nm.replace(" ", "_"),
-                    "name": name,
-                    "norm": nm,
-                    "tier": np.int32(tier),
-                    "group_idx": np.int32(gi),
-                    "suffix": suffixes[gi] if gi < len(suffixes) else f"({gi})",
-                    "records": "; ".join(sorted(x["record"] for x in comp)),
-                    "fields": "; ".join(
-                        sorted({f for x in comp for f in x["fields"]})[:8]
-                    ),
-                }
-            )
-    splits = pd.DataFrame(
-        sp_rows,
-        columns=["split_id", "name", "norm", "tier", "group_idx", "suffix",
-                 "records", "fields"],
-    )
-
-    # org rollup blocks (build_org_rollup semantics)
-    org_rows = []
-    for rid, cell in zip(uid, cells):
-        for addr in _g_split_c1(cell):
-            info = _g_parse_address(addr)
-            inst = info["institution"]
-            if not inst:
-                continue
-            nm = norm_name(inst)
-            if not nm:
-                continue
-            meaningful = [t for t in nm.split() if t not in stopset]
-            org_rows.append(
-                {
-                    "_rid": rid,
-                    "raw": addr,
-                    "institution": inst,
-                    "norm": nm,
-                    "block": meaningful[0] if meaningful else nm[:5],
-                }
-            )
-    org = pd.DataFrame(org_rows)
-    ob_rows = []
-    for block, grp in org.groupby("block", sort=True):
-        variants = sorted(set(grp["norm"]))
-        parent = {v: v for v in variants}
-
-        def find2(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in itertools.combinations(variants, 2):
-            if _g_jaro_winkler(a, b) >= 0.85:
-                ra, rb = find2(a), find2(b)
-                if ra != rb:
-                    lo, hi = sorted((ra, rb))
-                    parent[hi] = lo
-        grp = grp.assign(_root=grp["norm"].map(find2))
-        for ci, (root, g) in enumerate(sorted(grp.groupby("_root"))):
-            counts2 = g["institution"].value_counts()
-            top = counts2.max()
-            par = sorted(counts2[counts2 == top].index)[0]
-            vs = sorted(set(g["raw"]))
-            if len(vs) == 1 and vs[0].strip() == par.strip():
-                continue
-            norms = set(g["norm"])
-            if len(norms) < 2:
-                tier = 1
-            else:
-                mjw = min(
-                    _g_jaro_winkler(a, b)
-                    for a, b in itertools.combinations(sorted(norms), 2)
-                )
-                tier = 1 if mjw >= 0.95 else 2
-            ob_rows.append(
-                {
-                    "block": block,
-                    "cluster_id": f"org_{block}_{ci}",
-                    "tier": np.int32(tier),
-                    "canonical_name": par,
-                    "variants": "; ".join(vs),
-                    "records": "; ".join(sorted(set(g["_rid"]))),
-                }
-            )
-    orgb = pd.DataFrame(
-        ob_rows,
-        columns=["block", "cluster_id", "tier", "canonical_name", "variants",
-                 "records"],
-    )
-
-    return {
-        "q_c1_parsed": parsed,
-        "q_country_blocks": cb,
-        "s_affiliation_blocks": ab,
-        "s_author_splits": splits,
-        "q_org_rollup": orgb,
-    }
-
-
-# ---------------------------------------------------------------------------
-# orchestration
-# ---------------------------------------------------------------------------
-
-def ensure_goldens() -> None:
-    """Build every expected_<name>.parquet once per GOLDEN_VERSION."""
-    stamp = os.path.join(EXPECTED_DIR, "_VERSION")
-    try:
-        if open(stamp).read().strip() == GOLDEN_VERSION:
-            return
-    except OSError:
-        pass
-    os.makedirs(EXPECTED_DIR, exist_ok=True)
-
-    corpus.corpus_path_for_sf(SF_DIR)  # transcripts fixture must exist
-    outputs: dict[str, pd.DataFrame] = {}
-    outputs.update(build_transcript_goldens())
-    outputs.update(build_document_goldens())
-    outputs.update(build_embedding_goldens())
-
-    wos_df = parse_wos_pandas(_wos_sample_path())
-    scp_df = parse_scopus_pandas(_scopus_sample_paths())
-    outputs["s_wos_scan"] = wos_df
-    outputs["s_scopus_scan"] = scp_df
-    outputs["s_smart_merge"] = build_smart_merge_golden(wos_df, scp_df)
-    outputs["s_disambiguation"] = build_disambiguation_golden(wos_df)
-    outputs["m_media_features"] = build_media_golden()
-    outputs.update(build_c1_goldens(wos_df))
-
-    for name, df in outputs.items():
-        tmp = expected_path(name) + ".tmp"
-        df.to_parquet(tmp, index=False)
-        os.replace(tmp, expected_path(name))
-    with open(stamp + ".tmp", "w") as f:
-        f.write(GOLDEN_VERSION)
-    os.replace(stamp + ".tmp", stamp)

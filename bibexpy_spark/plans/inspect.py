@@ -1,9 +1,8 @@
-"""Plan-inspection helpers: assert physical-plan properties in tests/CI.
+"""Plan-inspection helpers: assert physical-plan properties in tests.
 
-The 100 TB contract is plan-shaped: filters must reach the scan, small dims
-must broadcast, Python must stay out of the hot loop.  These helpers make
-those properties assertable (used by tests and by tools that regenerate
-PLANS.md) instead of eyeballed.
+The 100 TB contract is plan-shaped: small dims must broadcast, Python must
+stay out of the hot loop.  These helpers make those properties assertable
+(tests/test_plan_properties.py) instead of eyeballed.
 """
 
 from __future__ import annotations
@@ -16,28 +15,6 @@ def explain_formatted(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """Every PushedFilters line in the physical plan."""
-    return [
-        line.strip()
-        for line in explain_formatted(df).splitlines()
-        if "PushedFilters" in line
-    ]
-
-
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    return any(fragment in line for line in pushed_filters(df))
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema lines — what each scan actually reads (column pruning)."""
-    return [
-        line.strip()
-        for line in explain_formatted(df).splitlines()
-        if "ReadSchema" in line
-    ]
 
 
 def join_strategies(df: DataFrame) -> list[str]:
@@ -60,8 +37,3 @@ def python_eval_nodes(df: DataFrame) -> int:
     against a baseline, don't treat the absolute number as executions."""
     plan = explain_formatted(df)
     return plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Shuffle exchanges in the plan — the scale currency."""
-    return explain_formatted(df).count("Exchange hashpartitioning")

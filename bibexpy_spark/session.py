@@ -66,7 +66,7 @@ def warm_python_workers(spark: SparkSession, cores: int) -> None:
     pipeline cost; on a real cluster each executor pays it once per
     session.  Uses the REAL signature UDFs over one tiny row per core, so
     exactly the worker state the pipeline needs is warm.  (Shared by
-    bench.py legs and jobs/dedup_job.py --bench-json.)"""
+    perfbench and jobs/dedup_job.py --bench-json.)"""
     from pyspark.sql import functions as F
 
     from bibexpy_spark.config import CANONICAL

@@ -1,19 +1,12 @@
-"""Structured-Streaming ingest for the transcript table (optional surface).
+"""Structured-Streaming source for the transcript turn table.
 
-The reference is strictly batch (SURVEY.md §2.9 — its only "stream" is SSE
-job progress); the north-rule pipeline is batch too.  This module is the
-streaming ENTRY the survey sketches for a turn-append feed: watermarked
-event-time aggregation per conversation, plus an exact-dup detector over
-completed conversations via ``foreachBatch`` (each micro-batch runs the same
-batch operators — one code path for both modes).
+``streaming/incremental_stream.py`` reads appended turn files through
+``read_turn_stream`` and folds each micro-batch into the delta state.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from bibexpy_spark.corpus import write_parquet  # noqa: F401 (fixture helper)
 
 TURN_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -32,51 +25,3 @@ def read_turn_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def windowed_turn_counts(stream: DataFrame, lateness: str = "10 minutes") -> DataFrame:
-    """Watermarked per-conversation turn counts over 1-minute event windows
-    — the late-data-tolerant ingest metric feed."""
-    return (
-        stream.withWatermark("ts", lateness)
-        .groupBy(F.window("ts", "1 minute"), F.col("conv_id"))
-        .agg(F.count("*").alias("n_turns"), F.max("turn_idx").alias("max_turn_idx"))
-    )
-
-
-def run_to_memory_sink(
-    counts: DataFrame, query_name: str = "turn_counts"
-):
-    """availableNow trigger: drain everything currently in the source, then
-    stop — the batch-equivalent execution used by the tests."""
-    return (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def foreach_batch_exact_dedup(spark: SparkSession, path: str, out_table: str):
-    """Micro-batch dedup: every batch assembles its conversations and
-    appends (content_sha, conv_id) to an in-memory sink; exact duplicates
-    across the whole stream are then a groupBy on the sink table.  The
-    batch operators are reused verbatim inside foreachBatch."""
-    from bibexpy_spark.operators import assembly
-
-    stream = read_turn_stream(spark, path)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        conv = assembly.assemble_docs(batch_df)
-        hashed = conv.select(
-            "conv_id", F.sha2(F.col("doc"), 256).alias("content_sha")
-        )
-        hashed.write.mode("append").saveAsTable(out_table)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", path + "_ckpt")
-        .start()
-    )

@@ -1,12 +1,11 @@
-"""Bench orchestrator logic (no Spark): leg scheduling, clean-phase
-detection, stderr classification, and the efficiency math.
+"""Helpers behind the scaling evidence (no Spark): the Spark stderr
+taxonomy, the paired-cycle estimator and tools/submit_scaling's cycle
+math.
 
-The scaling evidence in BENCH.md is only as trustworthy as this
-scheduling logic — the host throttles in multi-minute phases, and the
-protocol (interleaved legs, constant kernel slice as the phase
-detector, adaptive top-up of the primary pair) is what turns noisy
-walls into a defensible minima estimate.  These tests pin that logic
-down without spawning a single JVM.
+The host throttles in multi-minute phases; interleaved legs, probe
+normalization and the exclusion of phase-flip cycles are what turn noisy
+walls into a defensible estimate.  These tests pin that logic down without
+spawning a single JVM.
 """
 
 from __future__ import annotations
@@ -19,45 +18,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
-
-
-def test_scaling_summary_takes_minima_and_pairs():
-    runs = {
-        1: [
-            {"wall_s": 400.0, "kernel_s": 50.0, "n_turns": 1_000_000, "kernel_n_turns": 500_000},
-            {"wall_s": 360.0, "kernel_s": 43.0, "n_turns": 1_000_000, "kernel_n_turns": 500_000},
-        ],
-        4: [
-            {"wall_s": 100.0, "kernel_s": 11.0, "n_turns": 1_000_000, "kernel_n_turns": 500_000}
-        ],
-        2: [],
-        8: [],
-        32: [],
-    }
-    scaling, pairs = bench._scaling_summary(runs)
-    assert scaling[1]["wall_s"] == 360.0          # min over repeats
-    assert scaling[1]["kernel_s"] == 43.0         # kernel min independent
-    assert scaling[1]["all_runs_s"] == [400.0, 360.0]
-    # efficiency = (tps_hi / tps_lo) / (hi/lo); tps uses the minima
-    tps1 = 1_000_000 / 360.0
-    tps4 = 1_000_000 / 100.0
-    assert pairs["linear_1_4"]["efficiency"] == pytest.approx(
-        (tps4 / tps1) / 4, abs=1e-3
-    )
-    # only pairs with both levels present are emitted
-    assert "linear_2_8" not in pairs
-    assert "instructed_8_32" not in pairs
-
-
-def test_scaling_summary_kernel_uses_reference_slice_count():
-    runs = {
-        1: [{"wall_s": 10.0, "kernel_s": 5.0, "n_turns": 4000, "kernel_n_turns": 1000}],
-        2: [], 4: [], 8: [], 32: [],
-    }
-    scaling, _ = bench._scaling_summary(runs)
-    # kernel throughput must divide the KERNEL slice size, not the corpus
-    assert scaling[1]["kernel_turns_per_sec"] == pytest.approx(1000 / 5.0)
-    assert scaling[1]["turns_per_sec"] == pytest.approx(4000 / 10.0)
 
 
 def test_classify_stderr_taxonomy(tmp_path):
@@ -75,530 +35,16 @@ def test_classify_stderr_taxonomy(tmp_path):
         assert expect in got if expect != "none" else got == "none", (expect, got)
 
 
-def _fake_runs(template):
-    """Build the runs dict the orchestrator keeps, from {(name, c): [(wall,
-    kernel), ...]}."""
-    names = {n for (n, _) in template}
-    runs = {n: {1: [], 2: [], 4: [], 8: [], 32: []} for n in names}
-    for (n, c), samples in template.items():
-        for wall, kern in samples:
-            runs[n][c].append(
-                {"wall_s": wall, "kernel_s": kern, "n_turns": 1000,
-                 "kernel_n_turns": 1000}
-            )
-    return runs
-
-
-def test_clean_phase_detection_math():
-    """A leg is clean iff its best kernel is within CLEAN_FACTOR of the
-    session-best kernel at the same core count (any corpus — the kernel
-    slice is constant).  Mirrors the closures in bench.main()."""
-    runs = _fake_runs({
-        ("xl", 1): [(400.0, 55.0)],      # throttled: std saw 43.0 at level 1
-        ("std", 1): [(190.0, 43.0)],
-        ("xl", 4): [(70.0, 11.3)],       # clean: session-best at level 4
-    })
-
-    def kernel_best(level):
-        vals = [r["kernel_s"] for n in runs for r in runs[n].get(level, [])]
-        return min(vals) if vals else None
-
-    def leg_clean(name, c, factor=1.2):
-        kb = kernel_best(c)
-        rs = runs[name][c]
-        return bool(rs) and kb is not None and (
-            min(r["kernel_s"] for r in rs) <= factor * kb
-        )
-
-    assert kernel_best(1) == 43.0
-    assert not leg_clean("xl", 1)   # 55.0 > 1.2 * 43.0 = 51.6
-    assert leg_clean("std", 1)
-    assert leg_clean("xl", 4)
-    # after a clean repeat arrives, the leg flips clean
-    runs["xl"][1].append(
-        {"wall_s": 350.0, "kernel_s": 44.0, "n_turns": 1000, "kernel_n_turns": 1000}
-    )
-    assert leg_clean("xl", 1)       # 44.0 <= 1.2 * 43.0
-
-
-def test_leg_order_covers_primary_pair_first():
-    """The fixed order must open with the PRIMARY pair (xl4 1->4 since the
-    r4-late promotion), spread >= 2 repeats of each primary leg plus >= 2
-    of each secondary (xl) leg across the session (phase diversity for the
-    minima protocol), and keep the wide xl4 levels (2/8/32) last so budget
-    exhaustion can never starve a primary cycle."""
-    src = open(os.path.join(os.path.dirname(bench.__file__), "bench.py")).read()
-    # parse the literal leg_order out of main() — keeps the test honest
-    # against reordering regressions without importing main's runtime deps
-    import ast
-
-    tree = ast.parse(src)
-    leg_order = None
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Assign):
-            for t in node.targets:
-                if getattr(t, "id", None) == "leg_order":
-                    try:
-                        leg_order = ast.literal_eval(node.value)
-                    except ValueError:
-                        pass  # the env-override reassignment (non-literal)
-    assert leg_order is not None
-    assert leg_order[0] == ("xl4", 1) and leg_order[1] == ("xl4", 4)
-    assert leg_order.count(("xl4", 1)) >= 2
-    assert leg_order.count(("xl4", 4)) >= 2
-    assert leg_order.count(("xl", 1)) >= 2
-    assert leg_order.count(("xl", 4)) >= 2
-    wide_first = min(
-        i for i, leg in enumerate(leg_order)
-        if leg[0] == "xl4" and leg[1] in (2, 8, 32)
-    )
-    last_primary = max(
-        i for i, leg in enumerate(leg_order) if leg == ("xl4", 1) or leg == ("xl4", 4)
-    )
-    assert last_primary < wide_first  # budget exhaustion can't starve them
-
-
-def _leg_entry(cores, wall, kernel):
-    return {
-        "cores": cores, "n_turns": 1_000_000, "kernel_n_turns": 500_000,
-        "wall_s": wall, "kernel_s": kernel, "n_clusters": 42,
-        "errors": ["none"], "all_runs_s": [wall], "kernel_all_runs_s": [kernel],
-        "turns_per_sec": round(1_000_000 / wall, 1),
-        "kernel_turns_per_sec": round(500_000 / kernel, 1),
-        "phase_quality": 1.0,
-    }
-
-
-def test_refresh_md_round_trips_session_json(tmp_path, monkeypatch):
-    """refresh_md rebuilds BENCH.md from the saved session-result JSON:
-    the scaling tables, pair rows, and headline queries all survive the
-    dict->JSON->dict round trip without re-running any leg."""
-    import json
-
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    (tmp_path / "data").mkdir()
-    result = {
-        "metric": "headline_queries_total", "value": 10.0, "unit": "sec",
-        "queries": {"t_assemble": 1.5}, "query_all_runs": {"t_assemble": [1.5, 2.0]},
-        "headline_errors": ["none"],
-        "pipeline": {"local[1]": _leg_entry(1, 400.0, 50.0),
-                     "local[4]": _leg_entry(4, 115.0, 13.5)},
-        "scaling_pairs": {
-            "linear_1_4": {"efficiency": 0.87, "kernel_efficiency": 0.926,
-                           "paired_cycles": [0.87], "paired_best": 0.87},
-            "xl4_linear_2_8": {"efficiency": 0.7, "kernel_efficiency": 0.9},
-        },
-        "pipeline_xl4": {"local[2]": _leg_entry(2, 300.0, 26.0),
-                         "local[8]": _leg_entry(8, 107.0, 7.2)},
-        "pipeline_std": {"local[1]": _leg_entry(1, 180.0, 43.0)},
-        "scaling_pairs_std": {},
-    }
-    sess = tmp_path / "session.json"
-    sess.write_text(json.dumps(result))
-    bench.refresh_md(str(sess))
-    md = (tmp_path / "BENCH.md").read_text()
-    assert "| local[1] | 400.0 |" in md and "| local[4] | 115.0 |" in md
-    assert "| linear 1 4 | 0.87 |" in md          # xl pair, prefix stripped
-    assert "| linear 2 8 | 0.7 |" in md           # xl4 pair, xl4_ stripped
-    assert "| t_assemble | 1.5 | [1.5, 2.0] |" in md
-    # std corpus table rendered under the secondary section
-    assert "## Secondary" in md and "| local[1] | 180.0 |" in md
-
-
-def test_bench_md_folds_incremental_section(tmp_path, monkeypatch):
-    """When data/incremental_bench.json exists, BENCH.md carries the
-    delta-mode vs full-recompute section with per-cycle speedups."""
-    import json
-
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    (tmp_path / "data").mkdir()
-    ib = {
-        "corpus": "transcripts_bench.parquet", "cores": 8,
-        "n_conversations": 120_000, "n_turns": 1_122_415,
-        "delta_pct": 1.0, "n_delta_conversations": 1200,
-        "n_delta_turns": 11_000, "prior_state_build_s": 40.0,
-        "cycles": [{"order": "full->incr", "full_s": 30.0, "incr_s": 6.0,
-                    "full_probe_s": 2.0, "incr_probe_s": 2.5,
-                    "speedup": 5.0, "speedup_normalized": 6.25,
-                    "n_clusters": 100}],
-        "full_batch_s_min": 30.0, "incremental_s_min": 6.0,
-        "speedup_minima": 5.0, "speedup_paired": [5.0],
-        "speedup_normalized": [6.25], "speedup_normalized_median": 6.25,
-        "delta_stats": {"n_new": 1200, "n_candidates": 900,
-                        "n_dup_edges": 800, "n_merged_prior_clusters": 3},
-        "residual_full_corpus_terms": "bucket-stats agg",
-    }
-    (tmp_path / "data" / "incremental_bench.json").write_text(json.dumps(ib))
-    result = {
-        "metric": "headline_queries_total", "value": 1.0, "unit": "sec",
-        "queries": {}, "query_all_runs": {}, "headline_errors": ["none"],
-    }
-    bench._write_bench_md(result, {})
-    md = (tmp_path / "BENCH.md").read_text()
-    assert "## Incremental delta-mode vs full-batch recompute" in md
-    assert "| 1 (full->incr) | 30.0 | 6.0 | 2.0 / 2.5 | 5.0x | 6.25x |" in md
-    assert "**5.0x**" in md and "median **6.25x**" in md
-    assert "1200 new conversations signed" in md
-
-
-def test_paired_cycles_pair_by_launch_slot_not_index():
-    """A failed/skipped leg run must not desynchronize the paired-cycle
-    estimator: cycles pair runs at ADJACENT launch slots (the back-to-back
-    lo/hi launch sharing one throttle phase), never by list position —
-    positional zip would ratio walls from different phases and could
-    fabricate a paired_best above reality (r4 review).  Solo adaptive
-    top-up runs form no cycle."""
-    mk = lambda wall, slot: {
-        "wall_s": wall, "kernel_s": wall / 8, "slot": slot,
-        "n_turns": 1_000_000, "kernel_n_turns": 500_000,
-    }
-    runs = {
-        # cycle A: slots 0/1; cycle B's lo (slot 4) FAILED -> missing;
-        # cycle C: slots 8/9; solo top-up lo at slot 20 (no adjacent hi)
-        1: [mk(400.0, 0), mk(800.0, 8), mk(360.0, 20)],
-        4: [mk(100.0, 1), mk(205.0, 5), mk(208.0, 9)],
-        2: [], 8: [], 32: [],
-    }
-    _, pairs = bench._scaling_summary(runs)
-    got = pairs["linear_1_4"]["paired_cycles"]
-    # only (0,1) and (8,9) pair; (8, 5) and (20, anything) must not
-    assert got == [
-        pytest.approx((400.0 / 100.0) / 4, abs=1e-3),
-        pytest.approx((800.0 / 208.0) / 4, abs=1e-3),
-    ]
-    assert pairs["linear_1_4"]["paired_best"] == max(got)
-
-
 def test_paired_best_excludes_phase_flip_cycles():
     """A paired cycle above PHASE_FLIP_TOL broke the shared-phase
     assumption mid-leg (throttled lo / clean hi -> spurious superlinear
     ratio, observed live as a 1.351 '2->8 cycle' in r4c3 cycle 8).  It
     must stay listed in paired_cycles as evidence but never become the
-    best-cycle capability claim — in the summary, the merge tool, and
-    the leg assembler alike."""
+    best-cycle capability claim (tools/submit_scaling's summary applies it
+    in test_submit_scaling_probe_normalized_cycles_and_median)."""
     assert bench.paired_best([0.7, 1.351, 0.853]) == 0.853
     assert bench.paired_best([1.007]) == 1.007       # noise-level >1 kept
     assert bench.paired_best([1.351]) is None        # all cycles flipped
-
-    mk = lambda wall, slot: {
-        "wall_s": wall, "kernel_s": wall / 8, "slot": slot,
-        "n_turns": 1_000_000, "kernel_n_turns": 500_000,
-    }
-    runs = {
-        # cycle A clean (eff 0.85); cycle B phase-flipped (eff 1.4)
-        2: [mk(340.0, 0), mk(560.0, 2)],
-        8: [mk(100.0, 1), mk(100.0, 3)],
-        1: [], 4: [], 32: [],
-    }
-    _, pairs = bench._scaling_summary(runs)
-    lin = pairs["linear_2_8"]
-    assert lin["paired_cycles"] == [0.85, 1.4]
-    assert lin["paired_best"] == 0.85
-
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    from merge_bench_sessions import _merge_pairs
-    merged = _merge_pairs(
-        {"linear_2_8": {"paired_cycles": [0.7], "paired_best": 0.7}},
-        {"linear_2_8": {"paired_cycles": [1.4]}},
-    )
-    assert merged["linear_2_8"]["paired_best"] == 0.7
-
-
-def test_merge_refuses_mismatched_kernel_slices():
-    """merge_bench_sessions must refuse (with a real raise, not an
-    -O-strippable assert) to merge legs whose kernel reference slices
-    differ — concatenated kernel minima would mix workloads (r4 review)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import merge_bench_sessions as mbs
-
-    leg = {
-        "cores": 4, "n_turns": 1_000_000, "kernel_n_turns": 500_000,
-        "wall_s": 100.0, "kernel_s": 11.0, "turns_per_sec": 10_000.0,
-        "kernel_turns_per_sec": 45_454.5, "all_runs_s": [100.0],
-        "kernel_all_runs_s": [11.0], "errors": ["none"], "n_clusters": 7,
-    }
-    other = dict(leg, kernel_n_turns=2_250_000)
-    with pytest.raises(SystemExit, match="kernel reference slices"):
-        mbs._merge_leg(leg, other)
-    with pytest.raises(SystemExit, match="different corpora"):
-        mbs._merge_leg(leg, dict(leg, n_turns=2_000_000))
-    merged = mbs._merge_leg(leg, dict(leg, wall_s=90.0, all_runs_s=[90.0]))
-    assert merged["wall_s"] == 90.0
-
-
-def _write_leg(tmp_path, name, cores, wall, kernel, n=1000, kn=500):
-    import json
-
-    p = tmp_path / name
-    p.write_text(json.dumps({
-        "cores": cores, "wall_s": wall, "kernel_s": kernel,
-        "n_turns": n, "kernel_n_turns": kn,
-    }))
-    return str(p)
-
-
-def test_assemble_leg_session_slot_pairing_and_guards(tmp_path):
-    """assemble_leg_session pairs cycles from ADJACENT alternating CLI
-    files and hard-refuses misordered, odd-count, or mixed-corpus lists —
-    a dropped leg must never silently ratio walls across cycles (r4
-    review, same class as the bench._scaling_summary slot fix)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import assemble_leg_session as als
-
-    a1 = _write_leg(tmp_path, "a1.json", 1, 100.0, 40.0)
-    a4 = _write_leg(tmp_path, "a4.json", 4, 27.0, 10.5)
-    b1 = _write_leg(tmp_path, "b1.json", 1, 90.0, 38.0)
-    b4 = _write_leg(tmp_path, "b4.json", 4, 26.0, 10.0)
-
-    out = als.assemble("xl4", 1, 4, [a1, a4, b1, b4])
-    legs = out["pipeline"]
-    assert legs["local[1]"]["wall_s"] == 90.0
-    assert legs["local[4]"]["all_runs_s"] == [27.0, 26.0]
-    assert "_path" not in legs["local[1]"]
-    pair = out["scaling_pairs"]["linear_1_4"]
-    assert pair["paired_cycles"] == [
-        pytest.approx((100.0 / 27.0) / 4, abs=1e-3),
-        pytest.approx((90.0 / 26.0) / 4, abs=1e-3),
-    ]
-    # uncaptured stderr is labeled, not invented
-    assert legs["local[1]"]["errors"] == ["uncaptured"]
-
-    with pytest.raises(SystemExit, match="alternate"):
-        als.assemble("xl4", 1, 4, [a1, b1, a4, b4])
-    with pytest.raises(SystemExit, match="no .*cycle mate|cycle mate"):
-        als.assemble("xl4", 1, 4, [a1, a4, b1])
-    c4 = _write_leg(tmp_path, "c4.json", 4, 26.0, 10.0, n=2000)
-    with pytest.raises(SystemExit, match="disagree on n_turns"):
-        als.assemble("xl4", 1, 4, [a1, c4])
-
-
-def _publish_session(value=10.0, wall1=400.0, wall4=115.0, k1=50.0, k4=13.5):
-    lin = {
-        "efficiency": round(wall1 / (4 * wall4), 3),
-        "kernel_efficiency": round(k1 / (4 * k4), 3),
-        "paired_cycles": [round(wall1 / wall4 / 4, 3)],
-        "paired_best": round(wall1 / wall4 / 4, 3),
-    }
-    return {
-        "metric": "headline_queries_total", "value": value, "unit": "sec",
-        "sf": 0.1, "primary_corpus": "xl4",
-        "queries": {"t_assemble": value},
-        "query_all_runs": {"t_assemble": [value]},
-        "headline_errors": ["none"],
-        "pipeline": {"local[1]": _leg_entry(1, wall1, k1),
-                     "local[4]": _leg_entry(4, wall4, k4)},
-        "scaling_pairs": {"linear_1_4": lin},
-        "scaling_efficiency": lin["efficiency"],
-        "kernel_scaling_efficiency": lin["kernel_efficiency"],
-        "pipeline_xl": {}, "pipeline_std": {}, "scaling_pairs_std": {},
-    }
-
-
-def test_publish_folds_fresh_session_into_record(tmp_path, monkeypatch):
-    """A full bench run merges its legs into the cross-session record:
-    minima concatenate (a throttled round-end session cannot clobber the
-    accumulated evidence), paired cycles append, the record file is
-    updated in place, and the published dict keeps the fresh session's
-    own numbers under fresh_session."""
-    import json
-
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    record = tmp_path / "record.json"
-    # prior record: clean phase (fast walls); fresh session: throttled 2x
-    record.write_text(json.dumps(_publish_session(value=8.0)))
-    fresh = _publish_session(value=16.0, wall1=900.0, wall4=260.0,
-                             k1=100.0, k4=27.0)
-    pub = bench._publish(fresh, bench._session_per_corpus(fresh),
-                         str(record))
-    # minima come from the prior (clean) session
-    assert pub["pipeline"]["local[1]"]["wall_s"] == 400.0
-    assert pub["pipeline"]["local[1]"]["all_runs_s"] == [400.0, 900.0]
-    assert pub["value"] == 8.0                      # headline minima merge
-    assert pub["merged_sessions"] == 2
-    # pair efficiency recomputed from merged minima, cycles concatenated
-    lin = pub["scaling_pairs"]["linear_1_4"]
-    assert lin["efficiency"] == round(400.0 / (4 * 115.0), 3)
-    assert len(lin["paired_cycles"]) == 2
-    # the fresh session's own numbers stay visible
-    assert pub["fresh_session"]["value"] == 16.0
-    assert pub["fresh_session"]["paired_cycles"] == fresh[
-        "scaling_pairs"]["linear_1_4"]["paired_cycles"]
-    # record updated in place; BENCH.md written from the merged view
-    on_disk = json.loads(record.read_text())
-    assert on_disk["merged_sessions"] == 2
-    assert "| local[1] | 400.0 |" in (tmp_path / "BENCH.md").read_text()
-
-
-def test_publish_merge_failure_never_clobbers_record(tmp_path, monkeypatch):
-    """An incompatible record (e.g. a corpus-scheme change makes n_turns
-    disagree) falls back to publishing the fresh session alone and leaves
-    the accumulated record untouched."""
-    import json
-
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    record = tmp_path / "record.json"
-    prior = _publish_session(value=8.0)
-    prior["pipeline"]["local[1]"]["n_turns"] = 999  # mismatched corpus
-    record.write_text(json.dumps(prior))
-    before = record.read_text()
-    fresh = _publish_session(value=16.0)
-    pub = bench._publish(fresh, bench._session_per_corpus(fresh),
-                         str(record))
-    assert pub is fresh and "fresh_session" not in pub
-    assert record.read_text() == before            # record untouched
-    # BENCH.md still written (from the fresh session)
-    assert "| local[1] | 400.0 |" in (tmp_path / "BENCH.md").read_text()
-
-
-def test_publish_creates_record_on_fresh_checkout(tmp_path, monkeypatch):
-    """With no record yet, the fresh session becomes the record."""
-    import json
-
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    record = tmp_path / "record.json"
-    fresh = _publish_session(value=16.0)
-    pub = bench._publish(fresh, bench._session_per_corpus(fresh),
-                         str(record))
-    assert pub is fresh
-    assert json.loads(record.read_text())["value"] == 16.0
-
-
-def test_merge_publishes_best_throughput_leg_not_highest_core():
-    """throughput_turns_per_sec must come from the best-throughput leg:
-    on this VM local[32] is SLOWER than local[8] (effective-core ceiling),
-    and the metric is throughput, not core count (r4 review)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import merge_bench_sessions as mbs
-
-    session = {
-        "pipeline": {
-            "local[8]": _leg_entry(8, 20.0, 2.0),     # 50k turns/s
-            "local[32]": _leg_entry(32, 40.0, 1.8),   # 25k turns/s
-        },
-        "scaling_pairs": {},
-        "scaling_pairs_std": {},
-    }
-    merged = mbs.merge([session])
-    assert merged["throughput_turns_per_sec"] == session["pipeline"][
-        "local[8]"
-    ]["turns_per_sec"]
-    assert merged["throughput_level"] == "local[8]"
-
-
-def test_merge_refuses_disjoint_level_corpus_mixing():
-    """A record whose pipeline holds corpus-A legs at some levels must not
-    silently adopt corpus-B legs at DISJOINT levels — the per-level n_turns
-    guard never fires there, so merge() checks representative corpus sizes
-    and the session scheme label up front (r4 review)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import merge_bench_sessions as mbs
-
-    a = {
-        "primary_corpus": "xl4",
-        "pipeline": {"local[1]": _leg_entry(1, 400.0, 30.0)},
-        "scaling_pairs": {}, "scaling_pairs_std": {},
-    }
-    b_legs = {"local[8]": dict(_leg_entry(8, 30.0, 4.0), n_turns=2_000_000)}
-    with pytest.raises(SystemExit, match="different corpora"):
-        mbs.merge([a, {
-            "primary_corpus": "xl4", "pipeline": b_legs,
-            "scaling_pairs": {}, "scaling_pairs_std": {},
-        }])
-    with pytest.raises(SystemExit, match="schemes differ"):
-        mbs.merge([a, {
-            "primary_corpus": "xl", "pipeline": {},
-            "scaling_pairs": {}, "scaling_pairs_std": {},
-        }])
-
-
-def test_merge_refilters_one_sided_legacy_paired_best():
-    """A pair label present in only ONE session may carry a paired_best
-    computed before the PHASE_FLIP_TOL exclusion; merge must recompute it
-    from the cycles so a super-unity phase-flip cycle is never republished
-    as the capability claim (r4 review)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import merge_bench_sessions as mbs
-
-    legacy = {"paired_cycles": [1.351, 0.74], "paired_best": 1.351}
-    merged = mbs._merge_pairs({}, {"xl_linear_2_8": legacy})
-    assert merged["xl_linear_2_8"]["paired_best"] == 0.74
-    only_flips = mbs._merge_pairs({"p": {"paired_cycles": [1.4],
-                                         "paired_best": 1.4}}, {})
-    assert "paired_best" not in only_flips["p"]
-
-
-def test_publish_fallback_scheme_never_creates_record(tmp_path, monkeypatch):
-    """A degraded session (every xl4 leg failed, primary fell back to the
-    2x corpus) must not CREATE the cross-session record: that record would
-    reject every future healthy xl4 session and freeze evidence
-    accumulation (r4 review)."""
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    record = tmp_path / "record.json"
-    fresh = _publish_session(value=16.0)
-    fresh["primary_corpus"] = "xl"
-    pub = bench._publish(fresh, bench._session_per_corpus(fresh),
-                         str(record))
-    assert pub is fresh
-    assert not record.exists()
-    # BENCH.md still written from the fresh session
-    assert (tmp_path / "BENCH.md").exists()
-
-
-def test_assemble_guard_reports_missing_kernel_key(tmp_path):
-    """Mixing a pre-kernel-slice leg file (no kernel_n_turns) with a
-    current one must produce the diagnostic SystemExit, not a TypeError
-    from sorting None against int (r4 review)."""
-    import json as _json
-
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import assemble_leg_session as als
-
-    p1 = tmp_path / "lo.json"
-    p1.write_text(_json.dumps({
-        "cores": 2, "wall_s": 100.0, "kernel_s": 10.0,
-        "n_turns": 1000, "kernel_n_turns": 500,
-    }))
-    p2 = tmp_path / "hi.json"
-    p2.write_text(_json.dumps({
-        "cores": 8, "wall_s": 30.0, "kernel_s": 3.0, "n_turns": 1000,
-    }))
-    with pytest.raises(SystemExit, match="legs disagree on kernel_n_turns"):
-        als.assemble("xl4", 2, 8, [str(p1), str(p2)])
-
-
-def test_subprocess_unit_kills_hung_leg(tmp_path, monkeypatch):
-    """Regression (r4, observed live): PySpark launch can deadlock outright
-    (python driver blocked in py4j recv, JVM main blocked on its launch
-    pipe, zero CPU) — _subprocess_unit must kill the unit's whole process
-    group after SPARK_GRAFT_LEG_TIMEOUT_S and record errors='hang_timeout'
-    instead of hanging the entire bench run."""
-    import subprocess
-    import time
-
-    sleeper = tmp_path / "sleeper.sh"
-    # the sleeper spawns a child of its own so the test also proves the
-    # PROCESS-GROUP kill (a plain proc.kill would orphan the grandchild JVM)
-    sleeper.write_text("#!/bin/sh\nsleep 300 &\nCHILD=$!\necho $CHILD > "
-                       f"{tmp_path}/child.pid\nwait $CHILD\n")
-    sleeper.chmod(0o755)
-    monkeypatch.setattr(bench.sys, "executable", str(sleeper))
-    monkeypatch.setenv("SPARK_GRAFT_LEG_TIMEOUT_S", "1")
-    t0 = time.time()
-    r, errors = bench._subprocess_unit(["--leg", "1", "x"], "t", str(tmp_path))
-    assert r is None
-    assert errors == "hang_timeout"
-    assert time.time() - t0 < 30
-    # grandchild must be dead too (killpg, not kill)
-    child_pid = int((tmp_path / "child.pid").read_text().strip())
-    for _ in range(50):
-        try:
-            os.kill(child_pid, 0)
-        except ProcessLookupError:
-            break
-        time.sleep(0.1)
-    else:
-        subprocess.run(["kill", "-9", str(child_pid)])
-        raise AssertionError("grandchild survived the process-group kill")
 
 
 def test_submit_scaling_cycle_pairing_guards():
@@ -642,89 +88,6 @@ def test_submit_scaling_cycle_pairing_guards():
         [{"cores": 2, "wall_s": 100.0}, {"cores": 2, "wall_s": 90.0},
          {"cores": 8, "wall_s": 30.0}], 2, 8, "wall_s"
     ) == [0.75]
-
-
-def test_build_result_handles_empty_and_partial_state():
-    """_build_result must produce a parseable, schema-stable dict from ANY
-    accumulation state — including the empty one (a SIGTERM during corpus
-    generation) — because the partial artifact and the kill-path summary
-    line are built from it (VERDICT r4 #1)."""
-    empty, per_corpus = bench._build_result(
-        runs={}, corpora={}, all_rounds={q: [] for q in bench.HEADLINE},
-        headline_errors=[], sf="sf0.1",
-    )
-    assert empty["metric"] == "headline_queries_total"
-    assert empty["value"] == 0 and empty["queries"] == {}
-    assert per_corpus == {}
-    # one leg accumulated -> scaling appears, no pairs yet
-    runs = {"xl4": {1: [{"wall_s": 100.0, "kernel_s": 10.0, "n_turns": 1000,
-                         "kernel_n_turns": 500, "slot": 0}],
-                    2: [], 4: [], 8: [], 32: []}}
-    one, pc = bench._build_result(
-        runs, {"xl4": "p"}, {q: [] for q in bench.HEADLINE}, [], "sf0.1",
-    )
-    assert one["primary_corpus"] == "xl4"
-    assert one["pipeline"]["local[1]"]["wall_s"] == 100.0
-    assert one["scaling_pairs"] == {}
-    import json as _json
-
-    _json.dumps(one)  # artifact must serialize
-
-
-def test_bench_sigterm_prints_partial_summary_line(tmp_path):
-    """Integration (tiny corpora, isolated workdir): an outer SIGTERM —
-    the driver's `timeout` — must still yield a parseable summary line on
-    stdout and an on-disk partial artifact.  This is the r4 failure mode
-    (BENCH_r04.json rc=124/parsed=null) pinned for good."""
-    import json as _json
-    import signal
-    import subprocess
-    import time as _time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    workdir = tmp_path / "benchwork"
-    workdir.mkdir()
-    env = {
-        **os.environ,
-        "SPARK_GRAFT_BENCH_WORKDIR": str(workdir),
-        "SPARK_GRAFT_BENCH_CORPUS_SCALE": "0.002",
-        "SPARK_GRAFT_BENCH_RECORD": str(workdir / "record.json"),
-        "PYTHONPATH": repo,
-    }
-    proc = subprocess.Popen(
-        [sys.executable, os.path.join(repo, "bench.py")],
-        stdout=subprocess.PIPE, stderr=subprocess.PIPE, env=env, text=True,
-    )
-    partial = workdir / "bench_partial.json"
-    deadline = _time.time() + 240
-    try:
-        # wait for the first completed leg's checkpoint, then SIGTERM
-        while _time.time() < deadline:
-            if partial.exists():
-                try:
-                    if _json.loads(partial.read_text()).get("pipeline"):
-                        break
-                except (ValueError, OSError):
-                    pass  # mid-replace
-            if proc.poll() is not None:
-                break
-            _time.sleep(1.0)
-        else:
-            raise AssertionError("no leg checkpoint within 240s")
-        proc.send_signal(signal.SIGTERM)
-        out, err = proc.communicate(timeout=120)
-    finally:
-        if proc.poll() is None:
-            proc.kill()
-            proc.communicate()
-    lines = [ln for ln in out.strip().splitlines() if ln.strip()]
-    assert lines, f"no stdout at all; stderr tail: {err[-2000:]}"
-    summary = _json.loads(lines[-1])          # the driver's parse target
-    assert summary.get("partial") is True
-    assert summary["metric"] == "headline_queries_total"
-    assert summary.get("pipeline"), "partial summary lost the measured legs"
-    on_disk = _json.loads(partial.read_text())
-    assert on_disk.get("pipeline")
 
 
 def test_submit_scaling_probe_normalized_cycles_and_median():
@@ -792,75 +155,3 @@ def test_submit_scaling_record_path_and_divergence():
     ]
     with pytest.raises(SystemExit, match="diverged"):
         ss.summarize(legs, 1, 4, "c.parquet", 1.0)
-
-
-def test_age_uncaptured_drops_legacy_block_once_k_labeled_runs():
-    """VERDICT r4 #8: a leg mixing pre-forensics (unlabeled) runs with
-    labeled ones drops the legacy block — which contains the uncaptured
-    runs — once >= K labeled runs exist, and recomputes its stats so the
-    errors column becomes a per-run guarantee.  Below K, or without the
-    'uncaptured' marker, the leg is untouched."""
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import merge_bench_sessions as mbs
-
-    leg = {
-        "cores": 1, "n_turns": 1000, "kernel_n_turns": 500,
-        "all_runs_s": [400.0, 390.0, 520.0, 510.0, 505.0, 500.0, 495.0,
-                       490.0, 485.0],
-        "kernel_all_runs_s": [50.0, 49.0, 60.0, 59.0, 58.0, 57.0, 56.0,
-                              55.0, 54.0],
-        "wall_s": 390.0, "kernel_s": 49.0,
-        "turns_per_sec": 2.6, "kernel_turns_per_sec": 10.2,
-        "errors": ["none", "uncaptured"], "n_clusters": 7,
-        # first two runs are the unattributable legacy block
-        "errors_per_run": ["legacy", "legacy"] + ["none"] * 7,
-    }
-    aged = mbs._age_uncaptured(dict(leg), k=6)
-    assert aged["all_runs_s"] == leg["all_runs_s"][2:]
-    assert aged["kernel_all_runs_s"] == leg["kernel_all_runs_s"][2:]
-    assert aged["wall_s"] == 485.0 and aged["kernel_s"] == 54.0
-    assert aged["errors"] == ["none"]            # guarantee, not label
-    assert aged["aged_out_runs"] == 2
-    assert aged["turns_per_sec"] == round(1000 / 485.0, 1)
-    # below K: untouched (honest mixed label stays)
-    assert mbs._age_uncaptured(dict(leg), k=8) == leg
-    # no 'uncaptured' marker: legacy runs are already guaranteed-captured
-    clean = dict(leg, errors=["none"])
-    assert mbs._age_uncaptured(clean, k=1) == clean
-    # legacy record leg without per-run labels at all: untouched
-    unlabeled = {k: v for k, v in leg.items() if k != "errors_per_run"}
-    assert mbs._age_uncaptured(dict(unlabeled), k=1) == unlabeled
-
-
-def test_merge_concatenates_per_run_labels_and_ages():
-    """_merge_leg pads a label-less side with 'legacy' so the lists stay
-    parallel; merge() then ages mixed legs before recomputing pair
-    efficiencies from the (possibly changed) minima."""
-    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "tools"))
-    import merge_bench_sessions as mbs
-
-    legacy_leg = dict(
-        _leg_entry(1, 400.0, 50.0), errors=["none", "uncaptured"],
-        all_runs_s=[400.0, 450.0], kernel_all_runs_s=[50.0, 52.0],
-    )
-    fresh_runs = [470.0, 468.0, 466.0, 464.0, 462.0, 460.0]
-    fresh_leg = dict(
-        _leg_entry(1, 460.0, 53.0), all_runs_s=fresh_runs,
-        kernel_all_runs_s=[53.0 + i for i in range(6)],
-        errors=["none"], errors_per_run=["none"] * 6,
-    )
-    merged = mbs._merge_leg(legacy_leg, fresh_leg)
-    assert merged["errors_per_run"] == ["legacy"] * 2 + ["none"] * 6
-    a = {"primary_corpus": "xl4",
-         "pipeline": {"local[1]": legacy_leg,
-                      "local[4]": _leg_entry(4, 115.0, 13.5)},
-         "scaling_pairs": {}, "scaling_pairs_std": {}}
-    b = {"primary_corpus": "xl4",
-         "pipeline": {"local[1]": fresh_leg},
-         "scaling_pairs": {}, "scaling_pairs_std": {}}
-    out = mbs.merge([a, b])
-    leg1 = out["pipeline"]["local[1]"]
-    # 6 labeled runs >= K=6: the 2-run legacy block (holding the 400.0
-    # minima) ages out; minima recompute from the labeled runs
-    assert leg1["all_runs_s"] == fresh_runs
-    assert leg1["wall_s"] == 460.0 and leg1["errors"] == ["none"]

@@ -6,8 +6,8 @@ Two halves:
      no code, only specs (seeds, constants, dictionaries).
   2. BIT-EQUALITY: the independent reimplementations in golden.py must
      agree bit-for-bit with the engine kernels on adversarial deterministic
-     corpora.  If an engine kernel regresses, this test (not just the
-     contract) pinpoints which kernel.
+     corpora.  If an engine kernel regresses, this test pinpoints which
+     kernel.
 """
 
 from __future__ import annotations

@@ -1,16 +1,13 @@
-"""Tests for quality metrics, versioned record mutations, streaming ingest,
-and the enrichment pattern."""
+"""Tests for quality metrics, versioned record mutations and the enrichment
+pattern."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from bibexpy_spark.operators import quality, records
 from bibexpy_spark.sources import enrichment
-from bibexpy_spark.streaming import ingest
 
 
 @pytest.fixture(scope="module")
@@ -66,45 +63,6 @@ def test_merge_upsert(spark, biblio, tmp_path):
     assert got["u1"] == "Title A2" and "u9" in got and len(got) == 4
 
 
-def test_streaming_windowed_counts(spark, turns_pd, tmp_path):
-    src = str(tmp_path / "turns_stream")
-    os.makedirs(src, exist_ok=True)
-    spark.createDataFrame(turns_pd.head(200)).write.mode("overwrite").parquet(src)
-    stream = ingest.read_turn_stream(spark, src)
-    assert stream.isStreaming
-    q = ingest.run_to_memory_sink(
-        ingest.windowed_turn_counts(stream), query_name="tc_test"
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT sum(n_turns) AS n FROM tc_test").first()
-    # append mode with watermark only emits CLOSED windows; availableNow on a
-    # finite source closes all but the max-event-time window
-    assert out["n"] is None or out["n"] <= 200
-    total = spark.sql("SELECT count(*) AS n FROM tc_test").first()["n"]
-    assert total >= 0
-
-
-def test_streaming_foreach_batch_dedup(spark, turns_pd, tmp_path):
-    src = str(tmp_path / "turns_stream2")
-    os.makedirs(src, exist_ok=True)
-    sub = turns_pd[turns_pd.conv_id.str.contains("_base|_exact")]
-    spark.createDataFrame(sub).write.mode("overwrite").parquet(src)
-    import uuid
-
-    table = f"stream_dedup_out_{uuid.uuid4().hex[:8]}"
-    q = ingest.foreach_batch_exact_dedup(spark, src, table)
-    q.awaitTermination(120)
-    dup_groups = (
-        spark.table(table)
-        .groupBy("content_sha")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )
-    n_exact = sub[sub.conv_id.str.endswith("_exact")].conv_id.nunique()
-    assert dup_groups == n_exact
-
-
 def test_enrichment_pattern(spark):
     recs = spark.createDataFrame(
         [("r1", "10.1/a"), ("r2", ""), ("r3", "10.2/b")], ["record_id", "doi"]
@@ -125,51 +83,3 @@ def test_fetch_with_retry_gives_up():
 
     assert enrichment.fetch_with_retry(flaky, "10.1/x", retries=3, backoff_s=0) is None
     assert len(calls) == 3
-
-
-def test_streaming_stateful_first_seen_dedup(spark, tmp_path):
-    """applyInPandasWithState first-seen dedup: duplicates arriving in LATER
-    micro-batches are suppressed by the state store (maxFilesPerTrigger=1
-    forces one batch per file)."""
-    import pandas as pd
-
-    from bibexpy_spark.streaming import stateful
-
-    src = str(tmp_path / "docs")
-    # batch 1: a, b ; batch 2: dup of a + new c ; batch 3: dups of b and c
-    batches = [
-        [("d1", "alpha text"), ("d2", "beta text")],
-        [("d3", "alpha text"), ("d4", "gamma text")],
-        [("d5", "beta text"), ("d6", "gamma text")],
-    ]
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    for i, rows in enumerate(batches):
-        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
-            f"{src}/batch_{i}.parquet"
-        )
-
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = stateful.first_seen_dedup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("first_seen")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("SELECT * FROM first_seen").toPandas()
-    # exactly one non-null rep per distinct content, drawn from its dup group
-    reps = rows[rows.rep_id.notna()]
-    groups = {"alpha": {"d1", "d3"}, "beta": {"d2", "d5"}, "gamma": {"d4", "d6"}}
-    assert len(reps) == 3 and reps.content_sha.is_unique
-    assert all(any(r in g for g in groups.values()) for r in reps.rep_id)
-    # the other 3 arrivals were suppressed by state and counted as dups
-    assert int(rows.n_new_duplicates.sum()) == 3

@@ -7,8 +7,8 @@ JVM.  Whatever speedup THIS shows is the host's ceiling for the workload;
 Spark cannot scale past the substrate.  Interleaved repeats, minima reported
 (host shows phase-like throttling).
 
-Writes data/host_baseline.json; bench.py folds it into BENCH.md so the
-scaling table always carries the host context.
+Writes data/host_baseline.json, the host context for the scaling pairs of
+tools/submit_scaling.py.
 
 Usage: python tools/host_baseline.py [repeats]
 """

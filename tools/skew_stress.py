@@ -6,8 +6,7 @@ under the DEFAULT config, no knob-forcing.
 
 Reports star-bucket counts, candidate volume (absolute and vs the all-pairs
 blowup the pile-up would otherwise cause), dup pairs, whether the pile-up
-resolves into one cluster, and wall time.  Writes data/skew_stress.json,
-which bench.py folds into BENCH.md.
+resolves into one cluster, and wall time.  Writes data/skew_stress.json.
 
 Run:  python tools/skew_stress.py  [n_conversations] [hot_fraction]
 """

@@ -1,13 +1,11 @@
 """spark-submit --py-files scaling pair — the deployment-literal evidence.
 
-bench.py's legs measure the pipeline in-process; this tool runs the ACTUAL
-deployment artifact — ``spark-submit --master local[N] --py-files
-bibexpy_spark.zip jobs/dedup_job.py`` — at a pair's two parallelism levels
-in alternating cycles.  The wall is timed INSIDE the job (--bench-json):
-pipeline DAG plus all output writes, after the python-worker warmup
-(session-fixed cost, paid once per executor on a real cluster).  Flags
-mirror the bench legs' config (--no-simhash, no containment) so the two
-series measure the same DAG.
+Runs the ACTUAL deployment artifact — ``spark-submit --master local[N]
+--py-files bibexpy_spark.zip jobs/dedup_job.py --no-simhash`` (no
+containment) — at a pair's two parallelism levels in alternating cycles.
+The wall is timed INSIDE the job (--bench-json): pipeline DAG plus all
+output writes, after the python-worker warmup (session-fixed cost, paid
+once per executor on a real cluster).
 
 Phase handling (VERDICT r4 #2): every leg now carries its own host-phase
 probe — a CONSTANT no-Spark kernel workload (the signature stage's
@@ -33,8 +31,7 @@ phase-flip cycles are excluded from the best-cycle claim
 Usage:  python tools/submit_scaling.py [cycles] [lo] [hi] [corpus_parquet]
 Writes data/submit_scaling.json for the legacy (2, 8) pair, else
 data/submit_scaling_{lo}_{hi}.json; legs accumulate across sessions for
-the same corpus + pair + n_turns.  ``python bench.py --refresh-md``
-renders the BENCH.md sections.
+the same corpus + pair + n_turns.
 """
 
 from __future__ import annotations
