@@ -308,12 +308,18 @@ def write_parquet(
 SF_CONVERSATIONS = {"sf0.001": 200, "sf0.01": 2000, "sf0.1": 20000}
 
 
-def corpus_path_for_sf(sf_dir: str, data_dir: str = "/root/repo/data") -> str:
+def corpus_path_for_sf(sf_dir: str, data_dir: str | None = None) -> str:
     """Map a testdata sf dir to a deterministic fixture corpus, creating it
     on first use.  (The driver's tables don't include transcripts; the north
-    rule says to synthesize them deterministically — BASELINE.json.)"""
+    rule says to synthesize them deterministically — BASELINE.json.)
+    ``data_dir`` defaults to ``data/`` of the checkout this module lives in,
+    so two checkouts never share fixtures."""
     import os
 
+    if data_dir is None:
+        data_dir = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data"
+        )
     sf = os.path.basename(sf_dir.rstrip("/"))
     n = SF_CONVERSATIONS.get(sf, 2000)
     os.makedirs(data_dir, exist_ok=True)

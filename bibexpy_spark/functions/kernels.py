@@ -315,23 +315,6 @@ def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     )
 
 
-def simhash_chunk_keys(sim: np.ndarray, cfg: DedupConfig) -> np.ndarray:
-    """(n, chunks) int64: pigeonhole chunk values for Hamming bucketing.
-
-    With hamming_max < chunks, two hashes within the radius must agree on at
-    least one 16-bit chunk -> equi-join per chunk index captures all pairs.
-    """
-    n = len(sim)
-    c = cfg.simhash_chunks
-    width = 64 // c
-    mask = _U64((1 << width) - 1)
-    u = sim.view(np.uint64)
-    out = np.empty((n, c), dtype=np.uint64)
-    for i in range(c):
-        out[:, i] = (u >> _U64(i * width)) & mask
-    return out.view(np.int64)
-
-
 # ---------------------------------------------------------------------------
 # exact Jaccard (oracle + verification kernel)
 # ---------------------------------------------------------------------------

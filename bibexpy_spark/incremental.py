@@ -37,20 +37,43 @@ star-fallback buckets both paths apply the same connect-to-bucket-rep
 policy, but to reps chosen from different row sets — the same documented
 approximation the batch path already makes.
 
-Scale shape:
-  * signing cost is O(|delta|), never O(|corpus|);
-  * the band join is ``lsh.bucket_pairs`` with a new-flag — the batch
-    pass's bucket policy, restricted to buckets CONTAINING a new member;
-    the touched-bucket set is derived from the DELTA's own band hashes
-    before any aggregation — the old corpus is scanned (narrow
-    conv_id+bands projection, semi-join) but never wide-shuffled: the
-    bucket groupBy is O(|touched|), not O(|corpus|·bands);
-  * prior clusters enter connected components CONTRACTED to one super-node
-    per cluster (its cluster_id, which is already the min conv_id of its
-    members), so CC size is O(|delta| + |touched clusters|), not
-    O(|corpus|);
-  * shuffle keys are the same 128-bit surrogate structs as the batch
-    pipeline; conv_id strings only at the boundary.
+Staged layout (scale shape).  Each stage is computed once and every later
+stage and output reads the stored rows (``lineage.materialize_stage``: a
+``RunContext`` checkpoint table when the caller passes ``run``, else an
+in-memory ``localCheckpoint``); the stage's row count and counters ride
+the same action as an ``Observation``, and ``stats`` is built from them.
+Every stored frame is O(|delta| + |touched|):
+
+  * ``grown``        delta conv_ids already in the prior state;
+  * ``retracted`` / ``carried``  (grown deltas only) the prior assignments
+                     and signatures of the clusters a grown conversation
+                     dissolves;
+  * ``signed_new``   the delta's signatures — the only Python-UDF stage;
+  * ``cross_exact``  new rows whose content hash exists in the prior state,
+                     with the prior rep (min conv_id of that hash);
+  * ``reps``         the new reps plus the prior reps sharing a band key
+                     with one (the touched buckets' members);
+  * ``candidates``   ``lsh.bucket_pairs`` with a new-flag over ``reps``;
+  * ``verify``       the Jaccard-verified candidate edges;
+  * the pass deltas  (``containment_*_new``, ``simhash_pairs_new``; their
+                     operators keep their own join plans);
+  * ``edges``        every edge with its old endpoints contracted to their
+                     prior cluster_id (already the min conv_id of its
+                     members), so prior clusters enter connected components
+                     as super-nodes;
+  * ``labels``       the connected-component label of each edge endpoint.
+
+The prior state is scanned, never shuffled: every join against a prior
+table broadcasts its delta-sized side (the delta's conv_ids, content
+hashes or band keys, the edge endpoints, the remap), and the only
+aggregates over prior rows run after such a semi-join.  That is exact
+because same-hash rows share every signature, so a semi-join on a hash or
+band key keeps whole hash groups.  ``clusters`` is the prior assignment
+left-joined to the small remap, plus the new rows; ``cluster_remap`` is a
+filter over ``labels``.  Neither re-runs a delta stage.  The broadcasts
+bound one pass's delta to what the driver can broadcast; the delta keys on
+conv_id strings throughout (no surrogate: every keyed frame is
+delta-sized).
 """
 
 from __future__ import annotations
@@ -62,13 +85,15 @@ from typing import Any
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
 from bibexpy_spark.functions import udfs
+from bibexpy_spark.lineage import RunContext, materialize_stage, release_checkpoint
 from bibexpy_spark.operators import assembly, components, containment, exact, lsh
 from bibexpy_spark.operators import simhash as simhash_op
 from bibexpy_spark.operators import verify as verify_op
-from bibexpy_spark.pipeline import check_pass_options, surrogate_id
+from bibexpy_spark.pipeline import check_pass_options
 
 _SIG_COLS = ["conv_id", "content_sha", "shingles", "band_hashes"]
 
@@ -144,8 +169,8 @@ def compose_pair_state(
     ``resigned_ids`` is a single-column ``conv_id`` frame; ``a``/``b`` name
     the pair endpoint columns (inner_id/outer_id or a_id/b_id)."""
     return (
-        prior.join(resigned_ids.withColumnRenamed("conv_id", a), a, "left_anti")
-        .join(resigned_ids.withColumnRenamed("conv_id", b), b, "left_anti")
+        prior.join(F.broadcast(resigned_ids.withColumnRenamed("conv_id", a)), a, "left_anti")
+        .join(F.broadcast(resigned_ids.withColumnRenamed("conv_id", b)), b, "left_anti")
         .select(*delta.columns)
         .unionByName(delta)
     )
@@ -177,6 +202,7 @@ def run_incremental_dedup(
     containment_mode: str = "prefix",
     extra_cluster_edges: tuple[str, ...] = (),
     prior_extra_pairs: DataFrame | None = None,
+    run: RunContext | None = None,
 ) -> dict[str, Any]:
     """Cluster ``new_turns`` against the prior corpus state.
 
@@ -223,24 +249,22 @@ def run_incremental_dedup(
     contracted inside the prior cluster super-nodes, so the extra edge
     volume stays O(|delta| + pairs touching dissolved clusters).
 
+    ``run`` (as in ``pipeline.run_dedup``): each stage is checkpointed
+    through ``run.materialize`` — manifests, ``metrics.jsonl``, and a
+    relaunch with the same run skips every fresh stage.  Without it each
+    stage is cut in memory (``lineage.materialize_stage``).
+
     Returns: signed_new (signatures for every delta conversation, grown ones
     re-signed over their merged turn set), clusters (full updated assignment
     over old ∪ new), cluster_remap (prior cluster_id -> new cluster_id, only
-    rows that changed), dup_edges_new, resigned_prior_ids, stats (one-row
-    DataFrame), cleanup (callable releasing the run's caches), plus the
-    optional delta pair sets above.
+    rows that changed), dup_edges_new, candidate_pairs, resigned_prior_ids,
+    stats (one-row DataFrame of the counts observed while the stages were
+    computed — reading it runs no Spark job), cleanup (callable releasing
+    the run's in-memory stages), plus the optional delta pair sets above.
     """
-    from pyspark.sql import types as T
-
     check_pass_options(
         extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
     )
-
-    carried: DataFrame | None = None
-    touched_cluster_ids: DataFrame | None = None
-    resigned_ids: DataFrame | None = None
-    prior_signed_orig = prior_signed
-    sign_input = new_turns
     if prior_signed is not None and prior_clusters is None:
         # contract guard (r4 review): with prior_signed but no
         # prior_clusters, the old corpus's assignments cannot be carried —
@@ -252,88 +276,105 @@ def run_incremental_dedup(
             "cluster table (it would silently drop every old conversation "
             "untouched by this delta)"
         )
+
+    counts: dict[str, dict[str, int]] = {}
+    stored: list[DataFrame] = []
+
+    def stage(name: str, build, **observe) -> DataFrame:
+        df, counts[name] = materialize_stage(run, name, build, **observe)
+        stored.append(df)
+        return df
+
+    # prior frames are only ever scanned: every join against them has the
+    # delta-sized side broadcast, so nothing prior-sized is shuffled
+    carried: DataFrame | None = None
+    resigned_ids: DataFrame | None = None
+    prior_signed_orig = prior_signed
+    sign_input = new_turns
     if prior_signed is not None:
-        grown_ids = (
-            new_turns.select("conv_id").distinct()
-            .join(prior_signed.select("conv_id"), "conv_id", "left_semi")
-        )
-        if prior_turns is None:
+        grown_ids = stage("grown", lambda: prior_signed.select("conv_id").join(
+            F.broadcast(new_turns.select("conv_id")), "conv_id", "left_semi"
+        ))
+        n_grown = counts["grown"]["rows"]
+        if n_grown and prior_turns is None:
             # contract guard: a grown conversation without its prior turns
             # cannot be re-signed — failing loudly beats entering it as a
-            # second same-id row with a different signature.  isEmpty (a
-            # limit-1 probe) on the happy path; the exact count is computed
-            # only when raising (r4 review: the all-new daily delta paid a
-            # full count() aggregation here on every run)
-            if not grown_ids.isEmpty():
-                raise ValueError(
-                    f"{grown_ids.count()} delta conversation(s) already exist "
-                    "in prior_signed; pass prior_turns so they can be "
-                    "retracted and re-signed (grown-conversation contract, "
-                    "module docstring)"
-                )
-        else:
-            # the grown-id / touched-cluster sets are delta-sized but reused
-            # by half a dozen joins below; truncate their lineage eagerly so
-            # a caller passing LIVE pipeline outputs (rather than state
-            # tables) doesn't compound plan depth into Catalyst-analysis
-            # blowup (measured: un-truncated plans hang the optimizer)
-            grown_ids = grown_ids.localCheckpoint(eager=True)
-        if prior_turns is not None and not grown_ids.isEmpty():
-            # (isEmpty on the checkpointed delta-sized frame is ~free; a
-            # purely-new delta must NOT enter the grown path — it would
-            # set `carried` to an empty-but-not-None frame and spuriously
-            # trigger the prior_extra_pairs requirement below)
+            # second same-id row with a different signature
+            raise ValueError(
+                f"{n_grown} delta conversation(s) already exist "
+                "in prior_signed; pass prior_turns so they can be "
+                "retracted and re-signed (grown-conversation contract, "
+                "module docstring)"
+            )
+        if n_grown and extra_cluster_edges and prior_extra_pairs is None:
+            raise ValueError(
+                "extra_cluster_edges with a grown delta needs "
+                "prior_extra_pairs (the maintained pair state): a "
+                "dissolved cluster's surviving pair edges exist "
+                "nowhere else"
+            )
+        if n_grown:
+            # (a purely-new delta must NOT enter the grown path — `carried`
+            # would be an empty-but-not-None frame and spuriously trigger
+            # the prior_extra_pairs requirement)
             resigned_ids = grown_ids
             # latest-wins merge of the grown conversations' turn sets:
             # delta rows override prior rows on (conv_id, turn_idx)
-            grown_delta = new_turns.join(grown_ids, "conv_id", "left_semi")
-            fresh_delta = new_turns.join(grown_ids, "conv_id", "left_anti")
+            grown_delta = new_turns.join(F.broadcast(grown_ids), "conv_id", "left_semi")
+            fresh_delta = new_turns.join(F.broadcast(grown_ids), "conv_id", "left_anti")
             merged_grown = merge_turns_latest_wins(
-                prior_turns.join(grown_ids, "conv_id", "left_semi"), grown_delta
+                prior_turns.join(F.broadcast(grown_ids), "conv_id", "left_semi"),
+                grown_delta,
             )
             sign_input = fresh_delta.unionByName(merged_grown)
             # retract the grown conversations' ENTIRE prior clusters: stale
             # connectivity through a pre-growth signature must not survive,
             # and a retraction can legitimately SPLIT a cluster — so every
             # former co-member re-enters the candidate/verify/cluster path
-            # (with its existing signature: re-signing stays O(|grown|))
-            if prior_clusters is not None:
-                touched_cluster_ids = (
-                    prior_clusters.join(grown_ids, "conv_id", "left_semi")
-                    .select("cluster_id")
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-                touched_members = (
-                    prior_clusters.join(
-                        touched_cluster_ids, "cluster_id", "left_semi"
-                    )
-                    .select("conv_id")
-                    .localCheckpoint(eager=True)
-                )
-                carried = (
-                    prior_signed.join(touched_members, "conv_id", "left_semi")
-                    .join(grown_ids, "conv_id", "left_anti")
-                    .select(*_SIG_COLS)
-                )
-                prior_signed = prior_signed.join(
-                    touched_members, "conv_id", "left_anti"
-                )
-                prior_clusters = prior_clusters.join(
-                    touched_cluster_ids, "cluster_id", "left_anti"
-                )
-            # defensive: grown rows always leave the old side, even if the
-            # prior state was inconsistent (signed without a cluster row)
-            prior_signed = prior_signed.join(grown_ids, "conv_id", "left_anti")
+            # (with its existing signature: re-signing stays O(|grown|)).
+            # A cluster's id is its min member, so each retracted cluster
+            # has exactly one member with conv_id == cluster_id.
+            retracted = stage(
+                "retracted",
+                lambda: prior_clusters.join(
+                    F.broadcast(
+                        prior_clusters.join(F.broadcast(grown_ids), "conv_id", "left_semi")
+                        .select("cluster_id").distinct()
+                    ),
+                    "cluster_id", "left_semi",
+                ),
+                n_retracted_clusters=F.sum(
+                    (F.col("conv_id") == F.col("cluster_id")).cast("long")
+                ),
+            )
+            members = F.broadcast(retracted.select("conv_id"))
+            carried = stage("carried", lambda: (
+                prior_signed.join(members, "conv_id", "left_semi")
+                .join(F.broadcast(grown_ids), "conv_id", "left_anti")
+                .select(*_SIG_COLS)
+            ))
+            # grown rows always leave the old side, even if the prior state
+            # was inconsistent (signed without a cluster row)
+            prior_signed = (
+                prior_signed.join(members, "conv_id", "left_anti")
+                .join(F.broadcast(grown_ids), "conv_id", "left_anti")
+            )
+            prior_clusters = prior_clusters.join(
+                F.broadcast(retracted.select("cluster_id").distinct()),
+                "cluster_id", "left_anti",
+            )
 
-    conv = assembly.assemble_docs(sign_input, include_roles_tools=with_simhash_pass)
-    _s = udfs.with_signature_columns(conv, cfg, text_col="doc")
-    if with_simhash_pass:
-        _s = simhash_op.with_simhash(_s, cfg)
-    signed_new = _s.drop("doc").persist()
+    def build_signed() -> DataFrame:
+        conv = assembly.assemble_docs(sign_input, include_roles_tools=with_simhash_pass)
+        s = udfs.with_signature_columns(conv, cfg, text_col="doc")
+        if with_simhash_pass:
+            s = simhash_op.with_simhash(s, cfg)
+        return s.drop("doc")
+
+    signed_new = stage("signed_new", build_signed)
     new = signed_new.select(*_SIG_COLS)
     if carried is not None:
-        new = new.unionByName(carried).persist()
+        new = new.unionByName(carried)
     if prior_signed is None:
         prior_signed = spark.createDataFrame([], new.schema)
     if prior_clusters is None:
@@ -346,70 +387,68 @@ def run_incremental_dedup(
         )
     old = prior_signed.select(*_SIG_COLS)
 
-    # prior exact representatives: one row per distinct old content hash
-    # (map-side-combinable agg over the narrow (sha, id) projection)
-    old_rep_ids = old.groupBy("content_sha").agg(F.min("conv_id").alias("conv_id"))
-    old_reps = old.join(old_rep_ids, ["content_sha", "conv_id"])
-
     # 1) cross-batch exact duplicates: new rows whose sha exists in the old
-    #    corpus attach to the old representative and skip the fuzzy path
-    #    entirely (identical signatures add no connectivity)
-    sha_match = new.select("conv_id", "content_sha").join(
-        old_rep_ids.select(
-            "content_sha", F.col("conv_id").alias("_old_rep")
-        ),
-        "content_sha",
-    )
-    cross_exact_edges = sha_match.select(
-        F.col("_old_rep").alias("a_id"), F.col("conv_id").alias("b_id")
-    )
-    new_um = new.join(sha_match.select("conv_id"), "conv_id", "left_anti")
-
-    # 2) within-batch exact groups among the remaining new rows
-    grouped = exact.exact_groups(new_um)
-    new_exact_edges = exact.exact_edges(grouped)
-    new_reps = exact.representatives(grouped).select(*_SIG_COLS)
-
-    # 3) LSH band join, delta-driven (lsh.bucket_pairs with the new-flag):
-    #    only buckets containing >= 1 new rep participate, and only pairs
-    #    with a new endpoint come out — the batch policy's edge set for the
-    #    combined corpus, restricted to the delta.  A bucket's key is carried
-    #    by every member, so the touched buckets are exactly the delta reps'
-    #    own band hashes: ``combined`` keeps only the old reps sharing one
-    #    (a broadcast/AQE semi-join over a narrow conv_id+bands projection —
-    #    the old corpus is scanned, never wide-shuffled), and it is also the
-    #    signature side of the verify below.
-    new_bands = (
-        new_reps.select(
-            F.posexplode("band_hashes").alias("band_idx", "band_hash")
-        ).distinct()
-    )
-    old_touched_ids = (
-        old_reps.select(
-            "conv_id", F.posexplode("band_hashes").alias("band_idx", "band_hash")
+    #    corpus attach to the old representative (the min conv_id of that
+    #    sha) and skip the fuzzy path entirely (identical signatures add no
+    #    connectivity).  Only old rows carrying a delta sha are aggregated.
+    def build_cross_exact() -> DataFrame:
+        old_rep = (
+            old.select("content_sha", "conv_id")
+            .join(F.broadcast(new.select("content_sha")), "content_sha", "left_semi")
+            .groupBy("content_sha")
+            .agg(F.min("conv_id").alias("_old_rep"))
         )
-        .join(new_bands, ["band_idx", "band_hash"], "left_semi")
-        .select("conv_id")
-        .distinct()
+        return new.select("conv_id", "content_sha").join(
+            F.broadcast(old_rep), "content_sha"
+        )
+
+    sha_match = stage("cross_exact", build_cross_exact)
+    new_um = new.join(F.broadcast(sha_match.select("conv_id")), "conv_id", "left_anti")
+
+    # 2) the LSH band join's signature side: the new reps (one per sha among
+    #    the unmatched new rows) plus the old reps sharing a band key with
+    #    one.  A bucket's key is carried by every member, so the touched
+    #    buckets are exactly the delta reps' own band hashes; same-sha rows
+    #    share every band key, so the semi-join keeps
+    #    whole sha groups and their min conv_id is the old corpus's rep.
+    def build_reps() -> DataFrame:
+        new_reps = exact.representatives(exact.exact_groups(new_um)).select(*_SIG_COLS)
+        new_bands = new_reps.select(
+            F.posexplode("band_hashes").alias("band_idx", "band_hash")
+        )
+        hit_ids = (
+            old.select("conv_id", F.posexplode("band_hashes").alias("band_idx", "band_hash"))
+            .join(F.broadcast(new_bands), ["band_idx", "band_hash"], "left_semi")
+            .select("conv_id")
+        )
+        hit = old.join(F.broadcast(hit_ids), "conv_id", "left_semi")
+        old_reps = exact.representatives(exact.exact_groups(hit)).select(*_SIG_COLS)
+        return (
+            old_reps.withColumn("_is_new", F.lit(False))
+            .unionByName(new_reps.withColumn("_is_new", F.lit(True)))
+        )
+
+    combined = stage(
+        "reps", build_reps, n_new_reps=F.sum(F.col("_is_new").cast("long"))
     )
-    combined = (
-        old_reps.join(old_touched_ids, "conv_id", "left_semi")
-        .withColumn("_is_new", F.lit(False))
-        .unionByName(new_reps.withColumn("_is_new", F.lit(True)))
-        .persist()
-    )
-    band_pairs, _ = lsh.bucket_pairs(
+
+    # 3) lsh.bucket_pairs with the new-flag: only buckets containing >= 1 new
+    # rep participate, and only pairs with a new endpoint come out — the
+    # batch policy's edge set for the combined corpus, restricted to the
+    # delta
+    cand = stage("candidates", lambda: lsh.bucket_pairs(
         combined.select(
             "conv_id", "_is_new",
             F.posexplode("band_hashes").alias("band_idx", "band_hash"),
         ),
         ("band_idx", "band_hash"), "conv_id", cfg.hot_band_cap, new_col="_is_new",
-    )
-    cand = band_pairs.dropDuplicates(["a_id", "b_id"])
+    )[0].dropDuplicates(["a_id", "b_id"]))
 
     # 4) exact Jaccard verification against the combined rep signatures
-    verified = verify_op.verify_pairs(cand, combined, cfg, id_col="conv_id")
-    dup_edges = verified.filter(F.col("is_dup")).select("a_id", "b_id")
+    dup_edges = stage("verify", lambda: (
+        verify_op.verify_pairs(cand, combined, cfg, id_col="conv_id")
+        .filter(F.col("is_dup")).select("a_id", "b_id")
+    ))
 
     # 4b) optional pass deltas (computed before clustering so their pairs
     #     can join the edge set): contain/fuzzy run over ALL rows (not
@@ -419,202 +458,173 @@ def run_incremental_dedup(
     resigned = (
         resigned_ids
         if resigned_ids is not None
-        else new.select("conv_id").filter(F.lit(False))
+        else signed_new.select("conv_id").filter(F.lit(False))
     )
     delta_passes: dict[str, DataFrame] = {}
     if with_containment or with_simhash_pass:
         if prior_signed_orig is None:
             old_full = signed_new.filter(F.lit(False))
         else:
-            old_full = prior_signed_orig.join(resigned, "conv_id", "left_anti")
+            old_full = prior_signed_orig.join(F.broadcast(resigned), "conv_id", "left_anti")
         if with_containment:
-            delta_passes["containment_prefix_new"] = (
+            prefix = stage("containment_prefix_new", lambda: (
                 containment.prefix_containment_pairs_delta(old_full, signed_new, cfg)
-            )
+            ))
+            delta_passes["containment_prefix_new"] = prefix
             backend = containment.MODE_BACKEND[containment_mode]
             if backend is not None:
-                # delta-sized: persist so the general pass's prefix leg and
-                # the caller's own materialization share one computation
-                # (released by the cleanup hook)
-                delta_passes["containment_prefix_new"] = (
-                    delta_passes["containment_prefix_new"].persist()
-                )
-                delta_passes["containment_pairs_new"] = (
-                    containment.general_containment_pairs_delta(
-                        old_full,
-                        signed_new,
-                        cfg,
-                        backend=backend,
-                        # the prefix leg just computed above — don't run
-                        # its blocked self-join a second time
-                        prefix_pairs=delta_passes["containment_prefix_new"],
-                    )
+                delta_passes["containment_pairs_new"] = stage(
+                    "containment_pairs_new",
+                    lambda: containment.general_containment_pairs_delta(
+                        old_full, signed_new, cfg, backend=backend,
+                        # the prefix leg stored above — don't run its
+                        # blocked self-join a second time
+                        prefix_pairs=prefix,
+                    ),
                 )
         if with_simhash_pass:
-            delta_passes["simhash_pairs_new"] = simhash_op.simhash_pairs_delta(
-                old_full, signed_new, cfg
+            delta_passes["simhash_pairs_new"] = stage(
+                "simhash_pairs_new",
+                lambda: simhash_op.simhash_pairs_delta(old_full, signed_new, cfg),
             )
 
-    extra_edge_df: DataFrame | None = None
-    if extra_cluster_edges:
-        legs: list[DataFrame] = []
-        if "containment" in extra_cluster_edges:
-            src = delta_passes.get(
-                "containment_pairs_new", delta_passes["containment_prefix_new"]
-            )
-            legs.append(
-                src.select(
-                    F.col("inner_id").alias("a_id"), F.col("outer_id").alias("b_id")
-                )
-            )
-        if "simhash" in extra_cluster_edges:
-            legs.append(delta_passes["simhash_pairs_new"].select("a_id", "b_id"))
-        extra_edge_df = legs[0]
-        for leg in legs[1:]:
-            extra_edge_df = extra_edge_df.unionByName(leg)
-        if carried is not None:
-            # a dissolved cluster's members re-enter clustering; their
-            # surviving pair edges live ONLY in the maintained prior pair
-            # state (the delta ops emit >=1-new-endpoint pairs; quiet-old
-            # connectivity is contracted inside the prior super-nodes)
-            if prior_extra_pairs is None:
-                raise ValueError(
-                    "extra_cluster_edges with a grown delta needs "
-                    "prior_extra_pairs (the maintained pair state): a "
-                    "dissolved cluster's surviving pair edges exist "
-                    "nowhere else"
-                )
-            carried_ids = carried.select("conv_id")
-            pe = prior_extra_pairs.select("a_id", "b_id")
-            touching = (
-                pe.join(
-                    carried_ids.withColumnRenamed("conv_id", "a_id"),
-                    "a_id", "left_semi",
-                )
-                .unionByName(
-                    pe.join(
-                        carried_ids.withColumnRenamed("conv_id", "b_id"),
-                        "b_id", "left_semi",
-                    ).select("a_id", "b_id")
-                )
-                .dropDuplicates(["a_id", "b_id"])
-                # stale pairs of re-signed conversations: the delta ops
-                # re-emit their live successors
-                .join(
-                    resigned.withColumnRenamed("conv_id", "a_id"),
-                    "a_id", "left_anti",
-                )
-                .join(
-                    resigned.withColumnRenamed("conv_id", "b_id"),
-                    "b_id", "left_anti",
-                )
-            )
-            extra_edge_df = extra_edge_df.unionByName(touching)
-
-    # 5) connected components with prior clusters contracted to super-nodes:
-    #    old endpoints map to their prior cluster_id (already the member
-    #    minimum, so component labels stay global min conv_id)
-    old_map = prior_clusters.select(
-        F.col("conv_id").alias("_oc"), F.col("cluster_id").alias("_ocl")
+    # within-batch exact duplicates: each unmatched new row whose sha has a
+    # new rep (the group's min conv_id) other than itself
+    new_rep_of_sha = combined.filter(F.col("_is_new")).select(
+        "content_sha", F.col("conv_id").alias("a_id")
     )
-
-    def _contract(edges: DataFrame) -> DataFrame:
-        e = edges.join(
-            old_map.withColumnRenamed("_oc", "a_id").withColumnRenamed("_ocl", "_acl"),
-            "a_id", "left",
-        ).join(
-            old_map.withColumnRenamed("_oc", "b_id").withColumnRenamed("_ocl", "_bcl"),
-            "b_id", "left",
+    edge_legs = [
+        sha_match.select(F.col("_old_rep").alias("a_id"), F.col("conv_id").alias("b_id")),
+        new_um.join(F.broadcast(new_rep_of_sha), "content_sha")
+        .filter(F.col("a_id") != F.col("conv_id"))
+        .select("a_id", F.col("conv_id").alias("b_id")),
+        dup_edges,
+    ]
+    if "containment" in extra_cluster_edges:
+        src = delta_passes.get(
+            "containment_pairs_new", delta_passes["containment_prefix_new"]
         )
-        return e.select(
-            F.coalesce("_acl", "a_id").alias("a_key"),
-            F.coalesce("_bcl", "b_id").alias("b_key"),
-        ).filter(F.col("a_key") != F.col("b_key"))
-
-    all_edges = (
-        _contract(cross_exact_edges)
-        .unionByName(_contract(new_exact_edges))
-        .unionByName(_contract(dup_edges))
-    )
-    if extra_edge_df is not None:
-        all_edges = all_edges.unionByName(_contract(extra_edge_df))
-    nodes = (
-        new.select(F.col("conv_id").alias("key"))
-        .unionByName(prior_clusters.select(F.col("cluster_id").alias("key")).distinct())
-        .distinct()
-    )
-
-    nid_edges = all_edges.select(
-        surrogate_id(F.col("a_key")).alias("a_id"),
-        surrogate_id(F.col("b_key")).alias("b_id"),
-    )
-    nid_nodes = nodes.select("key", surrogate_id(F.col("key")).alias("nid"))
-    cl_nid = components.connected_components(
-        nid_edges, nid_nodes.select("nid"), cfg, id_col="nid"
-    )
-    lab = cl_nid.join(nid_nodes, "nid")
-    label_min = lab.groupBy("cluster_id").agg(F.min("key").alias("_label"))
-    key_label = lab.join(label_min, "cluster_id").select("key", "_label")
-
-    remap = (
-        prior_clusters.select(F.col("cluster_id").alias("key")).distinct()
-        .join(key_label, "key")
-        .filter(F.col("key") != F.col("_label"))
-        .select(
-            F.col("key").alias("old_cluster_id"),
-            F.col("_label").alias("cluster_id"),
+        edge_legs.append(
+            src.select(F.col("inner_id").alias("a_id"), F.col("outer_id").alias("b_id"))
         )
+    if "simhash" in extra_cluster_edges:
+        edge_legs.append(delta_passes["simhash_pairs_new"].select("a_id", "b_id"))
+    if extra_cluster_edges and carried is not None:
+        # a dissolved cluster's members re-enter clustering; their
+        # surviving pair edges live ONLY in the maintained prior pair
+        # state (the delta ops emit >=1-new-endpoint pairs; quiet-old
+        # connectivity is contracted inside the prior super-nodes)
+        carried_ids = carried.select("conv_id")
+        pe = prior_extra_pairs.select("a_id", "b_id")
+        edge_legs.append(
+            pe.join(F.broadcast(carried_ids.withColumnRenamed("conv_id", "a_id")),
+                    "a_id", "left_semi")
+            .unionByName(
+                pe.join(F.broadcast(carried_ids.withColumnRenamed("conv_id", "b_id")),
+                        "b_id", "left_semi")
+            )
+            .dropDuplicates(["a_id", "b_id"])
+            # stale pairs of re-signed conversations: the delta ops
+            # re-emit their live successors
+            .join(F.broadcast(resigned.withColumnRenamed("conv_id", "a_id")),
+                  "a_id", "left_anti")
+            .join(F.broadcast(resigned.withColumnRenamed("conv_id", "b_id")),
+                  "b_id", "left_anti")
+        )
+
+    # 5) contracted edges: an old endpoint maps to its prior cluster_id
+    #    (already the member minimum, so component labels stay the global
+    #    min conv_id); ``*_prior`` flags a super-node.  Only the prior
+    #    assignments of the edges' own endpoints are read.
+    def build_edges() -> DataFrame:
+        raw = reduce(DataFrame.unionByName, edge_legs)
+        ends = raw.select(F.col("a_id").alias("conv_id")).unionByName(
+            raw.select(F.col("b_id").alias("conv_id"))
+        )
+        touched = F.broadcast(
+            prior_clusters.join(F.broadcast(ends), "conv_id", "left_semi")
+        )
+        a, b = touched.alias("ta"), touched.alias("tb")
+        return (
+            raw.join(a, raw["a_id"] == F.col("ta.conv_id"), "left")
+            .join(b, raw["b_id"] == F.col("tb.conv_id"), "left")
+            .select(
+                F.coalesce("ta.cluster_id", "a_id").alias("a_key"),
+                F.coalesce("tb.cluster_id", "b_id").alias("b_key"),
+                F.col("ta.cluster_id").isNotNull().alias("a_prior"),
+                F.col("tb.cluster_id").isNotNull().alias("b_prior"),
+            )
+            .filter(F.col("a_key") != F.col("b_key"))
+        )
+
+    edges = stage("edges", build_edges)
+
+    # 6) the cluster label map over the edge endpoints: key -> label (the
+    #    component's min key), with the prior flag.  A new conversation in
+    #    no edge and an untouched prior cluster keep their own label.
+    def build_labels() -> DataFrame:
+        ends = (
+            edges.select(F.col("a_key").alias("key"), F.col("a_prior").alias("prior"))
+            .unionByName(edges.select(F.col("b_key").alias("key"), F.col("b_prior").alias("prior")))
+            .distinct()
+        )
+        return components.connected_components(
+            edges.select(F.col("a_key").alias("a_id"), F.col("b_key").alias("b_id")),
+            ends, cfg, id_col="key", checkpoint_edges=False,
+        ).withColumnRenamed("cluster_id", "label")
+
+    labels = stage(
+        "labels", build_labels,
+        n_merged_prior_clusters=F.sum(
+            (F.col("prior") & (F.col("key") != F.col("label"))).cast("long")
+        ),
     )
-    prior_updated = (
+    remap = labels.filter(F.col("prior") & (F.col("key") != F.col("label"))).select(
+        F.col("key").alias("old_cluster_id"), F.col("label").alias("cluster_id")
+    )
+    new_labels = labels.filter(~F.col("prior")).select(
+        F.col("key").alias("conv_id"), F.col("label").alias("_label")
+    )
+    clusters = (
         prior_clusters.join(
-            remap.select(
-                F.col("old_cluster_id").alias("cluster_id"),
-                F.col("cluster_id").alias("_new"),
-            ),
+            F.broadcast(remap.select(
+                F.col("old_cluster_id").alias("cluster_id"), F.col("cluster_id").alias("_new")
+            )),
             "cluster_id", "left",
         )
         .select("conv_id", F.coalesce("_new", "cluster_id").alias("cluster_id"))
-    )
-    new_side_ids = new.select("conv_id")
-    new_clusters = (
-        new_side_ids
-        .join(key_label, new_side_ids["conv_id"] == key_label["key"])
-        .select("conv_id", F.col("_label").alias("cluster_id"))
-    )
-    clusters = prior_updated.unionByName(new_clusters)
-
-    carried_cnt = (
-        carried.agg(F.count("*").alias("n_carried"))
-        if carried is not None
-        else spark.range(1).select(F.lit(0).cast("long").alias("n_carried"))
-    )
-    retracted_cnt = (
-        touched_cluster_ids.agg(F.count("*").alias("n_retracted_clusters"))
-        if touched_cluster_ids is not None
-        else spark.range(1).select(
-            F.lit(0).cast("long").alias("n_retracted_clusters")
+        .unionByName(
+            new.select("conv_id").join(F.broadcast(new_labels), "conv_id", "left")
+            .select("conv_id", F.coalesce("_label", "conv_id").alias("cluster_id"))
         )
     )
-    stats = (
-        signed_new.agg(F.count("*").alias("n_new"))
-        .crossJoin(sha_match.agg(F.count("*").alias("n_cross_exact")))
-        .crossJoin(new_reps.agg(F.count("*").alias("n_new_reps")))
-        .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
-        .crossJoin(dup_edges.agg(F.count("*").alias("n_dup_edges")))
-        .crossJoin(remap.agg(F.count("*").alias("n_merged_prior_clusters")))
-        .crossJoin(carried_cnt)
-        .crossJoin(retracted_cnt)
+
+    def _n(name: str, key: str = "rows") -> int:
+        return counts[name][key] if name in counts else 0
+
+    # an inline VALUES table is a local relation: reading it runs no job
+    stats = spark.sql(
+        "SELECT * FROM VALUES ({}) AS stats({})".format(
+            ", ".join(f"{v}L" for v in (
+                _n("signed_new"), _n("cross_exact"), _n("reps", "n_new_reps"),
+                _n("candidates"), _n("verify"),
+                _n("labels", "n_merged_prior_clusters"), _n("carried"),
+                _n("retracted", "n_retracted_clusters"),
+            )),
+            "n_new, n_cross_exact, n_new_reps, n_candidates, n_dup_edges, "
+            "n_merged_prior_clusters, n_carried, n_retracted_clusters",
+        )
     )
+
     def _cleanup() -> None:
-        """Unpersist the run's cached intermediates.  Call AFTER the outputs
-        are materialized (ADVICE r3: a long micro-batch delta chain would
-        otherwise accumulate three cached DataFrames per batch in executor
-        storage for the session lifetime)."""
-        for df in (signed_new, new, combined):
-            df.unpersist()
-        pref = delta_passes.get("containment_prefix_new")
-        if pref is not None and "containment_pairs_new" in delta_passes:
-            pref.unpersist()
+        """Release the in-memory stages of a run without a RunContext.
+        Call AFTER the outputs are written (a long micro-batch delta chain
+        would otherwise keep every batch's stages in executor storage for
+        the session lifetime); with a RunContext the stages are tables and
+        there is nothing to release."""
+        if run is None:
+            for df in stored:
+                release_checkpoint(df)
 
     out: dict[str, Any] = {
         "signed_new": signed_new,
@@ -653,9 +663,11 @@ def fold_state(
     with_simhash_pass: bool = False,
     containment_mode: str = "prefix",
     extra_cluster_edges: tuple[str, ...] = (),
+    run: RunContext | None = None,
 ) -> tuple[dict[str, Any], dict[str, DataFrame]]:
     """Fold ``new_turns`` into the state under ``prior_dir`` (``None``:
-    bootstrap from empty state) via run_incremental_dedup.
+    bootstrap from empty state) via run_incremental_dedup (``run`` is
+    passed through: with a RunContext the delta stages resume).
 
     Reads ``signed``, ``clusters`` and each enabled pass's pair table, and
     raises ValueError before computing anything when one is missing or
@@ -709,13 +721,14 @@ def fold_state(
         containment_mode=containment_mode,
         extra_cluster_edges=extra_cluster_edges,
         prior_extra_pairs=prior_extra,
+        run=run,
     )
     # upsert: a re-signed (grown) conversation replaces its prior row
     signed = res["signed_new"].select(*sig_cols)
     if prior:
         signed = (
             prior["signed"].select(*sig_cols)
-            .join(res["signed_new"].select("conv_id"), "conv_id", "left_anti")
+            .join(F.broadcast(res["signed_new"].select("conv_id")), "conv_id", "left_anti")
             .unionByName(signed)
         )
     next_state = {"signed": signed, "clusters": res["clusters"]}

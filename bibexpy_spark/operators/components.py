@@ -60,10 +60,11 @@ def connected_components(
     driver_threshold: int = 2_000_000,
     checkpoint_edges: bool = True,
 ) -> DataFrame:
-    """edges(a_id, b_id) + nodes(id) -> (id_col, cluster_id).
+    """edges(a_id, b_id) + nodes(id, *rest) -> (id_col, cluster_id, *rest).
 
     ``cluster_id`` is the minimum node id of the component; isolated nodes
     map to themselves (same convention as the oracle's transitive closure).
+    Any further node columns are carried through.
 
     Hybrid execution: the large-star/small-star loop is the scale path, but
     each round is several latency-bound jobs; when the (already heavily
@@ -197,7 +198,10 @@ def _driver_components(spark, e: DataFrame, nodes: DataFrame, id_col: str) -> Da
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     if not parent:
-        return nodes.select(F.col(id_col), F.col(id_col).alias("cluster_id"))
+        return nodes.select(
+            id_col, F.col(id_col).alias("cluster_id"),
+            *[c for c in nodes.columns if c != id_col],
+        )
 
     keys = list(parent)
     roots = [find(k) for k in keys]
@@ -232,11 +236,7 @@ def _driver_components(spark, e: DataFrame, nodes: DataFrame, id_col: str) -> Da
             F.col(id_col).cast(id_type).alias(id_col),
             F.col("cluster_id").cast(id_type).alias("cluster_id"),
         )
-    return (
-        nodes.select(F.col(id_col))
-        .join(assign, id_col, "left")
-        .select(id_col, F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"))
-    )
+    return _label(nodes, assign, id_col)
 
 
 def _finalize(e: DataFrame, nodes: DataFrame, id_col: str) -> DataFrame:
@@ -245,10 +245,14 @@ def _finalize(e: DataFrame, nodes: DataFrame, id_col: str) -> DataFrame:
         F.greatest("src", "dst").alias(id_col), F.least("src", "dst").alias("cluster_id")
     ).groupBy(id_col).agg(F.min("cluster_id").alias("cluster_id"))
 
-    return (
-        nodes.select(F.col(id_col))
-        .join(assign, id_col, "left")
-        .select(
-            id_col, F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id")
-        )
+    return _label(nodes, assign, id_col)
+
+
+def _label(nodes: DataFrame, assign: DataFrame, id_col: str) -> DataFrame:
+    """Each node's component label; nodes absent from ``assign`` are
+    singletons labelled by their own id."""
+    return nodes.join(assign, id_col, "left").select(
+        id_col,
+        F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
+        *[c for c in nodes.columns if c != id_col],
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
@@ -42,6 +42,7 @@ def bucket_pairs(
     cap: int,
     new_col: str | None = None,
     carry: Sequence[str] = (),
+    bucket_counts: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Pair the members of each bucket under the skew policy above.
 
@@ -66,6 +67,10 @@ def bucket_pairs(
     The star rep's carried values and new-flag ride the bucket aggregate
     (``min_by`` on the id), so the star is a filter over the member rows —
     no window, no second join.  Nothing is persisted.
+
+    ``bucket_counts`` observes ``hot_buckets`` (star-mode buckets) and
+    ``active_buckets`` (buckets of size >= 2) on the bucket aggregate, so
+    the counters arrive with the action that computes ``pairs``.
     """
     keys, carry = list(keys), list(carry)
     rows = keyed.select(
@@ -87,6 +92,12 @@ def bucket_pairs(
         .filter(F.col("bucket_n") >= 2)
         .withColumn("star_mode", F.col("bucket_n") > cap)
     )
+    if bucket_counts is not None:
+        sizes = sizes.observe(
+            bucket_counts,
+            F.coalesce(F.sum(F.col("star_mode").cast("long")), F.lit(0)).alias("hot_buckets"),
+            F.count(F.lit(1)).alias("active_buckets"),
+        )
     members = rows.join(sizes, keys)
 
     # small buckets: each new member x against every co-member y; when both
@@ -135,15 +146,18 @@ def bucket_pairs(
 
 
 def candidate_pairs(
-    signed: DataFrame, cfg: DedupConfig, id_col: str = "conv_id"
+    signed: DataFrame,
+    cfg: DedupConfig,
+    id_col: str = "conv_id",
+    bucket_counts: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH band join -> distinct candidate pairs (a_id < b_id).
 
     Returns (pairs, band_stats); band_stats carries per-bucket member counts
-    and the hot/star flag for the metrics table.
+    and the hot/star flag.  ``bucket_counts`` is passed to bucket_pairs.
     """
     pairs, band_stats = bucket_pairs(
         explode_bands(signed, id_col), ("band_idx", "band_hash"), id_col,
-        cfg.hot_band_cap,
+        cfg.hot_band_cap, bucket_counts=bucket_counts,
     )
     return pairs.dropDuplicates(["a_id", "b_id"]), band_stats

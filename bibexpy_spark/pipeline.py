@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
@@ -143,22 +143,21 @@ def run_dedup(
     exact_edge_df = materialize("exact_edges", lambda: exact.exact_edges(grouped))
     reps = exact.representatives(grouped)
 
+    # the bucket counters ride the candidates write as an Observation; a
+    # resumed (skipped) stage runs no action, so it logs nothing new
+    bucket_counts = Observation("bucket_counts") if run is not None else None
+    built = []
+
     def build_candidates() -> DataFrame:
-        pairs, band_stats = lsh.candidate_pairs(reps, cfg, id_col="nid")
-        if run is not None:
-            # one job: both counters from a single agg over band_stats
-            row = band_stats.agg(
-                F.sum(F.col("star_mode").cast("long")).alias("hot"),
-                F.count("*").alias("total"),
-            ).collect()[0]
-            run.log_metric(
-                "candidates",
-                hot_buckets=int(row["hot"] or 0),
-                active_buckets=int(row["total"]),
-            )
+        built.append(True)
+        pairs, _ = lsh.candidate_pairs(
+            reps, cfg, id_col="nid", bucket_counts=bucket_counts
+        )
         return pairs
 
     cand = materialize("candidates", build_candidates)
+    if bucket_counts is not None and built:
+        run.log_metric("candidates", **bucket_counts.get)
 
     verified_nid = materialize(
         "verify", lambda: verify_op.verify_pairs(cand, reps, cfg, id_col="nid")

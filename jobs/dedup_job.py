@@ -21,7 +21,9 @@ bibexpy_spark.incremental.fold_state):
         [--prior-turns <turns parquet>]
 
 <out1> is any earlier --output run with the same passes on; each run writes
-a fresh directory.
+a fresh directory.  With --run-dir the delta stages are checkpointed too: a
+relaunch with the same run dir, input, prior state and prior turns skips
+every stored stage.
 
 The script takes the ambient SparkSession from spark-submit (no master
 override — the cluster manager decides), runs the full
@@ -168,6 +170,27 @@ def main(argv: list[str] | None = None) -> None:
     turns = (
         spark.table(args.input) if args.table else spark.read.parquet(args.input)
     )
+    run = None
+    if args.run_dir:
+        # plan-shaping flags ride the freshness token: a stage manifest is
+        # only fresh when config, inputs AND flag set all match — otherwise a
+        # resume after toggling e.g. --no-simhash would wrongly skip the
+        # sign stage whose output schema the toggle changed.  A delta run's
+        # inputs include the prior state and turns it folds against.
+        flag_token = (
+            f"|simhash={int(not args.no_simhash)}"
+            f"|contain={int(args.containment)}:{args.containment_mode}"
+            f"|edges={','.join(sorted(edges))}"
+            f"|incremental={int(args.incremental)}"
+        )
+        paths = [] if args.table else [args.input]
+        if args.incremental:
+            paths += [p for p in (args.prior_state, args.prior_turns) if p]
+        token = (input_token_for_paths(*paths) if paths else "") + flag_token
+        run = RunContext(
+            spark, cfg=CANONICAL, warehouse=args.run_dir,
+            run_id=args.run_id, input_token=token,
+        )
     if args.incremental:
         # delta mode: cluster the new batch against the prior state; the
         # next state (signed = old ∪ new, pair tables = prior-minus-resigned
@@ -182,12 +205,14 @@ def main(argv: list[str] | None = None) -> None:
                 with_simhash_pass=not args.no_simhash,
                 containment_mode=args.containment_mode,
                 extra_cluster_edges=edges,
+                run=run,
             )
         except ValueError as e:
             ap.error(str(e))
         state["cluster_remap"] = res["cluster_remap"]
         for name, df in state.items():
             df.write.mode("overwrite").parquet(os.path.join(args.output, name))
+        # the counts observed while the stages ran: no second pass
         stats = res["stats"].first().asDict()
         print(f"dedup_job (incremental): {stats}", file=sys.stderr)
         spark.stop()
@@ -203,22 +228,6 @@ def main(argv: list[str] | None = None) -> None:
         warm_python_workers(spark, spark.sparkContext.defaultParallelism)
         t_bench = time.time()
 
-    run = None
-    if args.run_dir:
-        # plan-shaping flags ride the freshness token: a stage manifest is
-        # only fresh when config, input AND flag set all match — otherwise a
-        # resume after toggling e.g. --no-simhash would wrongly skip the
-        # sign stage whose output schema the toggle changed
-        flag_token = (
-            f"|simhash={int(not args.no_simhash)}"
-            f"|contain={int(args.containment)}:{args.containment_mode}"
-            f"|edges={','.join(sorted(edges))}"
-        )
-        token = ("" if args.table else input_token_for_paths(args.input)) + flag_token
-        run = RunContext(
-            spark, cfg=CANONICAL, warehouse=args.run_dir,
-            run_id=args.run_id, input_token=token,
-        )
     res = pipeline.run_dedup(
         spark,
         turns,

@@ -41,7 +41,7 @@ def _random_texts(n: int = 80, seed: int = 11) -> pd.Series:
 
 
 def test_golden_has_no_functions_imports():
-    src = open("/root/repo/bibexpy_spark/golden.py").read()
+    src = open(golden.__file__).read()
     tree = ast.parse(src)
     offenders = []
     for node in ast.walk(tree):

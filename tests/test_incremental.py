@@ -402,3 +402,63 @@ def test_fold_state_refuses_incomplete_prior_state(spark, split_corpus, tmp_path
     with pytest.raises(ValueError, match="signed/ lacks \\['simhash'\\]"):
         incremental.fold_state(spark, new_turns, state, **{
             **kw, "with_simhash_pass": True})
+
+
+def test_stats_are_the_observed_stage_counts(spark, split_corpus, tmp_path):
+    """``stats`` holds the counts observed while the stages ran: reading it
+    after the outputs are written starts no Spark job, and each value
+    equals a count taken directly from the returned frames."""
+    old_turns, new_turns, _ = split_corpus
+    prior = pipeline.run_dedup(
+        spark, old_turns, with_containment=False, with_simhash_pass=False
+    )
+    prior_s, prior_c = _state_tables(spark, prior, tmp_path, "st")
+    incr = incremental.run_incremental_dedup(spark, new_turns, prior_s, prior_c)
+    for key in ("clusters", "cluster_remap"):
+        incr[key].write.parquet(str(tmp_path / key))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("stats_read", "stats_read")
+    try:
+        stats = incr["stats"].first().asDict()
+        assert sc.statusTracker().getJobIdsForGroup("stats_read") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    signed_new = incr["signed_new"]
+    old_shas = prior_s.select("content_sha").distinct()
+    unmatched = signed_new.join(old_shas, "content_sha", "left_anti")
+    assert stats == {
+        "n_new": signed_new.count(),
+        "n_cross_exact": signed_new.join(old_shas, "content_sha", "left_semi").count(),
+        "n_new_reps": unmatched.select("content_sha").distinct().count(),
+        "n_candidates": incr["candidate_pairs"].count(),
+        "n_dup_edges": incr["dup_edges_new"].count(),
+        "n_merged_prior_clusters": incr["cluster_remap"].count(),
+        "n_carried": 0,
+        "n_retracted_clusters": 0,
+    }
+    assert stats["n_cross_exact"] > 0 and stats["n_dup_edges"] > 0
+    incr["cleanup"]()
+
+
+def test_outputs_read_stored_stages(spark, split_corpus, tmp_path):
+    """``clusters`` and ``cluster_remap`` are built from the stored stages
+    and the prior state: their executed plans run no Python UDF and never
+    scan the delta turns again."""
+    old_turns, new_turns, _ = split_corpus
+    prior = pipeline.run_dedup(
+        spark, old_turns, with_containment=False, with_simhash_pass=False
+    )
+    prior_s, prior_c = _state_tables(spark, prior, tmp_path, "so")
+    delta_path = str(tmp_path / "delta_turns_input")
+    new_turns.write.parquet(delta_path)
+    incr = incremental.run_incremental_dedup(
+        spark, spark.read.parquet(delta_path), prior_s, prior_c
+    )
+    for key in ("clusters", "cluster_remap"):
+        plan = incr[key]._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, key
+        assert "delta_turns_input" not in plan, key
+    assert incr["cluster_remap"].count() > 0
+    incr["cleanup"]()

@@ -116,13 +116,28 @@ def test_simhash_distance_ordering():
     assert d_near <= d_far
 
 
-def test_simhash_chunk_pigeonhole():
+def test_simhash_chunk_pigeonhole(spark):
+    """The SimHash pass's chunk explode: two hashes at Hamming distance 3,
+    one flipped bit in each of the first three 16-bit chunks, agree on the
+    fourth — the equi-join key that finds the pair.  The high bit is set,
+    so the chunks need unsigned shifts."""
+    from bibexpy_spark.operators import simhash
+
     cfg = CANONICAL
-    a = np.array([0], dtype=np.int64)
-    b = np.array([0b111], dtype=np.int64)  # hamming 3 < 4 chunks
-    ca = kernels.simhash_chunk_keys(a, cfg)
-    cb = kernels.simhash_chunk_keys(b, cfg)
-    assert (ca == cb).sum() >= 1  # at least one chunk must agree
+    flips = (1 << 0) | (1 << 16) | (1 << 32)
+    df = spark.createDataFrame(
+        [("a", -1), ("b", -1 ^ flips)], "conv_id string, simhash long"
+    )
+    chunks = {
+        (r["conv_id"], r["chunk_idx"]): r["chunk_val"]
+        for r in simhash._chunked(df, cfg, "conv_id").collect()
+    }
+    assert len(chunks) == 2 * cfg.simhash_chunks
+    agree = [
+        i for i in range(cfg.simhash_chunks) if chunks["a", i] == chunks["b", i]
+    ]
+    assert agree == [3]
+    assert chunks["a", 3] == 0xFFFF
 
 
 def test_jaccard_exact():

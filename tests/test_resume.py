@@ -48,11 +48,33 @@ def test_full_run_then_resume_skips_all_stages(spark, turns_df, warehouse, golde
 def test_run_context_run_leaves_nothing_cached(spark, turns_df, warehouse):
     """Every stage of a RunContext run is read back from its checkpoint, so
     the run must leave no cached frame behind — a long-lived session runs
-    many of them."""
+    many of them.  That holds for a batch run and for a delta pass folded
+    onto its output."""
+    from pyspark.sql import functions as F
+
+    from bibexpy_spark import incremental
+
     spark.catalog.clearCache()
+    is_new = F.abs(F.xxhash64("conv_id")) % 10 >= 7
     run = RunContext(spark, CANONICAL, warehouse, run_id="runC", input_token="tok1")
-    pipeline.run_dedup(spark, turns_df, CANONICAL, run=run)
+    prior = pipeline.run_dedup(
+        spark, turns_df.filter(~is_new), CANONICAL, run=run,
+        with_containment=True, with_simhash_pass=True,
+        containment_mode="general",
+    )
     run.close()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    delta_run = RunContext(spark, CANONICAL, warehouse, run_id="runC_delta",
+                           input_token="tok1")
+    res = incremental.run_incremental_dedup(
+        spark, turns_df.filter(is_new), prior["signed"], prior["clusters"],
+        with_containment=True, with_simhash_pass=True,
+        containment_mode="general", run=delta_run,
+    )
+    res["clusters"].count()
+    res["cleanup"]()
+    delta_run.close()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -196,6 +196,78 @@ def test_spark_submit_incremental_mode(tmp_path):
     assert n_state == n_conv
 
 
+@pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
+def test_spark_submit_incremental_resume(tmp_path):
+    """--run-dir in --incremental mode: a second run with the same run dir
+    skips every delta stage and writes identical clusters; a different
+    --prior-state invalidates the stages."""
+    import shutil
+
+    import duckdb
+
+    from bibexpy_spark import corpus
+
+    turns_path = corpus.corpus_path_for_sf("sf0.001")
+    old_p = str(tmp_path / "old.parquet")
+    new_p = str(tmp_path / "new.parquet")
+    for path, cond in ((old_p, "< 7"), (new_p, ">= 7")):
+        duckdb.sql(
+            f"COPY (SELECT * FROM read_parquet('{turns_path}') "
+            f"WHERE hash(conv_id) % 10 {cond}) TO '{path}' (FORMAT parquet)"
+        )
+
+    def submit(extra):
+        return subprocess.run(
+            [
+                SPARK_SUBMIT, "--master", "local[4]",
+                "--conf", "spark.sql.shuffle.partitions=4",
+                "--conf", "spark.ui.enabled=false",
+                os.path.join(REPO, "jobs", "dedup_job.py"), "--no-simhash", *extra,
+            ],
+            capture_output=True, text=True, timeout=600,
+            env={**os.environ, "PYTHONPATH": REPO},
+        )
+
+    out_old = str(tmp_path / "out_old")
+    r = submit(["--input", old_p, "--output", out_old])
+    assert r.returncode == 0, r.stderr[-3000:]
+    run_dir = str(tmp_path / "wh")
+    metrics = os.path.join(run_dir, "d1", "metrics.jsonl")
+
+    def delta(prior, out):
+        r = submit(["--input", new_p, "--output", out, "--incremental",
+                    "--prior-state", prior, "--run-dir", run_dir, "--run-id", "d1"])
+        assert r.returncode == 0, r.stderr[-3000:]
+        rows = [json.loads(x) for x in open(metrics)]
+        stats = [x for x in r.stderr.splitlines() if "dedup_job (incremental)" in x]
+        return [x for x in rows if "skipped" in x], stats, out
+
+    def clusters(out):
+        return duckdb.sql(
+            f"SELECT conv_id, cluster_id FROM read_parquet('{out}/clusters/*.parquet') "
+            "ORDER BY conv_id"
+        ).fetchall()
+
+    first, stats1, out1 = delta(out_old, str(tmp_path / "out1"))
+    assert first and not any(x["skipped"] for x in first)
+    assert {"signed_new", "cross_exact", "reps", "candidates", "verify",
+            "edges", "labels"} <= {x["stage"] for x in first}
+
+    rows2, stats2, out2 = delta(out_old, str(tmp_path / "out2"))
+    second = rows2[len(first):]
+    assert {x["stage"] for x in second} == {x["stage"] for x in first}
+    assert all(x["skipped"] for x in second)
+    assert clusters(out2) == clusters(out1)
+    assert stats2 == stats1
+
+    moved = str(tmp_path / "out_old_copy")
+    shutil.copytree(out_old, moved)
+    rows3, _, out3 = delta(moved, str(tmp_path / "out3"))
+    third = rows3[len(rows2):]
+    assert third and not any(x["skipped"] for x in third)
+    assert clusters(out3) == clusters(out1)
+
+
 def test_incremental_refuses_in_place_state_overwrite(tmp_path):
     """Regression (r4 review): --incremental with --prior-state at/under
     --output would lazily read the prior state while write.mode("overwrite")

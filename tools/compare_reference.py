@@ -12,10 +12,12 @@ key.  Writes BENCH_REFERENCE.md.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def time_oracle(n_convs: int) -> tuple[float, int, int]:
@@ -64,7 +66,7 @@ def main() -> None:
     base_n, base_wall = 5000, next(r[3] for r in rows if r[0] == 5000 and "pandas" in r[2])
     extrap = {n: round(base_wall * (n / base_n) ** 2, 1) for n in (20_000, 120_000)}
 
-    with open("/root/repo/BENCH_REFERENCE.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH_REFERENCE.md"), "w") as f:
         f.write("# BENCH_REFERENCE — single-node reference model vs this engine\n\n")
         f.write("The reference executes single-process pandas with all-pairs matching\n")
         f.write("inside blocks (BASELINE.md; no published numbers).  Stand-in: the exact\n")

@@ -21,9 +21,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-OUT = "/root/repo/data/host_baseline.json"
+OUT = os.path.join(ROOT, "data", "host_baseline.json")
 LEVELS = (1, 2, 4, 8, 32)
 N_CHUNKS = 32  # fixed task granularity, same at every level (like Spark partitions)
 
@@ -34,7 +35,7 @@ def _prepare_chunks() -> list[list[str]]:
     from bibexpy_spark import corpus, oracle
 
     path = corpus.write_parquet(
-        "/root/repo/data/transcripts_bench.parquet", 120_000, seed=43
+        os.path.join(ROOT, "data", "transcripts_bench.parquet"), 120_000, seed=43
     )
     conv = oracle.assemble(pd.read_parquet(path))
     docs = conv["doc"].tolist()
