@@ -1,13 +1,15 @@
-"""Incremental dedup: cluster a NEW batch against an already-clustered
-corpus without recomputing the existing signatures.
+"""The dedup pass: one staged body for a batch run and a daily delta.
 
 The operational mode at 10^12-turn scale is not one batch run but a daily
 delta: sign and candidate-join ONLY the new conversations, reuse the prior
-corpus's persisted signatures (the pipeline's ``signed`` stage table) and
-cluster assignments, and emit the updated clustering plus a remap of any
-prior clusters that merged.  ``fold_state`` wraps this for a state
-directory: it reads the prior tables, runs the delta and returns the next
-state (the submit job's --incremental mode and the stream both use it).
+corpus's persisted signatures (the ``signed`` state table) and cluster
+assignments, and emit the updated clustering plus a remap of any prior
+clusters that merged.  :func:`run_incremental_dedup` is that pass, and a
+batch run is the same pass over empty state: ``pipeline.run_dedup`` calls
+it with no prior, and the body then skips the prior-only stages and runs
+every operator's batch plan.  ``fold_state`` wraps the pass for a state
+directory: it reads the prior tables (none for a bootstrap), runs the pass
+and returns the next state (the submit job and the stream both use it).
 
 Deltas may also GROW conversations already clustered (the common shape for
 live transcript tables: a batch appends turns to an open ``conv_id`` —
@@ -35,45 +37,60 @@ min conv_id per component, invariant to which exact-duplicate acts as the
 LSH representative because same-sha rows carry identical signatures).  In
 star-fallback buckets both paths apply the same connect-to-bucket-rep
 policy, but to reps chosen from different row sets — the same documented
-approximation the batch path already makes.
+approximation the batch path already makes.  A chain of deltas starting
+from empty state is therefore batch-equivalent by induction.
 
-Staged layout (scale shape).  Each stage is computed once and every later
-stage and output reads the stored rows (``lineage.materialize_stage``: a
+Staged layout.  Each stage is computed once and every later stage and
+output reads the stored rows (``lineage.materialize_stage``: a
 ``RunContext`` checkpoint table when the caller passes ``run``, else an
 in-memory ``localCheckpoint``); the stage's row count and counters ride
 the same action as an ``Observation``, and ``stats`` is built from them.
-Every stored frame is O(|delta| + |touched|):
+The stage list, in order; ``*`` marks a stage that runs only against a
+prior state (reference analogues from the six-phase Smart Merge,
+smart_merger.py:576-827):
 
   * ``grown``        delta conv_ids already in the prior state;
   * ``retracted`` / ``carried``  (grown deltas only) the prior assignments
                      and signatures of the clusters a grown conversation
                      dissolves;
-  * ``signed_new``   the delta's signatures — the only Python-UDF stage;
-  * ``cross_exact``  new rows whose content hash exists in the prior state,
-                     with the prior rep (min conv_id of that hash);
+    ``sign``         assemble the turns (window-ordered concat), normalize,
+                     content sha, shingles, MinHash bands (+ SimHash) — the
+                     only Python-UDF stage; counter ``duplicate_turn_keys``;
+    ``exact_edges``  every new row that is not its content hash's
+                     representative, linked to it: the prior rows' min
+                     conv_id when the hash is in the prior state (counter
+                     ``cross_exact``; such a row skips the fuzzy path), else
+                     the new rows' min (Stage-1 exact analogue);
   * ``reps``         the new reps plus the prior reps sharing a band key
                      with one (the touched buckets' members);
-  * ``candidates``   ``lsh.bucket_pairs`` with a new-flag over ``reps``;
-  * ``verify``       the Jaccard-verified candidate edges;
-  * the pass deltas  (``containment_*_new``, ``simhash_pairs_new``; their
-                     operators keep their own join plans);
+    ``candidates``   ``lsh.bucket_pairs`` over the reps, new-flagged when
+                     there is a prior (blocking analogue); counters
+                     ``hot_buckets``, ``active_buckets``;
+    ``verify``       the Jaccard-verified candidate edges (compute_match
+                     analogue);
+    ``contain_prefix`` / ``contain_general`` / ``fuzzy``  the pass pairs
+                     with >= 1 new endpoint (merge_references and fuzzy
+                     Stage-4 analogues); ``fuzzy`` counts
+                     ``hot_chunk_buckets``, ``active_chunk_buckets``;
   * ``edges``        every edge with its old endpoints contracted to their
                      prior cluster_id (already the min conv_id of its
                      members), so prior clusters enter connected components
                      as super-nodes;
-  * ``labels``       the connected-component label of each edge endpoint.
+    ``cluster``      the connected-component label of each edge endpoint
+                     (replaces greedy 1:1 assignment, smart_merger.py:654-711).
 
-The prior state is scanned, never shuffled: every join against a prior
-table broadcasts its delta-sized side (the delta's conv_ids, content
-hashes or band keys, the edge endpoints, the remap), and the only
-aggregates over prior rows run after such a semi-join.  That is exact
-because same-hash rows share every signature, so a semi-join on a hash or
-band key keeps whole hash groups.  ``clusters`` is the prior assignment
-left-joined to the small remap, plus the new rows; ``cluster_remap`` is a
-filter over ``labels``.  Neither re-runs a delta stage.  The broadcasts
-bound one pass's delta to what the driver can broadcast; the delta keys on
-conv_id strings throughout (no surrogate: every keyed frame is
-delta-sized).
+One key serves both modes: ``conv_id``, the key of every state table and
+output.  With a prior the frames a stage stores are O(|delta| +
+|touched|): the prior state is scanned, never shuffled — every join
+against a prior table broadcasts its delta-sized side (the delta's
+conv_ids, content hashes or band keys, the edge endpoints, the remap),
+and the only aggregates over prior rows run after such a semi-join.  That
+is exact because same-hash rows share every signature, so a semi-join on
+a hash or band key keeps whole hash groups.  Joins between new frames
+carry no hint, so a batch run never broadcasts a corpus-sized frame.
+``clusters`` is the prior assignment left-joined to the small remap, plus
+the new rows left-joined to their labels; ``cluster_remap`` is a filter
+over the ``cluster`` stage.  Neither re-runs a stage.
 """
 
 from __future__ import annotations
@@ -85,22 +102,45 @@ from typing import Any
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
 from bibexpy_spark.functions import udfs
-from bibexpy_spark.lineage import RunContext, materialize_stage, release_checkpoint
+from bibexpy_spark.lineage import (
+    Counters,
+    RunContext,
+    materialize_stage,
+    release_checkpoint,
+)
 from bibexpy_spark.operators import assembly, components, containment, exact, lsh
 from bibexpy_spark.operators import simhash as simhash_op
 from bibexpy_spark.operators import verify as verify_op
-from bibexpy_spark.pipeline import check_pass_options
 
 _SIG_COLS = ["conv_id", "content_sha", "shingles", "band_hashes"]
 
 
-# -- delta-state layout ------------------------------------------------------
-# A state directory (a batch run's output, an incremental run's output, the
-# stream's state dir) holds ``signed``, ``clusters`` and one pair table per
+def check_pass_options(
+    extra_cluster_edges: tuple[str, ...],
+    with_containment: bool,
+    with_simhash_pass: bool,
+    containment_mode: str,
+) -> None:
+    """Raise ValueError when the containment mode is unknown (with the pass
+    on), or an extra cluster-edge source is unknown or its pass is off
+    (shared by the dedup pass, the state fold and the submit job)."""
+    if with_containment and containment_mode not in containment.MODE_BACKEND:
+        raise ValueError(f"unknown containment_mode: {containment_mode!r}")
+    bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
+    if bad_sources:
+        raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
+    if "containment" in extra_cluster_edges and not with_containment:
+        raise ValueError("extra_cluster_edges='containment' needs with_containment")
+    if "simhash" in extra_cluster_edges and not with_simhash_pass:
+        raise ValueError("extra_cluster_edges='simhash' needs with_simhash_pass")
+
+
+# -- state layout ------------------------------------------------------------
+# A state directory (any fold_state output written out, the stream's state
+# dir) holds ``signed``, ``clusters`` and one pair table per
 # enabled pass.  Each pair table is named after its pipeline.run_dedup
 # result key; run_incremental_dedup emits the delta under the same key plus
 # ``_new``.  fold_state is the only reader and composer of this layout.
@@ -135,21 +175,6 @@ def _signed_columns(with_containment: bool, with_simhash_pass: bool) -> list[str
         + (["norm_text"] if with_containment else [])
         + (["simhash"] if with_simhash_pass else [])
     )
-
-
-def batch_state(
-    res: dict[str, Any],
-    with_containment: bool,
-    with_simhash_pass: bool,
-    containment_mode: str,
-) -> dict[str, DataFrame]:
-    """The state tables of a pipeline.run_dedup result, by name — exactly
-    what a later fold_state over the written directory reads back."""
-    sig_cols = _signed_columns(with_containment, with_simhash_pass)
-    state = {"signed": res["signed"].select(*sig_cols), "clusters": res["clusters"]}
-    for name in _pair_tables(with_containment, with_simhash_pass, containment_mode):
-        state[name] = res[name]
-    return state
 
 
 def compose_pair_state(
@@ -206,8 +231,9 @@ def run_incremental_dedup(
 ) -> dict[str, Any]:
     """Cluster ``new_turns`` against the prior corpus state.
 
-    ``prior_signed``   the batch pipeline's ``signed`` output (or stage
-                       table): conv_id, content_sha, shingles, band_hashes.
+    ``prior_signed``   the ``signed`` state (a batch run's ``signed``
+                       output or stage table): conv_id, content_sha,
+                       shingles, band_hashes.
     ``prior_clusters`` its ``clusters`` output: conv_id, cluster_id (the
                        cluster_id is the min conv_id of the cluster).
     ``prior_turns``    the previously ingested turn rows — REQUIRED when the
@@ -217,81 +243,81 @@ def run_incremental_dedup(
                        semi-join that extracts the grown conversations'
                        prior turns is partition/bucket-pruned on conv_id,
                        never a full scan.
-    Both priors may be ``None`` (the bootstrap batch of a delta chain):
-    the run then clusters the new batch against nothing, which equals a
-    plain batch run — so a chain of deltas starting from empty state is
-    batch-equivalent by induction.
+    Both priors may be ``None`` together (a batch run, or the bootstrap
+    batch of a delta chain): the prior-only stages are skipped and the
+    result is the batch pass over ``new_turns``.
 
     With ``with_containment`` / ``with_simhash_pass`` the run also emits the
-    DELTA pair sets of the batch pipeline's contain / fuzzy passes —
-    ``containment_prefix_new`` / ``simhash_pairs_new``, exactly the pairs
-    with >= 1 endpoint among the delta conversations.  The caller keeps the
-    prior pair state; dropping its pairs that touch ``resigned_prior_ids``
-    and unioning the delta pairs reproduces the batch pass over old ∪ new
-    (equivalence pytest-gated).  These passes need ``prior_signed`` to carry
-    ``norm_text`` / ``simhash`` columns respectively (the batch pipeline's
-    ``signed`` output has both).  ``containment_mode`` mirrors
-    ``pipeline.run_dedup``: ``"general"`` / ``"general_sa"`` additionally
-    emit ``containment_pairs_new`` — the delta of the COMPLETE
-    (prefix ∪ interior, with match offsets) pass.
+    pass pairs with >= 1 endpoint among the new conversations —
+    ``containment_prefix_new`` / ``simhash_pairs_new``.  The caller keeps
+    the prior pair state; dropping its pairs that touch
+    ``resigned_prior_ids`` and unioning these reproduces the batch pass over
+    old ∪ new (equivalence pytest-gated).  These passes need
+    ``prior_signed`` to carry ``norm_text`` / ``simhash`` columns
+    respectively.  ``containment_mode``: ``"prefix"`` (the lossless
+    equi-join pass), ``"general"`` or ``"general_sa"`` (ALSO emit
+    ``containment_pairs_new``: the complete prefix ∪ interior pass with
+    match offsets, verified by JVM instr or the per-outer suffix array —
+    see operators/containment.py).
 
-    ``extra_cluster_edges`` mirrors ``pipeline.run_dedup``: the named
-    passes' pairs additionally join the clustering edge set, and the result
-    equals the batch run with the same sources over old ∪ new — PROVIDED
-    the prior state was itself built with the same sources (quiet-cluster
-    connectivity through those pairs lives only in the prior assignments)
-    and, when the delta grows conversations, ``prior_extra_pairs`` supplies
-    the maintained prior pair state as a two-column (a_id, b_id) DataFrame
-    (the union of the state tables the submit job / stream handler keep):
-    a dissolved cluster's members re-enter clustering, and their surviving
-    pair edges exist nowhere else — the delta ops only emit
-    >=1-new-endpoint pairs.  Quiet-old pairs are NOT re-read: they are
-    contracted inside the prior cluster super-nodes, so the extra edge
-    volume stays O(|delta| + pairs touching dissolved clusters).
+    ``extra_cluster_edges``: by default clusters form over exact ∪
+    Jaccard-verified edges only and the containment/SimHash passes are
+    SIGNALS.  ``"containment"`` and/or ``"simhash"`` additionally union
+    those pairs into the edge set — the reference's merge_references
+    semantics (MergeDB.py:210-278), where a contained record is FOLDED into
+    its container's group.  Against a prior state the result equals the
+    batch run with the same sources over old ∪ new PROVIDED the prior state
+    was itself built with them (quiet-cluster connectivity through those
+    pairs lives only in the prior assignments) and, when the delta grows
+    conversations, ``prior_extra_pairs`` supplies the maintained prior pair
+    state as a two-column (a_id, b_id) DataFrame: a dissolved cluster's
+    members re-enter clustering, and their surviving pair edges exist
+    nowhere else.  Quiet-old pairs are NOT re-read: they are contracted
+    inside the prior cluster super-nodes.
 
-    ``run`` (as in ``pipeline.run_dedup``): each stage is checkpointed
-    through ``run.materialize`` — manifests, ``metrics.jsonl``, and a
-    relaunch with the same run skips every fresh stage.  Without it each
-    stage is cut in memory (``lineage.materialize_stage``).
+    ``run``: each stage is checkpointed through ``run.materialize`` —
+    manifests, ``metrics.jsonl``, and a relaunch with the same run skips
+    every fresh stage.  Without it each stage is cut in memory.
 
-    Returns: signed_new (signatures for every delta conversation, grown ones
-    re-signed over their merged turn set), clusters (full updated assignment
-    over old ∪ new), cluster_remap (prior cluster_id -> new cluster_id, only
-    rows that changed), dup_edges_new, candidate_pairs, resigned_prior_ids,
-    stats (one-row DataFrame of the counts observed while the stages were
-    computed — reading it runs no Spark job), cleanup (callable releasing
-    the run's in-memory stages), plus the optional delta pair sets above.
+    Returns: signed_new (signatures for every new conversation, grown ones
+    re-signed over their merged turn set), exact_edges, candidate_pairs,
+    dup_edges_new, clusters (full updated assignment over old ∪ new),
+    cluster_remap (prior cluster_id -> new cluster_id, only rows that
+    changed), resigned_prior_ids, stats (one-row DataFrame of the counts
+    observed while the stages were computed — reading it runs no Spark
+    job), cleanup (callable releasing the run's in-memory stages; call it
+    after the outputs are written), plus the optional pass pair sets above.
     """
     check_pass_options(
         extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
     )
-    if prior_signed is not None and prior_clusters is None:
-        # contract guard (r4 review): with prior_signed but no
-        # prior_clusters, the old corpus's assignments cannot be carried —
-        # the emitted "clusters" would silently omit every quiet old
-        # conversation.  Failing loudly mirrors the prior_turns guard.
+    if (prior_signed is None) != (prior_clusters is None):
+        # contract guard (r4 review): without prior_clusters the old
+        # corpus's assignments cannot be carried — the emitted "clusters"
+        # would silently omit every quiet old conversation
         raise ValueError(
-            "prior_signed was provided without prior_clusters; the full "
-            "updated assignment cannot be produced without the prior "
-            "cluster table (it would silently drop every old conversation "
-            "untouched by this delta)"
+            "prior_signed was given without prior_clusters, or the reverse; "
+            "the full updated assignment needs both (it would silently drop "
+            "every old conversation untouched by this delta)"
         )
 
     counts: dict[str, dict[str, int]] = {}
     stored: list[DataFrame] = []
 
-    def stage(name: str, build, **observe) -> DataFrame:
-        df, counts[name] = materialize_stage(run, name, build, **observe)
+    def stage(name: str, build, *observe) -> DataFrame:
+        df, counts[name] = materialize_stage(run, name, build, *observe)
         stored.append(df)
         return df
 
-    # prior frames are only ever scanned: every join against them has the
-    # delta-sized side broadcast, so nothing prior-sized is shuffled
+    prior = prior_signed is not None
+    # the prior rows the exact/LSH path and the passes compare against
+    # (None without a prior): prior frames are only ever scanned
+    old = old_full = None
     carried: DataFrame | None = None
     resigned_ids: DataFrame | None = None
-    prior_signed_orig = prior_signed
     sign_input = new_turns
-    if prior_signed is not None:
+    if prior:
+        old_full = prior_signed
         grown_ids = stage("grown", lambda: prior_signed.select("conv_id").join(
             F.broadcast(new_turns.select("conv_id")), "conv_id", "left_semi"
         ))
@@ -320,13 +346,13 @@ def run_incremental_dedup(
             resigned_ids = grown_ids
             # latest-wins merge of the grown conversations' turn sets:
             # delta rows override prior rows on (conv_id, turn_idx)
-            grown_delta = new_turns.join(F.broadcast(grown_ids), "conv_id", "left_semi")
-            fresh_delta = new_turns.join(F.broadcast(grown_ids), "conv_id", "left_anti")
             merged_grown = merge_turns_latest_wins(
                 prior_turns.join(F.broadcast(grown_ids), "conv_id", "left_semi"),
-                grown_delta,
+                new_turns.join(grown_ids, "conv_id", "left_semi"),
             )
-            sign_input = fresh_delta.unionByName(merged_grown)
+            sign_input = new_turns.join(grown_ids, "conv_id", "left_anti").unionByName(
+                merged_grown
+            )
             # retract the grown conversations' ENTIRE prior clusters: stale
             # connectivity through a pre-growth signature must not survive,
             # and a retraction can legitimately SPLIT a cluster — so every
@@ -343,9 +369,8 @@ def run_incremental_dedup(
                     ),
                     "cluster_id", "left_semi",
                 ),
-                n_retracted_clusters=F.sum(
-                    (F.col("conv_id") == F.col("cluster_id")).cast("long")
-                ),
+                F.sum((F.col("conv_id") == F.col("cluster_id")).cast("long"))
+                .alias("n_retracted_clusters"),
             )
             members = F.broadcast(retracted.select("conv_id"))
             carried = stage("carried", lambda: (
@@ -353,6 +378,10 @@ def run_incremental_dedup(
                 .join(F.broadcast(grown_ids), "conv_id", "left_anti")
                 .select(*_SIG_COLS)
             ))
+            # the passes run over ALL rows (not exact-dup reps): their old
+            # side only loses the re-signed conversations, whose stale
+            # pairs the caller drops via resigned_prior_ids
+            old_full = prior_signed.join(F.broadcast(grown_ids), "conv_id", "left_anti")
             # grown rows always leave the old side, even if the prior state
             # was inconsistent (signed without a cluster row)
             prior_signed = (
@@ -363,156 +392,117 @@ def run_incremental_dedup(
                 F.broadcast(retracted.select("cluster_id").distinct()),
                 "cluster_id", "left_anti",
             )
+        old = prior_signed.select(*_SIG_COLS)
+
+    duplicate_keys = Counters("duplicate_turn_keys")
 
     def build_signed() -> DataFrame:
-        conv = assembly.assemble_docs(sign_input, include_roles_tools=with_simhash_pass)
+        conv = assembly.assemble_docs(
+            sign_input, include_roles_tools=with_simhash_pass,
+            duplicate_keys=duplicate_keys,
+        )
         s = udfs.with_signature_columns(conv, cfg, text_col="doc")
         if with_simhash_pass:
             s = simhash_op.with_simhash(s, cfg)
         return s.drop("doc")
 
-    signed_new = stage("signed_new", build_signed)
+    signed_new = stage("sign", build_signed, duplicate_keys)
     new = signed_new.select(*_SIG_COLS)
     if carried is not None:
         new = new.unionByName(carried)
-    if prior_signed is None:
-        prior_signed = spark.createDataFrame([], new.schema)
-    if prior_clusters is None:
-        cid_t = new.schema["conv_id"].dataType
-        prior_clusters = spark.createDataFrame(
-            [],
-            T.StructType(
-                [T.StructField("conv_id", cid_t), T.StructField("cluster_id", cid_t)]
-            ),
-        )
-    old = prior_signed.select(*_SIG_COLS)
 
-    # 1) cross-batch exact duplicates: new rows whose sha exists in the old
-    #    corpus attach to the old representative (the min conv_id of that
-    #    sha) and skip the fuzzy path entirely (identical signatures add no
-    #    connectivity).  Only old rows carrying a delta sha are aggregated.
-    def build_cross_exact() -> DataFrame:
-        old_rep = (
-            old.select("content_sha", "conv_id")
-            .join(F.broadcast(new.select("content_sha")), "content_sha", "left_semi")
-            .groupBy("content_sha")
-            .agg(F.min("conv_id").alias("_old_rep"))
-        )
-        return new.select("conv_id", "content_sha").join(
-            F.broadcast(old_rep), "content_sha"
-        )
-
-    sha_match = stage("cross_exact", build_cross_exact)
-    new_um = new.join(F.broadcast(sha_match.select("conv_id")), "conv_id", "left_anti")
-
-    # 2) the LSH band join's signature side: the new reps (one per sha among
-    #    the unmatched new rows) plus the old reps sharing a band key with
-    #    one.  A bucket's key is carried by every member, so the touched
-    #    buckets are exactly the delta reps' own band hashes; same-sha rows
-    #    share every band key, so the semi-join keeps
-    #    whole sha groups and their min conv_id is the old corpus's rep.
-    def build_reps() -> DataFrame:
-        new_reps = exact.representatives(exact.exact_groups(new_um)).select(*_SIG_COLS)
-        new_bands = new_reps.select(
-            F.posexplode("band_hashes").alias("band_idx", "band_hash")
-        )
-        hit_ids = (
-            old.select("conv_id", F.posexplode("band_hashes").alias("band_idx", "band_hash"))
-            .join(F.broadcast(new_bands), ["band_idx", "band_hash"], "left_semi")
-            .select("conv_id")
-        )
-        hit = old.join(F.broadcast(hit_ids), "conv_id", "left_semi")
-        old_reps = exact.representatives(exact.exact_groups(hit)).select(*_SIG_COLS)
-        return (
-            old_reps.withColumn("_is_new", F.lit(False))
-            .unionByName(new_reps.withColumn("_is_new", F.lit(True)))
-        )
-
-    combined = stage(
-        "reps", build_reps, n_new_reps=F.sum(F.col("_is_new").cast("long"))
+    exact_edges = stage(
+        "exact_edges", lambda: exact.exact_edges(new, old),
+        F.sum(F.col("cross").cast("long")).alias("cross_exact"),
     )
+    reps = new_reps = exact.representatives(new, exact_edges)
+    if prior:
+        # the band join's old side: the prior reps sharing a band key with
+        # a new rep.  A bucket's key is carried by every member, so the
+        # touched buckets are exactly the new reps' own band hashes; same-sha
+        # rows share every band key, so the semi-join keeps whole sha groups
+        # and their min conv_id is the prior corpus's rep.
+        def build_reps() -> DataFrame:
+            new_bands = new_reps.select(
+                F.posexplode("band_hashes").alias("band_idx", "band_hash")
+            )
+            hit_ids = (
+                old.select("conv_id", F.posexplode("band_hashes").alias("band_idx", "band_hash"))
+                .join(F.broadcast(new_bands), ["band_idx", "band_hash"], "left_semi")
+                .select("conv_id")
+            )
+            hit = old.join(F.broadcast(hit_ids), "conv_id", "left_semi")
+            return (
+                exact.representatives(hit, exact.exact_edges(hit))
+                .withColumn("_is_new", F.lit(False))
+                .unionByName(new_reps.withColumn("_is_new", F.lit(True)))
+            )
 
-    # 3) lsh.bucket_pairs with the new-flag: only buckets containing >= 1 new
-    # rep participate, and only pairs with a new endpoint come out — the
-    # batch policy's edge set for the combined corpus, restricted to the
-    # delta
-    cand = stage("candidates", lambda: lsh.bucket_pairs(
-        combined.select(
-            "conv_id", "_is_new",
-            F.posexplode("band_hashes").alias("band_idx", "band_hash"),
-        ),
-        ("band_idx", "band_hash"), "conv_id", cfg.hot_band_cap, new_col="_is_new",
-    )[0].dropDuplicates(["a_id", "b_id"]))
+        reps = stage("reps", build_reps)
 
-    # 4) exact Jaccard verification against the combined rep signatures
+    # against a prior, only buckets holding a new rep take part and only
+    # pairs with a new endpoint come out — the batch policy's edge set for
+    # the combined corpus, restricted to the delta
+    bucket_counts = Counters("hot_buckets", "active_buckets")
+    cand = stage(
+        "candidates",
+        lambda: lsh.candidate_pairs(
+            reps, cfg, new_col="_is_new" if prior else None,
+            bucket_counts=bucket_counts,
+        )[0],
+        bucket_counts,
+    )
     dup_edges = stage("verify", lambda: (
-        verify_op.verify_pairs(cand, combined, cfg, id_col="conv_id")
+        verify_op.verify_pairs(cand, reps, cfg)
         .filter(F.col("is_dup")).select("a_id", "b_id")
     ))
 
-    # 4b) optional pass deltas (computed before clustering so their pairs
-    #     can join the edge set): contain/fuzzy run over ALL rows (not
-    #     exact-dup reps), so their old side is the ORIGINAL prior corpus
-    #     minus the re-signed conversations (whose stale rows the caller
-    #     also drops from the prior pair state via resigned_prior_ids)
+    # the optional passes, built before clustering so their pairs can join
+    # the edge set
+    passes: dict[str, DataFrame] = {}
+    if with_containment:
+        prefix = stage("contain_prefix", lambda: (
+            containment.prefix_containment_pairs(signed_new, cfg, old_full)
+        ))
+        passes["containment_prefix_new"] = prefix
+        backend = containment.MODE_BACKEND[containment_mode]
+        if backend is not None:
+            passes["containment_pairs_new"] = stage(
+                "contain_general",
+                lambda: containment.general_containment_pairs(
+                    signed_new, cfg, old_full, backend=backend,
+                    # the prefix leg stored above — don't run its
+                    # blocked self-join a second time
+                    prefix_pairs=prefix,
+                ),
+            )
+    if with_simhash_pass:
+        chunk_counts = Counters("hot_chunk_buckets", "active_chunk_buckets")
+        passes["simhash_pairs_new"] = stage(
+            "fuzzy",
+            lambda: simhash_op.simhash_pairs(
+                signed_new, cfg, old_full, bucket_counts=chunk_counts
+            ),
+            chunk_counts,
+        )
+
     resigned = (
         resigned_ids
         if resigned_ids is not None
         else signed_new.select("conv_id").filter(F.lit(False))
     )
-    delta_passes: dict[str, DataFrame] = {}
-    if with_containment or with_simhash_pass:
-        if prior_signed_orig is None:
-            old_full = signed_new.filter(F.lit(False))
-        else:
-            old_full = prior_signed_orig.join(F.broadcast(resigned), "conv_id", "left_anti")
-        if with_containment:
-            prefix = stage("containment_prefix_new", lambda: (
-                containment.prefix_containment_pairs_delta(old_full, signed_new, cfg)
-            ))
-            delta_passes["containment_prefix_new"] = prefix
-            backend = containment.MODE_BACKEND[containment_mode]
-            if backend is not None:
-                delta_passes["containment_pairs_new"] = stage(
-                    "containment_pairs_new",
-                    lambda: containment.general_containment_pairs_delta(
-                        old_full, signed_new, cfg, backend=backend,
-                        # the prefix leg stored above — don't run its
-                        # blocked self-join a second time
-                        prefix_pairs=prefix,
-                    ),
-                )
-        if with_simhash_pass:
-            delta_passes["simhash_pairs_new"] = stage(
-                "simhash_pairs_new",
-                lambda: simhash_op.simhash_pairs_delta(old_full, signed_new, cfg),
-            )
-
-    # within-batch exact duplicates: each unmatched new row whose sha has a
-    # new rep (the group's min conv_id) other than itself
-    new_rep_of_sha = combined.filter(F.col("_is_new")).select(
-        "content_sha", F.col("conv_id").alias("a_id")
-    )
-    edge_legs = [
-        sha_match.select(F.col("_old_rep").alias("a_id"), F.col("conv_id").alias("b_id")),
-        new_um.join(F.broadcast(new_rep_of_sha), "content_sha")
-        .filter(F.col("a_id") != F.col("conv_id"))
-        .select("a_id", F.col("conv_id").alias("b_id")),
-        dup_edges,
-    ]
+    edge_legs = [exact_edges.select("a_id", "b_id"), dup_edges]
     if "containment" in extra_cluster_edges:
-        src = delta_passes.get(
-            "containment_pairs_new", delta_passes["containment_prefix_new"]
-        )
+        src = passes.get("containment_pairs_new", passes["containment_prefix_new"])
         edge_legs.append(
             src.select(F.col("inner_id").alias("a_id"), F.col("outer_id").alias("b_id"))
         )
     if "simhash" in extra_cluster_edges:
-        edge_legs.append(delta_passes["simhash_pairs_new"].select("a_id", "b_id"))
+        edge_legs.append(passes["simhash_pairs_new"].select("a_id", "b_id"))
     if extra_cluster_edges and carried is not None:
         # a dissolved cluster's members re-enter clustering; their
         # surviving pair edges live ONLY in the maintained prior pair
-        # state (the delta ops emit >=1-new-endpoint pairs; quiet-old
+        # state (the pass ops emit >=1-new-endpoint pairs; quiet-old
         # connectivity is contracted inside the prior super-nodes)
         carried_ids = carried.select("conv_id")
         pe = prior_extra_pairs.select("a_id", "b_id")
@@ -524,91 +514,99 @@ def run_incremental_dedup(
                         "b_id", "left_semi")
             )
             .dropDuplicates(["a_id", "b_id"])
-            # stale pairs of re-signed conversations: the delta ops
+            # stale pairs of re-signed conversations: the pass ops
             # re-emit their live successors
             .join(F.broadcast(resigned.withColumnRenamed("conv_id", "a_id")),
                   "a_id", "left_anti")
             .join(F.broadcast(resigned.withColumnRenamed("conv_id", "b_id")),
                   "b_id", "left_anti")
         )
+    raw = reduce(DataFrame.unionByName, edge_legs)
 
-    # 5) contracted edges: an old endpoint maps to its prior cluster_id
-    #    (already the member minimum, so component labels stay the global
-    #    min conv_id); ``*_prior`` flags a super-node.  Only the prior
-    #    assignments of the edges' own endpoints are read.
-    def build_edges() -> DataFrame:
-        raw = reduce(DataFrame.unionByName, edge_legs)
-        ends = raw.select(F.col("a_id").alias("conv_id")).unionByName(
-            raw.select(F.col("b_id").alias("conv_id"))
-        )
-        touched = F.broadcast(
-            prior_clusters.join(F.broadcast(ends), "conv_id", "left_semi")
-        )
-        a, b = touched.alias("ta"), touched.alias("tb")
-        return (
-            raw.join(a, raw["a_id"] == F.col("ta.conv_id"), "left")
-            .join(b, raw["b_id"] == F.col("tb.conv_id"), "left")
-            .select(
-                F.coalesce("ta.cluster_id", "a_id").alias("a_key"),
-                F.coalesce("tb.cluster_id", "b_id").alias("b_key"),
-                F.col("ta.cluster_id").isNotNull().alias("a_prior"),
-                F.col("tb.cluster_id").isNotNull().alias("b_prior"),
+    if prior:
+        # contracted edges: an old endpoint maps to its prior cluster_id
+        # (already the member minimum, so component labels stay the global
+        # min conv_id); ``*_prior`` flags a super-node.  Only the prior
+        # assignments of the edges' own endpoints are read.
+        def build_edges() -> DataFrame:
+            ends = raw.select(F.col("a_id").alias("conv_id")).unionByName(
+                raw.select(F.col("b_id").alias("conv_id"))
             )
-            .filter(F.col("a_key") != F.col("b_key"))
+            touched = F.broadcast(
+                prior_clusters.join(F.broadcast(ends), "conv_id", "left_semi")
+            )
+            a, b = touched.alias("ta"), touched.alias("tb")
+            return (
+                raw.join(a, raw["a_id"] == F.col("ta.conv_id"), "left")
+                .join(b, raw["b_id"] == F.col("tb.conv_id"), "left")
+                .select(
+                    F.coalesce("ta.cluster_id", "a_id").alias("a_id"),
+                    F.coalesce("tb.cluster_id", "b_id").alias("b_id"),
+                    F.col("ta.cluster_id").isNotNull().alias("a_prior"),
+                    F.col("tb.cluster_id").isNotNull().alias("b_prior"),
+                )
+                .filter(F.col("a_id") != F.col("b_id"))
+            )
+
+        edges = stage("edges", build_edges)
+    else:
+        edges = raw.select(
+            "a_id", "b_id", F.lit(False).alias("a_prior"), F.lit(False).alias("b_prior")
         )
 
-    edges = stage("edges", build_edges)
-
-    # 6) the cluster label map over the edge endpoints: key -> label (the
-    #    component's min key), with the prior flag.  A new conversation in
-    #    no edge and an untouched prior cluster keep their own label.
+    # the label of each edge endpoint (the component's min id), with the
+    # prior flag.  A new conversation in no edge and an untouched prior
+    # cluster keep their own label.
     def build_labels() -> DataFrame:
         ends = (
-            edges.select(F.col("a_key").alias("key"), F.col("a_prior").alias("prior"))
-            .unionByName(edges.select(F.col("b_key").alias("key"), F.col("b_prior").alias("prior")))
+            edges.select(F.col("a_id").alias("conv_id"), F.col("a_prior").alias("prior"))
+            .unionByName(
+                edges.select(F.col("b_id").alias("conv_id"), F.col("b_prior").alias("prior"))
+            )
             .distinct()
         )
-        return components.connected_components(
-            edges.select(F.col("a_key").alias("a_id"), F.col("b_key").alias("b_id")),
-            ends, cfg, id_col="key", checkpoint_edges=False,
-        ).withColumnRenamed("cluster_id", "label")
+        return components.connected_components(edges, ends, cfg).withColumnRenamed(
+            "cluster_id", "label"
+        )
 
+    merged = F.col("prior") & (F.col("conv_id") != F.col("label"))
     labels = stage(
-        "labels", build_labels,
-        n_merged_prior_clusters=F.sum(
-            (F.col("prior") & (F.col("key") != F.col("label"))).cast("long")
-        ),
+        "cluster", build_labels,
+        F.sum(merged.cast("long")).alias("n_merged_prior_clusters"),
     )
-    remap = labels.filter(F.col("prior") & (F.col("key") != F.col("label"))).select(
-        F.col("key").alias("old_cluster_id"), F.col("label").alias("cluster_id")
-    )
-    new_labels = labels.filter(~F.col("prior")).select(
-        F.col("key").alias("conv_id"), F.col("label").alias("_label")
+    remap = labels.filter(merged).select(
+        F.col("conv_id").alias("old_cluster_id"), F.col("label").alias("cluster_id")
     )
     clusters = (
-        prior_clusters.join(
-            F.broadcast(remap.select(
-                F.col("old_cluster_id").alias("cluster_id"), F.col("cluster_id").alias("_new")
-            )),
-            "cluster_id", "left",
-        )
-        .select("conv_id", F.coalesce("_new", "cluster_id").alias("cluster_id"))
-        .unionByName(
-            new.select("conv_id").join(F.broadcast(new_labels), "conv_id", "left")
-            .select("conv_id", F.coalesce("_label", "conv_id").alias("cluster_id"))
-        )
+        new.select("conv_id")
+        .join(labels.filter(~F.col("prior")).select("conv_id", "label"), "conv_id", "left")
+        .select("conv_id", F.coalesce("label", "conv_id").alias("cluster_id"))
     )
+    if prior:
+        clusters = (
+            prior_clusters.join(
+                F.broadcast(remap.select(
+                    F.col("old_cluster_id").alias("cluster_id"),
+                    F.col("cluster_id").alias("_new"),
+                )),
+                "cluster_id", "left",
+            )
+            .select("conv_id", F.coalesce("_new", "cluster_id").alias("cluster_id"))
+            .unionByName(clusters)
+        )
 
     def _n(name: str, key: str = "rows") -> int:
-        return counts[name][key] if name in counts else 0
+        return counts.get(name, {}).get(key) or 0
 
-    # an inline VALUES table is a local relation: reading it runs no job
+    # an inline VALUES table is a local relation: reading it runs no job.
+    # Each new row (carried ones included) is a rep or has one exact edge.
     stats = spark.sql(
         "SELECT * FROM VALUES ({}) AS stats({})".format(
             ", ".join(f"{v}L" for v in (
-                _n("signed_new"), _n("cross_exact"), _n("reps", "n_new_reps"),
+                _n("sign"), _n("exact_edges", "cross_exact"),
+                _n("sign") + _n("carried") - _n("exact_edges"),
                 _n("candidates"), _n("verify"),
-                _n("labels", "n_merged_prior_clusters"), _n("carried"),
+                _n("cluster", "n_merged_prior_clusters"), _n("carried"),
                 _n("retracted", "n_retracted_clusters"),
             )),
             "n_new, n_cross_exact, n_new_reps, n_candidates, n_dup_edges, "
@@ -626,18 +624,18 @@ def run_incremental_dedup(
             for df in stored:
                 release_checkpoint(df)
 
-    out: dict[str, Any] = {
+    return {
         "signed_new": signed_new,
+        "exact_edges": exact_edges,
+        "candidate_pairs": cand,
+        "dup_edges_new": dup_edges,
         "clusters": clusters,
         "cluster_remap": remap,
-        "dup_edges_new": dup_edges,
-        "candidate_pairs": cand,
         "resigned_prior_ids": resigned,
         "stats": stats,
         "cleanup": _cleanup,
+        **passes,
     }
-    out.update(delta_passes)
-    return out
 
 
 def _read_state(spark: SparkSession, prior_dir: str, name: str) -> DataFrame:
@@ -665,9 +663,10 @@ def fold_state(
     extra_cluster_edges: tuple[str, ...] = (),
     run: RunContext | None = None,
 ) -> tuple[dict[str, Any], dict[str, DataFrame]]:
-    """Fold ``new_turns`` into the state under ``prior_dir`` (``None``:
-    bootstrap from empty state) via run_incremental_dedup (``run`` is
-    passed through: with a RunContext the delta stages resume).
+    """Fold ``new_turns`` into the state under ``prior_dir`` via
+    run_incremental_dedup (``run`` is passed through: with a RunContext the
+    stages resume).  ``prior_dir=None`` is a batch run: the state it
+    returns is the first state of a delta chain.
 
     Reads ``signed``, ``clusters`` and each enabled pass's pair table, and
     raises ValueError before computing anything when one is missing or

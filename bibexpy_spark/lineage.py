@@ -20,7 +20,9 @@ audit.py:1-9), and skips work when outputs are fresher than inputs
 a RunContext: with one it checkpoints through ``RunContext.materialize``;
 without one it cuts the lineage in memory (``localCheckpoint``).  Either
 way the stage is computed once, and its row count and any extra counters
-ride the materializing action as an ``Observation``.
+ride the materializing action as an ``Observation``.  A counter is either
+an aliased aggregate Column over the stage's rows, or a :class:`Counters`
+observation the build attached to a frame inside the stage's plan.
 """
 
 from __future__ import annotations
@@ -29,9 +31,11 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -239,17 +243,16 @@ class RunContext:
         self,
         stage: str,
         build,
-        repartition: int | None = None,
-        observe: dict[str, Column] | None = None,
+        observe: Sequence[Column | Counters] = (),
     ) -> DataFrame:
         """Run ``build()`` unless a fresh checkpoint exists; return the stage
         DataFrame read back from its table (so downstream lineage starts at
         the checkpoint, truncating the DAG).
 
-        The row count and the ``observe`` counters (name -> aggregate
-        Column) ride the WRITE job as an Observation — one job per stage,
-        no re-scan — and are kept in the manifest, so a skipped stage
-        reports them in ``counts`` without recomputing anything."""
+        The row count and the ``observe`` counters (module docstring) ride
+        the WRITE job — one job per stage, no re-scan — and are kept in the
+        manifest, so a skipped stage reports them in ``counts`` without
+        recomputing anything (its Counters never fire)."""
         t0 = time.time()
         path = self._table_path(stage)
         if self.stage_fresh(stage):
@@ -258,16 +261,11 @@ class RunContext:
             self.counts[stage] = {"rows": m.get("rows"), **m.get("observed", {})}
             self._log(stage, rows=m.get("rows"), wall_s=time.time() - t0, skipped=True)
             return df
-        df = build()
-        writer = df.repartition(repartition) if repartition else df
         tmp = path + ".tmp"
-        obs = Observation(f"rows_{stage}")
-        extra = [c.alias(k) for k, c in (observe or {}).items()]
-        writer = writer.observe(obs, F.count(F.lit(1)).alias("n"), *extra)
-        writer.write.mode("overwrite").parquet(tmp)
-        got = obs.get
-        rows = int(got["n"])
-        observed = {k: int(got[k] or 0) for k in (observe or {})}
+        df, read = _observed(build(), stage, observe)
+        df.write.mode("overwrite").parquet(tmp)
+        observed = read()
+        rows = observed.pop("rows")
         # atomic-ish replace: stage tables are only visible once complete
         if os.path.exists(path):
             import shutil
@@ -325,32 +323,64 @@ class RunContext:
         with open(os.path.join(self.run_dir, "metrics.jsonl"), "a") as f:
             f.write(json.dumps(row) + "\n")
 
-    def log_metric(self, stage: str, **kv: Any) -> None:
-        self._log(stage, **kv)
+
+class Counters(Observation):
+    """An Observation of the metrics ``names`` that a stage's build attaches
+    to a frame inside the stage's plan.  Adaptive execution drops that frame
+    from the executed plan when a join side it feeds turns out empty, and
+    then nothing is observed: the counters, which count that empty side,
+    read 0."""
+
+    def __init__(self, *names: str) -> None:
+        super().__init__()
+        self.names = names
+
+
+def _observed(
+    df: DataFrame, stage: str, observe: Sequence[Column | Counters]
+) -> tuple[DataFrame, Any]:
+    """``df`` observing its row count and the ``observe`` Columns, plus a
+    reader that, after an action on it, returns ``{"rows": n, **counters}``
+    (the Counters' metrics included)."""
+    obs = Observation(f"stage_{stage}")
+    cols = [c for c in observe if isinstance(c, Column)]
+    inner = [o for o in observe if isinstance(o, Counters)]
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"), *cols)
+
+    def read() -> dict[str, int]:
+        got = dict(obs.get)
+        for o in inner:
+            try:
+                got.update(o.get)
+            except Py4JJavaError:  # dropped frame: an empty observed row
+                got.update(dict.fromkeys(o.names, 0))
+        return {k: int(v or 0) for k, v in got.items()}
+
+    return df, read
 
 
 def materialize_stage(
-    run: RunContext | None, stage: str, build, **observe: Column
+    run: RunContext | None,
+    stage: str,
+    build,
+    *observe: Column | Counters,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Compute ``build()`` once and return ``(frame, counts)``: ``counts``
-    holds ``rows`` plus one entry per ``observe`` counter (name -> aggregate
-    Column), all taken on the materializing action.
+    holds ``rows`` plus one entry per observed counter (module docstring),
+    all taken on the materializing action.
 
     With a RunContext the stage is checkpointed through
     ``run.materialize`` (manifest, ``metrics.jsonl``, resume).  Without
     one the lineage is cut eagerly in memory, so later stages and every
     output read the stored rows instead of re-running the plan."""
     if run is not None:
-        df = run.materialize(stage, build, observe=observe)
+        # positional: a subclass wrapping materialize (perfbench's tracing
+        # context) forwards its third argument as it is
+        df = run.materialize(stage, build, observe)
         return df, run.counts[stage]
-    obs = Observation(f"stage_{stage}")
-    df = (
-        build()
-        .observe(obs, F.count(F.lit(1)).alias("rows"),
-                 *[c.alias(k) for k, c in observe.items()])
-        .localCheckpoint(eager=True)
-    )
-    return df, {k: int(v or 0) for k, v in obs.get.items()}
+    df, read = _observed(build(), stage, observe)
+    df = df.localCheckpoint(eager=True)
+    return df, read()
 
 
 def release_checkpoint(df: DataFrame) -> None:

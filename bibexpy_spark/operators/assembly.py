@@ -13,7 +13,7 @@ keeps the result deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: separator between turns in the assembled document
@@ -48,27 +48,23 @@ def assemble_conversations(turns: DataFrame) -> DataFrame:
     )
 
 
-def count_duplicate_turn_keys(turns: DataFrame) -> int:
-    """Number of (conv_id, turn_idx) keys appearing more than once.
-
-    ``turn_idx`` is the contract's order key (input_hint: dense, stable);
-    duplicates still assemble deterministically (struct sort falls back to
-    the remaining fields) but per-turn identity becomes ambiguous — the
-    pipeline surfaces the count as a metric instead of failing silently.
-    """
-    return (
-        turns.groupBy("conv_id", "turn_idx")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )
-
-
-def assemble_docs(turns: DataFrame, include_roles_tools: bool = False) -> DataFrame:
+def assemble_docs(
+    turns: DataFrame,
+    include_roles_tools: bool = False,
+    duplicate_keys: Observation | None = None,
+) -> DataFrame:
     """Lean assembly for the dedup hot path: aggregates only (turn_idx,
     text[, role, tool]) instead of the full turn structs — the map-side
     partial aggregates and the shuffle carry exactly what downstream needs.
     Ordering guarantee identical to :func:`assemble_conversations`.
+
+    ``duplicate_keys`` observes ``duplicate_turn_keys``: the number of
+    (conv_id, turn_idx) keys appearing more than once.  ``turn_idx`` is the
+    contract's order key (input_hint: dense, stable); duplicates still
+    assemble deterministically (the sort falls back to the remaining
+    fields) but per-turn identity becomes ambiguous, so the count is
+    surfaced instead of failing silently — on the aggregate this function
+    already runs, no extra scan.
     """
     # sort key = (turn_idx, role, text, tool) ALWAYS — the same tiebreak
     # prefix assemble_conversations uses — so a duplicate-turn_idx corpus
@@ -92,6 +88,16 @@ def assemble_docs(turns: DataFrame, include_roles_tools: bool = False) -> DataFr
                                     F.col("text").alias("text"), tool))
         ).alias("_t")
     )
+    if duplicate_keys is not None:
+        # the array is sorted on turn_idx: a repeated key sits right after
+        # its first occurrence, and each repeated key counts once
+        idx = F.col("_t.turn_idx")
+        repeated = F.filter(idx, lambda x, i: x == F.get(idx, i - 1))
+        agg = agg.observe(
+            duplicate_keys,
+            F.coalesce(F.sum(F.size(F.array_distinct(repeated))), F.lit(0))
+            .alias("duplicate_turn_keys"),
+        )
     # codegen-native field extraction, same rationale as assemble_conversations
     out = agg.withColumn("doc", F.array_join(F.col("_t.text"), TURN_SEP))
     if include_roles_tools:

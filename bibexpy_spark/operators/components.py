@@ -56,11 +56,9 @@ def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     cfg: DedupConfig = CANONICAL,
-    id_col: str = "conv_id",
     driver_threshold: int = 2_000_000,
-    checkpoint_edges: bool = True,
 ) -> DataFrame:
-    """edges(a_id, b_id) + nodes(id, *rest) -> (id_col, cluster_id, *rest).
+    """edges(a_id, b_id) + nodes(conv_id, *rest) -> (conv_id, cluster_id, *rest).
 
     ``cluster_id`` is the minimum node id of the component; isolated nodes
     map to themselves (same convention as the oracle's transitive closure).
@@ -74,28 +72,19 @@ def connected_components(
     closure); the chosen mode is observable via the plan (driver mode plans
     from a createDataFrame).
 
-    ``checkpoint_edges=False`` (r6): a caller whose edge frame is already
-    materialized (persisted pairs cache) can skip the up-front checkpoint
-    job — count + collect then re-scan the cheap upstream, and the loop
-    path checkpoints on entry anyway.  Leave True when edges derive from
-    an expensive unmaterialized DAG (the pipeline's verify output): the
-    count and each consumer would otherwise re-execute it.
+    ``edges`` should be cheap to re-read (the pipeline passes stored
+    stages): the edge count and the driver collect each scan it, and only
+    the loop path checkpoints it first.
     """
     spark = edges.sparkSession
     e = edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")).filter(
         F.col("src") != F.col("dst")
     ).distinct()
-    # materialize the edge list once: the iteration must not re-derive the
-    # whole upstream pipeline (LSH + verify) every round
-    if checkpoint_edges:
-        e = e.localCheckpoint(eager=True)
-
-    n_edges = e.count()
-    if n_edges <= driver_threshold:
-        return _driver_components(spark, e, nodes, id_col)
-    if not checkpoint_edges:
-        # the star loop iterates over e — materialize it now after all
-        e = e.localCheckpoint(eager=True)
+    if e.count() <= driver_threshold:
+        return _driver_components(spark, e, nodes)
+    # the star loop iterates over e: materialize it once, so no round
+    # re-derives the upstream
+    e = e.localCheckpoint(eager=True)
 
     # Catalyst's constraint inference (PruneFilters) hits an internal
     # AttributeMap error on the self-union/self-join star plans (SPARK
@@ -147,40 +136,23 @@ def connected_components(
     finally:
         spark.conf.set(prop_key, prev_prop)
 
-    return _finalize(e, nodes, id_col)
+    return _finalize(e, nodes)
 
 
-def _driver_components(spark, e: DataFrame, nodes: DataFrame, id_col: str) -> DataFrame:
+def _driver_components(spark, e: DataFrame, nodes: DataFrame) -> DataFrame:
     """Union-find on the collected (small) edge list; assignment is joined
     back distributed, so only O(|E|) ids ever touch the driver.
 
-    Edges move driver-side through Arrow (struct keys flattened to scalar
-    columns first), NOT ``collect()``: py4j materializes one nested Row
-    object per edge, measured 7x slower at 500k edges (8.3s vs 1.2s) and
-    ~30s at the 2M-edge ``driver_threshold`` — the flatten + ``toPandas``
-    path keeps the shortcut genuinely cheap right up to the threshold.
-    The assignment returns through Arrow the same way.
+    Edges move driver-side through Arrow, NOT ``collect()``: py4j
+    materializes one nested Row object per edge, measured 7x slower at 500k
+    edges (8.3s vs 1.2s) and ~30s at the 2M-edge ``driver_threshold`` — the
+    ``toPandas`` path keeps the shortcut genuinely cheap right up to the
+    threshold.  The assignment returns through Arrow the same way.
     """
     import pandas as pd
-    from pyspark.sql import types as T
 
-    src_type = e.schema["src"].dataType
-    struct_fields = (
-        [f.name for f in src_type.fields]
-        if isinstance(src_type, T.StructType)
-        else None
-    )
-    if struct_fields:
-        flat = e.select(
-            *[F.col(f"src.{n}").alias(f"s_{n}") for n in struct_fields],
-            *[F.col(f"dst.{n}").alias(f"d_{n}") for n in struct_fields],
-        )
-        pdf = flat.toPandas()
-        srcs = list(zip(*[pdf[f"s_{n}"].tolist() for n in struct_fields])) if len(pdf) else []
-        dsts = list(zip(*[pdf[f"d_{n}"].tolist() for n in struct_fields])) if len(pdf) else []
-    else:
-        pdf = e.toPandas()
-        srcs, dsts = pdf["src"].tolist(), pdf["dst"].tolist()
+    pdf = e.toPandas()
+    srcs, dsts = pdf["src"].tolist(), pdf["dst"].tolist()
 
     parent: dict = {}
 
@@ -199,60 +171,35 @@ def _driver_components(spark, e: DataFrame, nodes: DataFrame, id_col: str) -> Da
             parent[hi] = lo
     if not parent:
         return nodes.select(
-            id_col, F.col(id_col).alias("cluster_id"),
-            *[c for c in nodes.columns if c != id_col],
+            "conv_id", F.col("conv_id").alias("cluster_id"),
+            *[c for c in nodes.columns if c != "conv_id"],
         )
 
     keys = list(parent)
-    roots = [find(k) for k in keys]
-    if struct_fields:
-        assign_pdf = pd.DataFrame(
-            {
-                **{f"s_{n}": [k[i] for k in keys] for i, n in enumerate(struct_fields)},
-                **{f"c_{n}": [r[i] for r in roots] for i, n in enumerate(struct_fields)},
-            }
-        )
-        # rebuild the struct keys with the ORIGINAL field types/names so the
-        # join key's data type matches nodes' exactly
-        assign = spark.createDataFrame(assign_pdf).select(
-            F.struct(
-                *[
-                    F.col(f"s_{f.name}").cast(f.dataType).alias(f.name)
-                    for f in src_type.fields
-                ]
-            ).alias(id_col),
-            F.struct(
-                *[
-                    F.col(f"c_{f.name}").cast(f.dataType).alias(f.name)
-                    for f in src_type.fields
-                ]
-            ).alias("cluster_id"),
-        )
-    else:
-        id_type = dict(nodes.dtypes)[id_col]
-        assign = spark.createDataFrame(
-            pd.DataFrame({id_col: keys, "cluster_id": roots})
-        ).select(
-            F.col(id_col).cast(id_type).alias(id_col),
-            F.col("cluster_id").cast(id_type).alias("cluster_id"),
-        )
-    return _label(nodes, assign, id_col)
+    id_type = dict(nodes.dtypes)["conv_id"]
+    assign = spark.createDataFrame(
+        pd.DataFrame({"conv_id": keys, "cluster_id": [find(k) for k in keys]})
+    ).select(
+        F.col("conv_id").cast(id_type).alias("conv_id"),
+        F.col("cluster_id").cast(id_type).alias("cluster_id"),
+    )
+    return _label(nodes, assign)
 
 
-def _finalize(e: DataFrame, nodes: DataFrame, id_col: str) -> DataFrame:
+def _finalize(e: DataFrame, nodes: DataFrame) -> DataFrame:
     # after convergence every edge points child -> component min
     assign = e.select(
-        F.greatest("src", "dst").alias(id_col), F.least("src", "dst").alias("cluster_id")
-    ).groupBy(id_col).agg(F.min("cluster_id").alias("cluster_id"))
+        F.greatest("src", "dst").alias("conv_id"), F.least("src", "dst").alias("cluster_id")
+    ).groupBy("conv_id").agg(F.min("cluster_id").alias("cluster_id"))
 
-    return _label(nodes, assign, id_col)
+    return _label(nodes, assign)
 
 
-def _label(nodes: DataFrame, assign: DataFrame, id_col: str) -> DataFrame:
+def _label(nodes: DataFrame, assign: DataFrame) -> DataFrame:
     """Each node's component label; nodes absent from ``assign`` are
     singletons labelled by their own id."""
-    return nodes.join(assign, id_col, "left").select(
-        id_col,
-        F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-        *[c for c in nodes.columns if c != id_col],
+    return nodes.join(assign, "conv_id", "left").select(
+        "conv_id",
+        F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"),
+        *[c for c in nodes.columns if c != "conv_id"],
     )

@@ -123,9 +123,14 @@ def _outer_legs(keyed: DataFrame, lens: list[int]) -> DataFrame:
     )
 
 
-def prefix_containment_pairs(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
+def prefix_containment_pairs(
+    new: DataFrame, cfg: DedupConfig, old: DataFrame | None = None
+) -> DataFrame:
     """Pairs (inner_id, outer_id) where inner's normalized doc is a strict
-    prefix-anchored substring of outer's — fully JVM-side.
+    prefix-anchored substring of outer's — fully JVM-side.  With ``old``
+    (the prior corpus minus re-signed rows) only the pairs with >= 1
+    endpoint in ``new`` come out, through the delta plan of
+    :func:`_prefix_pairs_delta`; without it, the batch plan below.
 
     Two disjoint equi-join legs (split on inner key length, r4):
 
@@ -144,8 +149,10 @@ def prefix_containment_pairs(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
     full-width leg (r4 review fix: the old first-N-token key missed inners
     shorter than N tokens and the exactly-N-token inner whose last token
     char-extends in the outer)."""
+    if old is not None:
+        return _prefix_pairs_delta(old, new, cfg)
     c = _prefix_chars(cfg)
-    keyed = _prefix_keyed(signed, cfg)
+    keyed = _prefix_keyed(new, cfg)
 
     a_long = keyed.filter(F.col("klen") == c).select(
         F.col("conv_id").alias("inner_id"),
@@ -185,7 +192,7 @@ def prefix_containment_pairs(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
     return long_pairs.unionByName(short_pairs)
 
 
-def prefix_containment_pairs_delta(
+def _prefix_pairs_delta(
     old_signed: DataFrame, new_signed: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """Delta-driven prefix containment (incremental mode, r4): emit exactly
@@ -284,11 +291,11 @@ def prefix_containment_pairs_delta(
 
 
 def _oriented_containment_candidates(
-    signed: DataFrame,
+    new: DataFrame,
     sample_m: int,
     containment_threshold: float,
     max_shingle_freq: int,
-    new_signed: DataFrame | None = None,
+    old: DataFrame | None = None,
 ) -> DataFrame:
     """Shared candidate stage for the two general-containment backends:
     candidates by shared sampled shingles, scored by |A∩B| / |A| over FULL
@@ -304,9 +311,9 @@ def _oriented_containment_candidates(
     fan-out at web scale; the drop/pile-up counts are one job away via
     :func:`containment_index_stats` — never silent).
 
-    Delta mode (``new_signed`` given): ``signed`` is the quiet prior corpus
+    Delta mode (``old`` given): ``old`` is the quiet prior corpus
     (already minus re-signed rows) and only pairs with >= 1 endpoint in
-    ``new_signed`` are generated.  Both join sides are semi-join-pruned to
+    ``new`` are generated.  Both join sides are semi-join-pruned to
     shingles occurring in a NEW row, which drops NO qualifying hit: a
     (new probe, *) hit uses a shingle from the new row's own sample, and a
     (old probe, new index) hit uses a shingle from the new row's full set —
@@ -326,9 +333,9 @@ def _oriented_containment_candidates(
             F.lit(is_new).alias("_is_new"),
         )
 
-    base = _base(signed, new_signed is None)
-    if new_signed is not None:
-        base = base.unionByName(_base(new_signed, True))
+    base = _base(new, True)
+    if old is not None:
+        base = _base(old, False).unionByName(base)
     index = base.select("conv_id", "_is_new", F.explode("shingles").alias("sh"))
     freq = index.groupBy("sh").agg(F.count("*").alias("df"))
     index = index.join(freq.filter(F.col("df") <= max_shingle_freq), "sh")
@@ -337,10 +344,8 @@ def _oriented_containment_candidates(
         "_is_new",
         F.explode(F.slice(F.array_sort("shingles"), 1, sample_m)).alias("sh"),
     )
-    if new_signed is not None:
-        new_sh = (
-            _base(new_signed, True).select(F.explode("shingles").alias("sh")).distinct()
-        )
+    if old is not None:
+        new_sh = new.select(F.explode("shingles").alias("sh")).distinct()
         index = index.join(new_sh, "sh", "left_semi")
         probe = probe.join(new_sh, "sh", "left_semi")
     index = index.select(
@@ -567,8 +572,9 @@ def _complete_pairs(
 
 
 def general_containment_pairs(
-    signed: DataFrame,
+    new: DataFrame,
     cfg: DedupConfig,
+    old: DataFrame | None = None,
     backend: str = "contains",
     sample_m: int = 16,
     containment_threshold: float = 0.9,
@@ -584,39 +590,19 @@ def general_containment_pairs(
     also the leftmost-occurrence semantics).
 
     ``prefix_pairs``: the output of :func:`prefix_containment_pairs` over
-    the same ``signed``, when the caller already materialized it (the
+    the same inputs, when the caller already materialized it (the
     pipeline always does) — passing it avoids executing the prefix-key
     self-join a second time here.
-    """
-    if prefix_pairs is None:
-        prefix_pairs = prefix_containment_pairs(signed, cfg)
-    cand = _oriented_containment_candidates(
-        signed, sample_m, containment_threshold, max_shingle_freq
-    )
-    return _complete_pairs(prefix_pairs, cand, backend)
 
-
-def general_containment_pairs_delta(
-    old_signed: DataFrame,
-    new_signed: DataFrame,
-    cfg: DedupConfig,
-    backend: str = "contains",
-    sample_m: int = 16,
-    containment_threshold: float = 0.9,
-    max_shingle_freq: int = 10_000,
-    prefix_pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Delta-driven complete containment pass (incremental mode): emit
-    exactly the (inner_id, outer_id, pos) pairs with >= 1 endpoint in
-    ``new_signed``, so
+    With ``old`` (the prior corpus minus re-signed rows) only the pairs
+    with >= 1 endpoint in ``new`` come out, so
 
         prior_pairs(minus pairs touching re-signed ids) ∪ delta_pairs
             == general_containment_pairs(old ∪ new)
 
-    (tested for both backends).  ``old_signed`` must already exclude
-    re-signed conversations.  Scale shape: the prefix leg prunes quiet
-    blocks by semi-join (see :func:`prefix_containment_pairs_delta`); the
-    interior leg prunes both join sides to shingles occurring in a new row
+    (tested for both backends).  Scale shape: the prefix leg prunes quiet
+    blocks by semi-join (see :func:`_prefix_pairs_delta`); the interior
+    leg prunes both join sides to shingles occurring in a new row
     (losslessness argument in :func:`_oriented_containment_candidates`) —
     only the df-cap scan-agg touches the full corpus.
 
@@ -635,12 +621,8 @@ def general_containment_pairs_delta(
     :func:`_oriented_containment_candidates`).
     """
     if prefix_pairs is None:
-        prefix_pairs = prefix_containment_pairs_delta(old_signed, new_signed, cfg)
+        prefix_pairs = prefix_containment_pairs(new, cfg, old)
     cand = _oriented_containment_candidates(
-        old_signed,
-        sample_m,
-        containment_threshold,
-        max_shingle_freq,
-        new_signed=new_signed,
+        new, sample_m, containment_threshold, max_shingle_freq, old=old
     )
     return _complete_pairs(prefix_pairs, cand, backend)

@@ -15,35 +15,50 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def exact_groups(signed: DataFrame, id_col: str = "conv_id") -> DataFrame:
-    """Add ``exact_rep``: the minimum id sharing this row's content hash.
+def exact_edges(new: DataFrame, old: DataFrame | None = None) -> DataFrame:
+    """Star edges (a_id = representative, b_id = member, cross) for every
+    ``new`` row that is not its content hash's representative.
+
+    The representative is the min conv_id among the ``old`` rows with the
+    hash when there are any (``cross`` true: the row joins a prior exact
+    group and skips the fuzzy path), else the min among the ``new`` rows.
 
     Shuffle-narrow plan: a window over the full row would shuffle the wide
     signature payload (shingle + band arrays); instead aggregate the
-    (content_sha, id) projection — map-side-combinable — and join the tiny
-    (sha -> rep) map back.  Only hashes in duplicated groups are joined
-    (dup maps are small relative to the corpus, so Catalyst/AQE broadcasts
-    them); unique rows take ``coalesce(rep, id)``.
+    (content_sha, conv_id) projection — map-side-combinable — and join the
+    tiny map of linked hashes back (dup maps are small relative to the
+    corpus, so AQE broadcasts them).  ``old`` is only scanned: its rows are
+    semi-joined to the broadcast new hashes before they are aggregated.
     """
-    rep_map = (
-        signed.select("content_sha", F.col(id_col))
+    groups = (
+        new.select("content_sha", "conv_id")
         .groupBy("content_sha")
-        .agg(F.min(id_col).alias("exact_rep"), F.count("*").alias("_sha_n"))
-        .filter(F.col("_sha_n") > 1)
-        .drop("_sha_n")
+        .agg(F.min("conv_id").alias("_rep"), F.count("*").alias("_n"))
     )
-    return signed.join(rep_map, "content_sha", "left").withColumn(
-        "exact_rep", F.coalesce("exact_rep", F.col(id_col))
+    rep, cross = F.col("_rep"), F.lit(False)
+    if old is not None:
+        old_rep = (
+            old.select("content_sha", "conv_id")
+            .join(F.broadcast(new.select("content_sha")), "content_sha", "left_semi")
+            .groupBy("content_sha")
+            .agg(F.min("conv_id").alias("_old_rep"))
+        )
+        groups = groups.join(F.broadcast(old_rep), "content_sha", "left")
+        rep, cross = F.coalesce("_old_rep", "_rep"), F.col("_old_rep").isNotNull()
+    linked = groups.filter((F.col("_n") > 1) | cross).select(
+        "content_sha", rep.alias("a_id"), cross.alias("cross")
+    )
+    return (
+        new.select("content_sha", F.col("conv_id").alias("b_id"))
+        .join(linked, "content_sha")
+        .filter(F.col("a_id") != F.col("b_id"))
+        .select("a_id", "b_id", "cross")
     )
 
 
-def exact_edges(grouped: DataFrame, id_col: str = "conv_id") -> DataFrame:
-    """Star edges (member -> representative) for non-representative rows."""
-    return grouped.filter(F.col(id_col) != F.col("exact_rep")).select(
-        F.col("exact_rep").alias("a_id"), F.col(id_col).alias("b_id")
+def representatives(signed: DataFrame, edges: DataFrame) -> DataFrame:
+    """The rows of ``signed`` that ``edges`` (its exact_edges) link to no
+    representative: one per content hash, the LSH input at scale."""
+    return signed.join(
+        edges.select(F.col("b_id").alias("conv_id")), "conv_id", "left_anti"
     )
-
-
-def representatives(grouped: DataFrame, id_col: str = "conv_id") -> DataFrame:
-    """One row per distinct content hash (the LSH input at scale)."""
-    return grouped.filter(F.col(id_col) == F.col("exact_rep"))

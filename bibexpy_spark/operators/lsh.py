@@ -28,25 +28,18 @@ from pyspark.sql import functions as F
 from bibexpy_spark.config import DedupConfig
 
 
-def explode_bands(signed: DataFrame, id_col: str = "conv_id") -> DataFrame:
-    """(id, band_hashes array) -> (id, band_idx, band_hash), one row per band."""
-    return signed.select(
-        id_col, F.posexplode("band_hashes").alias("band_idx", "band_hash")
-    )
-
-
 def bucket_pairs(
     keyed: DataFrame,
     keys: Sequence[str],
-    id_col: str,
     cap: int,
     new_col: str | None = None,
     carry: Sequence[str] = (),
     bucket_counts: Observation | None = None,
+    counter: str = "buckets",
 ) -> tuple[DataFrame, DataFrame]:
     """Pair the members of each bucket under the skew policy above.
 
-    ``keyed`` holds one row per (id, bucket key), plus the ``carry`` columns
+    ``keyed`` holds one row per (conv_id, bucket key), plus the ``carry`` columns
     to bring along for each endpoint.  Returns ``(pairs, sizes)``:
 
       * ``pairs``: ``a_id < b_id`` with ``a_<c>``/``b_<c>`` per carried
@@ -68,14 +61,14 @@ def bucket_pairs(
     (``min_by`` on the id), so the star is a filter over the member rows —
     no window, no second join.  Nothing is persisted.
 
-    ``bucket_counts`` observes ``hot_buckets`` (star-mode buckets) and
-    ``active_buckets`` (buckets of size >= 2) on the bucket aggregate, so
+    ``bucket_counts`` observes ``hot_<counter>`` (star-mode buckets) and
+    ``active_<counter>`` (buckets of size >= 2) on the bucket aggregate, so
     the counters arrive with the action that computes ``pairs``.
     """
     keys, carry = list(keys), list(carry)
     rows = keyed.select(
         *keys,
-        F.col(id_col).alias("_id"),
+        F.col("conv_id").alias("_id"),
         *carry,
         (F.col(new_col) if new_col else F.lit(True)).alias("_new"),
     )
@@ -95,8 +88,9 @@ def bucket_pairs(
     if bucket_counts is not None:
         sizes = sizes.observe(
             bucket_counts,
-            F.coalesce(F.sum(F.col("star_mode").cast("long")), F.lit(0)).alias("hot_buckets"),
-            F.count(F.lit(1)).alias("active_buckets"),
+            F.coalesce(F.sum(F.col("star_mode").cast("long")), F.lit(0))
+            .alias(f"hot_{counter}"),
+            F.count(F.lit(1)).alias(f"active_{counter}"),
         )
     members = rows.join(sizes, keys)
 
@@ -148,16 +142,21 @@ def bucket_pairs(
 def candidate_pairs(
     signed: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "conv_id",
+    new_col: str | None = None,
     bucket_counts: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH band join -> distinct candidate pairs (a_id < b_id).
 
     Returns (pairs, band_stats); band_stats carries per-bucket member counts
-    and the hot/star flag.  ``bucket_counts`` is passed to bucket_pairs.
+    and the hot/star flag.  ``new_col`` and ``bucket_counts`` are passed to
+    bucket_pairs.
     """
     pairs, band_stats = bucket_pairs(
-        explode_bands(signed, id_col), ("band_idx", "band_hash"), id_col,
-        cfg.hot_band_cap, bucket_counts=bucket_counts,
+        signed.select(
+            "conv_id", *([new_col] if new_col else []),
+            F.posexplode("band_hashes").alias("band_idx", "band_hash"),
+        ),
+        ("band_idx", "band_hash"), cfg.hot_band_cap, new_col=new_col,
+        bucket_counts=bucket_counts,
     )
     return pairs.dropDuplicates(["a_id", "b_id"]), band_stats

@@ -15,7 +15,7 @@ path).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
@@ -65,19 +65,25 @@ def _chunked(simmed: DataFrame, cfg: DedupConfig, *cols: str) -> DataFrame:
 
 
 def _chunk_pairs(
-    chunks: DataFrame, cfg: DedupConfig, id_col: str, new_col: str | None = None
-) -> tuple[DataFrame, DataFrame]:
+    chunks: DataFrame,
+    cfg: DedupConfig,
+    new_col: str | None = None,
+    bucket_counts: Observation | None = None,
+) -> DataFrame:
     """The chunk equi-join under the shared skew policy (lsh.bucket_pairs):
     a hot (chunk_idx, chunk_val) bucket — e.g. 100k boilerplate docs all
     hashing to simhash 0 — degrades to a star on the bucket's min id.  Star
     pairs still pass the Hamming verify, so connectivity through the rep is
     kept exactly for the identical-simhash pile-ups that cause the blowup; a
     member beyond the radius from the rep drops out (bounded, never-silent:
-    :func:`simhash_chunk_stats` reports hot buckets)."""
+    ``bucket_counts`` observes ``hot_chunk_buckets`` and
+    ``active_chunk_buckets``, which the pipeline logs on its ``fuzzy``
+    stage)."""
     return lsh.bucket_pairs(
-        chunks, ("chunk_idx", "chunk_val"), id_col, cfg.hot_chunk_cap,
-        new_col=new_col, carry=("simhash",),
-    )
+        chunks, ("chunk_idx", "chunk_val"), cfg.hot_chunk_cap,
+        new_col=new_col, carry=("simhash",), bucket_counts=bucket_counts,
+        counter="chunk_buckets",
+    )[0]
 
 
 def _within_radius(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -93,45 +99,21 @@ def _within_radius(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def simhash_pairs(simmed: DataFrame, cfg: DedupConfig, id_col: str = "conv_id") -> DataFrame:
-    """(id, simhash) -> pairs (a_id, b_id, hamming) within the radius.
+def simhash_pairs(
+    new: DataFrame,
+    cfg: DedupConfig,
+    old: DataFrame | None = None,
+    bucket_counts: Observation | None = None,
+) -> DataFrame:
+    """(conv_id, simhash) -> pairs (a_id, b_id, hamming) within the radius.
 
     Buckets above ``cfg.hot_chunk_cap`` degrade to the star fallback (see
     :func:`_chunk_pairs`); below the cap the pair set is exactly the
-    all-pairs-within-radius definition."""
-    pairs, _ = _chunk_pairs(_chunked(simmed, cfg, id_col, "simhash"), cfg, id_col)
-    return _within_radius(pairs, cfg)
+    all-pairs-within-radius definition.
 
-
-def simhash_chunk_stats(
-    simmed: DataFrame, cfg: DedupConfig, id_col: str = "conv_id"
-) -> DataFrame:
-    """Never-silent metrics for the chunk index: ONE row with n_buckets
-    (size >= 2), n_hot_buckets (star mode), and max_bucket_n."""
-    _, sizes = _chunk_pairs(_chunked(simmed, cfg, id_col, "simhash"), cfg, id_col)
-    return (
-        sizes.agg(
-            F.count("*").alias("n_buckets"),
-            F.sum(F.col("star_mode").cast("long")).alias("n_hot_buckets"),
-            F.max("bucket_n").alias("max_bucket_n"),
-        )
-        .select(
-            F.coalesce("n_buckets", F.lit(0)).alias("n_buckets"),
-            F.coalesce("n_hot_buckets", F.lit(0)).alias("n_hot_buckets"),
-            F.coalesce("max_bucket_n", F.lit(0)).alias("max_bucket_n"),
-        )
-    )
-
-
-def simhash_pairs_delta(
-    old_simmed: DataFrame,
-    new_simmed: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "conv_id",
-) -> DataFrame:
-    """Delta-driven SimHash pass (incremental mode, r4): pairs within the
-    Hamming radius with >= 1 endpoint in ``new_simmed``.  Old-old pairs live
-    in the prior pair state;
+    With ``old`` (the prior corpus minus re-signed rows) only the pairs
+    with >= 1 endpoint in ``new`` come out; old-old pairs live in the
+    prior pair state, and
 
         prior_pairs(minus pairs touching re-signed ids) ∪ delta_pairs
             == simhash_pairs(old ∪ new).
@@ -143,13 +125,12 @@ def simhash_pairs_delta(
     containment df cap, the equality above is exact while no bucket CROSSES
     ``hot_chunk_cap`` between batches (a bucket going hot leaves previously
     captured verified pairs in state that a fresh batch's star would no
-    longer emit — never-silent via simhash_chunk_stats)."""
-    both = (
-        old_simmed.select(id_col, "simhash", F.lit(False).alias("_is_new"))
-        .unionByName(new_simmed.select(id_col, "simhash", F.lit(True).alias("_is_new")))
-    )
-    pairs, _ = _chunk_pairs(
-        _chunked(both, cfg, id_col, "simhash", "_is_new"), cfg, id_col,
-        new_col="_is_new",
-    )
+    longer emit — never-silent via the ``hot_chunk_buckets`` counter)."""
+    cols, new_col = ["conv_id", "simhash"], None
+    if old is not None:
+        new = old.select(*cols, F.lit(False).alias("_is_new")).unionByName(
+            new.select(*cols, F.lit(True).alias("_is_new"))
+        )
+        cols, new_col = cols + ["_is_new"], "_is_new"
+    pairs = _chunk_pairs(_chunked(new, cfg, *cols), cfg, new_col, bucket_counts)
     return _within_radius(pairs, cfg)

@@ -26,10 +26,9 @@ def verify_pairs(
     pairs: DataFrame,
     signed: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "conv_id",
     strong_id_col: str | None = None,
 ) -> DataFrame:
-    """pairs(a_id, b_id) x signed(id, shingles[, strong_id]) -> verified pairs.
+    """pairs(a_id, b_id) x signed(conv_id, shingles[, strong_id]) -> verified pairs.
 
     Output: a_id, b_id, inter, union_n, jaccard (double), is_dup (bool).
     Threshold comparison is integer cross-multiplication, not float, so the
@@ -49,7 +48,7 @@ def verify_pairs(
     # bug) still verifies the pair, now as duplicated output rows.
     def _side(tag: str) -> DataFrame:
         cols = [
-            F.col(id_col).alias(f"{tag}_id"),
+            F.col("conv_id").alias(f"{tag}_id"),
             F.col("shingles").alias(f"{tag}_sh"),
             F.size("shingles").alias(f"{tag}_n"),
         ]

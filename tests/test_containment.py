@@ -162,10 +162,7 @@ def test_general_containment_delta_equals_batch(spark):
     """Incremental contract: prior pairs ∪ delta pairs == batch pass over
     old ∪ new, and the delta emits exactly the >=1-new-endpoint pairs with
     identical offsets — for BOTH verify backends."""
-    from bibexpy_spark.operators.containment import (
-        general_containment_pairs,
-        general_containment_pairs_delta,
-    )
+    from bibexpy_spark.operators.containment import general_containment_pairs
 
     seg_a = "one shared distinctive segment with enough shingle tokens for capture"
     seg_b = "a second distinctive block of words long enough to shingle cleanly"
@@ -187,16 +184,20 @@ def test_general_containment_delta_equals_batch(spark):
     for backend in ("contains", "suffix_array"):
         batch_all = {
             (r["inner_id"], r["outer_id"]): r["pos"]
-            for r in general_containment_pairs(all_signed, CANONICAL, backend, **kw).collect()
+            for r in general_containment_pairs(
+                all_signed, CANONICAL, backend=backend, **kw
+            ).collect()
         }
         batch_old = {
             (r["inner_id"], r["outer_id"]): r["pos"]
-            for r in general_containment_pairs(old_signed, CANONICAL, backend, **kw).collect()
+            for r in general_containment_pairs(
+                old_signed, CANONICAL, backend=backend, **kw
+            ).collect()
         }
         delta = {
             (r["inner_id"], r["outer_id"]): r["pos"]
-            for r in general_containment_pairs_delta(
-                old_signed, new_signed, CANONICAL, backend, **kw
+            for r in general_containment_pairs(
+                new_signed, CANONICAL, old_signed, backend=backend, **kw
             ).collect()
         }
         new_ids = set(new)
@@ -295,9 +296,8 @@ def test_extra_edges_validation_and_simhash_monotone(spark, turns_df, tmp_path):
         pipeline.run_dedup(spark, turns_df, containment_mode="nope")
     # over a prefix-mode state a misspelt mode is an unknown mode, not a
     # missing containment_pairs/ table
-    state = incremental.batch_state(
-        pipeline.run_dedup(spark, turns_df, with_simhash_pass=False),
-        True, False, "prefix",
+    _, state = incremental.fold_state(
+        spark, turns_df, None, with_containment=True, with_simhash_pass=False,
     )
     for name, df in state.items():
         df.write.parquet(str(tmp_path / name))
@@ -402,8 +402,8 @@ def test_prefix_leg_lossless_for_short_and_edge_inners(spark):
     new = signed.filter(F.col("conv_id").isin(*new_ids))
     got_d = {
         (r["inner_id"], r["outer_id"])
-        for r in containment.prefix_containment_pairs_delta(
-            old, new, CANONICAL
+        for r in containment.prefix_containment_pairs(
+            new, CANONICAL, old
         ).collect()
     }
     want_d = {(a, b) for a, b in want if a in new_ids or b in new_ids}
@@ -436,8 +436,8 @@ def test_prefix_containment_builds_without_driver_jobs(spark):
     sc.setJobGroup(group, "plan construction must run zero jobs")
     try:
         pairs = containment.prefix_containment_pairs(signed, CANONICAL)
-        pairs_d = containment.prefix_containment_pairs_delta(
-            signed.limit(0), signed, CANONICAL
+        pairs_d = containment.prefix_containment_pairs(
+            signed, CANONICAL, signed.limit(0)
         )
     finally:
         sc.setJobGroup("", "")

@@ -382,9 +382,8 @@ def test_fold_state_refuses_incomplete_prior_state(spark, split_corpus, tmp_path
     old_turns, new_turns, _ = split_corpus
     kw = dict(with_containment=True, with_simhash_pass=False,
               containment_mode="prefix")
-    prior = pipeline.run_dedup(spark, old_turns, **kw)
     state = str(tmp_path / "state")
-    for name, df in incremental.batch_state(prior, **kw).items():
+    for name, df in incremental.fold_state(spark, old_turns, None, **kw)[1].items():
         df.write.parquet(os.path.join(state, name))
     written = sorted(os.listdir(state))
     assert written == ["clusters", "containment_prefix", "signed"]

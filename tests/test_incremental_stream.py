@@ -310,11 +310,13 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
     batch pairs — nothing is ever lost; (b) every extra pair is a genuine
     within-radius pair captured while the bucket was sub-cap (Hamming-
     verified true positives, strictly closer to ground truth than the
-    batch star); (c) the crossing is surfaced by simhash_chunk_stats."""
+    batch star); (c) the crossing is surfaced by the observed
+    ``hot_chunk_buckets`` counter."""
     from dataclasses import replace
 
     from bibexpy_spark.config import CANONICAL
     from bibexpy_spark.incremental import compose_pair_state
+    from bibexpy_spark.lineage import Counters
     from bibexpy_spark.operators import simhash as sh
 
     cfg = replace(CANONICAL, hot_chunk_cap=3)
@@ -328,10 +330,13 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
     prior_set = {(r["a_id"], r["b_id"]) for r in prior.collect()}
     assert prior_set == {("a1", "a2"), ("a1", "a3"), ("a2", "a3")}
 
-    delta = sh.simhash_pairs_delta(old, new, cfg)   # bucket now 5 > cap: star
+    delta = sh.simhash_pairs(new, cfg, old)     # bucket now 5 > cap: star
     resigned = spark.createDataFrame([], "conv_id string")
     composed = compose_pair_state(prior, delta, resigned, "a_id", "b_id")
-    batch = sh.simhash_pairs(old.unionByName(new), cfg)
+    chunk_counts = Counters("hot_chunk_buckets", "active_chunk_buckets")
+    batch = sh.simhash_pairs(
+        old.unionByName(new), cfg, bucket_counts=chunk_counts
+    ).localCheckpoint(eager=True)
 
     comp = {(r["a_id"], r["b_id"]) for r in composed.collect()}
     bat = {(r["a_id"], r["b_id"]) for r in batch.collect()}
@@ -342,9 +347,12 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
     # (b) the extras are exactly the sub-cap-era intra-bucket pairs, all
     # previously Hamming-verified
     assert comp - bat == {("a2", "a3")} and comp - bat <= prior_set
-    # (c) never-silent: the crossing shows in the chunk stats
-    stats = sh.simhash_chunk_stats(old.unionByName(new), cfg).first()
-    assert stats["n_hot_buckets"] >= 1 and stats["max_bucket_n"] == 5
+    # (c) never-silent: the crossing shows in the counter the batch pass
+    # observed (all five rows share every chunk)
+    assert chunk_counts.get == {
+        "hot_chunk_buckets": cfg.simhash_chunks,
+        "active_chunk_buckets": cfg.simhash_chunks,
+    }
 
 
 def test_containment_df_cap_crossing_divergence_is_bounded_superset(spark):
@@ -374,8 +382,8 @@ def test_containment_df_cap_crossing_divergence_is_bounded_superset(spark):
     prior_set = {(r["inner_id"], r["outer_id"]) for r in prior.collect()}
     assert prior_set == {("i1", "o1")}          # captured while df=2 <= 3
 
-    delta = ct.general_containment_pairs_delta(
-        old, new, CANONICAL, max_shingle_freq=cap)
+    delta = ct.general_containment_pairs(
+        new, CANONICAL, old, max_shingle_freq=cap)
     resigned = spark.createDataFrame([], "conv_id string")
     composed = compose_pair_state(
         prior, delta, resigned, "inner_id", "outer_id")

@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -147,15 +149,41 @@ def test_jaccard_exact():
     assert kernels.jaccard(a, a) == 1.0
 
 
-def test_count_duplicate_turn_keys(spark):
-    from bibexpy_spark.operators import assembly
+def test_count_duplicate_turn_keys(spark, tmp_path):
+    """(conv_id, turn_idx) keys appearing more than once are counted on the
+    ``sign`` stage, in its metrics.jsonl row and its manifest, for a batch
+    run and for a delta run."""
+    import json
+
+    from bibexpy_spark import incremental, pipeline
+    from bibexpy_spark.config import CANONICAL
+    from bibexpy_spark.lineage import RunContext
 
     rows = [("c1", 0, "u", "a", "", None), ("c1", 0, "u", "b", "", None),
-            ("c1", 1, "u", "c", "", None), ("c2", 0, "u", "d", "", None)]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+            ("c1", 0, "u", "e", "", None), ("c1", 1, "u", "c", "", None),
+            ("c2", 0, "u", "d", "", None)]
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    df = spark.createDataFrame(rows, schema)
+    prior_df = spark.createDataFrame([("c0", 0, "u", "z", "", None)], schema)
+
+    def sign_counts(run):
+        row = next(r for r in run.metrics if r["stage"] == "sign")
+        with open(os.path.join(run.run_dir, "sign.manifest.json")) as f:
+            manifest = json.load(f)
+        return row["duplicate_turn_keys"], manifest["observed"]["duplicate_turn_keys"]
+
+    wh = str(tmp_path / "wh")
+    batch = RunContext(spark, CANONICAL, wh, run_id="batch", input_token="t")
+    pipeline.run_dedup(spark, df, run=batch)
+    assert sign_counts(batch) == (1, 1)
+
+    prior = pipeline.run_dedup(spark, prior_df)
+    delta = RunContext(spark, CANONICAL, wh, run_id="delta", input_token="t")
+    incremental.run_incremental_dedup(
+        spark, df, prior["signed"], prior["clusters"], run=delta
     )
-    assert assembly.count_duplicate_turn_keys(df) == 1
+    assert sign_counts(delta) == (1, 1)
+    prior["cleanup"]()
 
 
 def test_rolling_fingerprints_winnowing_guarantee():

@@ -38,7 +38,7 @@ def test_verify_join_is_jvm_side(spark):
 
 
 def test_exact_groups_narrow_aggregation(spark):
-    """exact_groups must aggregate a narrow projection, not window the wide
+    """exact_edges must aggregate a narrow projection, not window the wide
     signature payload: the rep-map side of the join reads only
     (content_sha, id)."""
     from bibexpy_spark.config import CANONICAL
@@ -49,7 +49,7 @@ def test_exact_groups_narrow_aggregation(spark):
         "doc_id", "conv_id"
     )
     signed = udfs.with_signature_columns(d, CANONICAL, text_col="text")
-    plan = inspect.explain_formatted(exact.exact_groups(signed))
+    plan = inspect.explain_formatted(exact.exact_edges(signed))
     assert "Window" not in plan  # narrow agg+join replaced the wide window
 
 
@@ -177,7 +177,7 @@ def test_general_containment_no_cartesian(spark):
     for df in (
         containment.general_containment_pairs(old, CANONICAL, backend="contains"),
         containment.general_containment_pairs(old, CANONICAL, backend="suffix_array"),
-        containment.general_containment_pairs_delta(old, new, CANONICAL),
+        containment.general_containment_pairs(new, CANONICAL, old),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
@@ -270,6 +270,7 @@ def test_simhash_hot_bucket_star_fallback(spark):
     from dataclasses import replace
 
     from bibexpy_spark.config import CANONICAL
+    from bibexpy_spark.lineage import Counters
     from bibexpy_spark.operators import simhash as sh
 
     n = 8
@@ -279,9 +280,10 @@ def test_simhash_hot_bucket_star_fallback(spark):
         "conv_id string, simhash long",
     )
     cfg = replace(CANONICAL, hot_chunk_cap=4)
+    chunk_counts = Counters("hot_chunk_buckets", "active_chunk_buckets")
     pairs = {
         (r["a_id"], r["b_id"])
-        for r in sh.simhash_pairs(simmed, cfg).collect()
+        for r in sh.simhash_pairs(simmed, cfg, bucket_counts=chunk_counts).collect()
     }
     star = {(f"c00", f"c{i:02d}") for i in range(1, n)}
     assert star <= pairs                       # all members reach the rep
@@ -294,9 +296,10 @@ def test_simhash_hot_bucket_star_fallback(spark):
         if r["a_id"].startswith("c")
     }
     assert len(full) == n * (n - 1) // 2
-    # stats are never silent about star mode
-    st = sh.simhash_chunk_stats(simmed, cfg).collect()[0]
-    assert st["n_hot_buckets"] > 0 and st["max_bucket_n"] == n + 2  # high chunks are 0 for ALL small ints -> one all-rows bucket
+    # the observed counters are never silent about star mode: the two high
+    # chunks are 0 for ALL small ints (two all-rows buckets), the c-rows
+    # share their two low chunks, z1/z2 share one (cold)
+    assert chunk_counts.get == {"hot_chunk_buckets": 4, "active_chunk_buckets": 5}
 
 
 def test_simhash_delta_matches_batch_with_star(spark):
@@ -324,7 +327,7 @@ def test_simhash_delta_matches_batch_with_star(spark):
     }
     delta = {
         (r["a_id"], r["b_id"])
-        for r in sh.simhash_pairs_delta(old, new, cfg).collect()
+        for r in sh.simhash_pairs(new, cfg, old).collect()
     }
     assert prior | delta == batch
     assert all("n" in a or "n" in b for a, b in delta)

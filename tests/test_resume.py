@@ -36,7 +36,7 @@ def test_full_run_then_resume_skips_all_stages(spark, turns_df, warehouse, golde
     clusters2 = res2["clusters"].toPandas().sort_values("conv_id").reset_index(drop=True)
 
     skipped = {m["stage"] for m in _metrics(run2) if m.get("skipped")}
-    for stage in ("assemble", "sign", "exact_edges", "candidates", "verify", "cluster"):
+    for stage in ("sign", "exact_edges", "candidates", "verify", "cluster"):
         assert stage in skipped, f"stage {stage} recomputed on resume"
     assert clusters1.equals(clusters2)
 
@@ -49,12 +49,26 @@ def test_run_context_run_leaves_nothing_cached(spark, turns_df, warehouse):
     """Every stage of a RunContext run is read back from its checkpoint, so
     the run must leave no cached frame behind — a long-lived session runs
     many of them.  That holds for a batch run and for a delta pass folded
-    onto its output."""
+    onto its output; a batch run without a RunContext holds its stages in
+    memory until its ``cleanup``."""
     from pyspark.sql import functions as F
 
     from bibexpy_spark import incremental
 
     spark.catalog.clearCache()
+    sc = spark.sparkContext
+
+    def persisted_rdds() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    held = persisted_rdds()
+    res = pipeline.run_dedup(spark, turns_df, CANONICAL)
+    res["clusters"].write.parquet(os.path.join(warehouse, "no_run_clusters"))
+    assert persisted_rdds() > held
+    res["cleanup"]()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert persisted_rdds() == held
+
     is_new = F.abs(F.xxhash64("conv_id")) % 10 >= 7
     run = RunContext(spark, CANONICAL, warehouse, run_id="runC", input_token="tok1")
     prior = pipeline.run_dedup(
@@ -78,6 +92,29 @@ def test_run_context_run_leaves_nothing_cached(spark, turns_df, warehouse):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_batch_stage_names_are_perfbench_layers(spark, turns_df, warehouse):
+    """perfbench's per-layer trace indexes ``STAGE_LAYER`` with every stage
+    a batch run materializes and reads the bucket counters from the first
+    metrics row that has ``hot_buckets``: a batch run with containment and
+    SimHash on writes only stage names it maps, and that row is the
+    ``candidates`` row."""
+    from perfbench.trace import STAGE_LAYER
+
+    run = RunContext(spark, CANONICAL, warehouse, run_id="layers", input_token="t")
+    pipeline.run_dedup(
+        spark, turns_df, CANONICAL, run=run,
+        with_containment=True, with_simhash_pass=True,
+    )
+    rows = _metrics(run)
+    stages = {m["stage"] for m in rows}
+    assert stages <= set(STAGE_LAYER), stages - set(STAGE_LAYER)
+    assert {"sign", "exact_edges", "candidates", "contain_prefix", "fuzzy"} <= stages
+    cand = next(m for m in rows if "hot_buckets" in m)
+    assert cand["stage"] == "candidates" and "active_buckets" in cand
+    fuzzy = next(m for m in rows if m["stage"] == "fuzzy")
+    assert {"hot_chunk_buckets", "active_chunk_buckets"} <= set(fuzzy)
+
+
 def test_mid_run_kill_resumes_from_checkpoint(spark, turns_df, warehouse):
     """Simulate a crash after the sign stage: delete downstream manifests,
     relaunch, and assert the completed stages report checkpoint hits."""
@@ -94,7 +131,6 @@ def test_mid_run_kill_resumes_from_checkpoint(spark, turns_df, warehouse):
     run2 = RunContext(spark, CANONICAL, warehouse, run_id="runB", input_token="tok1")
     pipeline.run_dedup(spark, turns_df, CANONICAL, run=run2)
     by_stage = {m["stage"]: m for m in _metrics(run2) if "skipped" in m}
-    assert by_stage["assemble"]["skipped"] is True
     assert by_stage["sign"]["skipped"] is True
     assert by_stage["cluster"]["skipped"] is False
 
@@ -107,14 +143,16 @@ def test_config_change_invalidates_checkpoints(spark, turns_df, warehouse):
 
     other = DedupConfig(jaccard_threshold=0.7)
     run2 = RunContext(spark, other, warehouse, run_id="runC", input_token="tok1")
-    assert not run2.stage_fresh("assemble")
+    assert run1.stage_fresh("sign")
+    assert not run2.stage_fresh("sign")
 
 
 def test_input_change_invalidates_checkpoints(spark, turns_df, warehouse):
     run1 = RunContext(spark, CANONICAL, warehouse, run_id="runD", input_token="tok1")
     pipeline.run_dedup(spark, turns_df, CANONICAL, run=run1)
     run2 = RunContext(spark, CANONICAL, warehouse, run_id="runD", input_token="tok2")
-    assert not run2.stage_fresh("assemble")
+    assert run1.stage_fresh("sign")
+    assert not run2.stage_fresh("sign")
 
 
 def test_input_token_fingerprints_files(tmp_path):

@@ -48,8 +48,8 @@ def test_star_fallback_bounds_candidates_and_keeps_recall(spark, skew_corpus):
     assert n_hot >= 40, "fixture must produce a real pile-up"
 
     # star mode really activated on the pile-up buckets
-    reps = exact.representatives(exact.exact_groups(signed))
-    _, band_stats = lsh.candidate_pairs(reps, cfg, id_col="nid")
+    reps = exact.representatives(signed, res["exact_edges"])
+    _, band_stats = lsh.candidate_pairs(reps, cfg)
     n_star = band_stats.filter(F.col("star_mode")).count()
     assert n_star > 0, "hot buckets did not trip the star fallback"
     max_bucket = band_stats.agg(F.max("bucket_n")).collect()[0][0]
@@ -124,9 +124,9 @@ def test_star_fallback_bounds_candidates_and_keeps_recall(spark, skew_corpus):
             r["conv_id"] for r in keyed.filter("_is_new").select("conv_id").collect()
         }
         assert 0 < len(new_ids) < keyed.select("conv_id").distinct().count()
-        batch, _ = lsh.bucket_pairs(keyed, keys, "conv_id", cap, carry=carry)
+        batch, _ = lsh.bucket_pairs(keyed, keys, cap, carry=carry)
         delta, sizes = lsh.bucket_pairs(
-            keyed, keys, "conv_id", cap, new_col="_is_new", carry=carry
+            keyed, keys, cap, new_col="_is_new", carry=carry
         )
         assert sizes.filter(F.col("star_mode")).count() > 0, keys
         want = sorted(

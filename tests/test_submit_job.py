@@ -102,7 +102,7 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
 def test_spark_submit_incremental_mode(tmp_path):
     """Deployment contract for delta runs: a batch submit writes corpus
-    state (signed + clusters + containment pair state); an --incremental
+    state (signed + clusters + containment pair state); a --prior-state
     submit folds a new batch in and must reproduce the full-batch clustering
     AND the composed containment pair table exactly."""
     import duckdb
@@ -151,8 +151,7 @@ def test_spark_submit_incremental_mode(tmp_path):
     r = submit(["--input", old_p, "--output", out_old])
     assert r.returncode == 0, r.stderr[-3000:]
     r = submit([
-        "--input", new_p, "--output", out_incr, "--incremental",
-        "--prior-state", out_old,
+        "--input", new_p, "--output", out_incr, "--prior-state", out_old,
     ])
     assert r.returncode == 0, r.stderr[-3000:]
 
@@ -197,8 +196,53 @@ def test_spark_submit_incremental_mode(tmp_path):
 
 
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
+def test_spark_submit_prior_state_alone_folds_the_delta(tmp_path):
+    """--prior-state is all a delta run needs: with no other flag the job
+    folds --input into that state, and the clusters equal the full-batch
+    submit's (a job that ignored the prior state would cluster the delta
+    alone)."""
+    import duckdb
+
+    from bibexpy_spark import corpus
+
+    turns_path = corpus.corpus_path_for_sf("sf0.001")
+    old_p = str(tmp_path / "old.parquet")
+    new_p = str(tmp_path / "new.parquet")
+    for path, cond in ((old_p, "< 7"), (new_p, ">= 7")):
+        duckdb.sql(
+            f"COPY (SELECT * FROM read_parquet('{turns_path}') "
+            f"WHERE hash(conv_id) % 10 {cond}) TO '{path}' (FORMAT parquet)"
+        )
+
+    def submit(*args):
+        r = subprocess.run(
+            [
+                SPARK_SUBMIT, "--master", "local[4]",
+                "--conf", "spark.sql.shuffle.partitions=4",
+                "--conf", "spark.ui.enabled=false",
+                os.path.join(REPO, "jobs", "dedup_job.py"), *args,
+            ],
+            capture_output=True, text=True, timeout=600,
+            env={**os.environ, "PYTHONPATH": REPO},
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+
+    def clusters(out):
+        return duckdb.sql(
+            f"SELECT conv_id, cluster_id FROM read_parquet('{out}/clusters/*.parquet') "
+            "ORDER BY conv_id"
+        ).fetchall()
+
+    out_full, out_old, out_new = (str(tmp_path / n) for n in ("full", "old", "new"))
+    submit("--input", turns_path, "--output", out_full)
+    submit("--input", old_p, "--output", out_old)
+    submit("--input", new_p, "--output", out_new, "--prior-state", out_old)
+    assert clusters(out_new) == clusters(out_full)
+
+
+@pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
 def test_spark_submit_incremental_resume(tmp_path):
-    """--run-dir in --incremental mode: a second run with the same run dir
+    """--run-dir on a delta run: a second run with the same run dir
     skips every delta stage and writes identical clusters; a different
     --prior-state invalidates the stages."""
     import shutil
@@ -235,11 +279,11 @@ def test_spark_submit_incremental_resume(tmp_path):
     metrics = os.path.join(run_dir, "d1", "metrics.jsonl")
 
     def delta(prior, out):
-        r = submit(["--input", new_p, "--output", out, "--incremental",
-                    "--prior-state", prior, "--run-dir", run_dir, "--run-id", "d1"])
+        r = submit(["--input", new_p, "--output", out, "--prior-state", prior,
+                    "--run-dir", run_dir, "--run-id", "d1"])
         assert r.returncode == 0, r.stderr[-3000:]
         rows = [json.loads(x) for x in open(metrics)]
-        stats = [x for x in r.stderr.splitlines() if "dedup_job (incremental)" in x]
+        stats = [x for x in r.stderr.splitlines() if "dedup_job: stats" in x]
         return [x for x in rows if "skipped" in x], stats, out
 
     def clusters(out):
@@ -250,8 +294,8 @@ def test_spark_submit_incremental_resume(tmp_path):
 
     first, stats1, out1 = delta(out_old, str(tmp_path / "out1"))
     assert first and not any(x["skipped"] for x in first)
-    assert {"signed_new", "cross_exact", "reps", "candidates", "verify",
-            "edges", "labels"} <= {x["stage"] for x in first}
+    assert {"sign", "exact_edges", "reps", "candidates", "verify",
+            "edges", "cluster"} <= {x["stage"] for x in first}
 
     rows2, stats2, out2 = delta(out_old, str(tmp_path / "out2"))
     second = rows2[len(first):]
@@ -269,7 +313,7 @@ def test_spark_submit_incremental_resume(tmp_path):
 
 
 def test_incremental_refuses_in_place_state_overwrite(tmp_path):
-    """Regression (r4 review): --incremental with --prior-state at/under
+    """Regression (r4 review): --prior-state at/under
     --output would lazily read the prior state while write.mode("overwrite")
     deletes it (Spark's self-overwrite detection covers only catalog tables,
     not file sources) — the next delta's state silently corrupts.  The job
@@ -283,8 +327,7 @@ def test_incremental_refuses_in_place_state_overwrite(tmp_path):
     spec.loader.exec_module(mod)
 
     out = str(tmp_path / "state")
-    base = ["--input", "in.parquet", "--output", out, "--incremental",
-            "--no-simhash"]
+    base = ["--input", "in.parquet", "--output", out, "--no-simhash"]
     # prior state directly inside the output dir
     with pytest.raises(SystemExit):
         mod.main(base + ["--prior-state", os.path.join(out, "prev")])
@@ -300,17 +343,22 @@ def test_incremental_refuses_in_place_state_overwrite(tmp_path):
     # scheme'd URIs compare textually (realpath must not mangle them)
     with pytest.raises(SystemExit):
         mod.main(["--input", "in.parquet", "--output", "s3://bkt/out/",
-                  "--incremental", "--no-simhash",
-                  "--prior-state", "s3://bkt/out/prev"])
+                  "--no-simhash", "--prior-state", "s3://bkt/out/prev"])
     # mixed-form aliases (ADVICE r4): file:// scheme'd output vs plain
     # local prior path — and the reverse — name the same directory and
     # must not evade the guard
     with pytest.raises(SystemExit):
-        mod.main(base[:2] + ["--output", "file://" + out, "--incremental",
-                             "--no-simhash",
+        mod.main(base[:2] + ["--output", "file://" + out, "--no-simhash",
                              "--prior-state", os.path.join(out, "prev")])
     with pytest.raises(SystemExit):
         mod.main(base + ["--prior-state", "file://" + out + "/prev"])
     # single-slash scheme form (Hadoop accepts file:/x) also normalizes
     with pytest.raises(SystemExit):
         mod.main(base + ["--prior-state", "file:" + out + "/prev"])
+    # --prior-turns overlapping the output is refused too, and without a
+    # --prior-state it names no state to fold into
+    with pytest.raises(SystemExit):
+        mod.main(base + ["--prior-state", str(tmp_path / "old"),
+                         "--prior-turns", os.path.join(out, "turns")])
+    with pytest.raises(SystemExit):
+        mod.main(base + ["--prior-turns", str(tmp_path / "turns")])

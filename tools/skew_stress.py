@@ -55,8 +55,8 @@ def main() -> None:
         turns.filter(F.col("conv_id").endswith("_hot"))
         .select("conv_id").distinct().count()
     )
-    reps = exact.representatives(exact.exact_groups(res["signed"]))
-    _, band_stats = lsh.candidate_pairs(reps, CANONICAL, id_col="nid")
+    reps = exact.representatives(res["signed"], res["exact_edges"])
+    _, band_stats = lsh.candidate_pairs(reps, CANONICAL)
     stats_row = band_stats.agg(
         F.count("*").alias("active"),
         F.sum(F.col("star_mode").cast("long")).alias("star"),
