@@ -127,19 +127,15 @@ _EMPTY_SHINGLE = np.uint64(hash_str_u64(""))
 
 
 def shingle_sets(norm_texts: pd.Series, cfg: DedupConfig) -> list[np.ndarray]:
-    """Per-row sorted-unique uint64 k-shingle hashes (word k-grams) at the
-    pipeline's configured ``cfg.shingle_k`` — see :func:`word_kgram_sets`."""
-    return word_kgram_sets(norm_texts, cfg.shingle_k)
-
-
-def word_kgram_sets(norm_texts: pd.Series, k: int) -> list[np.ndarray]:
-    """Per-row sorted-unique uint64 k-shingle hashes (word k-grams).
+    """Per-row sorted-unique uint64 k-shingle hashes (word k-grams,
+    ``k = cfg.shingle_k``).
 
     A shingle hash combines k consecutive token hashes with a multiply-xor
     chain (vectorized over the whole batch at once via flat windows).  Rows
     with fewer than k tokens contribute one shingle combining all their
     tokens; empty rows get the singleton {hash("")} so no set is ever empty.
     """
+    k = cfg.shingle_k
     flat, offsets = _flat_token_hashes(norm_texts)
     n = len(offsets) - 1
     total = len(flat)
@@ -329,59 +325,6 @@ def jaccard(a: np.ndarray, b: np.ndarray) -> float:
 def content_sha256(norm_texts: pd.Series) -> pd.Series:
     """Strong content hash of normalized text (Stage-1 exact short-circuit)."""
     return norm_texts.map(lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest())
-
-
-# ---------------------------------------------------------------------------
-# rolling-hash fingerprints (winnowing)
-# ---------------------------------------------------------------------------
-
-_ROLL_BASE = _U64(1_000_003)  # polynomial base (odd prime, standard choice)
-
-
-def rolling_fingerprints(
-    norm_texts: pd.Series, k_chars: int = 7, window: int = 4
-) -> list[np.ndarray]:
-    """Per-row sorted-unique winnowed rolling-hash fingerprints.
-
-    Classic winnowing (Schleimer/Wilkerson/Aiken, SIGMOD'03): polynomial
-    rolling hash over every k-char window of the normalized text, splitmix64
-    dispersion, then keep each w-window's MINIMUM hash.  Guarantee: any two
-    documents sharing a substring of length >= window + k_chars - 1 share at
-    least one fingerprint — the substring-overlap detector the document-
-    fingerprinting brief asks for, at ~1/w the hash density.
-
-    Vectorized: k fused multiply-adds over the byte array per row batch, one
-    sliding-window min (stride-tricked, no copy), one np.unique.
-    """
-    powers = np.empty(k_chars, dtype=np.uint64)
-    powers[k_chars - 1] = _U64(1)
-    with np.errstate(over="ignore"):
-        for j in range(k_chars - 2, -1, -1):
-            powers[j] = powers[j + 1] * _ROLL_BASE
-    out: list[np.ndarray] = []
-    for s in norm_texts.fillna("").astype(str):
-        b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-        n = len(b)
-        if n < k_chars:
-            out.append(
-                np.array([hash_str_u64(s)], dtype=np.uint64)
-                if s
-                else np.array([_EMPTY_SHINGLE], dtype=np.uint64)
-            )
-            continue
-        m = n - k_chars + 1
-        h = np.zeros(m, dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            for j in range(k_chars):
-                h += b[j : j + m] * powers[j]
-        h = _splitmix64(h)
-        if m <= window:
-            fps = np.array([h.min()], dtype=np.uint64)
-        else:
-            win = np.lib.stride_tricks.sliding_window_view(h, window)
-            fps = np.unique(win.min(axis=1))
-        out.append(fps)
-    return out
 
 
 # ---------------------------------------------------------------------------

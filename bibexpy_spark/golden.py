@@ -6,8 +6,8 @@ dictionaries are the contract and appear verbatim; the code paths are
 deliberately naive (per-row loops, one-line numpy) so an implementation bug
 in the engine's blocked/buffered fast paths cannot be reproduced here.
 tests/test_golden_independent.py checks engine-vs-golden bit-equality for
-normalization, sha256, shingles, MinHash, band hashes, SimHash, winnowing,
-Jaro-Winkler and C1 address parsing.
+normalization, sha256, shingles, MinHash, band hashes, SimHash, Jaro-Winkler
+and C1 address parsing.
 
 This module imports NOTHING from bibexpy_spark.functions (enforced by
 tests/test_golden_independent.py): the golden side and the engine may share
@@ -30,7 +30,6 @@ _M64 = (1 << 64) - 1
 _GMIX1 = 0xBF58476D1CE4E5B9
 _GMIX2 = 0x94D049BB133111EB
 _GGOLD = 0x9E3779B97F4A7C15
-_GROLL_BASE = 1_000_003  # winnowing polynomial base
 
 
 def _g_hash64(s: str) -> int:
@@ -157,33 +156,6 @@ def _g_simhash(norm: str) -> int:
         if 2 * ones[bit] > n:
             out |= 1 << bit
     return out
-
-
-def _g_winnow(s: str, k_chars: int = 7, window: int = 4) -> np.ndarray:
-    """Winnowed rolling-hash fingerprints of one normalized string (scalar
-    polynomial hash + per-window min), sorted unique."""
-    data = s.encode("utf-8")
-    n = len(data)
-    if n < k_chars:
-        return np.array([_g_hash64(s) if s else _g_hash64("")], dtype=np.uint64)
-    powers = [1] * k_chars
-    for j in range(k_chars - 2, -1, -1):
-        powers[j] = (powers[j + 1] * _GROLL_BASE) & _M64
-    m = n - k_chars + 1
-    hs = []
-    for i in range(m):
-        h = 0
-        for j in range(k_chars):
-            h = (h + data[i + j] * powers[j]) & _M64
-        hs.append(_g_mix64(h))
-    if m <= window:
-        return np.array([min(hs)], dtype=np.uint64)
-    fps = {min(hs[i : i + window]) for i in range(m - window + 1)}
-    return np.array(sorted(fps), dtype=np.uint64)
-
-
-def _g_winnow_series(norm: pd.Series, k_chars: int = 7, window: int = 4) -> list[np.ndarray]:
-    return [_g_winnow(s, k_chars, window) for s in norm.fillna("").astype(str)]
 
 
 def _g_jaro(a: str, b: str) -> float:

@@ -70,7 +70,9 @@ smart_merger.py:576-827):
                      analogue);
     ``contain_prefix`` / ``contain_general`` / ``fuzzy``  the pass pairs
                      with >= 1 new endpoint (merge_references and fuzzy
-                     Stage-4 analogues); ``fuzzy`` counts
+                     Stage-4 analogues); ``contain_general`` counts
+                     ``hot_shingles`` (dropped by the df cap),
+                     ``indexed_shingles``; ``fuzzy`` counts
                      ``hot_chunk_buckets``, ``active_chunk_buckets``;
   * ``edges``        every edge with its old endpoints contracted to their
                      prior cluster_id (already the min conv_id of its
@@ -467,6 +469,7 @@ def run_incremental_dedup(
         passes["containment_prefix_new"] = prefix
         backend = containment.MODE_BACKEND[containment_mode]
         if backend is not None:
+            shingle_counts = Counters("hot_shingles", "indexed_shingles")
             passes["containment_pairs_new"] = stage(
                 "contain_general",
                 lambda: containment.general_containment_pairs(
@@ -474,7 +477,9 @@ def run_incremental_dedup(
                     # the prefix leg stored above — don't run its
                     # blocked self-join a second time
                     prefix_pairs=prefix,
+                    shingle_counts=shingle_counts,
                 ),
+                shingle_counts,
             )
     if with_simhash_pass:
         chunk_counts = Counters("hot_chunk_buckets", "active_chunk_buckets")

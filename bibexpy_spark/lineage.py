@@ -329,11 +329,23 @@ class Counters(Observation):
     to a frame inside the stage's plan.  Adaptive execution drops that frame
     from the executed plan when a join side it feeds turns out empty, and
     then nothing is observed: the counters, which count that empty side,
-    read 0."""
+    read 0.  A build whose counters need not be 0 then sets ``recount``, a
+    one-row frame of the same metrics, which is read instead (one extra
+    job, taken only when the frame was dropped)."""
 
     def __init__(self, *names: str) -> None:
         super().__init__()
         self.names = names
+        self.recount: DataFrame | None = None
+
+    @property
+    def get(self) -> dict[str, Any]:
+        try:
+            return super().get
+        except Py4JJavaError:  # dropped frame: an empty observed row
+            if self.recount is not None:
+                return self.recount.first().asDict()
+            return dict.fromkeys(self.names, 0)
 
 
 def _observed(
@@ -350,10 +362,7 @@ def _observed(
     def read() -> dict[str, int]:
         got = dict(obs.get)
         for o in inner:
-            try:
-                got.update(o.get)
-            except Py4JJavaError:  # dropped frame: an empty observed row
-                got.update(dict.fromkeys(o.names, 0))
+            got.update(o.get)
         return {k: int(v or 0) for k, v in got.items()}
 
     return df, read

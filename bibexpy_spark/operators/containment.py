@@ -20,18 +20,19 @@ Two candidate generators:
     shingle hashes, which is closed under subset relations on the low end) —
     scales as an equi-join with per-shingle frequency capping.
 
-Two verify backends over the shingle candidates (same pair set, tested):
+Two verify backends over the shingle candidates (``_verify_with_pos``;
+same pairs and offsets, tested), chosen by ``MODE_BACKEND``:
 
-  * ``shingle_containment_pairs`` — JVM ``contains`` per pair (codegen,
-    no Python; the default);
-  * ``suffix_containment_pairs`` — a real suffix array per OUTER document
+  * ``contains`` — one codegen ``instr`` scan per pair (no Python; the
+    default);
+  * ``suffix_array`` — a real suffix array per OUTER document
     (kernels.suffix_array), probed once per inner candidate; amortizes hot
-    outers and reports the match offset.
+    outers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
@@ -296,6 +297,7 @@ def _oriented_containment_candidates(
     containment_threshold: float,
     max_shingle_freq: int,
     old: DataFrame | None = None,
+    shingle_counts: Observation | None = None,
 ) -> DataFrame:
     """Shared candidate stage for the two general-containment backends:
     candidates by shared sampled shingles, scored by |A∩B| / |A| over FULL
@@ -308,8 +310,10 @@ def _oriented_containment_candidates(
     minima are necessarily present in B's full index, so candidate capture is
     lossless for true containment.  Shingles occurring in more than
     ``max_shingle_freq`` rows are dropped from the index (bounds join
-    fan-out at web scale; the drop/pile-up counts are one job away via
-    :func:`containment_index_stats` — never silent).
+    fan-out at web scale).  Never silent: ``shingle_counts`` observes
+    ``hot_shingles`` (dropped) and ``indexed_shingles`` (distinct shingles
+    before the cap) on the df aggregate, so the counts arrive with the
+    action that computes the pairs.
 
     Delta mode (``old`` given): ``old`` is the quiet prior corpus
     (already minus re-signed rows) and only pairs with >= 1 endpoint in
@@ -338,6 +342,18 @@ def _oriented_containment_candidates(
         base = _base(old, False).unionByName(base)
     index = base.select("conv_id", "_is_new", F.explode("shingles").alias("sh"))
     freq = index.groupBy("sh").agg(F.count("*").alias("df"))
+    if shingle_counts is not None:
+        metrics = (
+            F.coalesce(
+                F.sum((F.col("df") > max_shingle_freq).cast("long")), F.lit(0)
+            ).alias("hot_shingles"),
+            F.count(F.lit(1)).alias("indexed_shingles"),
+        )
+        # adaptive execution drops this frame when no candidate survives
+        # the cap — the case where the hot count matters most — so the
+        # counters then recount it
+        shingle_counts.recount = freq.agg(*metrics)
+        freq = freq.observe(shingle_counts, *metrics)
     index = index.join(freq.filter(F.col("df") <= max_shingle_freq), "sh")
     probe = base.select(
         "conv_id",
@@ -366,14 +382,15 @@ def _oriented_containment_candidates(
         .dropDuplicates(["a_id", "b_id"])
     )
 
-    # explode-join-regroup (the verify.py/ngram.py two-exchange shape, r4
-    # review): each pair's texts + shingle arrays cross ONE exchange in the
-    # regroup, instead of the a-side payload riding through two chained
-    # joins.  The per-side presence guard drops any candidate with an
-    # endpoint missing from base (cannot happen for candidates generated
-    # above; guards future callers against a silent self-containment of
-    # 1.0) without silently dropping pairs when base carries a duplicate
-    # conv_id (a caller bug — a row count of 2 would lose the pair).
+    # explode-join-regroup (r4 review): each pair's texts + shingle arrays
+    # cross ONE exchange in the regroup, instead of the a-side payload
+    # riding through two chained joins (verify.verify_pairs' endpoint-join
+    # chain, whose side table carries no texts).  The per-side presence
+    # guard drops any candidate with an endpoint missing from base (cannot
+    # happen for candidates generated above; guards future callers against
+    # a silent self-containment of 1.0) without silently dropping pairs
+    # when base carries a duplicate conv_id (a caller bug — a row count of
+    # 2 would lose the pair).
     fetched = cand.select(
         "a_id", "b_id", F.explode(F.array("a_id", "b_id")).alias("conv_id")
     ).join(base.select("conv_id", "norm_text", "shingles", "sh_n"), "conv_id")
@@ -416,101 +433,22 @@ def _oriented_containment_candidates(
     )
 
 
-def containment_index_stats(
-    signed: DataFrame, max_shingle_freq: int = 10_000
-) -> DataFrame:
-    """Dropped-shingle metrics for the containment inverted index (the
-    never-silent contract _oriented_containment_candidates promises):
-    ONE row with n_shingles (distinct),
-    n_hot_shingles (df > cap, dropped from the index), n_allhot_rows (rows
-    whose EVERY shingle is hot — invisible to the interior leg; the prefix
-    leg still covers their prefix-anchored pairs), max_df.  Single-job
-    shape: both granularities reduce to one row and cross-join."""
-    ex = signed.select("conv_id", F.explode("shingles").alias("sh"))
-    freq = ex.groupBy("sh").agg(F.count("*").alias("df"))
-    allhot = (
-        ex.join(freq, "sh")
-        .groupBy("conv_id")
-        .agg(F.min("df").alias("_min_df"))
-        .agg(
-            F.sum((F.col("_min_df") > max_shingle_freq).cast("long")).alias(
-                "n_allhot_rows"
-            )
-        )
-    )
-    sh_agg = freq.agg(
-        F.count("*").alias("n_shingles"),
-        F.sum((F.col("df") > max_shingle_freq).cast("long")).alias("n_hot_shingles"),
-        F.max("df").alias("max_df"),
-    )
-    return sh_agg.crossJoin(allhot).select(
-        "n_shingles",
-        F.coalesce("n_hot_shingles", F.lit(0)).alias("n_hot_shingles"),
-        F.coalesce("n_allhot_rows", F.lit(0)).alias("n_allhot_rows"),
-        "max_df",
-    )
-
-
-def shingle_containment_pairs(
-    signed: DataFrame,
-    cfg: DedupConfig,
-    sample_m: int = 16,
-    containment_threshold: float = 0.9,
-    max_shingle_freq: int = 10_000,
-) -> DataFrame:
-    """General substring containment, JVM-verified: the shared candidate
-    stage (see :func:`_oriented_containment_candidates` for the lossless
-    min-m capture argument) followed by a codegen ``contains`` check per
-    pair — the default backend (stays whole-stage-codegen, no Python)."""
-    cand = _oriented_containment_candidates(
-        signed, sample_m, containment_threshold, max_shingle_freq
-    )
-    return (
-        cand.filter(F.col("outer_text").contains(F.col("inner_text")))
-        .select("inner_id", "outer_id")
-        .dropDuplicates(["inner_id", "outer_id"])
-    )
-
-
 _SUFFIX_VERIFY_SCHEMA = "inner_id string, outer_id string, pos bigint"
-
-
-def suffix_containment_pairs(
-    signed: DataFrame,
-    cfg: DedupConfig,
-    sample_m: int = 16,
-    containment_threshold: float = 0.9,
-    max_shingle_freq: int = 10_000,
-) -> DataFrame:
-    """General substring containment, suffix-array-verified — the literal
-    "suffix-array pass" of the north rule.  Same candidate stage as
-    :func:`shingle_containment_pairs` (identical pair set, tested), but
-    verification groups candidates by OUTER document and builds that outer's
-    suffix array ONCE (``kernels.suffix_array``, vectorized prefix doubling),
-    then answers every inner candidate with an O(m log n) leftmost-occurrence
-    binary search (``kernels.sa_find``) inside one Arrow batch.
-
-    When to pick this backend over the JVM ``contains`` default: a hot outer
-    with many inner candidates (the boilerplate pile-up shape) amortizes the
-    build across probes where pairwise ``contains`` rescans the outer per
-    pair; and the verified pairs carry ``pos`` — the first match offset in
-    the outer's normalized text, as a CHARACTER offset (`instr` semantics —
-    the byte offset from the suffix-array probe is converted, so the two
-    backends agree even when the config leaves non-ASCII text in
-    ``norm_text``) — which ``contains`` alone cannot report and which feeds
-    containment lineage/audit.
-    """
-    cand = _oriented_containment_candidates(
-        signed, sample_m, containment_threshold, max_shingle_freq
-    )
-    return _verify_with_pos(cand, "suffix_array")
 
 
 def _verify_with_pos(cand: DataFrame, backend: str) -> DataFrame:
     """Verify oriented candidates, emitting (inner_id, outer_id, pos) with
     pos = leftmost match offset, -1 rows dropped.  ``contains`` = one
-    codegen ``instr`` scan per pair; ``suffix_array`` = per-outer suffix
-    array probed once per inner inside one Arrow batch."""
+    codegen ``instr`` scan per pair; ``suffix_array`` = the literal
+    "suffix-array pass" of the north rule: candidates grouped by OUTER
+    document, whose suffix array (``kernels.suffix_array``, vectorized
+    prefix doubling) is built ONCE and answers every inner candidate with
+    an O(m log n) leftmost-occurrence binary search (``kernels.sa_find``)
+    inside one Arrow batch.  A hot outer with many inner candidates (the
+    boilerplate pile-up shape) amortizes the build where ``instr`` rescans
+    the outer per pair.  ``pos`` is a CHARACTER offset in both backends
+    (the suffix array's byte offset is converted, so they agree even when
+    ``norm_text`` keeps non-ASCII text)."""
     if backend == "contains":
         # instr is 1-based, 0 = absent: one codegen scan yields verify + pos
         return (
@@ -580,6 +518,7 @@ def general_containment_pairs(
     containment_threshold: float = 0.9,
     max_shingle_freq: int = 10_000,
     prefix_pairs: DataFrame | None = None,
+    shingle_counts: Observation | None = None,
 ) -> DataFrame:
     """The COMPLETE containment pass: prefix-anchored pairs (lossless
     equi-join — also covers shingle-less short inners) unioned with interior
@@ -592,7 +531,8 @@ def general_containment_pairs(
     ``prefix_pairs``: the output of :func:`prefix_containment_pairs` over
     the same inputs, when the caller already materialized it (the
     pipeline always does) — passing it avoids executing the prefix-key
-    self-join a second time here.
+    self-join a second time here.  ``shingle_counts`` observes the df cap's
+    counters (see :func:`_oriented_containment_candidates`).
 
     With ``old`` (the prior corpus minus re-signed rows) only the pairs
     with >= 1 endpoint in ``new`` come out, so
@@ -614,8 +554,8 @@ def general_containment_pairs(
     miss (composed ⊇ batch on that side — strictly closer to ground
     truth); a shingle cooling below the cap (mass retraction) can let a
     fresh batch run find an old-old pair the delta ops never re-probe.
-    Both divergences are df-cap capture artifacts, bounded by the same
-    never-silent :func:`containment_index_stats` contract; corpora whose
+    Both divergences are df-cap capture artifacts, never silent: the
+    ``hot_shingles`` counter reports the dropped shingles; corpora whose
     shingle dfs sit near the cap should raise ``max_shingle_freq`` or
     maintain shingle-df state (the 10^12-row note in
     :func:`_oriented_containment_candidates`).
@@ -623,6 +563,7 @@ def general_containment_pairs(
     if prefix_pairs is None:
         prefix_pairs = prefix_containment_pairs(new, cfg, old)
     cand = _oriented_containment_candidates(
-        new, sample_m, containment_threshold, max_shingle_freq, old=old
+        new, sample_m, containment_threshold, max_shingle_freq, old=old,
+        shingle_counts=shingle_counts,
     )
     return _complete_pairs(prefix_pairs, cand, backend)

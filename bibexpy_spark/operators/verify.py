@@ -4,11 +4,6 @@ The reference verifies candidates with staged predicates over normalized
 fields (compute_match, smart_merger.py:243-350); the north rule replaces
 Jaro-Winkler with exact Jaccard on k-shingle sets at a fixed threshold.
 
-Negative rules run FIRST (cheap equality on strong ids rejects a pair before
-any set arithmetic), mirroring negative_rule_check (smart_merger.py:205-240)
-— two records that both carry a strong identifier with different values can
-never match, and never reach the fuzzy path.
-
 The Jaccard itself is computed with built-in array functions
 (``array_intersect`` / set sizes), staying inside whole-stage codegen —
 no Python in the verification hot path at all.
@@ -26,18 +21,17 @@ def verify_pairs(
     pairs: DataFrame,
     signed: DataFrame,
     cfg: DedupConfig,
-    strong_id_col: str | None = None,
 ) -> DataFrame:
-    """pairs(a_id, b_id) x signed(conv_id, shingles[, strong_id]) -> verified pairs.
+    """pairs(a_id, b_id) x signed(conv_id, shingles) -> verified pairs.
 
     Output: a_id, b_id, inter, union_n, jaccard (double), is_dup (bool).
     Threshold comparison is integer cross-multiplication, not float, so the
     result is bit-exact reproducible: inter/union >= t  <=>
     inter * denom >= num * union for t = num/denom.
     """
-    # endpoint-join chain with one shared exchange (r6, same shape and
-    # rationale as ngram.verify_gram_pairs): both endpoint fetches consume
-    # ``side`` through canonically identical projections, so the planner
+    # endpoint-join chain with one shared exchange (a plan shape that
+    # tests/test_plan_properties.py asserts): both endpoint fetches consume
+    # ``signed`` through canonically identical projections, so the planner
     # reuses one exchange (or broadcast) of the array-carrying side table —
     # R + P array shipments for R side rows / P pairs, vs the r3 regroup's
     # R + 2P through its pair-key groupBy shuffle; a hot endpoint lands in
@@ -47,14 +41,11 @@ def verify_pairs(
     # regroup's _nb guard), and a duplicate id in ``signed`` (a caller
     # bug) still verifies the pair, now as duplicated output rows.
     def _side(tag: str) -> DataFrame:
-        cols = [
+        return signed.select(
             F.col("conv_id").alias(f"{tag}_id"),
             F.col("shingles").alias(f"{tag}_sh"),
             F.size("shingles").alias(f"{tag}_n"),
-        ]
-        if strong_id_col:
-            cols.append(F.col(strong_id_col).alias(f"{tag}_strong"))
-        return signed.select(*cols)
+        )
 
     j = (
         pairs.select("a_id", "b_id")
@@ -62,16 +53,6 @@ def verify_pairs(
         .join(_side("a"), "a_id")
         .join(_side("b"), "b_id")
     )
-
-    if strong_id_col:
-        # negative rule: both sides identified, ids differ -> reject early
-        j = j.filter(
-            ~(
-                F.col("a_strong").isNotNull()
-                & F.col("b_strong").isNotNull()
-                & (F.col("a_strong") != F.col("b_strong"))
-            )
-        )
 
     # size-ratio prefilter: jaccard <= min/max; skip pairs that cannot reach
     # the threshold before touching array_intersect (cheap int compare).

@@ -1,9 +1,10 @@
 """Suffix-array containment: kernel vs str.find (the independent check —
 python's own substring search, no shared code), backend equivalence
-(suffix-array verify == JVM contains verify over identical candidates), and
-recall of both general backends against the brute-force containment oracle
-on the fixture corpus (reference analogue: shorter reference string folded
-into the longer on key containment, MergeDB.py:210-278)."""
+(suffix-array verify == JVM instr verify over identical candidates, same
+pairs and offsets), and recall of both general backends against the
+brute-force containment oracle on the fixture corpus (reference analogue:
+shorter reference string folded into the longer on key containment,
+MergeDB.py:210-278)."""
 
 from __future__ import annotations
 
@@ -65,22 +66,36 @@ def _signed(spark, turns_df):
     return udfs.with_signature_columns(conv, CANONICAL, text_col="doc")
 
 
+def _verified(signed, backend, **kw):
+    """The general pass's interior leg as the pipeline runs it: the shared
+    shingle candidates verified by ``backend`` -> {(inner, outer): pos}."""
+    kw = {"sample_m": 16, "containment_threshold": 0.9,
+          "max_shingle_freq": 100_000, **kw}
+    cand = containment._oriented_containment_candidates(signed, **kw)
+    rows = containment._verify_with_pos(cand, backend).collect()
+    got = {(r["inner_id"], r["outer_id"]): r["pos"] for r in rows}
+    assert len(got) == len(rows)  # unique pairs, no dup emissions
+    return got
+
+
+def _both_backends(signed, **kw):
+    """Both verify backends over identical candidates: the same pairs at
+    the same offsets."""
+    via_contains = _verified(signed, "contains", **kw)
+    via_sa = _verified(signed, "suffix_array", **kw)
+    assert via_sa == via_contains
+    return via_sa
+
+
 def test_suffix_backend_equals_contains_backend(spark, turns_df):
     signed = _signed(spark, turns_df)
-    kw = dict(sample_m=16, containment_threshold=0.9, max_shingle_freq=100_000)
-    via_contains = {
-        (r["inner_id"], r["outer_id"])
-        for r in containment.shingle_containment_pairs(signed, CANONICAL, **kw).collect()
-    }
-    sa_rows = containment.suffix_containment_pairs(signed, CANONICAL, **kw).collect()
-    via_sa = {(r["inner_id"], r["outer_id"]) for r in sa_rows}
-    assert via_sa == via_contains
-    assert len(sa_rows) == len(via_sa)  # unique pairs, no dup emissions
+    got = _both_backends(signed)
+    assert got
 
     # pos is the true leftmost offset in the outer's normalized text
     norms = {r["conv_id"]: r["norm_text"] for r in signed.select("conv_id", "norm_text").collect()}
-    for r in sa_rows:
-        assert r["pos"] == norms[r["outer_id"]].find(norms[r["inner_id"]]), r
+    for (inner, outer), pos in got.items():
+        assert pos == norms[outer].find(norms[inner]), (inner, outer, pos)
 
 
 def test_general_backends_cover_oracle_containment(spark, turns_pd, turns_df):
@@ -100,14 +115,8 @@ def test_general_backends_cover_oracle_containment(spark, turns_pd, turns_df):
         if r.inner_id in long_enough
     }
     assert expected, "fixture corpus must exercise the contain class"
-    got = {
-        (r["inner_id"], r["outer_id"])
-        for r in containment.suffix_containment_pairs(
-            signed, CANONICAL, max_shingle_freq=100_000
-        ).collect()
-    }
-    missing = expected - got
-    assert not missing, f"suffix backend missed {len(missing)} oracle pairs: {sorted(missing)[:5]}"
+    missing = expected - set(_both_backends(signed))
+    assert not missing, f"general backends missed {len(missing)} oracle pairs: {sorted(missing)[:5]}"
 
 
 def test_pipeline_general_containment_mode(spark):
@@ -221,13 +230,10 @@ def test_hot_outer_amortization_shape(spark):
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
     )
     signed = _signed(spark, turns)
-    got = containment.suffix_containment_pairs(
-        signed, CANONICAL, containment_threshold=0.8, max_shingle_freq=100_000
-    ).collect()
-    pair_set = {(r["inner_id"], r["outer_id"]) for r in got}
-    assert {(f"in{i}", "out") for i in range(12)} <= pair_set
+    got = _both_backends(signed, containment_threshold=0.8)
+    assert {(f"in{i}", "out") for i in range(12)} <= set(got)
     norm_outer = kernels.normalize_text(pd.Series([outer]), CANONICAL).iloc[0]
-    positions = sorted(r["pos"] for r in got if r["outer_id"] == "out")
+    positions = sorted(pos for (_, o), pos in got.items() if o == "out")
     assert positions[0] == 0 and positions == sorted(set(positions))
     assert all(0 <= p < len(norm_outer) for p in positions)
 
@@ -410,17 +416,41 @@ def test_prefix_leg_lossless_for_short_and_edge_inners(spark):
     assert got_d == want_d
 
 
-def test_containment_index_stats_one_row(spark, turns_df):
-    """The never-silent df-cap contract has a real metrics surface: one row,
-    hot shingles counted against the cap, all-hot rows surfaced."""
+def test_containment_index_stats_one_row(spark, turns_df, tmp_path):
+    """The never-silent df-cap contract: the index's df aggregate observes
+    ``hot_shingles`` (dropped by the cap) and ``indexed_shingles``
+    (distinct, before the cap), equal to a driver-side recount, and the
+    pipeline logs them on its ``contain_general`` stage row."""
+    import json
+    import os
+    from collections import Counter
+
+    from bibexpy_spark import pipeline
+    from bibexpy_spark.lineage import Counters, RunContext
+
     signed = _signed(spark, turns_df)
-    row = containment.containment_index_stats(signed, max_shingle_freq=2).first()
-    assert row["n_shingles"] > 0
-    assert row["n_hot_shingles"] >= 0 and row["max_df"] >= 1
-    none_hot = containment.containment_index_stats(
-        signed, max_shingle_freq=10**9
-    ).first()
-    assert none_hot["n_hot_shingles"] == 0 and none_hot["n_allhot_rows"] == 0
+    df = Counter(
+        sh for r in signed.select("shingles").collect() for sh in r["shingles"]
+    )
+    assert sum(n > 2 for n in df.values()) > 0  # cap 2 really drops some
+    for cap in (2, 10**9):
+        counts = Counters("hot_shingles", "indexed_shingles")
+        containment.general_containment_pairs(
+            signed, CANONICAL, max_shingle_freq=cap, shingle_counts=counts
+        ).collect()
+        assert counts.get == {
+            "hot_shingles": sum(n > cap for n in df.values()),
+            "indexed_shingles": len(df),
+        }
+
+    run = RunContext(spark, CANONICAL, str(tmp_path / "wh"), run_id="cap",
+                     input_token="t")
+    pipeline.run_dedup(spark, turns_df, run=run, with_simhash_pass=False,
+                       containment_mode="general")
+    with open(os.path.join(run.run_dir, "metrics.jsonl")) as f:
+        row = next(m for m in map(json.loads, f) if m["stage"] == "contain_general")
+    assert row["indexed_shingles"] == len(df)
+    assert row["hot_shingles"] == sum(n > 10_000 for n in df.values())
 
 
 def test_prefix_containment_builds_without_driver_jobs(spark):

@@ -88,14 +88,6 @@ def test_simhash_bit_equal():
     assert np.array_equal(eng, gold)
 
 
-def test_winnow_bit_equal():
-    texts = _random_texts(seed=53).fillna("").astype(str).str.lower()
-    eng = kernels.rolling_fingerprints(texts)
-    gold = golden._g_winnow_series(texts)
-    for a, b in zip(eng, gold):
-        assert np.array_equal(np.sort(a), np.sort(b))
-
-
 def test_sha256_bit_equal():
     texts = _random_texts(seed=67).fillna("").astype(str)
     assert kernels.content_sha256(texts).tolist() == golden._g_sha256_series(texts).tolist()

@@ -356,14 +356,16 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
 
 
 def test_containment_df_cap_crossing_divergence_is_bounded_superset(spark):
-    """The containment analogue (operators/containment.py:611-621): a
+    """The containment analogue (the equality boundary in
+    containment.general_containment_pairs' docstring): a
     shingle whose document frequency crosses max_shingle_freq between
     batches hides a previously captured interior pair from a fresh batch
     run — the composed state keeps the backend-verified true pair
-    (superset side), and the crossing is surfaced by
-    containment_index_stats."""
+    (superset side), and the crossing is surfaced by the observed
+    ``hot_shingles`` counter."""
     from bibexpy_spark.config import CANONICAL
     from bibexpy_spark.incremental import compose_pair_state
+    from bibexpy_spark.lineage import Counters
     from bibexpy_spark.operators import containment as ct
 
     schema = "conv_id string, norm_text string, shingles array<long>"
@@ -387,8 +389,11 @@ def test_containment_df_cap_crossing_divergence_is_bounded_superset(spark):
     resigned = spark.createDataFrame([], "conv_id string")
     composed = compose_pair_state(
         prior, delta, resigned, "inner_id", "outer_id")
+    shingle_counts = Counters("hot_shingles", "indexed_shingles")
     batch = ct.general_containment_pairs(
-        old.unionByName(new), CANONICAL, max_shingle_freq=cap)
+        old.unionByName(new), CANONICAL, max_shingle_freq=cap,
+        shingle_counts=shingle_counts,
+    ).localCheckpoint(eager=True)
 
     bat = {(r["inner_id"], r["outer_id"]) for r in batch.collect()}
     comp = {(r["inner_id"], r["outer_id"]) for r in composed.collect()}
@@ -396,7 +401,6 @@ def test_containment_df_cap_crossing_divergence_is_bounded_superset(spark):
     # composed state keeps the verified true pair — superset divergence
     assert ("i1", "o1") not in bat
     assert bat <= comp and ("i1", "o1") in comp
-    # never-silent: the hot shingles are one stats job away
-    stats = ct.containment_index_stats(
-        old.unionByName(new), max_shingle_freq=cap).first()
-    assert stats["n_hot_shingles"] >= 3
+    # never-silent: the counter the batch pass observed shows the crossing
+    # (shingles 1-3 sit in 5 rows, above the cap of 3)
+    assert shingle_counts.get == {"hot_shingles": 3, "indexed_shingles": 8}

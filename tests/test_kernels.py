@@ -186,34 +186,6 @@ def test_count_duplicate_turn_keys(spark, tmp_path):
     prior["cleanup"]()
 
 
-def test_rolling_fingerprints_winnowing_guarantee():
-    """Winnowing contract (Schleimer et al.): two texts sharing a substring
-    of length >= window + k_chars - 1 share at least one fingerprint;
-    identical texts produce identical sets."""
-    import numpy as np
-    import pandas as pd
-
-    from bibexpy_spark.functions import kernels
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    texts = pd.Series([
-        base,
-        base,                                        # identical
-        "zzz prefix " + base[8:40] + " suffix yyy",  # shared 32-char substring
-        "completely unrelated content with no overlap at all whatsoever",
-        "",                                          # empty -> sentinel
-        "tiny",                                      # shorter than k
-    ])
-    fps = kernels.rolling_fingerprints(texts, k_chars=7, window=4)
-    assert np.array_equal(fps[0], fps[1])
-    assert len(np.intersect1d(fps[0], fps[2], assume_unique=True)) >= 1
-    assert len(np.intersect1d(fps[0], fps[3], assume_unique=True)) == 0
-    assert len(fps[4]) == 1 and len(fps[5]) == 1  # sentinels, never empty
-    # density: winnowing keeps ~1/window of the raw hashes
-    raw = len(base) - 7 + 1
-    assert len(fps[0]) <= raw
-
-
 def test_config_rejects_nonpositive_prefix_tokens():
     """containment_prefix_tokens < 1 would collapse every prefix key to ''
     and pair every empty doc with every doc (r4 review)."""

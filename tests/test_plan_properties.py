@@ -53,19 +53,6 @@ def test_exact_groups_narrow_aggregation(spark):
     assert "Window" not in plan  # narrow agg+join replaced the wide window
 
 
-def test_cosine_lsh_has_no_cartesian(spark):
-    """The cosine scale path must be a bucketed equi-join — no
-    CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan
-    (e_cosine_dup_pairs is the brute-force oracle and MAY cross-join;
-    e_cosine_lsh must not)."""
-    from bibexpy_spark.entry_queries.training import e_cosine_lsh
-
-    df = e_cosine_lsh(spark, SF)
-    strategies = inspect.join_strategies(df)
-    assert "CartesianProduct" not in strategies
-    assert "BroadcastNestedLoopJoin" not in strategies
-
-
 def test_apply_splits_broadcasts_assignments(spark):
     """Split assignments are tiny relative to the record table — the apply
     join must broadcast them, not shuffle the records."""
@@ -84,54 +71,56 @@ def test_apply_splits_broadcasts_assignments(spark):
     assert "BroadcastHashJoin" in inspect.join_strategies(out)
 
 
-def test_ngram_index_no_cartesian(spark):
-    from bibexpy_spark.operators import ngram
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    pairs = ngram.gram_jaccard_pairs(d, "doc_id", "text", 3, 1, 2)
-    strategies = inspect.join_strategies(pairs)
-    assert "CartesianProduct" not in strategies
-    assert "BroadcastNestedLoopJoin" not in strategies
-
-
 def test_verify_gram_pairs_chain_reuses_side_exchange(spark):
-    """r6 verify shape: the endpoint-join chain projects ``hashed``
-    canonically identically on both sides, so the planner must REUSE one
-    exchange of the array-carrying side table (R + P array shipments, vs
-    the r3 regroup's R + 2P through its pair-key groupBy) — and the plan
-    must contain no pair-key aggregation shuffling arrays at all."""
-    from bibexpy_spark.operators import ngram
+    """verify_pairs' endpoint-join chain projects ``signed`` canonically
+    identically on both sides, so the planner must REUSE one exchange of
+    the shingle-carrying side table (R + P array shipments, vs the R + 2P
+    of a pair-key regroup) — and the plan must contain no pair-key
+    aggregation shuffling arrays at all."""
+    import numpy as np
 
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    g = ngram.with_grams(d, "doc_id", "text", 3)
-    hashed = g.select(
-        "id",
-        F.array_sort(
-            F.array_distinct(F.transform("grams", lambda s: F.xxhash64(s)))
-        ).alias("gh"),
+    from bibexpy_spark.config import CANONICAL
+    from bibexpy_spark.functions import udfs
+    from bibexpy_spark.operators import lsh, verify as verify_op
+
+    d = spark.read.parquet(f"{SF}/documents.parquet").withColumnRenamed(
+        "doc_id", "conv_id"
     )
+    signed = udfs.with_signature_columns(d, CANONICAL, text_col="text")
     cand = spark.createDataFrame(
         [(1, 2), (2, 5), (3, 9)], "a_id long, b_id long"
     )
 
-    # at fixture scale the optimizer broadcasts `hashed` and hides every
-    # shuffle — disable auto-broadcast so the plan shows its 100-TB shape
+    # at fixture scale the optimizer broadcasts the side table and hides
+    # every shuffle — disable auto-broadcast so the plan shows its scale shape
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        new = ngram.verify_gram_pairs(cand, hashed, 1, 2)
+        new = verify_op.verify_pairs(cand, signed, CANONICAL)
         new.collect()
         plan = new._jdf.queryExecution().executedPlan().toString()
         # one endpoint fetch reuses the other's exchange of the side table
         assert "ReusedExchange" in plan
         # no aggregation anywhere in verify: arrays never cross a pair-key
-        # groupBy shuffle (the r3 regroup's unconditional 2P cost)
+        # groupBy shuffle
         assert "HashAggregate" not in plan and "ObjectHashAggregate" not in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    # and the result is still exact: spot-check one known pair end-to-end
-    out = ngram.gram_jaccard_pairs(d, "doc_id", "text", 3, 1, 2)
-    assert out.count() == 25  # the oracle-checked sf0.01 answer
+    # and the result is still exact: the duplicates among the LSH candidates
+    # equal a driver-side integer recount over the kernel's shingle sets
+    pairs, _ = lsh.candidate_pairs(signed, CANONICAL)
+    got = verify_op.verify_pairs(pairs, signed, CANONICAL).filter("is_dup").count()
+    sets = {
+        r["conv_id"]: np.array(r["shingles"], dtype=np.int64)
+        for r in signed.select("conv_id", "shingles").collect()
+    }
+    t_num, t_den = verify_op._threshold_fraction(CANONICAL.jaccard_threshold)
+    want = 0
+    for r in pairs.collect():
+        a, b = sets[r["a_id"]], sets[r["b_id"]]
+        inter = len(np.intersect1d(a, b))
+        want += inter * t_den >= (len(a) + len(b) - inter) * t_num
+    assert got == want > 0
 
 
 def test_incremental_plan_no_cartesian(spark):
@@ -243,22 +232,6 @@ def test_verify_empty_shingle_pair_is_not_dup(spark):
     }
     assert out["a"][0] is False          # empty-vs-empty: never a dup
     assert out["c"] == (True, 1.0)       # identical non-empty sets still pass
-
-
-def test_gram_verify_empty_arrays_emit_no_pair(spark):
-    """ngram.verify_gram_pairs: empty gram arrays on both sides must not
-    emit a pair via 0 >= 0 (r4 review, same guard class as verify_pairs)."""
-    from bibexpy_spark.operators import ngram
-
-    side = spark.createDataFrame(
-        [("a", []), ("b", []), ("c", [7, 8]), ("d", [7, 8])],
-        "id string, gh array<long>",
-    )
-    cand = spark.createDataFrame(
-        [("a", "b"), ("c", "d")], "a_id string, b_id string"
-    )
-    rows = ngram.verify_gram_pairs(cand, side, 1, 2).collect()
-    assert {(r["a_id"], r["b_id"]) for r in rows} == {("c", "d")}
 
 
 def test_simhash_hot_bucket_star_fallback(spark):

@@ -106,34 +106,6 @@ def test_band_hash_count_and_determinism(vals):
     assert np.array_equal(b1, b2)
 
 
-ascii_word = st.text(alphabet="abcdefghij ", min_size=30, max_size=120)
-
-
-@given(ascii_word, ascii_word, st.integers(min_value=0, max_value=20))
-@settings(max_examples=40, deadline=None)
-def test_rolling_fp_substring_guarantee(a, tail, cut):
-    """Winnowing guarantee under random composition: embedding a long-enough
-    slice of one text inside another always yields a shared fingerprint."""
-    k, w = 7, 4
-    need = w + k - 1
-    sub = a[cut: cut + max(need, 12)]
-    if len(sub) < need:
-        return
-    b = "zzzz " + sub + " qqqq" + tail
-    fps = kernels.rolling_fingerprints(pd.Series([a, b]), k, w)
-    assert len(np.intersect1d(fps[0], fps[1], assume_unique=True)) >= 1
-
-
-@given(st.lists(ascii_word, min_size=1, max_size=10))
-@settings(max_examples=30, deadline=None)
-def test_rolling_fp_batch_equals_single(texts):
-    """Batch-invariance: fingerprints of a row do not depend on its batch."""
-    batch = kernels.rolling_fingerprints(pd.Series(texts))
-    for i, t in enumerate(texts):
-        solo = kernels.rolling_fingerprints(pd.Series([t]))[0]
-        assert np.array_equal(batch[i], solo)
-
-
 @given(
     st.dictionaries(
         st.sampled_from([f"u{i}" for i in range(8)]),

@@ -46,16 +46,12 @@ REFERENCES = {
 # called; it goes together with its own tests (ROADMAP item 4(b)).  The list
 # may only shrink: an entry whose file is gone must leave it.
 PENDING = {
-    PKG / "entry_queries" / "__init__.py",
-    PKG / "entry_queries" / "training.py",
     PKG / "functions" / "bibex_norms.py",
     PKG / "functions" / "c1_address.py",
-    PKG / "functions" / "vector_ops.py",
     PKG / "operators" / "disambiguation.py",
     PKG / "operators" / "entity_blocks.py",
     PKG / "operators" / "filter_spec.py",
     PKG / "operators" / "llm_arbitration.py",
-    PKG / "operators" / "ngram.py",
     PKG / "operators" / "quality.py",
     PKG / "operators" / "records.py",
     PKG / "operators" / "smart_merge.py",
