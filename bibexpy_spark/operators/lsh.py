@@ -22,10 +22,20 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
+
+
+def bucket_counters(counter: str) -> tuple[Column, Column]:
+    """Aggregates over a bucket ``sizes`` frame: ``hot_<counter>`` (star-mode
+    buckets) and ``active_<counter>`` (buckets of size >= 2)."""
+    return (
+        F.coalesce(F.sum(F.col("star_mode").cast("long")), F.lit(0))
+        .alias(f"hot_{counter}"),
+        F.count(F.lit(1)).alias(f"active_{counter}"),
+    )
 
 
 def bucket_pairs(
@@ -61,9 +71,9 @@ def bucket_pairs(
     (``min_by`` on the id), so the star is a filter over the member rows —
     no window, no second join.  Nothing is persisted.
 
-    ``bucket_counts`` observes ``hot_<counter>`` (star-mode buckets) and
-    ``active_<counter>`` (buckets of size >= 2) on the bucket aggregate, so
-    the counters arrive with the action that computes ``pairs``.
+    ``bucket_counts`` observes :func:`bucket_counters` on the bucket
+    aggregate, so the counters arrive with the action that computes
+    ``pairs``; the returned ``sizes`` is not observed.
     """
     keys, carry = list(keys), list(carry)
     rows = keyed.select(
@@ -85,14 +95,10 @@ def bucket_pairs(
         .filter(F.col("bucket_n") >= 2)
         .withColumn("star_mode", F.col("bucket_n") > cap)
     )
+    observed = sizes
     if bucket_counts is not None:
-        sizes = sizes.observe(
-            bucket_counts,
-            F.coalesce(F.sum(F.col("star_mode").cast("long")), F.lit(0))
-            .alias(f"hot_{counter}"),
-            F.count(F.lit(1)).alias(f"active_{counter}"),
-        )
-    members = rows.join(sizes, keys)
+        observed = sizes.observe(bucket_counts, *bucket_counters(counter))
+    members = rows.join(observed, keys)
 
     # small buckets: each new member x against every co-member y; when both
     # are new only the x < y orientation is kept, so a pair appears once

@@ -15,11 +15,12 @@ path).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
 from bibexpy_spark.functions import udfs
+from bibexpy_spark.lineage import Counters
 from bibexpy_spark.operators import lsh
 
 
@@ -68,7 +69,7 @@ def _chunk_pairs(
     chunks: DataFrame,
     cfg: DedupConfig,
     new_col: str | None = None,
-    bucket_counts: Observation | None = None,
+    bucket_counts: Counters | None = None,
 ) -> DataFrame:
     """The chunk equi-join under the shared skew policy (lsh.bucket_pairs):
     a hot (chunk_idx, chunk_val) bucket — e.g. 100k boilerplate docs all
@@ -79,11 +80,17 @@ def _chunk_pairs(
     ``bucket_counts`` observes ``hot_chunk_buckets`` and
     ``active_chunk_buckets``, which the pipeline logs on its ``fuzzy``
     stage)."""
-    return lsh.bucket_pairs(
+    pairs, sizes = lsh.bucket_pairs(
         chunks, ("chunk_idx", "chunk_val"), cfg.hot_chunk_cap,
         new_col=new_col, carry=("simhash",), bucket_counts=bucket_counts,
         counter="chunk_buckets",
-    )[0]
+    )
+    if bucket_counts is not None:
+        # when no chunk-bucket pair is within the radius, adaptive execution
+        # drops the observed bucket aggregate, though buckets (even hot
+        # ones) exist: the counters then recount them from ``sizes``
+        bucket_counts.recount = sizes.agg(*lsh.bucket_counters("chunk_buckets"))
+    return pairs
 
 
 def _within_radius(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -103,7 +110,7 @@ def simhash_pairs(
     new: DataFrame,
     cfg: DedupConfig,
     old: DataFrame | None = None,
-    bucket_counts: Observation | None = None,
+    bucket_counts: Counters | None = None,
 ) -> DataFrame:
     """(conv_id, simhash) -> pairs (a_id, b_id, hamming) within the radius.
 

@@ -76,26 +76,27 @@ def recover_pending_swap(state_dir: str) -> bool:
     the swap is always safe: any listed path whose ``.tmp`` still exists is
     committed (a missing tmp means that table's os.replace already ran),
     the staged remap delta is folded, the batch's committed marker is
-    written, and the intent is removed last.  Idempotent — called on stream
-    start and before every batch, it closes the crash window between the
-    individual table commits: state is never left mixed old/new for a
-    checkpoint replay to compute against (ADVICE r3 follow-up; a crash
-    BEFORE the intent write simply discards the tmps and the replay
-    recomputes the batch against the untouched prior state).
+    written, and the intent is removed last.  It is the one commit path: a
+    batch calls it right after writing its intent, and it is idempotent —
+    called again on stream start and before every batch, it closes the
+    crash window between the individual table commits: state is never left
+    mixed old/new for a checkpoint replay to compute against (ADVICE r3
+    follow-up; a crash BEFORE the intent write simply discards the tmps and
+    the replay recomputes the batch against the untouched prior state).
 
     Returns True when a pending swap was completed.
     """
     intent = os.path.join(state_dir, "_swap_intent")
     if not os.path.exists(intent):
         return False
-    import json
-
     with open(intent) as fh:
         info = json.load(fh)
     batch_id = info["batch_id"]
     for path in info["paths"]:
         if os.path.exists(path + ".tmp"):
             _commit(path)
+    # fold the staged remap delta into the flat append-only audit dir under
+    # batch-unique names (replays overwrite, never duplicate)
     remap_tmp = os.path.join(state_dir, f"_remap_delta_{batch_id}")
     if os.path.exists(remap_tmp):
         remaps_p = os.path.join(state_dir, "remaps")
@@ -196,7 +197,6 @@ def foreach_batch_incremental_dedup(
     )
     signed_p = os.path.join(state_dir, "signed")
     turns_p = os.path.join(state_dir, "turns")
-    remaps_p = os.path.join(state_dir, "remaps")
     marker_dir = os.path.join(state_dir, "_committed")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -262,25 +262,11 @@ def foreach_batch_incremental_dedup(
                 "overwrite"
             ).parquet(remap_tmp)
             # every tmp is now fully on disk: publish the write-ahead intent,
-            # THEN swap.  A crash anywhere from here to the intent removal is
-            # rolled FORWARD by recover_pending_swap (start of handle / stream
-            # start) — the state can never be read mixed old/new by a replay
+            # THEN swap through the same roll-forward a restart runs, so a
+            # crash anywhere before the intent removal completes the same
+            # way and the state can never be read mixed old/new by a replay
             _write_intent(state_dir, batch_id, swap_paths)
-            for path in swap_paths:
-                _commit(path)
-            # fold the staged remap delta into the flat append-only audit dir
-            # under batch-unique names (replays overwrite, never duplicate)
-            os.makedirs(remaps_p, exist_ok=True)
-            for fn in sorted(os.listdir(remap_tmp)):
-                if fn.endswith(".parquet"):
-                    os.replace(
-                        os.path.join(remap_tmp, fn),
-                        os.path.join(remaps_p, f"batch{batch_id}-{fn}"),
-                    )
-            shutil.rmtree(remap_tmp)
-            os.makedirs(marker_dir, exist_ok=True)
-            open(marker, "w").close()
-            os.remove(os.path.join(state_dir, "_swap_intent"))
+            recover_pending_swap(state_dir)
         finally:
             # release the run's persisted frames even when staging or
             # commit raises — a foreachBatch retry would otherwise stack

@@ -311,7 +311,8 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
     within-radius pair captured while the bucket was sub-cap (Hamming-
     verified true positives, strictly closer to ground truth than the
     batch star); (c) the crossing is surfaced by the observed
-    ``hot_chunk_buckets`` counter."""
+    ``hot_chunk_buckets`` counter, (d) which counts the buckets even when
+    no pair survives the Hamming verify."""
     from dataclasses import replace
 
     from bibexpy_spark.config import CANONICAL
@@ -353,6 +354,15 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
         "hot_chunk_buckets": cfg.simhash_chunks,
         "active_chunk_buckets": cfg.simhash_chunks,
     }
+    # (d) ... also when no bucket pair passes the verify: two rows share
+    # only chunk 0 at Hamming distance 47, so the pass yields nothing and
+    # adaptive execution drops the observed bucket aggregate
+    far = spark.createDataFrame(
+        [("c1", 0x1234), ("c2", 0x7FFF_FFFF_FFFF_1234)], "conv_id string, simhash long"
+    )
+    far_counts = Counters("hot_chunk_buckets", "active_chunk_buckets")
+    assert sh.simhash_pairs(far, cfg, bucket_counts=far_counts).collect() == []
+    assert far_counts.get == {"hot_chunk_buckets": 0, "active_chunk_buckets": 1}
 
 
 def test_containment_df_cap_crossing_divergence_is_bounded_superset(spark):

@@ -1,12 +1,11 @@
-"""Tests for quality metrics, versioned record mutations and the enrichment
-pattern."""
+"""Tests for versioned record mutations and the enrichment pattern."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from bibexpy_spark.operators import quality, records
+from bibexpy_spark.operators import records
 from bibexpy_spark.sources import enrichment
 
 
@@ -20,21 +19,6 @@ def biblio(spark):
     return spark.createDataFrame(
         rows, ["UID", "TI", "AU", "PY", "SO", "DI", "AB", "TC"]
     )
-
-
-def test_fill_rates(biblio):
-    row = quality.fill_rates(biblio, ["TI", "PY", "DI", "AB", "TC"]).first()
-    assert row["total"] == 3
-    assert row["filled_TI"] == 2
-    assert row["filled_PY"] == 2  # 'NAN' counts as empty
-    assert row["filled_DI"] == 2
-
-
-def test_health_score_weighted(biblio):
-    row = quality.health_score(biblio).first()
-    # manual: weights TI3 AU3 PY3 SO3 DI2 AB2 TC1 present
-    expected = (3 * 2 / 3 + 3 * 3 / 3 + 3 * 2 / 3 + 3 * 3 / 3 + 2 * 2 / 3 + 2 * 2 / 3 + 1 * 2 / 3) / 17
-    assert row["health_score"] == pytest.approx(expected, abs=1e-6)
 
 
 def test_versioned_delete_update(spark, biblio, tmp_path):

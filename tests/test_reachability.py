@@ -42,9 +42,9 @@ REFERENCES = {
     PKG / "plans" / "inspect.py",
 }
 
-# bibliographic and training code that only the removed 50-query contract
-# called; it goes together with its own tests (ROADMAP item 4(b)).  The list
-# may only shrink: an entry whose file is gone must leave it.
+# bibliographic code that only the removed 50-query contract called; it
+# goes together with its own tests (ROADMAP item 4(b)).  The list may only
+# shrink: an entry whose file is gone must leave it.
 PENDING = {
     PKG / "functions" / "bibex_norms.py",
     PKG / "functions" / "c1_address.py",
@@ -52,18 +52,10 @@ PENDING = {
     PKG / "operators" / "entity_blocks.py",
     PKG / "operators" / "filter_spec.py",
     PKG / "operators" / "llm_arbitration.py",
-    PKG / "operators" / "quality.py",
     PKG / "operators" / "records.py",
     PKG / "operators" / "smart_merge.py",
-    PKG / "sinks" / "__init__.py",
-    PKG / "sinks" / "exporters.py",
     PKG / "sources" / "__init__.py",
     PKG / "sources" / "enrichment.py",
-    PKG / "sources" / "scopus.py",
-    PKG / "sources" / "wos.py",
-    PKG / "training" / "__init__.py",
-    PKG / "training" / "ml_enrich.py",
-    PKG / "training" / "multimodal.py",
 }
 
 
