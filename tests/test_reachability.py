@@ -50,7 +50,6 @@ PENDING = {
     PKG / "functions" / "c1_address.py",
     PKG / "operators" / "disambiguation.py",
     PKG / "operators" / "entity_blocks.py",
-    PKG / "operators" / "filter_spec.py",
     PKG / "operators" / "llm_arbitration.py",
     PKG / "operators" / "records.py",
     PKG / "operators" / "smart_merge.py",
