@@ -1,7 +1,6 @@
 """Entity-standardization proposal builders: affiliation blocks, author
-splits (detect + apply), country blocks, org rollup, borderline decide —
-reference-semantics fixtures (blocking.py:286-583, pipeline.py:884-975,
-smart_merger.py:887-989)."""
+splits (detect + apply), country blocks, org rollup — reference-semantics
+fixtures (blocking.py:286-583, pipeline.py:884-975)."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from bibexpy_spark.operators import entity_blocks as eb
-from bibexpy_spark.operators import smart_merge as sm
 
 
 # ---------------------------------------------------------------------------
@@ -97,6 +95,27 @@ def test_apply_author_splits(split_df, spark):
     assert splits2.filter(F.col("norm") == "zipf a").count() == 0
 
 
+def test_apply_splits_covers_all_spellings(spark):
+    """Norm-matched rewrite (code-review r2 finding): a record whose token is
+    spelled differently ('Smith, J' vs 'Smith J') must still get its suffix,
+    with its ORIGINAL spelling preserved."""
+    rows = [
+        ("u1", "Smith J", "Physics", ""),
+        ("u2", "Smith, J", "Physics", ""),
+        ("u3", "Smith J.", "Biology", ""),
+    ]
+    df = spark.createDataFrame(rows, ["UID", "AU", "WC", "SC"])
+    splits = eb.author_split_proposals(df)
+    zipf = splits.toPandas()
+    assert len(zipf) == 2  # one 2-group split on norm 'smith j'
+    out = eb.apply_author_splits(df, splits, id_col="UID").toPandas()
+    by_uid = dict(zip(out["UID"], out["AU"]))
+    # biology singleton gets the suffix regardless of which group is largest
+    suffixed = [v for v in by_uid.values() if "(b)" in v]
+    assert len(suffixed) == 1
+    assert by_uid["u3"] == "Smith J. (b)"  # original spelling kept
+
+
 # ---------------------------------------------------------------------------
 # country blocks + standardize apply
 # ---------------------------------------------------------------------------
@@ -148,134 +167,3 @@ def test_org_rollup_blocks_and_apply(spark):
     rolled = eb.apply_org_rollup(df).toPandas().set_index("UID")["C1"]
     assert rolled["r1"] == "Harvard Univ, United States"
     assert rolled["r4"] == "Unparseable Place, Nowhere"  # raw passthrough
-
-
-# ---------------------------------------------------------------------------
-# borderline decide
-# ---------------------------------------------------------------------------
-
-def test_decide_borderline_roundtrip(spark, tmp_path):
-    from bibexpy_spark.operators.records import VersionedTable
-
-    wos = spark.createDataFrame(
-        [{"AU": "Gray, B.", "TI": "Measuring shuffle skew in engines",
-          "SO": "J Y", "PY": "2022", "DI": "", "TC": "1"}]
-    )
-    scp = spark.createDataFrame(
-        [{"AU": "Gray, Bob", "TI": "Measured shuffling skews with big engines",
-          "SO": "J Y", "PY": "2022", "DI": "10.5/scp.gray", "TC": "2"}]
-    )
-    res = sm.run_smart_merge(wos, scp)
-    b = res["borderline"]
-    assert b.count() == 1
-    # assembled dataset: merged (none) + lost rows from both sides
-    shared = ["AU", "TI", "SO", "PY", "DI", "TC"]
-    dataset = res["lost_wos"].select(*shared).unionByName(
-        res["lost_scopus"].select(*shared)
-    )
-    assert dataset.count() == 2
-
-    pair = b.select("w_id", "s_id").first()
-    decisions = spark.createDataFrame(
-        [(pair["w_id"], pair["s_id"], "accept")], ["w_id", "s_id", "decision"]
-    )
-    table = VersionedTable(spark, str(tmp_path / "ds"))
-    table.write(dataset)
-    out = sm.decide_borderline(dataset, b, decisions, table=table)
-    new = out["dataset"].toPandas()
-    assert len(new) == 1                      # the Scopus row dropped
-    assert new.iloc[0]["TI"].startswith("Measuring")
-    assert table.current_version() == 2       # pre-mutation snapshot retained
-    assert table.read(1).count() == 2
-    audit = out["audit"].toPandas()
-    assert audit.iloc[0]["effective"] == "accept"
-
-
-def test_decide_borderline_doi_guard(spark):
-    """A queued pair whose DOIs conflict can never be applied — even by a
-    direct accept decision (reference apply-layer guard)."""
-    import pandas as pd
-
-    borderline = spark.createDataFrame(
-        pd.DataFrame(
-            [{"w_id": "w1", "s_id": "s1", "confidence": 0.8, "_title_jw": 0.85,
-              "wTI": "t", "sTI": "t2", "wDI": "10.1/a", "sDI": "10.1/b"}]
-        )
-    )
-    dataset = spark.createDataFrame(
-        [("keepme", "10.1/b")], ["TI", "DI"]
-    )
-    decisions = spark.createDataFrame(
-        [("w1", "s1", "accept")], ["w_id", "s_id", "decision"]
-    )
-    out = sm.decide_borderline(dataset, borderline, decisions)
-    assert out["dataset"].count() == 1        # nothing dropped
-    audit = out["audit"].first()
-    assert audit["doi_guarded"] and audit["effective"] == "blocked"
-
-
-def test_apply_splits_covers_all_spellings(spark):
-    """Norm-matched rewrite (code-review r2 finding): a record whose token is
-    spelled differently ('Smith, J' vs 'Smith J') must still get its suffix,
-    with its ORIGINAL spelling preserved."""
-    rows = [
-        ("u1", "Smith J", "Physics", ""),
-        ("u2", "Smith, J", "Physics", ""),
-        ("u3", "Smith J.", "Biology", ""),
-    ]
-    df = spark.createDataFrame(rows, ["UID", "AU", "WC", "SC"])
-    splits = eb.author_split_proposals(df)
-    zipf = splits.toPandas()
-    assert len(zipf) == 2  # one 2-group split on norm 'smith j'
-    out = eb.apply_author_splits(df, splits, id_col="UID").toPandas()
-    by_uid = dict(zip(out["UID"], out["AU"]))
-    # biology singleton gets the suffix regardless of which group is largest
-    suffixed = [v for v in by_uid.values() if "(b)" in v]
-    assert len(suffixed) == 1
-    assert by_uid["u3"] == "Smith J. (b)"  # original spelling kept
-
-
-def test_decide_borderline_row_identity_drop(spark):
-    """With _row_id in the dataset, accept drops the exact Scopus ROW — a
-    DOI-less Scopus row still applies, and a merged row sharing the DOI is
-    never collateral (code-review r2 finding)."""
-    import pandas as pd
-
-    borderline = spark.createDataFrame(
-        pd.DataFrame(
-            [{"w_id": "w1", "s_id": "s1", "confidence": 0.8, "_title_jw": 0.85,
-              "wTI": "a", "sTI": "b", "wDI": "", "sDI": ""}]
-        )
-    )
-    dataset = spark.createDataFrame(
-        [("w1", "keep wos", ""), ("s1", "drop scopus", ""),
-         ("m1", "merged row", "10.1/shared")],
-        ["_row_id", "TI", "DI"],
-    )
-    decisions = spark.createDataFrame(
-        [("w1", "s1", "accept")], ["w_id", "s_id", "decision"]
-    )
-    out = sm.decide_borderline(dataset, borderline, decisions)
-    left = {r["_row_id"] for r in out["dataset"].collect()}
-    assert left == {"w1", "m1"}  # exactly the Scopus row dropped
-    assert out["audit"].first()["effective"] == "accept"
-
-
-def test_decide_borderline_doiless_noop_audited(spark):
-    """DOI-keyed fallback (no _row_id): a DOI-less accept cannot apply and
-    must be audited as accept_noop, never silently claimed."""
-    import pandas as pd
-
-    borderline = spark.createDataFrame(
-        pd.DataFrame(
-            [{"w_id": "w1", "s_id": "s1", "confidence": 0.8, "_title_jw": 0.85,
-              "wTI": "a", "sTI": "b", "wDI": "", "sDI": ""}]
-        )
-    )
-    dataset = spark.createDataFrame([("x", "10.9/z")], ["TI", "DI"])
-    decisions = spark.createDataFrame(
-        [("w1", "s1", "accept")], ["w_id", "s_id", "decision"]
-    )
-    out = sm.decide_borderline(dataset, borderline, decisions)
-    assert out["dataset"].count() == 1
-    assert out["audit"].first()["effective"] == "accept_noop"

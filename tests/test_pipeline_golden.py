@@ -40,7 +40,7 @@ def test_dup_pair_recall_and_precision(result, golden):
 
 def test_negative_controls_not_clustered(result):
     """border-class conversations must NOT share a cluster with their base
-    (reference control-pair style, test_smart_merge.py:60-67)."""
+    (reference control-pair style, apps/api/tests/test_smart_merge.py:60-67)."""
     cl = result["clusters"].toPandas()
     lookup = dict(zip(cl.conv_id, cl.cluster_id))
     borders = [c for c in lookup if c.endswith("_border")]

@@ -51,8 +51,6 @@ PENDING = {
     PKG / "operators" / "disambiguation.py",
     PKG / "operators" / "entity_blocks.py",
     PKG / "operators" / "llm_arbitration.py",
-    PKG / "operators" / "records.py",
-    PKG / "operators" / "smart_merge.py",
     PKG / "sources" / "__init__.py",
     PKG / "sources" / "enrichment.py",
 }
