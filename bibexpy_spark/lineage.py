@@ -29,17 +29,27 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Any
+from urllib.parse import unquote
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
+
+
+def local_path(p: str) -> str:
+    """The local path a ``file:`` URI names (``file:/x`` or ``file:///x``,
+    percent-escapes decoded, the form ``DataFrame.inputFiles()`` lists);
+    any other string unchanged."""
+    m = re.match(r"file:/+", p)
+    return "/" + unquote(p[m.end():]) if m else p
 
 
 def input_token_for_paths(*paths: str, content_hash: bool = False) -> str:
@@ -67,7 +77,7 @@ def input_token_for_paths(*paths: str, content_hash: bool = False) -> str:
         return f"{fp}:{st.st_size}:{h.hexdigest()}"
 
     parts = []
-    for p in sorted(paths):
+    for p in sorted(map(local_path, paths)):
         if os.path.isdir(p):
             # recursive walk: a PARTITIONED table (key=val/ subdirs) must
             # token its leaf files — the one-level listdir this replaced

@@ -20,43 +20,16 @@ from pyspark.sql import functions as F
 TURN_SEP = "\n"
 
 
-def assemble_conversations(turns: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, role, text, tool, ts) -> one row per conv_id.
-
-    Output: conv_id, n_turns, doc (ordered text concat), roles, tools,
-    first_ts, last_ts, turns (ordered array of structs, kept for the
-    per-turn equality invariant / explode-back).
-    """
-    return (
-        turns.groupBy("conv_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("turn_idx", "role", "text", "tool", "ts"))
-            ).alias("turns"),
-            F.count("*").alias("n_turns"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-        # field extraction over the struct array (GetArrayStructFields) is
-        # codegen-native; transform()/filter() lambdas are HigherOrderFunctions
-        # (CodegenFallback -> interpreted path, the gram-stage cliff class).
-        # concat_ws skips null elements and array_remove drops empty strings,
-        # reproducing the old filter(x -> x is not null and x != '') exactly.
-        .withColumn("doc", F.array_join(F.col("turns.text"), TURN_SEP))
-        .withColumn("roles", F.array_join(F.col("turns.role"), " "))
-        .withColumn("tools", F.concat_ws(" ", F.array_remove(F.col("turns.tool"), "")))
-    )
-
-
 def assemble_docs(
     turns: DataFrame,
     include_roles_tools: bool = False,
     duplicate_keys: Observation | None = None,
 ) -> DataFrame:
-    """Lean assembly for the dedup hot path: aggregates only (turn_idx,
-    text[, role, tool]) instead of the full turn structs — the map-side
-    partial aggregates and the shuffle carry exactly what downstream needs.
-    Ordering guarantee identical to :func:`assemble_conversations`.
+    """(conv_id, turn_idx, text[, role, tool]) -> one row per conv_id with
+    ``doc``, the turn texts joined in turn order (and ``roles``/``tools``
+    with ``include_roles_tools``).  Only those fields enter the aggregate,
+    so the map-side partial aggregates and the shuffle carry exactly what
+    downstream needs.
 
     ``duplicate_keys`` observes ``duplicate_turn_keys``: the number of
     (conv_id, turn_idx) keys appearing more than once.  ``turn_idx`` is the
@@ -66,14 +39,10 @@ def assemble_docs(
     surfaced instead of failing silently — on the aggregate this function
     already runs, no extra scan.
     """
-    # sort key = (turn_idx, role, text, tool) ALWAYS — the same tiebreak
-    # prefix assemble_conversations uses — so a duplicate-turn_idx corpus
-    # assembles the SAME doc through both paths (r4 review: a lean
-    # (turn_idx, text) struct broke ties text-first and produced a
-    # different doc/content_sha than the invariant surface; the ts field
-    # can still differ as a final tiebreak there, but rows tying on all
-    # four keys render identical text either way).  role/tool ride the
-    # shuffle even in the lean path: a few bytes next to the text column.
+    # sort key = (turn_idx, role, text, tool) ALWAYS, so a duplicate-turn_idx
+    # corpus assembles the same doc with or without roles/tools requested
+    # (a lean (turn_idx, text) struct would break ties text-first).  role/tool
+    # ride the shuffle even in the lean path: a few bytes next to the text.
     # A minimal (conv_id, turn_idx, text) frame — e.g. a foreachBatch
     # source without role/tool — still assembles: missing columns enter
     # the struct as '' so the sort key degrades to (turn_idx, text) and
@@ -98,7 +67,10 @@ def assemble_docs(
             F.coalesce(F.sum(F.size(F.array_distinct(repeated))), F.lit(0))
             .alias("duplicate_turn_keys"),
         )
-    # codegen-native field extraction, same rationale as assemble_conversations
+    # field extraction over the struct array (GetArrayStructFields) is
+    # codegen-native; transform()/filter() lambdas are HigherOrderFunctions
+    # (CodegenFallback -> interpreted path).  concat_ws skips null elements
+    # and array_remove drops empty strings.
     out = agg.withColumn("doc", F.array_join(F.col("_t.text"), TURN_SEP))
     if include_roles_tools:
         out = out.withColumn(
@@ -108,17 +80,3 @@ def assemble_docs(
         )
     return out.drop("_t")
 
-
-def explode_back(conversations: DataFrame) -> DataFrame:
-    """Inverse of assembly for the invariant test: conversation rows ->
-    (conv_id, turn_idx, role, text, tool, ts) turn rows."""
-    return conversations.select(
-        "conv_id", F.explode("turns").alias("t")
-    ).select(
-        "conv_id",
-        F.col("t.turn_idx").alias("turn_idx"),
-        F.col("t.role").alias("role"),
-        F.col("t.text").alias("text"),
-        F.col("t.tool").alias("tool"),
-        F.col("t.ts").alias("ts"),
-    )

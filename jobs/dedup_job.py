@@ -106,6 +106,7 @@ def main(argv: list[str] | None = None) -> None:
         ap.error("--input and --output are required (or use --make-zip)")
 
     from bibexpy_spark.incremental import check_pass_options
+    from bibexpy_spark.lineage import RunContext, input_token_for_paths, local_path
 
     edges = tuple(e for e in args.cluster_edges.split(",") if e)
     try:
@@ -128,11 +129,7 @@ def main(argv: list[str] | None = None) -> None:
         # a file:// scheme names the same local path realpath sees —
         # strip it first so mixed forms (--output file:///x/out vs
         # --prior-state /x/out) cannot evade the guard
-        import re as _re
-
-        m = _re.match(r"^file:/+", p)
-        if m:
-            p = "/" + p[m.end():]
+        p = local_path(p)
         return p.rstrip("/") if "://" in p else os.path.realpath(p)
 
     out_n = _norm(args.output)
@@ -157,7 +154,6 @@ def main(argv: list[str] | None = None) -> None:
 
     from bibexpy_spark import incremental
     from bibexpy_spark.config import CANONICAL
-    from bibexpy_spark.lineage import RunContext, input_token_for_paths
 
     turns = (
         spark.table(args.input) if args.table else spark.read.parquet(args.input)
@@ -167,7 +163,9 @@ def main(argv: list[str] | None = None) -> None:
         # plan-shaping flags ride the freshness token: a stage manifest is
         # only fresh when config, inputs AND flag set all match — otherwise a
         # resume after toggling e.g. --no-simhash would wrongly skip the
-        # sign stage whose output schema the toggle changed.  The prior
+        # sign stage whose output schema the toggle changed.  The input is
+        # tokened by the files its scan reads, so a --table run sees a
+        # rewritten table as it sees a rewritten parquet --input.  The prior
         # state and turns are inputs too, so a bootstrap run and a delta
         # over the same --input never share a stage.
         flag_token = (
@@ -175,9 +173,8 @@ def main(argv: list[str] | None = None) -> None:
             f"|contain={int(args.containment)}:{args.containment_mode}"
             f"|edges={','.join(sorted(edges))}"
         )
-        paths = [] if args.table else [args.input]
-        paths += [p for p in (args.prior_state, args.prior_turns) if p]
-        token = (input_token_for_paths(*paths) if paths else "") + flag_token
+        priors = [p for p in (args.prior_state, args.prior_turns) if p]
+        token = input_token_for_paths(*turns.inputFiles(), *priors) + flag_token
         run = RunContext(
             spark, cfg=CANONICAL, warehouse=args.run_dir,
             run_id=args.run_id, input_token=token,

@@ -96,7 +96,7 @@ def test_apply_author_splits(split_df, spark):
 
 
 def test_apply_splits_covers_all_spellings(spark):
-    """Norm-matched rewrite (code-review r2 finding): a record whose token is
+    """Norm-matched rewrite: a record whose token is
     spelled differently ('Smith, J' vs 'Smith J') must still get its suffix,
     with its ORIGINAL spelling preserved."""
     rows = [

@@ -184,13 +184,10 @@ def test_assembly_projection_is_codegen_native(spark):
 
     path = corpus.corpus_path_for_sf("/root/testdata/sf0.001")
     turns = spark.read.parquet(path)
-    for df in (
-        assembly.assemble_conversations(turns),
-        assembly.assemble_docs(turns, include_roles_tools=True),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "transform(" not in plan, plan
-        assert "lambdafunction" not in plan, plan
+    df = assembly.assemble_docs(turns, include_roles_tools=True)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "transform(" not in plan, plan
+    assert "lambdafunction" not in plan, plan
 
 
 def test_assemble_docs_accepts_minimal_turn_schema(spark):

@@ -159,12 +159,14 @@ def test_input_change_invalidates_checkpoints(spark, turns_df, warehouse):
 
 
 def test_input_token_fingerprints_files(tmp_path):
-    p = tmp_path / "x.parquet"
+    p = tmp_path / "x y.parquet"
     p.write_bytes(b"abc")
     t1 = input_token_for_paths(str(p))
     p.write_bytes(b"abcd")
     t2 = input_token_for_paths(str(p))
     assert t1 != t2
+    # a file: URI, as DataFrame.inputFiles() lists it, names the same file
+    assert input_token_for_paths(p.as_uri()) == t2
 
 
 def test_manifests_carry_partition_lineage(spark, tmp_path):

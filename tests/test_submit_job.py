@@ -244,7 +244,9 @@ def test_spark_submit_prior_state_alone_folds_the_delta(tmp_path):
 def test_spark_submit_incremental_resume(tmp_path):
     """--run-dir on a delta run: a second run with the same run dir
     skips every delta stage and writes identical clusters; a different
-    --prior-state invalidates the stages."""
+    --prior-state invalidates the stages.  With --table the input is
+    tokened by the files its scan reads: a relaunch after the table was
+    rewritten recomputes and equals a fresh run over the new turns."""
     import shutil
 
     import duckdb
@@ -310,6 +312,23 @@ def test_spark_submit_incremental_resume(tmp_path):
     third = rows3[len(rows2):]
     assert third and not any(x["skipped"] for x in third)
     assert clusters(out3) == clusters(out1)
+
+    table_dir = tmp_path / "turns_table"
+    table_metrics = os.path.join(run_dir, "tbl", "metrics.jsonl")
+
+    def table_run(turns, out):
+        shutil.rmtree(table_dir, ignore_errors=True)
+        table_dir.mkdir()
+        shutil.copy(turns, table_dir / "part-0.parquet")
+        r = submit(["--table", "--input", f"parquet.`{table_dir}`",
+                    "--output", out, "--run-dir", run_dir, "--run-id", "tbl"])
+        assert r.returncode == 0, r.stderr[-3000:]
+        return [json.loads(x) for x in open(table_metrics)]
+
+    rows_t1 = table_run(new_p, str(tmp_path / "out_t1"))
+    rows_t2 = table_run(old_p, str(tmp_path / "out_t2"))
+    assert not any(x.get("skipped") for x in rows_t2[len(rows_t1):])
+    assert clusters(str(tmp_path / "out_t2")) == clusters(out_old)
 
 
 def test_incremental_refuses_in_place_state_overwrite(tmp_path):
