@@ -50,6 +50,7 @@ PENDING = {
     PKG / "functions" / "c1_address.py",
     PKG / "operators" / "disambiguation.py",
     PKG / "operators" / "entity_blocks.py",
+    PKG / "operators" / "filter_spec.py",
     PKG / "operators" / "llm_arbitration.py",
     PKG / "sources" / "__init__.py",
     PKG / "sources" / "enrichment.py",
