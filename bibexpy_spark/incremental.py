@@ -101,7 +101,6 @@ import os
 from functools import reduce
 from typing import Any
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -644,16 +643,28 @@ def run_incremental_dedup(
 
 
 def _read_state(spark: SparkSession, prior_dir: str, name: str) -> DataFrame:
-    try:
-        return spark.read.parquet(os.path.join(prior_dir, name))
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    """The state table ``name``; raises ValueError when it is missing or
+    its write never committed (no ``_SUCCESS``: a job that crashed while
+    writing it leaves part files a read would take as the whole table).
+    Checked through the path's Hadoop FileSystem, so any store works."""
+    path = os.path.join(prior_dir, name)
+    fs_path = spark._jvm.org.apache.hadoop.fs.Path
+    table = fs_path(path)
+    fs = table.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(table):
         raise ValueError(
             f"prior state {prior_dir!r} has no {name}/ table: it was written "
             "with that pass off or in another containment mode — rebuild it "
             "with a batch run that has the same passes on"
-        ) from None
+        )
+    if not fs.exists(fs_path(table, "_SUCCESS")):
+        raise ValueError(
+            f"prior state {prior_dir!r}: {name}/ has no _SUCCESS marker, so "
+            "its write never committed — the job that wrote the state "
+            "failed before finishing; rebuild the state or point at the "
+            "previous complete one"
+        )
+    return spark.read.parquet(path)
 
 
 def fold_state(
@@ -674,11 +685,11 @@ def fold_state(
     returns is the first state of a delta chain.
 
     Reads ``signed``, ``clusters`` and each enabled pass's pair table, and
-    raises ValueError before computing anything when one is missing or
-    ``signed`` lacks a column an enabled pass reads — composing against a
-    missing table would silently truncate the next state to delta-only
-    pairs.  The prior pair tables of ``extra_cluster_edges`` sources feed
-    ``prior_extra_pairs``.
+    raises ValueError before computing anything when one is missing, was
+    never committed (no ``_SUCCESS``) or ``signed`` lacks a column an
+    enabled pass reads — composing against a missing or partial table
+    would silently truncate the next state.  The prior pair tables of
+    ``extra_cluster_edges`` sources feed ``prior_extra_pairs``.
 
     Returns ``(res, next_state)``: the run_incremental_dedup result and the
     next state tables by name — ``signed`` (prior rows minus re-signed ones,

@@ -72,16 +72,21 @@ def connected_components(
     closure); the chosen mode is observable via the plan (driver mode plans
     from a createDataFrame).
 
-    ``edges`` should be cheap to re-read (the pipeline passes stored
-    stages): the edge count and the driver collect each scan it, and only
-    the loop path checkpoints it first.
+    The mode is chosen by one bounded Arrow collect of at most
+    ``driver_threshold + 1`` distinct edges (one action, no separate count):
+    when at most ``driver_threshold`` come back, union-find runs on them.
+    Above the threshold the loop path pays that collect (up to 2M rows at
+    the default) before it starts, and then re-derives the edge list for
+    its checkpoint, so ``edges`` should be cheap to re-read (the pipeline
+    passes stored stages).
     """
     spark = edges.sparkSession
     e = edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")).filter(
         F.col("src") != F.col("dst")
     ).distinct()
-    if e.count() <= driver_threshold:
-        return _driver_components(spark, e, nodes)
+    pdf = e.limit(driver_threshold + 1).toPandas()
+    if len(pdf) <= driver_threshold:
+        return _driver_components(spark, pdf, nodes)
     # the star loop iterates over e: materialize it once, so no round
     # re-derives the upstream
     e = e.localCheckpoint(eager=True)
@@ -139,9 +144,10 @@ def connected_components(
     return _finalize(e, nodes)
 
 
-def _driver_components(spark, e: DataFrame, nodes: DataFrame) -> DataFrame:
-    """Union-find on the collected (small) edge list; assignment is joined
-    back distributed, so only O(|E|) ids ever touch the driver.
+def _driver_components(spark, pdf, nodes: DataFrame) -> DataFrame:
+    """Union-find on the collected (small) edge list ``pdf`` (src, dst);
+    assignment is joined back distributed, so only O(|E|) ids ever touch
+    the driver.
 
     Edges move driver-side through Arrow, NOT ``collect()``: py4j
     materializes one nested Row object per edge, measured 7x slower at 500k
@@ -151,7 +157,6 @@ def _driver_components(spark, e: DataFrame, nodes: DataFrame) -> DataFrame:
     """
     import pandas as pd
 
-    pdf = e.toPandas()
     srcs, dsts = pdf["src"].tolist(), pdf["dst"].tolist()
 
     parent: dict = {}

@@ -1,8 +1,8 @@
 """Plan-inspection helpers: assert physical-plan properties in tests.
 
-The 100 TB contract is plan-shaped: small dims must broadcast, Python must
-stay out of the hot loop.  These helpers make those properties assertable
-(tests/test_plan_properties.py) instead of eyeballed.
+The 100 TB contract is plan-shaped: Python must stay out of the hot loop.
+These helpers make that assertable (tests/test_plan_properties.py) instead
+of eyeballed.
 """
 
 from __future__ import annotations
@@ -15,20 +15,6 @@ def explain_formatted(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-
-
-def join_strategies(df: DataFrame) -> list[str]:
-    """Join operator names appearing in the plan (BroadcastHashJoin,
-    SortMergeJoin, ShuffledHashJoin, BroadcastNestedLoopJoin...)."""
-    names = (
-        "BroadcastHashJoin",
-        "SortMergeJoin",
-        "ShuffledHashJoin",
-        "BroadcastNestedLoopJoin",
-        "CartesianProduct",
-    )
-    plan = explain_formatted(df)
-    return [n for n in names if n in plan]
 
 
 def python_eval_nodes(df: DataFrame) -> int:

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from bibexpy_spark.config import CANONICAL
 from bibexpy_spark.operators import components
+from bibexpy_spark.plans import inspect
 
 
 @pytest.fixture(scope="module")
@@ -36,6 +37,15 @@ def _check(df):
 def test_driver_mode(spark, graph):
     edges, nodes = graph
     _check(components.connected_components(edges, nodes, CANONICAL))
+    # the fixture has exactly 8 distinct edges: a threshold of 8 still takes
+    # the driver union-find (its assignment is a createDataFrame, a local
+    # table scan in the plan), 7 falls through to the star loop
+    for threshold, driver in ((8, True), (7, False)):
+        out = components.connected_components(
+            edges, nodes, CANONICAL, driver_threshold=threshold
+        )
+        assert ("LocalTableScan" in inspect.explain_formatted(out)) == driver
+        _check(out)
 
 
 def test_distributed_loop_mode(spark, graph):

@@ -376,9 +376,10 @@ def test_prior_signed_without_prior_clusters_raises(spark, split_corpus):
 
 def test_fold_state_refuses_incomplete_prior_state(spark, split_corpus, tmp_path):
     """fold_state reads the whole state layout before it computes anything:
-    a prior state written without an enabled pass's pair table, or whose
-    signed/ lacks a column an enabled pass reads, raises — composing
-    against it would truncate the next state to delta-only pairs."""
+    a prior state written without an enabled pass's pair table, whose
+    signed/ lacks a column an enabled pass reads, or with a table whose
+    write never committed, raises — composing against it would truncate
+    the next state."""
     old_turns, new_turns, _ = split_corpus
     kw = dict(with_containment=True, with_simhash_pass=False,
               containment_mode="prefix")
@@ -401,6 +402,11 @@ def test_fold_state_refuses_incomplete_prior_state(spark, split_corpus, tmp_path
     with pytest.raises(ValueError, match="signed/ lacks \\['simhash'\\]"):
         incremental.fold_state(spark, new_turns, state, **{
             **kw, "with_simhash_pass": True})
+    # a table whose write never committed (a crash mid-write leaves part
+    # files without _SUCCESS) would be read as a truncated state
+    os.remove(os.path.join(state, "clusters", "_SUCCESS"))
+    with pytest.raises(ValueError, match="clusters/ has no _SUCCESS"):
+        incremental.fold_state(spark, new_turns, state, **kw)
 
 
 def test_stats_are_the_observed_stage_counts(spark, split_corpus, tmp_path):

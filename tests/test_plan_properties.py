@@ -53,24 +53,6 @@ def test_exact_groups_narrow_aggregation(spark):
     assert "Window" not in plan  # narrow agg+join replaced the wide window
 
 
-def test_apply_splits_broadcasts_assignments(spark):
-    """Split assignments are tiny relative to the record table — the apply
-    join must broadcast them, not shuffle the records."""
-    from bibexpy_spark.operators import entity_blocks as eb
-
-    records = spark.createDataFrame(
-        [("u1", "Zipf A", "Physics", ""), ("u2", "Zipf A", "Biology", "")],
-        ["UID", "AU", "WC", "SC"],
-    )
-    splits = spark.createDataFrame(
-        [("zipf_a", "Zipf A", "zipf a", 1, 1, "(b)", ["u2"], ["biology"])],
-        "split_id string, name string, norm string, tier int, group_idx int,"
-        " suffix string, records array<string>, fields array<string>",
-    )
-    out = eb.apply_author_splits(records, splits, id_col="UID")
-    assert "BroadcastHashJoin" in inspect.join_strategies(out)
-
-
 def test_verify_gram_pairs_chain_reuses_side_exchange(spark):
     """verify_pairs' endpoint-join chain projects ``signed`` canonically
     identically on both sides, so the planner must REUSE one exchange of

@@ -8,7 +8,7 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bibexpy_spark.config import CANONICAL, DedupConfig
+from bibexpy_spark.config import CANONICAL
 from bibexpy_spark.functions import kernels
 
 text_st = st.text(
@@ -105,37 +105,3 @@ def test_band_hash_count_and_determinism(vals):
     assert b1.shape == (1, cfg.bands)
     assert np.array_equal(b1, b2)
 
-
-@given(
-    st.dictionaries(
-        st.sampled_from([f"u{i}" for i in range(8)]),
-        st.sets(st.sampled_from(list("abcdefg")), max_size=3),
-        min_size=2,
-        max_size=8,
-    )
-)
-@settings(max_examples=40, deadline=None)
-def test_field_components_partition_properties(assignments):
-    """Author-split component partition (pure logic, mirrored from
-    entity_blocks): components cover every with-field record exactly once
-    and are pairwise field-disjoint."""
-    recs = [{"record": r, "fields": fs} for r, fs in sorted(assignments.items()) if fs]
-    comps: list[list[dict]] = []
-    for r in recs:
-        hit = [ci for ci, comp in enumerate(comps)
-               if any(r["fields"] & x["fields"] for x in comp)]
-        if not hit:
-            comps.append([r])
-        else:
-            first = hit[0]
-            comps[first].append(r)
-            for ci in sorted(hit[1:], reverse=True):
-                comps[first].extend(comps[ci])
-                del comps[ci]
-    covered = [x["record"] for comp in comps for x in comp]
-    assert sorted(covered) == [r["record"] for r in recs]
-    for i in range(len(comps)):
-        fi = {f for x in comps[i] for f in x["fields"]}
-        for j in range(i + 1, len(comps)):
-            fj = {f for x in comps[j] for f in x["fields"]}
-            assert not (fi & fj), "components must be field-disjoint"

@@ -48,12 +48,7 @@ REFERENCES = {
 PENDING = {
     PKG / "functions" / "bibex_norms.py",
     PKG / "functions" / "c1_address.py",
-    PKG / "operators" / "disambiguation.py",
-    PKG / "operators" / "entity_blocks.py",
     PKG / "operators" / "filter_spec.py",
-    PKG / "operators" / "llm_arbitration.py",
-    PKG / "sources" / "__init__.py",
-    PKG / "sources" / "enrichment.py",
 }
 
 
