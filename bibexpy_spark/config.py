@@ -19,18 +19,15 @@ from dataclasses import asdict, dataclass
 class DedupConfig:
     """One shingle/signature/clustering configuration.
 
+    Normalization has no fields: every text goes through one fixed chain
+    (``kernels.normalize_text``: NFKD -> ASCII fold, lowercase,
+    punctuation -> space, collapse whitespace; stopwords are kept).
+
     ``b * r`` must equal ``num_perm``.  The default (32 bands x 4 rows,
     128 perms) puts the LSH S-curve threshold at ~(1/32)^(1/4) ~= 0.42,
     i.e. candidate-capture probability >0.9999999 at the verification
     threshold 0.8 -- that is what buys dup-pair recall >=0.99.
     """
-
-    # -- normalization (generalizes normalize_title, smart_merger.py:113-127)
-    lowercase: bool = True
-    unicode_fold: bool = True           # NFKD -> ASCII fold
-    strip_punct: bool = True            # non-alnum -> space
-    collapse_ws: bool = True
-    stopwords: tuple[str, ...] = ()     # transcripts config keeps stopwords
 
     # -- shingling
     shingle_k: int = 5                  # word k-grams; a row shorter than k still gets 1 shingle

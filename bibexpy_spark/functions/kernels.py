@@ -11,7 +11,7 @@ config (BASELINE.json ``north_rule``).
 Reference semantics generalized here:
   * normalization — normalize_title (reference smart_merger.py:113-127):
     unicode NFKD->ASCII fold, lowercase, punctuation->space, collapse
-    whitespace, optional stopword drop;
+    whitespace (stopwords are kept);
   * staged exact-before-fuzzy — content hash (reference Stage 1 DOI equality,
     smart_merger.py:253-265) becomes sha256 of the normalized text;
   * blocking — reference blocks on (year, surname[0]) (smart_merger.py:185-198);
@@ -21,7 +21,6 @@ Reference semantics generalized here:
 from __future__ import annotations
 
 import hashlib
-import re
 
 import numpy as np
 import pandas as pd
@@ -66,30 +65,19 @@ def normalize_text(texts: pd.Series, cfg: DedupConfig) -> pd.Series:
     """Vectorized canonical normalization (pandas .str ops, one pass each).
 
     Mirrors the reference's normalize_title chain (fold -> lower -> punct ->
-    whitespace -> stopwords) but over arbitrary transcript text.
+    whitespace) but over arbitrary transcript text.  The chain is fixed;
+    ``cfg`` is taken only so every kernel has the same (data, cfg) call.
     """
     s = texts.fillna("").astype(str)
-    if cfg.unicode_fold:
-        # NFKD, space out symbols/punctuation (keeping combining marks,
-        # U+0300-036F, so accents still fold onto their base letter), then
-        # drop the marks via ASCII encode — all C-level pandas str ops.
-        s = s.str.normalize("NFKD")
-        if cfg.strip_punct:
-            s = s.str.replace("[^0-9A-Za-z\\s\\u0300-\\u036f]", " ", regex=True)
-        s = s.str.encode("ascii", "ignore").str.decode("ascii")
-    if cfg.lowercase:
-        s = s.str.lower()
-    if cfg.strip_punct:
-        s = s.str.replace(r"[^a-z0-9]+" if cfg.lowercase else r"[^A-Za-z0-9]+", " ", regex=True)
-    if cfg.collapse_ws:
-        s = s.str.replace(r"\s+", " ", regex=True).str.strip()
-    if cfg.stopwords:
-        # re.escape: a stopword with regex metacharacters ('c++', 'a.b')
-        # must match literally, not corrupt or crash the pattern (r4 review)
-        pat = r"\b(?:" + "|".join(re.escape(w) for w in cfg.stopwords) + r")\b"
-        s = s.str.replace(pat, " ", regex=True)
-        s = s.str.replace(r"\s+", " ", regex=True).str.strip()
-    return s
+    # NFKD, space out symbols/punctuation (keeping combining marks,
+    # U+0300-036F, so accents still fold onto their base letter), then
+    # drop the marks via ASCII encode — all C-level pandas str ops.
+    s = s.str.normalize("NFKD")
+    s = s.str.replace("[^0-9A-Za-z\\s\\u0300-\\u036f]", " ", regex=True)
+    s = s.str.encode("ascii", "ignore").str.decode("ascii")
+    s = s.str.lower()
+    s = s.str.replace(r"[^a-z0-9]+", " ", regex=True)
+    return s.str.replace(r"\s+", " ", regex=True).str.strip()
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,12 @@
 """Independent reference implementations of the engine kernels.
 
 Each function below recomputes one engine kernel (functions/kernels.py,
-bibex_norms.py, c1_address.py) from its SPEC — seeds, mixing constants and
-dictionaries are the contract and appear verbatim; the code paths are
-deliberately naive (per-row loops, one-line numpy) so an implementation bug
-in the engine's blocked/buffered fast paths cannot be reproduced here.
-tests/test_golden_independent.py checks engine-vs-golden bit-equality for
-normalization, sha256, shingles, MinHash, band hashes, SimHash, Jaro-Winkler
-and C1 address parsing.
+bibex_norms.py) from its SPEC — seeds and mixing constants are the contract
+and appear verbatim; the code paths are deliberately naive (per-row loops,
+one-line numpy) so an implementation bug in the engine's blocked/buffered
+fast paths cannot be reproduced here.  tests/test_golden_independent.py
+checks engine-vs-golden bit-equality for normalization, sha256, shingles,
+MinHash, band hashes, SimHash and Jaro-Winkler.
 
 This module imports NOTHING from bibexpy_spark.functions (enforced by
 tests/test_golden_independent.py): the golden side and the engine may share
@@ -45,33 +44,20 @@ def _g_mix64(x: int) -> int:
     return x ^ (x >> 31)
 
 
-def _g_norm_text(s, cfg: DedupConfig = CANONICAL) -> str:
+def _g_norm_text(s) -> str:
     """One string through the canonical normalization chain (scalar re/
     unicodedata — the engine does the same chain with pandas .str ops)."""
     t = "" if s is None or (isinstance(s, float) and pd.isna(s)) else str(s)
-    if cfg.unicode_fold:
-        t = unicodedata.normalize("NFKD", t)
-        if cfg.strip_punct:
-            t = re.sub(r"[^0-9A-Za-z\s̀-ͯ]", " ", t)
-        t = t.encode("ascii", "ignore").decode("ascii")
-    if cfg.lowercase:
-        t = t.lower()
-    if cfg.strip_punct:
-        t = re.sub(r"[^a-z0-9]+" if cfg.lowercase else r"[^A-Za-z0-9]+", " ", t)
-    if cfg.collapse_ws:
-        t = re.sub(r"\s+", " ", t).strip()
-    if cfg.stopwords:
-        t = re.sub(
-            r"\b(?:" + "|".join(re.escape(w) for w in cfg.stopwords) + r")\b",
-            " ",
-            t,
-        )
-        t = re.sub(r"\s+", " ", t).strip()
-    return t
+    t = unicodedata.normalize("NFKD", t)
+    t = re.sub(r"[^0-9A-Za-z\s̀-ͯ]", " ", t)
+    t = t.encode("ascii", "ignore").decode("ascii")
+    t = t.lower()
+    t = re.sub(r"[^a-z0-9]+", " ", t)
+    return re.sub(r"\s+", " ", t).strip()
 
 
-def _g_norm_series(texts: pd.Series, cfg: DedupConfig = CANONICAL) -> pd.Series:
-    return texts.map(lambda s: _g_norm_text(s, cfg))
+def _g_norm_series(texts: pd.Series) -> pd.Series:
+    return texts.map(_g_norm_text)
 
 
 def _g_sha256_series(norm: pd.Series) -> pd.Series:
@@ -192,152 +178,3 @@ def _g_jaro_winkler(a: str, b: str, p: float = 0.1, max_prefix: int = 4) -> floa
             break
         prefix += 1
     return j + prefix * p * (1 - j)
-
-
-# C1 address parsing — dictionaries are the spec (duplicated verbatim from
-# the reference's c1_utils.py semantics, see functions/c1_address.py:39-112);
-# the split/parse logic below is an independent rewrite.
-
-_G_COUNTRY_VARIANTS = {
-    "usa": "United States", "u.s.a.": "United States", "u.s.a": "United States",
-    "us": "United States", "u.s.": "United States", "u s a": "United States",
-    "united states of america": "United States", "america": "United States",
-    "united states": "United States",
-    "uk": "United Kingdom", "u.k.": "United Kingdom",
-    "great britain": "United Kingdom", "england": "United Kingdom",
-    "scotland": "United Kingdom", "wales": "United Kingdom",
-    "northern ireland": "United Kingdom", "north ireland": "United Kingdom",
-    "united kingdom": "United Kingdom",
-    "peoples r china": "China", "p r china": "China", "prc": "China",
-    "peoples republic of china": "China", "china": "China",
-    "mainland china": "China",
-    "south korea": "South Korea", "korea": "South Korea",
-    "republic of korea": "South Korea", "korea rep": "South Korea",
-    "korea (south)": "South Korea",
-    "north korea": "North Korea", "dprk": "North Korea",
-    "russia": "Russia", "russian federation": "Russia", "ussr": "Russia",
-    "turkiye": "Turkey", "türkiye": "Turkey", "turkey": "Turkey",
-    "iran": "Iran", "islamic republic of iran": "Iran",
-    "czechia": "Czech Republic", "czech republic": "Czech Republic",
-    "netherlands": "Netherlands", "the netherlands": "Netherlands",
-    "holland": "Netherlands",
-    "uae": "United Arab Emirates", "u arab emirates": "United Arab Emirates",
-    "united arab emirates": "United Arab Emirates",
-    "germany": "Germany", "deutschland": "Germany", "fed rep ger": "Germany",
-    "viet nam": "Vietnam", "vietnam": "Vietnam",
-    "taiwan": "Taiwan", "rep of china": "Taiwan",
-    "hong kong": "Hong Kong", "macau": "Macau", "macao": "Macau",
-    "saudi arabia": "Saudi Arabia", "ksa": "Saudi Arabia",
-    "brasil": "Brazil", "brazil": "Brazil",
-    "espana": "Spain", "españa": "Spain", "spain": "Spain",
-    "cote d'ivoire": "Ivory Coast", "ivory coast": "Ivory Coast",
-}
-_G_CANONICAL_COUNTRIES = set(_G_COUNTRY_VARIANTS.values()) | {
-    "France", "Italy", "Japan", "Canada", "Australia", "India", "Mexico",
-    "Poland", "Sweden", "Norway", "Denmark", "Finland", "Belgium", "Austria",
-    "Switzerland", "Portugal", "Greece", "Ireland", "Israel", "Egypt",
-    "Pakistan", "Indonesia", "Malaysia", "Thailand", "Singapore",
-    "Philippines", "Argentina", "Chile", "Colombia", "Peru", "South Africa",
-    "Nigeria", "Kenya", "Morocco", "Romania", "Hungary", "Ukraine",
-    "Bulgaria", "Croatia", "Serbia", "Slovenia", "Slovakia", "Lithuania",
-    "Latvia", "Estonia", "Qatar", "Kuwait", "Jordan", "Lebanon", "Iraq",
-    "New Zealand", "Bangladesh", "Sri Lanka", "Nepal",
-}
-_G_CANON_LOWER = {c.lower(): c for c in _G_CANONICAL_COUNTRIES}
-_G_ORG_PREFIX = (
-    "univ", "institut", "college", "hospital", "clinic", "center", "centre",
-    "laborator", "academ", "polytech", "hochschule", "universidad",
-    "universita", "ministr", "council", "foundation", "klinik",
-)
-_G_ORG_EXACT = frozenset(
-    ("inst", "coll", "hosp", "ctr", "lab", "acad", "natl", "fdn", "sch",
-     "dept", "polytechnic", "school", "laboratory", "spital")
-)
-_G_SUBUNIT = (
-    "depart", "dept", "division", " div ", "faculty", " fac ", "school of",
-    "section", "chair", "unit", "program", "laboratory of",
-)
-_G_US_STATES = frozenset(
-    "AL AK AZ AR CA CO CT DE FL GA HI ID IL IN IA KS KY LA ME MD MA MI MN MS "
-    "MO MT NE NV NH NJ NM NY NC ND OH OK OR PA RI SC SD TN TX UT VT VA WA WV "
-    "WI WY DC".split()
-)
-
-
-def _g_canonical_country(raw) -> str | None:
-    t = re.sub(r"\s+", " ", str(raw or "")).strip().lower().rstrip(".")
-    if not t:
-        return None
-    return _G_COUNTRY_VARIANTS.get(t) or _G_CANON_LOWER.get(t)
-
-
-def _g_looks_geographic(part: str) -> bool:
-    p = part.strip()
-    if not p:
-        return True
-    if re.search(r"\d{4,6}", p):
-        return True
-    return any(tk.upper() in _G_US_STATES for tk in p.replace(",", " ").split())
-
-
-def _g_is_org(part: str) -> bool:
-    toks = re.findall(r"[a-zçğıöşü]+", str(part).lower())
-    if not toks:
-        return False
-    if any(t in _G_ORG_EXACT for t in toks):
-        return True
-    return any(t.startswith(pfx) for t in toks for pfx in _G_ORG_PREFIX)
-
-
-def _g_is_subunit(part: str) -> bool:
-    low = part.lower()
-    return any(kw in low for kw in _G_SUBUNIT)
-
-
-def _g_split_c1(cell) -> list[str]:
-    """Bracket-aware ';' split — semicolons inside '[...]' do not split."""
-    out, cur, depth = [], "", 0
-    for ch in str(cell or ""):
-        if ch == "[":
-            depth += 1
-        elif ch == "]":
-            depth = max(0, depth - 1)
-        if ch == ";" and depth == 0:
-            if cur.strip():
-                out.append(cur.strip())
-            cur = ""
-        else:
-            cur += ch
-    if cur.strip():
-        out.append(cur.strip())
-    return out
-
-
-def _g_parse_address(addr) -> dict:
-    """(authors, institution, country) per the reference's extraction rules
-    (country = last comma part iff canonical; strip trailing geography;
-    institution = rightmost org part preferring non-subunits; never guess)."""
-    raw = str(addr or "")
-    m = re.match(r"^\s*\[([^\]]*)\]\s*(.*)$", raw, re.S)
-    authors, rest = (m.group(1).strip(), m.group(2).strip()) if m else ("", raw)
-    parts = [p.strip() for p in rest.split(",") if p.strip()]
-    country = None
-    if parts:
-        c = _g_canonical_country(parts[-1])
-        if c is not None:
-            country = c
-            parts = parts[:-1]
-    while parts and _g_looks_geographic(parts[-1]):
-        parts.pop()
-    institution = None
-    for p in reversed(parts):
-        if _g_is_org(p) and not _g_is_subunit(p):
-            institution = p
-            break
-    if institution is None:
-        for p in reversed(parts):
-            if _g_is_org(p):
-                institution = p
-                break
-    return {"authors": authors, "institution": institution,
-            "country": country, "raw": raw}

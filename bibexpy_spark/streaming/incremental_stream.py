@@ -50,7 +50,10 @@ from pyspark.sql import functions as F
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
 from bibexpy_spark.incremental import fold_state, merge_turns_latest_wins
-from bibexpy_spark.streaming.ingest import read_turn_stream
+
+TURN_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+)
 
 
 def _stage(df: DataFrame, path: str) -> str:
@@ -174,7 +177,8 @@ def foreach_batch_incremental_dedup(
     containment_mode: str = "prefix",
     extra_cluster_edges: tuple[str, ...] = (),
 ):
-    """Start the delta-folding stream; returns the StreamingQuery.
+    """Start the delta-folding stream over the turn parquet files appended
+    to ``source_path`` (``TURN_SCHEMA``); returns the StreamingQuery.
 
     ``max_files_per_trigger=1`` gives one micro-batch per dropped file —
     the deterministic shape the equivalence test uses.
@@ -192,9 +196,10 @@ def foreach_batch_incremental_dedup(
     from bibexpy_spark.lineage import acquire_lease
 
     acquire_lease(state_dir, owner="incremental_stream")
-    stream = read_turn_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
+    reader = spark.readStream.schema(TURN_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.parquet(source_path)
     signed_p = os.path.join(state_dir, "signed")
     turns_p = os.path.join(state_dir, "turns")
     marker_dir = os.path.join(state_dir, "_committed")

@@ -23,7 +23,6 @@ import pytest
 from bibexpy_spark import golden
 from bibexpy_spark.config import CANONICAL
 from bibexpy_spark.functions import kernels
-from bibexpy_spark.functions import c1_address as c1
 from bibexpy_spark.functions.bibex_norms import jaro_winkler
 
 
@@ -57,7 +56,7 @@ def test_golden_has_no_functions_imports():
 def test_normalize_bit_equal():
     texts = _random_texts()
     eng = kernels.normalize_text(texts, CANONICAL).tolist()
-    gold = golden._g_norm_series(texts, CANONICAL).tolist()
+    gold = golden._g_norm_series(texts).tolist()
     assert eng == gold
 
 
@@ -65,7 +64,7 @@ def test_shingle_signature_band_bit_equal():
     texts = _random_texts(seed=23)
     norm_e = kernels.normalize_text(texts, CANONICAL)
     sh_e = kernels.shingle_sets(norm_e, CANONICAL)
-    sh_g = golden._g_shingle_sets(golden._g_norm_series(texts, CANONICAL), CANONICAL)
+    sh_g = golden._g_shingle_sets(golden._g_norm_series(texts), CANONICAL)
     assert len(sh_e) == len(sh_g)
     for a, b in zip(sh_e, sh_g):
         assert np.array_equal(np.sort(a), np.sort(b))
@@ -82,7 +81,7 @@ def test_simhash_bit_equal():
     norm = kernels.normalize_text(texts, CANONICAL)
     eng = kernels.simhash64(norm, CANONICAL)
     gold = np.array(
-        [golden._g_simhash(s) for s in golden._g_norm_series(texts, CANONICAL)],
+        [golden._g_simhash(s) for s in golden._g_norm_series(texts)],
         dtype=np.uint64,
     ).view(np.int64)
     assert np.array_equal(eng, gold)
@@ -112,29 +111,3 @@ def test_jaro_winkler_random_bit_equal():
         a = "".join(rng.choice("abcdef ") for _ in range(rng.randint(0, 12)))
         b = "".join(rng.choice("abcdef ") for _ in range(rng.randint(0, 12)))
         assert golden._g_jaro_winkler(a, b) == jaro_winkler(a, b), (a, b)
-
-
-_C1_CASES = [
-    "[Smith, J.; Lee, K.] Univ Oxford, Dept Phys, Oxford OX1 2JD, England",
-    "Harvard Univ, Cambridge, MA 02138, USA",
-    "Dept Comp Sci, Tech Univ Munich, D-80333 Munich, Germany",
-    "[Garcia, M.] CSIC, Inst Quim, Madrid, Spain; CNRS, Paris, France",
-    "Some City Council, Anytown, 12345, Peoples R China",
-    "No Org Here, Smallville",
-    "",
-    "[a;b] X Univ, Y; Z Hosp, W, USA",
-]
-
-
-@pytest.mark.parametrize("cell", _C1_CASES)
-def test_c1_split_parse_bit_equal(cell):
-    assert golden._g_split_c1(cell) == c1.split_c1(cell)
-    for addr in c1.split_c1(cell):
-        assert golden._g_parse_address(addr) == c1.parse_address(addr)
-
-
-def test_c1_country_bit_equal():
-    toks = ["USA", "u.s.a.", "Peoples R China", "türkiye", "nowhereland",
-            "  France ", "ENGLAND", "", None, "Korea Rep."]
-    for t in toks:
-        assert golden._g_canonical_country(t) == c1.canonical_country(t)

@@ -9,7 +9,9 @@ star-bucket caveat).
 
 from __future__ import annotations
 
+import importlib.util
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +19,8 @@ from pyspark.sql import Window as W
 
 from bibexpy_spark import corpus, incremental, pipeline
 from bibexpy_spark.config import CANONICAL
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -374,12 +378,14 @@ def test_prior_signed_without_prior_clusters_raises(spark, split_corpus):
         )
 
 
-def test_fold_state_refuses_incomplete_prior_state(spark, split_corpus, tmp_path):
+def test_fold_state_refuses_incomplete_prior_state(
+    spark, split_corpus, tmp_path, capsys
+):
     """fold_state reads the whole state layout before it computes anything:
     a prior state written without an enabled pass's pair table, whose
     signed/ lacks a column an enabled pass reads, or with a table whose
     write never committed, raises — composing against it would truncate
-    the next state."""
+    the next state.  ``dedup_job.py`` turns the refusal into exit code 2."""
     old_turns, new_turns, _ = split_corpus
     kw = dict(with_containment=True, with_simhash_pass=False,
               containment_mode="prefix")
@@ -407,6 +413,27 @@ def test_fold_state_refuses_incomplete_prior_state(spark, split_corpus, tmp_path
     os.remove(os.path.join(state, "clusters", "_SUCCESS"))
     with pytest.raises(ValueError, match="clusters/ has no _SUCCESS"):
         incremental.fold_state(spark, new_turns, state, **kw)
+
+    # the job over a state that a crash between dedup_job.py's table writes
+    # left torn (a table without _SUCCESS, or none at all) exits with a
+    # usage error before it writes anything under --output
+    spec = importlib.util.spec_from_file_location(
+        "dedup_job_torn_state", os.path.join(REPO, "jobs", "dedup_job.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    delta, out = str(tmp_path / "delta"), str(tmp_path / "out")
+    new_turns.write.parquet(delta)
+    argv = ["--input", delta, "--output", out, "--prior-state", state,
+            "--containment", "--no-simhash"]
+    for torn in ("clusters/ has no _SUCCESS", "no clusters/ table"):
+        if torn == "no clusters/ table":
+            shutil.rmtree(os.path.join(state, "clusters"))
+        with pytest.raises(SystemExit) as exit_info:
+            job.main(argv)
+        assert exit_info.value.code == 2, torn
+        assert torn in capsys.readouterr().err
+        assert not os.path.exists(out), torn
 
 
 def test_stats_are_the_observed_stage_counts(spark, split_corpus, tmp_path):

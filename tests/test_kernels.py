@@ -22,12 +22,6 @@ def test_normalize_unicode_fold():
     assert out[2] == ""
 
 
-def test_normalize_stopwords():
-    cfg = DedupConfig(stopwords=("the", "a"))
-    out = kernels.normalize_text(pd.Series(["The cat saw a dog"]), cfg)
-    assert out[0] == "cat saw dog"
-
-
 def test_shingles_hand_computable():
     cfg = DedupConfig(shingle_k=2)
     s = pd.Series(["a b c", "a b c", "c b a"])

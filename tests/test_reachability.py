@@ -47,7 +47,6 @@ REFERENCES = {
 # shrink: an entry whose file is gone must leave it.
 PENDING = {
     PKG / "functions" / "bibex_norms.py",
-    PKG / "functions" / "c1_address.py",
     PKG / "operators" / "filter_spec.py",
 }
 
@@ -82,7 +81,10 @@ def _imported_files(path: Path) -> set[Path]:
 
 def _reached() -> set[Path]:
     seen: set[Path] = set()
-    todo = list(ENTRY_POINTS)
+    # an entry point inside the package is imported through its package,
+    # so its __init__.py is reached even when no import names it
+    todo = [*ENTRY_POINTS, *(f.parent / "__init__.py" for f in ENTRY_POINTS
+                             if (f.parent / "__init__.py").is_file())]
     while todo:
         f = todo.pop()
         if f in seen:
