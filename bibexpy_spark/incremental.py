@@ -9,7 +9,8 @@ batch run is the same pass over empty state: ``pipeline.run_dedup`` calls
 it with no prior, and the body then skips the prior-only stages and runs
 every operator's batch plan.  ``fold_state`` wraps the pass for a state
 directory: it reads the prior tables (none for a bootstrap), runs the pass
-and returns the next state (the submit job and the stream both use it).
+and returns the next state, which ``write_state`` commits with one manifest
+(the submit job and the stream both use them).
 
 Deltas may also GROW conversations already clustered (the common shape for
 live transcript tables: a batch appends turns to an open ``conv_id`` —
@@ -97,7 +98,10 @@ over the ``cluster`` stage.  Neither re-runs a stage.
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import uuid
 from functools import reduce
 from typing import Any
 
@@ -140,11 +144,14 @@ def check_pass_options(
 
 
 # -- state layout ------------------------------------------------------------
-# A state directory (any fold_state output written out, the stream's state
-# dir) holds ``signed``, ``clusters`` and one pair table per
-# enabled pass.  Each pair table is named after its pipeline.run_dedup
-# result key; run_incremental_dedup emits the delta under the same key plus
-# ``_new``.  fold_state is the only reader and composer of this layout.
+# A state directory (the job's --output, the stream's state dir) holds
+# ``signed``, ``clusters``, one pair table per enabled pass (named after its
+# pipeline.run_dedup result key; run_incremental_dedup emits the delta under
+# the same key plus ``_new``) and what its writer adds.  One manifest,
+# ``_state/<n>.json``, commits a state: it names each table's directory in
+# the fresh generation ``gen/<n>-<tag>/`` plus the writer's metadata — the
+# parquet stand-in for an Iceberg snapshot commit.  fold_state composes
+# this layout; write_state and read_state are its only writer and reader.
 
 
 _PAIR_ENDS = {
@@ -642,29 +649,105 @@ def run_incremental_dedup(
     }
 
 
-def _read_state(spark: SparkSession, prior_dir: str, name: str) -> DataFrame:
-    """The state table ``name``; raises ValueError when it is missing or
-    its write never committed (no ``_SUCCESS``: a job that crashed while
-    writing it leaves part files a read would take as the whole table).
-    Checked through the path's Hadoop FileSystem, so any store works."""
-    path = os.path.join(prior_dir, name)
-    fs_path = spark._jvm.org.apache.hadoop.fs.Path
-    table = fs_path(path)
-    fs = table.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(table):
+def _hadoop_path(spark: SparkSession, path: str, *children: str):
+    """``(fs, path)``: the Hadoop Path of ``path``/``children`` and its
+    FileSystem, so the commit works on any store Spark reads."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(path, *children))
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def read_manifest(spark: SparkSession, state_dir: str) -> dict[str, Any] | None:
+    """The newest manifest of ``state_dir`` (None: nothing ever committed)."""
+    fs, log = _hadoop_path(spark, state_dir, "_state")
+    found = [
+        int(m.group(1)) for st in (fs.listStatus(log) if fs.exists(log) else [])
+        if (m := re.fullmatch(r"(\d+)\.json", st.getPath().getName()))
+    ]
+    if not found:
+        return None
+    stream = fs.open(spark._jvm.org.apache.hadoop.fs.Path(log, f"{max(found)}.json"))
+    try:
+        return json.loads(spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
+
+
+def read_state(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
+    """Every table the newest manifest of ``state_dir`` names (lazy reads).
+    Raises ValueError before any compute when there is no manifest or it
+    names a missing table."""
+    manifest = read_manifest(spark, state_dir)
+    if manifest is None:
         raise ValueError(
-            f"prior state {prior_dir!r} has no {name}/ table: it was written "
-            "with that pass off or in another containment mode — rebuild it "
-            "with a batch run that has the same passes on"
+            f"state {state_dir!r} has no manifest (_state/<n>.json): no write "
+            "ever committed there (it failed before its commit, or another "
+            "program wrote the directory) — point at a committed state"
         )
-    if not fs.exists(fs_path(table, "_SUCCESS")):
-        raise ValueError(
-            f"prior state {prior_dir!r}: {name}/ has no _SUCCESS marker, so "
-            "its write never committed — the job that wrote the state "
-            "failed before finishing; rebuild the state or point at the "
-            "previous complete one"
-        )
-    return spark.read.parquet(path)
+    tables = {}
+    for name, rel in manifest["tables"].items():
+        fs, path = _hadoop_path(spark, state_dir, rel)
+        if not fs.exists(path):
+            raise ValueError(
+                f"state {state_dir!r}: its manifest names {rel}, which is "
+                "missing — the state was damaged after its commit"
+            )
+        tables[name] = spark.read.parquet(os.path.join(state_dir, rel))
+    return tables
+
+
+def _commit_manifest(
+    spark: SparkSession, state_dir: str, gen: str, manifest: dict[str, Any]
+) -> None:
+    """The commit: write the manifest to a tmp file, then rename it to
+    ``_state/<n>.json``, a name that must not exist yet (so of two writers
+    of generation n, the second fails)."""
+    n = manifest["generation"]
+    fs, tmp = _hadoop_path(spark, state_dir, "_state", f"{gen}.tmp")
+    _, final = _hadoop_path(spark, state_dir, "_state", f"{n}.json")
+    out = fs.create(tmp, False)
+    try:
+        out.write(json.dumps(manifest).encode())
+    finally:
+        out.close()
+    if fs.exists(final) or not fs.rename(tmp, final):
+        raise RuntimeError(f"state {state_dir!r}: another writer committed generation {n}")
+
+
+def _collect_garbage(spark: SparkSession, state_dir: str, gen: str) -> None:
+    """Delete the older manifests, then every generation at or below
+    ``gen`` that is not ``gen`` (a later one may be another writer's, still
+    at work)."""
+    n = int(gen.split("-")[0])
+    for folder in ("_state", "gen"):
+        fs, path = _hadoop_path(spark, state_dir, folder)
+        for st in fs.listStatus(path) if fs.exists(path) else []:
+            name = st.getPath().getName()
+            m = re.match(r"(\d+)\D", name)  # hidden .crc files do not match
+            if m and int(m.group(1)) <= n and name not in (f"{n}.json", gen):
+                fs.delete(st.getPath(), True)
+
+
+def write_state(
+    state_dir: str, tables: dict[str, DataFrame], **meta: Any
+) -> dict[str, Any]:
+    """Commit ``tables`` as the next state of ``state_dir``: write each into
+    a fresh generation directory (never over a live table), create the next
+    manifest naming them plus ``meta``, then delete what no manifest names.
+    A crash before the manifest leaves the previous state in force; one
+    after it leaves garbage for the next commit to delete.  Returns the
+    manifest."""
+    spark = next(iter(tables.values())).sparkSession
+    prev = read_manifest(spark, state_dir)
+    n = prev["generation"] + 1 if prev else 1
+    gen = f"{n}-{uuid.uuid4().hex[:8]}"
+    for name, df in tables.items():
+        df.write.parquet(os.path.join(state_dir, "gen", gen, name))
+    manifest = {
+        "generation": n, "tables": {name: f"gen/{gen}/{name}" for name in tables}, **meta
+    }
+    _commit_manifest(spark, state_dir, gen, manifest)
+    _collect_garbage(spark, state_dir, gen)
+    return manifest
 
 
 def fold_state(
@@ -684,18 +767,19 @@ def fold_state(
     stages resume).  ``prior_dir=None`` is a batch run: the state it
     returns is the first state of a delta chain.
 
-    Reads ``signed``, ``clusters`` and each enabled pass's pair table, and
-    raises ValueError before computing anything when one is missing, was
-    never committed (no ``_SUCCESS``) or ``signed`` lacks a column an
-    enabled pass reads — composing against a missing or partial table
-    would silently truncate the next state.  The prior pair tables of
-    ``extra_cluster_edges`` sources feed ``prior_extra_pairs``.
+    Reads ``signed``, ``clusters`` and each enabled pass's pair table
+    through read_state, and raises ValueError before computing anything when
+    ``prior_dir`` has no manifest, its manifest lacks one of them or names
+    a missing directory, or ``signed`` lacks a column an enabled pass reads
+    — composing against a missing or partial table would silently truncate
+    the next state.  The prior pair tables of ``extra_cluster_edges``
+    sources feed ``prior_extra_pairs``.
 
     Returns ``(res, next_state)``: the run_incremental_dedup result and the
     next state tables by name — ``signed`` (prior rows minus re-signed ones,
     plus the delta's), ``clusters`` and each pair table composed via
-    compose_pair_state.  Writing every table of ``next_state`` to a fresh
-    directory gives the ``prior_dir`` of the next delta."""
+    compose_pair_state.  ``write_state`` commits them (plus any table the
+    caller adds) as the ``prior_dir`` of the next delta."""
     check_pass_options(
         extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
     )
@@ -704,8 +788,16 @@ def fold_state(
     prior: dict[str, DataFrame] = {}
     prior_extra = None
     if prior_dir is not None:
+        state = read_state(spark, prior_dir)
         for name in ["signed", "clusters", *pairs]:
-            prior[name] = _read_state(spark, prior_dir, name)
+            if name not in state:
+                raise ValueError(
+                    f"prior state {prior_dir!r} has no {name}/ table: it was "
+                    "written with that pass off or in another containment "
+                    "mode — rebuild it with a batch run that has the same "
+                    "passes on"
+                )
+            prior[name] = state[name]
         missing = [c for c in sig_cols if c not in prior["signed"].columns]
         if missing:
             raise ValueError(

@@ -23,6 +23,11 @@ earlier one:
 <out1> is any earlier --output with the same passes on; each run writes a
 fresh directory.  Without --prior-state the run is a batch over --input.
 
+--output is committed by its manifest (incremental.write_state): the tables
+go to a fresh generation directory and one manifest file, written last,
+makes them the state.  A run that dies before that leaves the directory's
+previous state in force, and a relaunch into the same --output completes.
+
 The script takes the ambient SparkSession from spark-submit (no master
 override — the cluster manager decides).  With --run-dir every stage
 checkpoints with a manifest: a relaunch with the same run dir, input,
@@ -119,12 +124,10 @@ def main(argv: list[str] | None = None) -> None:
         ap.error("--prior-turns needs --prior-state (the state its "
                  "conversations were clustered into)")
 
-    # refuse in-place state updates: the prior tables are read LAZILY
-    # while the outputs are written with mode("overwrite") — if the prior
-    # state and --output overlap, the overwrite deletes the state mid-read
-    # (Spark's self-overwrite detection only covers catalog tables, not
-    # file sources).  Daily increments must write a fresh directory per
-    # run (docstring: out1 -> out2).
+    # refuse in-place state updates: a commit over the run's own prior
+    # state replaces it, so the delta could no longer be rerun against the
+    # state it was folded into.  Daily increments must write a fresh
+    # directory per run (docstring: out1 -> out2).
     def _norm(p: str) -> str:
         # a file:// scheme names the same local path realpath sees —
         # strip it first so mixed forms (--output file:///x/out vs
@@ -139,9 +142,9 @@ def main(argv: list[str] | None = None) -> None:
         if p_n and (p_n == out_n or p_n.startswith(out_n + "/")
                     or out_n.startswith(p_n + "/")):
             ap.error(f"{flag} {path!r} overlaps --output "
-                     f"{args.output!r}: the overwrite would delete the "
-                     "prior state while it is still being read lazily — "
-                     "each delta run must write a fresh output directory")
+                     f"{args.output!r}: the commit would replace the "
+                     "prior state this run folds into — each delta run "
+                     "must write a fresh output directory")
 
     from pyspark.sql import SparkSession
 
@@ -230,8 +233,7 @@ def main(argv: list[str] | None = None) -> None:
             F.countDistinct("cluster_id").alias("n")
         ).collect()[0]["n"]
         wall_compute = time.time() - t_bench
-    for name, df in state.items():
-        df.write.mode("overwrite").parquet(os.path.join(args.output, name))
+    incremental.write_state(args.output, state)
     if t_bench is not None:
         import json
         import time
@@ -250,7 +252,7 @@ def main(argv: list[str] | None = None) -> None:
             )
     # the counts observed while the stages ran: no second pass
     print(f"dedup_job: stats {res['stats'].first().asDict()}", file=sys.stderr)
-    n = spark.read.parquet(os.path.join(args.output, "clusters")).count()
+    n = incremental.read_state(spark, args.output)["clusters"].count()
     print(f"dedup_job: wrote {n} cluster assignments to {args.output}",
           file=sys.stderr)
     spark.stop()

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -34,3 +36,36 @@ def golden(turns_pd):
 @pytest.fixture(scope="session")
 def turns_df(spark, turns_pd):
     return spark.createDataFrame(turns_pd)
+
+
+@pytest.fixture
+def crash(monkeypatch):
+    """``with crash(after_writes=n):`` makes the n-th parquet table write
+    in the block raise once it has finished (a driver dying between the
+    table writes of one commit); ``with crash(step=name):`` makes that step
+    of ``incremental.write_state`` raise.  Either raises "injected crash"."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from bibexpy_spark import incremental
+
+    @contextlib.contextmanager
+    def inject(after_writes=None, step=None):
+        parquet, written = DataFrameWriter.parquet, []
+
+        def crashing_write(self, path, *args, **kwargs):
+            parquet(self, path, *args, **kwargs)
+            written.append(path)
+            if len(written) == after_writes:
+                raise RuntimeError(f"injected crash after writing {path}")
+
+        def crashing_step(*args, **kwargs):
+            raise RuntimeError(f"injected crash at {step}")
+
+        with monkeypatch.context() as m:
+            if step:
+                m.setattr(incremental, step, crashing_step)
+            else:
+                m.setattr(DataFrameWriter, "parquet", crashing_write)
+            yield
+
+    return inject

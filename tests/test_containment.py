@@ -305,8 +305,7 @@ def test_extra_edges_validation_and_simhash_monotone(spark, turns_df, tmp_path):
     _, state = incremental.fold_state(
         spark, turns_df, None, with_containment=True, with_simhash_pass=False,
     )
-    for name, df in state.items():
-        df.write.parquet(str(tmp_path / name))
+    incremental.write_state(str(tmp_path), state)
     with pytest.raises(ValueError, match="unknown containment_mode"):
         incremental.fold_state(
             spark, turns_df, str(tmp_path), with_containment=True,

@@ -378,21 +378,30 @@ def test_prior_signed_without_prior_clusters_raises(spark, split_corpus):
         )
 
 
+def _load_job():
+    spec = importlib.util.spec_from_file_location(
+        "dedup_job_in_process", os.path.join(REPO, "jobs", "dedup_job.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    return job
+
+
 def test_fold_state_refuses_incomplete_prior_state(
     spark, split_corpus, tmp_path, capsys
 ):
     """fold_state reads the whole state layout before it computes anything:
     a prior state written without an enabled pass's pair table, whose
-    signed/ lacks a column an enabled pass reads, or with a table whose
-    write never committed, raises — composing against it would truncate
-    the next state.  ``dedup_job.py`` turns the refusal into exit code 2."""
+    signed/ lacks a column an enabled pass reads, whose manifest names a
+    missing table, or with no manifest at all, raises — composing against
+    it would truncate the next state.  ``dedup_job.py`` turns the refusal
+    into exit code 2."""
     old_turns, new_turns, _ = split_corpus
     kw = dict(with_containment=True, with_simhash_pass=False,
               containment_mode="prefix")
     state = str(tmp_path / "state")
-    for name, df in incremental.fold_state(spark, old_turns, None, **kw)[1].items():
-        df.write.parquet(os.path.join(state, name))
-    written = sorted(os.listdir(state))
+    incremental.write_state(state, incremental.fold_state(spark, old_turns, None, **kw)[1])
+    written = sorted(incremental.read_state(spark, state))
     assert written == ["clusters", "containment_prefix", "signed"]
 
     with pytest.raises(ValueError, match="no containment_pairs/ table"):
@@ -401,39 +410,125 @@ def test_fold_state_refuses_incomplete_prior_state(
     with pytest.raises(ValueError, match="no simhash_pairs/ table"):
         incremental.fold_state(spark, new_turns, state, **{
             **kw, "with_simhash_pass": True})
-    assert sorted(os.listdir(state)) == written
+    assert sorted(incremental.read_state(spark, state)) == written
     # the pair table exists, but signed/ was written without the pass
-    spark.createDataFrame([], "a_id string, b_id string, hamming int") \
-        .write.parquet(os.path.join(state, "simhash_pairs"))
+    incremental.write_state(state, {
+        **incremental.read_state(spark, state),
+        "simhash_pairs": spark.createDataFrame([], "a_id string, b_id string, hamming int"),
+    })
     with pytest.raises(ValueError, match="signed/ lacks \\['simhash'\\]"):
         incremental.fold_state(spark, new_turns, state, **{
             **kw, "with_simhash_pass": True})
-    # a table whose write never committed (a crash mid-write leaves part
-    # files without _SUCCESS) would be read as a truncated state
-    os.remove(os.path.join(state, "clusters", "_SUCCESS"))
-    with pytest.raises(ValueError, match="clusters/ has no _SUCCESS"):
+    # a table the manifest names was deleted after the commit
+    shutil.rmtree(os.path.join(
+        state, incremental.read_manifest(spark, state)["tables"]["simhash_pairs"]))
+    with pytest.raises(ValueError, match="simhash_pairs, which is missing"):
         incremental.fold_state(spark, new_turns, state, **kw)
 
-    # the job over a state that a crash between dedup_job.py's table writes
-    # left torn (a table without _SUCCESS, or none at all) exits with a
-    # usage error before it writes anything under --output
-    spec = importlib.util.spec_from_file_location(
-        "dedup_job_torn_state", os.path.join(REPO, "jobs", "dedup_job.py")
-    )
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
+    # the job over a state that never committed exits with a usage error
+    # before it writes anything under --output
+    job = _load_job()
     delta, out = str(tmp_path / "delta"), str(tmp_path / "out")
     new_turns.write.parquet(delta)
     argv = ["--input", delta, "--output", out, "--prior-state", state,
             "--containment", "--no-simhash"]
-    for torn in ("clusters/ has no _SUCCESS", "no clusters/ table"):
-        if torn == "no clusters/ table":
-            shutil.rmtree(os.path.join(state, "clusters"))
+    for torn in ("simhash_pairs, which is missing", "has no manifest"):
+        if torn == "has no manifest":
+            shutil.rmtree(os.path.join(state, "_state"))
         with pytest.raises(SystemExit) as exit_info:
             job.main(argv)
         assert exit_info.value.code == 2, torn
         assert torn in capsys.readouterr().err
         assert not os.path.exists(out), torn
+
+
+def test_job_relaunch_dying_mid_write_keeps_the_committed_state(
+    spark, split_corpus, tmp_path, monkeypatch, crash
+):
+    """Regression: a job run into an --output that holds a committed state,
+    dying after its first table write, must not leave a state that mixes
+    the two runs' tables.  A later fold over that directory either raises
+    or reads the complete first state: here it folds into the first run's
+    conversations only."""
+    from pyspark.sql import SparkSession
+
+    _, _, all_turns = split_corpus
+    part = F.abs(F.xxhash64("conv_id")) % 3
+    x_p, y_p = str(tmp_path / "x"), str(tmp_path / "y")
+    all_turns.filter(part == 0).write.parquet(x_p)
+    all_turns.filter(part == 1).write.parquet(y_p)
+    z_turns = all_turns.filter(part == 2)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    job, out = _load_job(), str(tmp_path / "out")
+    job.main(["--input", x_p, "--output", out, "--no-simhash"])
+    with crash(after_writes=1), pytest.raises(RuntimeError, match="injected crash"):
+        job.main(["--input", y_p, "--output", out, "--no-simhash"])
+
+    try:
+        res, state = incremental.fold_state(spark, z_turns, out)
+    except ValueError:
+        return
+    x_turns = spark.read.parquet(x_p)
+    want_ids = {r["conv_id"] for r in x_turns.unionByName(z_turns).select("conv_id").collect()}
+    assert {r["conv_id"] for r in state["signed"].collect()} == want_ids
+    full = pipeline.run_dedup(spark, x_turns.unionByName(z_turns),
+                              with_containment=False, with_simhash_pass=False)
+    assert _cluster_set(state["clusters"]) == _cluster_set(full["clusters"])
+    res["cleanup"]()
+    full["cleanup"]()
+
+
+def test_job_commit_survives_crash_at_every_point(
+    spark, split_corpus, tmp_path, monkeypatch, crash
+):
+    """The job's one commit under fault injection.  A crash after any table
+    write or before the manifest leaves --output's committed state in
+    force, and a relaunch completes; a crash after the manifest, before
+    garbage collection, has committed, and the next commit removes the
+    garbage.  Every relaunch equals the batch run over the union."""
+    from pyspark.sql import SparkSession
+
+    old_turns, new_turns, all_turns = split_corpus
+    old_p, new_p = str(tmp_path / "old"), str(tmp_path / "new")
+    old_turns.write.parquet(old_p)
+    new_turns.write.parquet(new_p)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    job = _load_job()
+    prior, out = str(tmp_path / "prior"), str(tmp_path / "out")
+    job.main(["--input", old_p, "--output", prior, "--no-simhash"])
+    job.main(["--input", old_p, "--output", out, "--no-simhash"])
+    argv = ["--input", new_p, "--prior-state", prior, "--output", out, "--no-simhash"]
+    full = pipeline.run_dedup(spark, all_turns, with_containment=False,
+                              with_simhash_pass=False)
+    want = _cluster_set(full["clusters"])
+    full["cleanup"]()
+
+    def committed():
+        manifest = incremental.read_manifest(spark, out)
+        return manifest, _cluster_set(incremental.read_state(spark, out)["clusters"])
+
+    # the job commits signed, clusters, cluster_remap and dup_edges; the
+    # last point is after the last table, before the manifest
+    for point in ({"after_writes": 1}, {"after_writes": 2}, {"after_writes": 3},
+                  {"step": "_commit_manifest"}):
+        before = committed()
+        with crash(**point), pytest.raises(RuntimeError, match="injected crash"):
+            job.main(argv)
+        assert committed() == before, point
+        assert len(os.listdir(os.path.join(out, "gen"))) == 2, point
+        job.main(argv)
+        manifest, clusters = committed()
+        assert manifest["generation"] == before[0]["generation"] + 1
+        assert clusters == want, point
+        assert len(os.listdir(os.path.join(out, "gen"))) == 1, point
+
+    with crash(step="_collect_garbage"), pytest.raises(RuntimeError, match="injected crash"):
+        job.main(argv)
+    assert committed()[1] == want
+    assert len(os.listdir(os.path.join(out, "gen"))) == 2  # the previous one
+    job.main(argv)
+    assert committed()[1] == want
+    assert len(os.listdir(os.path.join(out, "gen"))) == 1
 
 
 def test_stats_are_the_observed_stage_counts(spark, split_corpus, tmp_path):

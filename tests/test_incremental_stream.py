@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from bibexpy_spark import corpus, pipeline
+from bibexpy_spark import corpus, incremental, pipeline
 from bibexpy_spark.streaming import incremental_stream as istream
 
 
@@ -39,22 +39,17 @@ def test_stream_of_deltas_equals_full_batch(spark, tmp_path):
     )
     q.awaitTermination(300)
 
-    got = {
-        (r["conv_id"], r["cluster_id"])
-        for r in spark.read.parquet(os.path.join(state, "clusters")).collect()
-    }
+    tables = incremental.read_state(spark, state)
+    got = {(r["conv_id"], r["cluster_id"]) for r in tables["clusters"].collect()}
     full = pipeline.run_dedup(
         spark, turns, with_containment=False, with_simhash_pass=False
     )
     want = {(r["conv_id"], r["cluster_id"]) for r in full["clusters"].collect()}
     assert got == want
 
-    n_state = spark.read.parquet(os.path.join(state, "signed")).count()
+    n_state = tables["signed"].count()
     assert n_state == turns.select("conv_id").distinct().count()
-    # remap audit exists when later deltas merged earlier clusters
-    if os.path.exists(os.path.join(state, "remaps")):
-        remaps = spark.read.parquet(os.path.join(state, "remaps"))
-        assert {"batch_id", "old_cluster_id", "cluster_id"} <= set(remaps.columns)
+    assert {"batch_id", "old_cluster_id", "cluster_id"} <= set(tables["remaps"].columns)
 
 
 def test_stream_pair_state_equals_batch_passes(spark, tmp_path):
@@ -89,6 +84,7 @@ def test_stream_pair_state_equals_batch_passes(spark, tmp_path):
         spark, turns, with_containment=True, with_simhash_pass=True,
         containment_mode="general",
     )
+    tables = incremental.read_state(spark, state)
     for subdir, key, cols in [
         ("containment_prefix", "containment_prefix", ["inner_id", "outer_id"]),
         ("containment_pairs", "containment_pairs", ["inner_id", "outer_id", "pos"]),
@@ -96,12 +92,12 @@ def test_stream_pair_state_equals_batch_passes(spark, tmp_path):
     ]:
         got = {
             tuple(r[c] for c in cols)
-            for r in spark.read.parquet(os.path.join(state, subdir)).collect()
+            for r in tables[subdir].collect()
         }
         want = {tuple(r[c] for c in cols) for r in full[key].select(*cols).collect()}
         assert got == want, f"{subdir}: streamed state != batch pass"
     # signed state carries the pass columns for the next delta
-    sig_cols = set(spark.read.parquet(os.path.join(state, "signed")).columns)
+    sig_cols = set(tables["signed"].columns)
     assert {"norm_text", "simhash"} <= sig_cols
 
 
@@ -139,7 +135,7 @@ def test_stream_extra_edges_equals_batch(spark, tmp_path):
     )
     got = {
         (r["conv_id"], r["cluster_id"])
-        for r in spark.read.parquet(os.path.join(state, "clusters")).collect()
+        for r in incremental.read_state(spark, state)["clusters"].collect()
     }
     want = {(r["conv_id"], r["cluster_id"]) for r in full["clusters"].collect()}
     assert got == want
@@ -148,7 +144,7 @@ def test_stream_extra_edges_equals_batch(spark, tmp_path):
 def test_stream_restart_with_missing_pair_table_fails(spark, tmp_path):
     """A stream restarted with containment_mode="general" over state written
     in "prefix" mode has no containment_pairs/ to compose against: the batch
-    must fail before staging anything, not write a pair table built from
+    must fail before writing anything, not write a pair table built from
     the delta's pairs alone (which silently loses every earlier pair)."""
     src = tmp_path / "feed"
     src.mkdir()
@@ -174,7 +170,9 @@ def test_stream_restart_with_missing_pair_table_fails(spark, tmp_path):
         spark, str(src), state, max_files_per_trigger=1,
         with_containment=True, containment_mode="prefix",
     ).awaitTermination(300)
-    assert os.path.exists(os.path.join(state, "containment_prefix"))
+    committed = incremental.read_manifest(spark, state)
+    assert "containment_prefix" in committed["tables"]
+    assert len(os.listdir(os.path.join(state, "gen"))) == 1
 
     drop(1)
     q = istream.foreach_batch_incremental_dedup(
@@ -185,62 +183,94 @@ def test_stream_restart_with_missing_pair_table_fails(spark, tmp_path):
 
     with pytest.raises(StreamingQueryException, match="no containment_pairs/ table"):
         q.awaitTermination(300)
-    assert not os.path.exists(os.path.join(state, "containment_pairs"))
-    assert not os.path.exists(os.path.join(state, "containment_pairs.tmp"))
+    assert incremental.read_manifest(spark, state) == committed
+    assert len(os.listdir(os.path.join(state, "gen"))) == 1
 
 
-def test_recover_pending_swap_rolls_forward(spark, tmp_path):
-    """Crash-atomicity of the multi-table state swap (r4 review): a crash
-    BETWEEN the per-table commits leaves the write-ahead intent on disk;
-    recovery must complete the remaining commits, fold the staged remap
-    delta, write the batch's committed marker (so its checkpoint replay
-    no-ops), and remove the intent — never leaving mixed old/new state."""
-    import json
+def test_stream_commit_survives_crash_at_every_point(spark, tmp_path, crash):
+    """A batch's state is committed by one manifest.  A crash after any
+    table write, or after the last one but before the manifest, leaves the
+    previous state readable unchanged, and the checkpoint replay folds the
+    batch again; a crash after the manifest, before garbage collection, has
+    committed, and the replay is skipped.  The remap audit holds every
+    committed batch's rows exactly once, and the chain ends equal to the
+    batch run over the union."""
+    import glob
+    import shutil
 
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    src = tmp_path / "feed"
+    src.mkdir()
     state = str(tmp_path / "state")
-    os.makedirs(state)
-    clusters_p = os.path.join(state, "clusters")
-    signed_p = os.path.join(state, "signed")
-    turns_p = os.path.join(state, "turns")
+    turns = spark.read.parquet(corpus.corpus_path_for_sf("sf0.001"))
+    bucket = F.abs(F.xxhash64("conv_id")) % 3
 
-    old = spark.createDataFrame([("c1", "OLD")], "conv_id string, v string")
-    new = spark.createDataFrame([("c1", "NEW"), ("c2", "NEW")],
-                                "conv_id string, v string")
-    for p in (clusters_p, signed_p, turns_p):
-        old.write.mode("overwrite").parquet(p)
-        new.write.mode("overwrite").parquet(p + ".tmp")
+    def drop(i):
+        turns.filter(bucket == i).coalesce(1).write.parquet(str(tmp_path / f"part{i}"))
+        f = glob.glob(str(tmp_path / f"part{i}" / "part-*.parquet"))[0]
+        shutil.copy(f, str(src / f"delta_{i}.parquet"))
 
-    # simulate the crash: intent published, ONE table already committed
-    with open(os.path.join(state, "_swap_intent.tmp"), "w") as fh:
-        json.dump({"batch_id": 7, "paths": [clusters_p, signed_p, turns_p]}, fh)
-    os.replace(os.path.join(state, "_swap_intent.tmp"),
-               os.path.join(state, "_swap_intent"))
-    istream._commit(clusters_p)  # crash happened right after this one
-    remap_tmp = os.path.join(state, "_remap_delta_7")
-    spark.createDataFrame([("x", "y")], "old_cluster_id string, cluster_id string") \
-        .coalesce(1).write.mode("overwrite").parquet(remap_tmp)
+    def run():
+        istream.foreach_batch_incremental_dedup(
+            spark, str(src), state, max_files_per_trigger=1
+        ).awaitTermination(300)
 
-    assert istream.recover_pending_swap(state) is True
+    def run_crashing(**point):
+        with crash(**point), pytest.raises(StreamingQueryException, match="injected crash"):
+            run()
 
-    for p in (clusters_p, signed_p, turns_p):
-        rows = {r["v"] for r in spark.read.parquet(p).collect()}
-        assert rows == {"NEW"}, p
-        assert not os.path.exists(p + ".tmp")
-    assert not os.path.exists(os.path.join(state, "_swap_intent"))
-    assert os.path.exists(os.path.join(state, "_committed", "7"))
-    assert not os.path.exists(remap_tmp)
-    remap_files = os.listdir(os.path.join(state, "remaps"))
-    assert any(f.startswith("batch7-") for f in remap_files)
-    # idempotent: a second call is a no-op
-    assert istream.recover_pending_swap(state) is False
+    def committed():
+        tables = incremental.read_state(spark, state)
+        return (
+            incremental.read_manifest(spark, state),
+            {(r["conv_id"], r["cluster_id"]) for r in tables["clusters"].collect()},
+            sorted(tuple(r) for r in tables["remaps"].collect()),
+        )
+
+    def remaps(before, after, batch_id):
+        old = dict(before)
+        return {(old[c], new, batch_id) for c, new in after if c in old and old[c] != new}
+
+    drop(0)
+    run()
+    first = committed()
+    drop(1)
+    # each batch commits signed, clusters, turns and remaps
+    for k in (1, 2, 3):
+        run_crashing(after_writes=k)
+        assert committed() == first, k
+    run_crashing(step="_commit_manifest")  # after the last table, before the manifest
+    assert committed() == first
+    run()  # the replay folds batch 1 into the untouched state
+    second = committed()
+    assert second[0]["batch_id"] == 1
+    assert len(os.listdir(os.path.join(state, "gen"))) == 1
+
+    drop(2)
+    run_crashing(step="_collect_garbage")  # committed; the replay must not refold
+    third = committed()
+    assert third[0]["batch_id"] == 2
+    assert len(os.listdir(os.path.join(state, "gen"))) == 2
+    run()
+    assert committed() == third
+
+    full = pipeline.run_dedup(spark, turns, with_containment=False, with_simhash_pass=False)
+    assert third[1] == {(r["conv_id"], r["cluster_id"]) for r in full["clusters"].collect()}
+    full["cleanup"]()
+    # (old_cluster_id, cluster_id, batch_id) rows, each committed batch once
+    want = remaps(first[1], second[1], 1) | remaps(second[1], third[1], 2)
+    assert want, "the fixture's later batches merge no earlier cluster"
+    assert third[2] == sorted(want)
 
 
 def test_stream_refuses_signed_state_without_turns(spark, tmp_path):
-    """A state dir with signed/ but no turns/ (pre-turn-tracking layout)
+    """A committed state with signed but no turns (a submit job's --output)
     must fail LOUDLY at the first batch instead of silently seeding a
     partial turns state — a later grown conversation from before the gap
     would otherwise re-sign over an incomplete turn set without tripping
-    the no-prior-turns guard (r4 review)."""
+    the no-prior-turns guard.  A directory with signed/ but no manifest was
+    not committed by write_state and is refused too."""
     src = tmp_path / "feed"
     src.mkdir()
     state = str(tmp_path / "state")
@@ -258,48 +288,50 @@ def test_stream_refuses_signed_state_without_turns(spark, tmp_path):
         glob.glob(str(tmp_path / "d0" / "part-*.parquet"))[0],
         str(src / "delta_0.parquet"),
     )
-    # forge the legacy layout: signed/ + clusters/ present, turns/ absent
-    from bibexpy_spark import incremental as inc
-
-    res = inc.run_incremental_dedup(
-        spark, turns.filter(keep == 1), None, None
-    )
-    os.makedirs(state, exist_ok=True)
-    res["signed_new"].write.parquet(os.path.join(state, "signed"))
-    res["clusters"].write.parquet(os.path.join(state, "clusters"))
+    # a job-shaped state: signed + clusters committed, no turns
+    res, tables = incremental.fold_state(spark, turns.filter(keep == 1), None)
+    incremental.write_state(state, tables)
     res["cleanup"]()
 
-    q = istream.foreach_batch_incremental_dedup(
-        spark, str(src), state, max_files_per_trigger=1
-    )
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    with pytest.raises(StreamingQueryException, match="no turns/"):
-        q.awaitTermination(300)
+    def first_batch_fails(match):
+        q = istream.foreach_batch_incremental_dedup(
+            spark, str(src), state, max_files_per_trigger=1
+        )
+        with pytest.raises(StreamingQueryException, match=match):
+            q.awaitTermination(300)
+
+    first_batch_fails("no turns table")
+    # the same tables written without a manifest
+    shutil.rmtree(os.path.join(state, "_state"))
+    shutil.move(glob.glob(os.path.join(state, "gen", "*", "signed"))[0], state)
+    first_batch_fails("has signed/ but no manifest")
 
 
 def test_ckpt_identity_guard(tmp_path):
-    """_committed markers belong to ONE checkpoint lifetime: replacing
-    _ckpt while keeping the state tables restarts batch numbering, so the
-    stale markers would silently skip new batches — the guard must refuse
-    (r4 review).  Pure-filesystem unit test."""
+    """The batch id a manifest records belongs to ONE checkpoint lifetime:
+    replacing _ckpt while keeping the state restarts batch numbering, so
+    the recorded id would silently skip new batches — the guard must
+    refuse.  Pure-filesystem unit test."""
     import json
 
     from bibexpy_spark.streaming.incremental_stream import _check_ckpt_identity
 
     state = str(tmp_path / "state")
-    marker_dir = os.path.join(state, "_committed")
     meta_dir = os.path.join(state, "_ckpt")
     os.makedirs(meta_dir)
-    # no metadata yet -> no-op
-    _check_ckpt_identity(state, marker_dir)
+    # no metadata yet -> no id
+    assert _check_ckpt_identity(state, None) is None
     json.dump({"id": "q-1"}, open(os.path.join(meta_dir, "metadata"), "w"))
-    _check_ckpt_identity(state, marker_dir)      # records q-1
-    assert open(os.path.join(marker_dir, "_ckpt_id")).read() == "q-1"
-    _check_ckpt_identity(state, marker_dir)      # same id: fine
+    assert _check_ckpt_identity(state, None) == "q-1"  # nothing committed yet
+    # a state the job wrote records no checkpoint
+    assert _check_ckpt_identity(state, {"generation": 1}) == "q-1"
+    committed = {"generation": 2, "batch_id": 0, "ckpt_id": "q-1"}
+    assert _check_ckpt_identity(state, committed) == "q-1"  # same id: fine
     json.dump({"id": "q-2"}, open(os.path.join(meta_dir, "metadata"), "w"))
     with pytest.raises(ValueError, match="reset or replaced"):
-        _check_ckpt_identity(state, marker_dir)
+        _check_ckpt_identity(state, committed)
 
 
 def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):

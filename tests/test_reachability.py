@@ -47,7 +47,6 @@ REFERENCES = {
 # shrink: an entry whose file is gone must leave it.
 PENDING = {
     PKG / "functions" / "bibex_norms.py",
-    PKG / "operators" / "filter_spec.py",
 }
 
 

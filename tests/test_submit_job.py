@@ -16,6 +16,18 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 
+def _manifest(out):
+    """The newest manifest of the state committed under ``out``."""
+    log = os.path.join(out, "_state")
+    n = max(int(f[:-5]) for f in os.listdir(log) if f.endswith(".json"))
+    return json.load(open(os.path.join(log, f"{n}.json")))
+
+
+def _table(out, name):
+    """The parquet files of state table ``name`` as ``out``'s manifest names it."""
+    return os.path.join(out, _manifest(out)["tables"][name], "*.parquet")
+
+
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
 def test_spark_submit_pyfiles_roundtrip(tmp_path):
     from bibexpy_spark import corpus
@@ -70,19 +82,19 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
     # clusters parquet is readable and complete
     n = duckdb.sql(
         f"SELECT count(*), count(DISTINCT conv_id) FROM "
-        f"read_parquet('{out_dir}/clusters/*.parquet')"
+        f"read_parquet('{_table(out_dir, 'clusters')}')"
     ).fetchone()
     assert n[0] == n_conv and n[1] == n_conv
 
     # the general_sa containment mode wrote both containment outputs, and
     # every interior pair names two distinct conversations
     bad = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{out_dir}/containment_pairs/*.parquet') "
+        f"SELECT count(*) FROM read_parquet('{_table(out_dir, 'containment_pairs')}') "
         f"WHERE inner_id = outer_id"
     ).fetchone()[0]
     assert bad == 0
     duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{out_dir}/containment_prefix/*.parquet')"
+        f"SELECT count(*) FROM read_parquet('{_table(out_dir, 'containment_prefix')}')"
     ).fetchone()
 
     # second run with the same run-id resumes: every stage manifest is fresh
@@ -157,13 +169,13 @@ def test_spark_submit_incremental_mode(tmp_path):
 
     diff = duckdb.sql(
         f"SELECT count(*) FROM ("
-        f"  (SELECT conv_id, cluster_id FROM read_parquet('{out_incr}/clusters/*.parquet')"
+        f"  (SELECT conv_id, cluster_id FROM read_parquet('{_table(out_incr, 'clusters')}')"
         f"   EXCEPT"
-        f"   SELECT conv_id, cluster_id FROM read_parquet('{out_full}/clusters/*.parquet'))"
+        f"   SELECT conv_id, cluster_id FROM read_parquet('{_table(out_full, 'clusters')}'))"
         f"  UNION ALL"
-        f"  (SELECT conv_id, cluster_id FROM read_parquet('{out_full}/clusters/*.parquet')"
+        f"  (SELECT conv_id, cluster_id FROM read_parquet('{_table(out_full, 'clusters')}')"
         f"   EXCEPT"
-        f"   SELECT conv_id, cluster_id FROM read_parquet('{out_incr}/clusters/*.parquet'))"
+        f"   SELECT conv_id, cluster_id FROM read_parquet('{_table(out_incr, 'clusters')}'))"
         f")"
     ).fetchone()[0]
     assert diff == 0, "incremental submit diverged from full-batch submit"
@@ -172,13 +184,13 @@ def test_spark_submit_incremental_mode(tmp_path):
     # equivalence contract, operationalized by the job's state composition)
     pair_diff = duckdb.sql(
         f"SELECT count(*) FROM ("
-        f"  (SELECT inner_id, outer_id, pos FROM read_parquet('{out_incr}/containment_pairs/*.parquet')"
+        f"  (SELECT inner_id, outer_id, pos FROM read_parquet('{_table(out_incr, 'containment_pairs')}')"
         f"   EXCEPT"
-        f"   SELECT inner_id, outer_id, pos FROM read_parquet('{out_full}/containment_pairs/*.parquet'))"
+        f"   SELECT inner_id, outer_id, pos FROM read_parquet('{_table(out_full, 'containment_pairs')}'))"
         f"  UNION ALL"
-        f"  (SELECT inner_id, outer_id, pos FROM read_parquet('{out_full}/containment_pairs/*.parquet')"
+        f"  (SELECT inner_id, outer_id, pos FROM read_parquet('{_table(out_full, 'containment_pairs')}')"
         f"   EXCEPT"
-        f"   SELECT inner_id, outer_id, pos FROM read_parquet('{out_incr}/containment_pairs/*.parquet'))"
+        f"   SELECT inner_id, outer_id, pos FROM read_parquet('{_table(out_incr, 'containment_pairs')}'))"
         f")"
     ).fetchone()[0]
     assert pair_diff == 0, "composed containment state diverged from batch"
@@ -190,7 +202,7 @@ def test_spark_submit_incremental_mode(tmp_path):
         f"UNION ALL SELECT conv_id FROM read_parquet('{new_p}'))"
     ).fetchone()[0]
     n_state = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{out_incr}/signed/*.parquet')"
+        f"SELECT count(*) FROM read_parquet('{_table(out_incr, 'signed')}')"
     ).fetchone()[0]
     assert n_state == n_conv
 
@@ -229,7 +241,7 @@ def test_spark_submit_prior_state_alone_folds_the_delta(tmp_path):
 
     def clusters(out):
         return duckdb.sql(
-            f"SELECT conv_id, cluster_id FROM read_parquet('{out}/clusters/*.parquet') "
+            f"SELECT conv_id, cluster_id FROM read_parquet('{_table(out, 'clusters')}') "
             "ORDER BY conv_id"
         ).fetchall()
 
@@ -290,7 +302,7 @@ def test_spark_submit_incremental_resume(tmp_path):
 
     def clusters(out):
         return duckdb.sql(
-            f"SELECT conv_id, cluster_id FROM read_parquet('{out}/clusters/*.parquet') "
+            f"SELECT conv_id, cluster_id FROM read_parquet('{_table(out, 'clusters')}') "
             "ORDER BY conv_id"
         ).fetchall()
 
@@ -329,6 +341,76 @@ def test_spark_submit_incremental_resume(tmp_path):
     rows_t2 = table_run(old_p, str(tmp_path / "out_t2"))
     assert not any(x.get("skipped") for x in rows_t2[len(rows_t1):])
     assert clusters(str(tmp_path / "out_t2")) == clusters(out_old)
+
+
+@pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
+def test_spark_submit_killed_mid_publish_relaunch_completes(spark, tmp_path):
+    """A spark-submit run into an --output holding a committed state, its
+    driver killed after the second table write of the commit, leaves that
+    state in force; a relaunch completes and equals the batch run.  The
+    kill comes from a driver wrapper written here, not from a job flag."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from bibexpy_spark import corpus, incremental, pipeline
+
+    turns_path = corpus.corpus_path_for_sf("sf0.001")
+    turns = spark.read.parquet(turns_path)
+    out = str(tmp_path / "out")
+    res, state = incremental.fold_state(
+        spark, turns.filter(F.abs(F.xxhash64("conv_id")) % 10 < 7), None
+    )
+    incremental.write_state(out, state)
+    res["cleanup"]()
+
+    def clusters():
+        return sorted(duckdb.sql(
+            f"SELECT conv_id, cluster_id FROM read_parquet('{_table(out, 'clusters')}')"
+        ).fetchall())
+
+    before = (_manifest(out), clusters())
+    job = os.path.join(REPO, "jobs", "dedup_job.py")
+    killed = tmp_path / "killed_job.py"
+    killed.write_text(
+        "import os, runpy\n"
+        "from pyspark.sql.readwriter import DataFrameWriter\n"
+        "parquet, written = DataFrameWriter.parquet, []\n"
+        "def write_then_die(self, path, *args, **kwargs):\n"
+        "    parquet(self, path, *args, **kwargs)\n"
+        "    written.append(path)\n"
+        "    if len(written) == 2:\n"
+        "        os._exit(17)\n"
+        "DataFrameWriter.parquet = write_then_die\n"
+        f"runpy.run_path({job!r}, run_name='__main__')\n"
+    )
+
+    def submit(app):
+        return subprocess.run(
+            [
+                SPARK_SUBMIT, "--master", "local[4]",
+                "--conf", "spark.sql.shuffle.partitions=4",
+                "--conf", "spark.ui.enabled=false",
+                app, "--input", turns_path, "--output", out, "--no-simhash",
+            ],
+            capture_output=True, text=True, timeout=600,
+            env={**os.environ, "PYTHONPATH": REPO},
+        )
+
+    r = submit(str(killed))
+    assert r.returncode == 17, r.stderr[-3000:]
+    assert (_manifest(out), clusters()) == before
+    gens = os.listdir(os.path.join(out, "gen"))
+    assert len(gens) == 2
+    torn = [g for g in gens if g != before[0]["tables"]["clusters"].split("/")[1]]
+    assert len(os.listdir(os.path.join(out, "gen", torn[0]))) == 2
+
+    r = submit(job)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert _manifest(out)["generation"] == before[0]["generation"] + 1
+    full = pipeline.run_dedup(spark, turns, with_containment=False, with_simhash_pass=False)
+    assert clusters() == sorted((r["conv_id"], r["cluster_id"]) for r in full["clusters"].collect())
+    full["cleanup"]()
+    assert len(os.listdir(os.path.join(out, "gen"))) == 1
 
 
 def test_incremental_refuses_in_place_state_overwrite(tmp_path):
