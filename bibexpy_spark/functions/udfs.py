@@ -60,9 +60,9 @@ def with_signature_columns(df, cfg: DedupConfig, text_col: str = "doc"):
     The strong content hash is computed JVM-side with ``sha2`` (the exact
     short-circuit analogous to the reference's Stage-1 DOI equality,
     smart_merger.py:253-265); only shingling/MinHash go through Arrow.
-    The UDF stage inherits the upstream shuffle's partitioning — the session
-    sizes ``spark.sql.shuffle.partitions`` to the core count and disables
-    AQE partition coalescing, so no extra repartition pass is needed.
+    The UDF stage inherits the upstream shuffle's partitioning, which AQE
+    coalescing sizes to the data (one task for a small delta, about one per
+    core for a corpus), so no extra repartition pass is needed.
     """
     u = for_config(cfg)
     return (

@@ -62,13 +62,16 @@ smart_merger.py:576-827):
                      conv_id when the hash is in the prior state (counter
                      ``cross_exact``; such a row skips the fuzzy path), else
                      the new rows' min (Stage-1 exact analogue);
-  * ``reps``         the new reps plus the prior reps sharing a band key
-                     with one (the touched buckets' members);
+  * ``reps``         the new reps plus the prior reps (min conv_id per
+                     content hash) of the prior rows sharing a band key with
+                     one (the touched buckets' members);
     ``candidates``   ``lsh.bucket_pairs`` over the reps, new-flagged when
                      there is a prior (blocking analogue); counters
                      ``hot_buckets``, ``active_buckets``;
     ``verify``       the Jaccard-verified candidate edges (compute_match
-                     analogue);
+                     analogue); not run when ``candidates`` observed 0 rows —
+                     the dup edges are then the stored empty candidate
+                     frame's (a_id, b_id);
     ``contain_prefix`` / ``contain_general`` / ``fuzzy``  the pass pairs
                      with >= 1 new endpoint (merge_references and fuzzy
                      Stage-4 analogues); ``contain_general`` counts
@@ -79,8 +82,10 @@ smart_merger.py:576-827):
                      prior cluster_id (already the min conv_id of its
                      members), so prior clusters enter connected components
                      as super-nodes;
-    ``cluster``      the connected-component label of each edge endpoint
-                     (replaces greedy 1:1 assignment, smart_merger.py:654-711).
+    ``cluster``      the connected-component label of every new conv_id
+                     (``prior`` false) and of each prior super-node an edge
+                     touches (``prior`` true) — replaces greedy 1:1
+                     assignment, smart_merger.py:654-711.
 
 One key serves both modes: ``conv_id``, the key of every state table and
 output.  With a prior the frames a stage stores are O(|delta| +
@@ -92,8 +97,8 @@ is exact because same-hash rows share every signature, so a semi-join on
 a hash or band key keeps whole hash groups.  Joins between new frames
 carry no hint, so a batch run never broadcasts a corpus-sized frame.
 ``clusters`` is the prior assignment left-joined to the small remap, plus
-the new rows left-joined to their labels; ``cluster_remap`` is a filter
-over the ``cluster`` stage.  Neither re-runs a stage.
+the ``cluster`` stage's new rows (a filter); ``cluster_remap`` is a filter
+over the same stage.  Neither re-runs a stage.
 """
 
 from __future__ import annotations
@@ -440,8 +445,12 @@ def run_incremental_dedup(
                 .select("conv_id")
             )
             hit = old.join(F.broadcast(hit_ids), "conv_id", "left_semi")
+            hit_rep_ids = (
+                hit.groupBy("content_sha").agg(F.min("conv_id").alias("conv_id"))
+                .select("conv_id")
+            )
             return (
-                exact.representatives(hit, exact.exact_edges(hit))
+                hit.join(hit_rep_ids, "conv_id", "left_semi")
                 .withColumn("_is_new", F.lit(False))
                 .unionByName(new_reps.withColumn("_is_new", F.lit(True)))
             )
@@ -460,10 +469,14 @@ def run_incremental_dedup(
         )[0],
         bucket_counts,
     )
-    dup_edges = stage("verify", lambda: (
-        verify_op.verify_pairs(cand, reps, cfg)
-        .filter(F.col("is_dup")).select("a_id", "b_id")
-    ))
+    if counts["candidates"]["rows"]:
+        dup_edges = stage("verify", lambda: (
+            verify_op.verify_pairs(cand, reps, cfg)
+            .filter(F.col("is_dup")).select("a_id", "b_id")
+        ))
+    else:
+        # nothing to verify: the stored empty candidate frame is the edge set
+        dup_edges = cand.select("a_id", "b_id")
 
     # the optional passes, built before clustering so their pairs can join
     # the edge set
@@ -565,18 +578,19 @@ def run_incremental_dedup(
             "a_id", "b_id", F.lit(False).alias("a_prior"), F.lit(False).alias("b_prior")
         )
 
-    # the label of each edge endpoint (the component's min id), with the
-    # prior flag.  A new conversation in no edge and an untouched prior
-    # cluster keep their own label.
+    # the label (the component's min id) of every new conversation and of
+    # each prior super-node an edge touches, with the prior flag.  An
+    # untouched prior cluster keeps its own label.
     def build_labels() -> DataFrame:
-        ends = (
-            edges.select(F.col("a_id").alias("conv_id"), F.col("a_prior").alias("prior"))
-            .unionByName(
-                edges.select(F.col("b_id").alias("conv_id"), F.col("b_prior").alias("prior"))
+        nodes = new.select("conv_id", F.lit(False).alias("prior"))
+        if prior:
+            nodes = nodes.unionByName(
+                edges.filter("a_prior").select(F.col("a_id").alias("conv_id"))
+                .unionByName(edges.filter("b_prior").select(F.col("b_id").alias("conv_id")))
+                .distinct()
+                .withColumn("prior", F.lit(True))
             )
-            .distinct()
-        )
-        return components.connected_components(edges, ends, cfg).withColumnRenamed(
+        return components.connected_components(edges, nodes, cfg).withColumnRenamed(
             "cluster_id", "label"
         )
 
@@ -588,10 +602,8 @@ def run_incremental_dedup(
     remap = labels.filter(merged).select(
         F.col("conv_id").alias("old_cluster_id"), F.col("label").alias("cluster_id")
     )
-    clusters = (
-        new.select("conv_id")
-        .join(labels.filter(~F.col("prior")).select("conv_id", "label"), "conv_id", "left")
-        .select("conv_id", F.coalesce("label", "conv_id").alias("cluster_id"))
+    clusters = labels.filter(~F.col("prior")).select(
+        "conv_id", F.col("label").alias("cluster_id")
     )
     if prior:
         clusters = (

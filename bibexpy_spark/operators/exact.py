@@ -24,29 +24,28 @@ def exact_edges(new: DataFrame, old: DataFrame | None = None) -> DataFrame:
     group and skips the fuzzy path), else the min among the ``new`` rows.
 
     Shuffle-narrow plan: a window over the full row would shuffle the wide
-    signature payload (shingle + band arrays); instead aggregate the
-    (content_sha, conv_id) projection — map-side-combinable — and join the
-    tiny map of linked hashes back (dup maps are small relative to the
-    corpus, so AQE broadcasts them).  ``old`` is only scanned: its rows are
-    semi-joined to the broadcast new hashes before they are aggregated.
+    signature payload (shingle + band arrays); instead ONE aggregate over
+    the (content_sha, conv_id) projection of the new rows, plus the old
+    rows semi-joined to the broadcast new hashes (``old`` is only scanned),
+    takes per hash the min new id, the new-row count and the min old id.
+    The tiny map of linked hashes is then joined back to the new rows (dup
+    maps are small relative to the corpus, so AQE broadcasts them).
     """
-    groups = (
-        new.select("content_sha", "conv_id")
-        .groupBy("content_sha")
-        .agg(F.min("conv_id").alias("_rep"), F.count("*").alias("_n"))
-    )
-    rep, cross = F.col("_rep"), F.lit(False)
+    rows = new.select("content_sha", "conv_id", F.lit(True).alias("_new"))
     if old is not None:
-        old_rep = (
-            old.select("content_sha", "conv_id")
+        rows = rows.unionByName(
+            old.select("content_sha", "conv_id", F.lit(False).alias("_new"))
             .join(F.broadcast(new.select("content_sha")), "content_sha", "left_semi")
-            .groupBy("content_sha")
-            .agg(F.min("conv_id").alias("_old_rep"))
         )
-        groups = groups.join(F.broadcast(old_rep), "content_sha", "left")
-        rep, cross = F.coalesce("_old_rep", "_rep"), F.col("_old_rep").isNotNull()
+    new_id = F.when(F.col("_new"), F.col("conv_id"))
+    groups = rows.groupBy("content_sha").agg(
+        F.min(new_id).alias("_rep"),
+        F.count(new_id).alias("_n"),
+        F.min(F.when(~F.col("_new"), F.col("conv_id"))).alias("_old_rep"),
+    )
+    cross = F.col("_old_rep").isNotNull()
     linked = groups.filter((F.col("_n") > 1) | cross).select(
-        "content_sha", rep.alias("a_id"), cross.alias("cross")
+        "content_sha", F.coalesce("_old_rep", "_rep").alias("a_id"), cross.alias("cross")
     )
     return (
         new.select("content_sha", F.col("conv_id").alias("b_id"))

@@ -32,10 +32,14 @@ def build_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # AQE partition coalescing stays on (Spark's default, as under
+        # spark-submit): it aims at the default parallelism but stops at
+        # about 1 MB per task, so a delta-sized shuffle runs 1 task instead
+        # of shuffle.partitions and a corpus-sized one still gets about one
+        # task per core.  Turning it off to keep the CPU-bound UDF stage
+        # wide did not pay: a batch run over 5,000 conversations on 4 cores
+        # took 1.57-1.63 s in `sign` with it off and 1.18-1.36 s with it on
         .config("spark.sql.adaptive.enabled", "true")
-        # shuffle.partitions is already sized to the core count; AQE
-        # coalescing below that only strangles CPU-bound UDF stages
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bound the per-batch python-worker footprint: at the default 10k

@@ -255,6 +255,7 @@ def main(argv: list[str] | None = None) -> None:
     n = incremental.read_state(spark, args.output)["clusters"].count()
     print(f"dedup_job: wrote {n} cluster assignments to {args.output}",
           file=sys.stderr)
+    res["cleanup"]()
     spark.stop()
 
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import contextlib
+import uuid
 
 import pandas as pd
 import pytest
@@ -36,6 +37,28 @@ def golden(turns_pd):
 @pytest.fixture(scope="session")
 def turns_df(spark, turns_pd):
     return spark.createDataFrame(turns_pd)
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a fresh job group and returns
+    ``(fn's result, ids of the Spark jobs it started)`` — the status
+    tracker's view, read once the listener bus has delivered every event;
+    the group is cleared afterwards."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            value = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return value, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture

@@ -452,25 +452,19 @@ def test_containment_index_stats_one_row(spark, turns_df, tmp_path):
     assert row["hot_shingles"] == sum(n > 10_000 for n in df.values())
 
 
-def test_prefix_containment_builds_without_driver_jobs(spark):
+def test_prefix_containment_builds_without_driver_jobs(spark, spark_jobs):
     """prefix_containment_pairs must be PURE plan construction: the short
     legs' observed-length prune rides the plan (broadcast semi on a
     distinct-klen subquery), never a build-time .collect() — baked length
     literals would silently lose pairs at lengths that appear only when a
     re-executed plan's source has changed (r4 review)."""
-    sc = spark.sparkContext
     rows = [("i", "hello"), ("o", "hello world and a much longer tail")]
     signed = spark.createDataFrame(rows, "conv_id string, norm_text string")
-    group = "probe-containment-lazy"
-    sc.setJobGroup(group, "plan construction must run zero jobs")
-    try:
-        pairs = containment.prefix_containment_pairs(signed, CANONICAL)
-        pairs_d = containment.prefix_containment_pairs(
-            signed, CANONICAL, signed.limit(0)
-        )
-    finally:
-        sc.setJobGroup("", "")
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    (pairs, pairs_d), jobs = spark_jobs(lambda: (
+        containment.prefix_containment_pairs(signed, CANONICAL),
+        containment.prefix_containment_pairs(signed, CANONICAL, signed.limit(0)),
+    ))
+    assert jobs == []
     got = {(r["inner_id"], r["outer_id"]) for r in pairs.collect()}
     assert got == {("i", "o")}
     got_d = {(r["inner_id"], r["outer_id"]) for r in pairs_d.collect()}

@@ -531,7 +531,7 @@ def test_job_commit_survives_crash_at_every_point(
     assert len(os.listdir(os.path.join(out, "gen"))) == 1
 
 
-def test_stats_are_the_observed_stage_counts(spark, split_corpus, tmp_path):
+def test_stats_are_the_observed_stage_counts(spark, split_corpus, tmp_path, spark_jobs):
     """``stats`` holds the counts observed while the stages ran: reading it
     after the outputs are written starts no Spark job, and each value
     equals a count taken directly from the returned frames."""
@@ -544,13 +544,8 @@ def test_stats_are_the_observed_stage_counts(spark, split_corpus, tmp_path):
     for key in ("clusters", "cluster_remap"):
         incr[key].write.parquet(str(tmp_path / key))
 
-    sc = spark.sparkContext
-    sc.setJobGroup("stats_read", "stats_read")
-    try:
-        stats = incr["stats"].first().asDict()
-        assert sc.statusTracker().getJobIdsForGroup("stats_read") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    stats, jobs = spark_jobs(lambda: incr["stats"].first().asDict())
+    assert jobs == []
 
     signed_new = incr["signed_new"]
     old_shas = prior_s.select("content_sha").distinct()
@@ -589,3 +584,93 @@ def test_outputs_read_stored_stages(spark, split_corpus, tmp_path):
         assert "delta_turns_input" not in plan, key
     assert incr["cluster_remap"].count() > 0
     incr["cleanup"]()
+
+
+def test_zero_candidate_delta_skips_verify(spark, split_corpus, tmp_path):
+    """A delta whose new conversation shares no band bucket with any prior
+    rep yields no candidate pair, so ``verify`` is not run: the dup edges
+    are the stored empty candidate frame's endpoints, ``metrics.jsonl`` has
+    no ``verify`` row, and the clusters still equal the batch run over the
+    union.  A relaunch with the same run skips every stage that ran."""
+    from datetime import datetime
+
+    from bibexpy_spark.lineage import RunContext
+
+    old_turns, _, _ = split_corpus
+    novel = spark.createDataFrame(
+        [("z_novel", i, "user" if i % 2 == 0 else "assistant",
+          " ".join(f"zq{i}w{j}x" for j in range(40)), None, datetime(2026, 1, 1))
+         for i in range(4)],
+        old_turns.schema,
+    )
+    prior = pipeline.run_dedup(
+        spark, old_turns, with_containment=False, with_simhash_pass=False
+    )
+    prior_s, prior_c = _state_tables(spark, prior, tmp_path, "zc")
+    prior["cleanup"]()
+
+    def delta_run() -> RunContext:
+        return RunContext(spark, CANONICAL, str(tmp_path / "wh"), run_id="zero",
+                          input_token="t")
+
+    run = delta_run()
+    incr = incremental.run_incremental_dedup(spark, novel, prior_s, prior_c, run=run)
+    assert incr["dup_edges_new"].columns == ["a_id", "b_id"]
+    assert incr["dup_edges_new"].count() == 0
+    stats = incr["stats"].first().asDict()
+    assert stats["n_candidates"] == stats["n_dup_edges"] == 0
+    full = pipeline.run_dedup(
+        spark, old_turns.unionByName(novel),
+        with_containment=False, with_simhash_pass=False,
+    )
+    assert _cluster_set(incr["clusters"]) == _cluster_set(full["clusters"])
+    full["cleanup"]()
+    ran = [m["stage"] for m in run.metrics if not m.get("skipped")]
+    assert "candidates" in ran and "verify" not in ran
+    run.close()
+
+    rerun = delta_run()
+    again = incremental.run_incremental_dedup(spark, novel, prior_s, prior_c, run=rerun)
+    assert [m["stage"] for m in rerun.metrics if m.get("skipped")] == ran
+    assert again["dup_edges_new"].count() == 0
+    assert _cluster_set(again["clusters"]) == _cluster_set(incr["clusters"])
+
+
+def test_delta_pass_job_budget(spark, split_corpus, tmp_path, spark_jobs):
+    """The delta pass plus its ``clusters`` and ``cluster_remap`` writes
+    runs at most 39 Spark jobs, the count measured once ``exact_edges``
+    became one aggregate, ``reps`` one aggregate and a semi-join, and
+    ``clusters`` a filter over the stored ``cluster`` stage (44 before).  A
+    stage or output that starts recomputing shows up here."""
+    old_turns, new_turns, _ = split_corpus
+    prior = pipeline.run_dedup(
+        spark, old_turns, with_containment=False, with_simhash_pass=False
+    )
+    prior_s, prior_c = _state_tables(spark, prior, tmp_path, "jb")
+    prior["cleanup"]()
+
+    def delta_pass():
+        incr = incremental.run_incremental_dedup(spark, new_turns, prior_s, prior_c)
+        for key in ("clusters", "cluster_remap"):
+            incr[key].write.parquet(str(tmp_path / key))
+        return incr
+
+    incr, jobs = spark_jobs(delta_pass)
+    incr["cleanup"]()
+    assert len(jobs) <= 39, jobs
+
+
+def test_job_releases_its_stages(spark, split_corpus, tmp_path, monkeypatch):
+    """``dedup_job.py`` without ``--run-dir`` holds its stages in memory;
+    ``main`` releases them once the state is committed, so an in-process
+    caller's session keeps no RDD the job persisted."""
+    from pyspark.sql import SparkSession
+
+    old_turns, _, _ = split_corpus
+    input_p = str(tmp_path / "turns")
+    old_turns.write.parquet(input_p)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs().keySet())
+    _load_job().main(["--input", input_p, "--output", str(tmp_path / "out"), "--no-simhash"])
+    assert not set(jsc.getPersistentRDDs().keySet()) - held
