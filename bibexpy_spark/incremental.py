@@ -8,9 +8,9 @@ clusters that merged.  :func:`run_incremental_dedup` is that pass, and a
 batch run is the same pass over empty state: ``pipeline.run_dedup`` calls
 it with no prior, and the body then skips the prior-only stages and runs
 every operator's batch plan.  ``fold_state`` wraps the pass for a state
-directory: it reads the prior tables (none for a bootstrap), runs the pass
-and returns the next state, which ``write_state`` commits with one manifest
-(the submit job and the stream both use them).
+directory: it composes the prior tables ``read_state`` returned (none for a
+bootstrap) with the pass and returns the next state, which ``write_state``
+commits with one manifest (the submit job and the stream both use them).
 
 Deltas may also GROW conversations already clustered (the common shape for
 live transcript tables: a batch appends turns to an open ``conv_id`` —
@@ -178,6 +178,28 @@ def _pair_tables(
     if with_simhash_pass:
         tables.append("simhash_pairs")
     return tables
+
+
+def _cluster_edge_legs(
+    tables: dict[str, DataFrame],
+    extra_cluster_edges: tuple[str, ...],
+    containment_mode: str,
+    suffix: str = "",
+) -> list[DataFrame]:
+    """The ``(a_id, b_id)`` cluster edges of each extra edge source, read
+    from its pair table ``<table><suffix>`` in ``tables``: ``simhash_pairs``,
+    and for containment the complete pass's ``containment_pairs`` when the
+    mode runs it, else ``containment_prefix``."""
+    legs = []
+    for source in extra_cluster_edges:
+        table = "simhash_pairs" if source == "simhash" else (
+            "containment_prefix" if containment_mode == "prefix" else "containment_pairs"
+        )
+        a, b = _PAIR_ENDS[table]
+        legs.append(
+            tables[table + suffix].select(F.col(a).alias("a_id"), F.col(b).alias("b_id"))
+        )
+    return legs
 
 
 def _signed_columns(with_containment: bool, with_simhash_pass: bool) -> list[str]:
@@ -515,14 +537,10 @@ def run_incremental_dedup(
         if resigned_ids is not None
         else signed_new.select("conv_id").filter(F.lit(False))
     )
-    edge_legs = [exact_edges.select("a_id", "b_id"), dup_edges]
-    if "containment" in extra_cluster_edges:
-        src = passes.get("containment_pairs_new", passes["containment_prefix_new"])
-        edge_legs.append(
-            src.select(F.col("inner_id").alias("a_id"), F.col("outer_id").alias("b_id"))
-        )
-    if "simhash" in extra_cluster_edges:
-        edge_legs.append(passes["simhash_pairs_new"].select("a_id", "b_id"))
+    edge_legs = [
+        exact_edges.select("a_id", "b_id"), dup_edges,
+        *_cluster_edge_legs(passes, extra_cluster_edges, containment_mode, "_new"),
+    ]
     if extra_cluster_edges and carried is not None:
         # a dissolved cluster's members re-enter clustering; their
         # surviving pair edges live ONLY in the maintained prior pair
@@ -765,7 +783,7 @@ def write_state(
 def fold_state(
     spark: SparkSession,
     new_turns: DataFrame,
-    prior_dir: str | None,
+    prior: dict[str, DataFrame] | None,
     cfg: DedupConfig = CANONICAL,
     prior_turns: DataFrame | None = None,
     with_containment: bool = False,
@@ -774,61 +792,46 @@ def fold_state(
     extra_cluster_edges: tuple[str, ...] = (),
     run: RunContext | None = None,
 ) -> tuple[dict[str, Any], dict[str, DataFrame]]:
-    """Fold ``new_turns`` into the state under ``prior_dir`` via
-    run_incremental_dedup (``run`` is passed through: with a RunContext the
-    stages resume).  ``prior_dir=None`` is a batch run: the state it
-    returns is the first state of a delta chain.
+    """Fold ``new_turns`` into ``prior``, the tables read_state returned
+    for the prior state, via run_incremental_dedup (``run`` is passed
+    through: with a RunContext the stages resume).  ``prior=None`` is a
+    batch run: the state it returns is the first state of a delta chain.
 
-    Reads ``signed``, ``clusters`` and each enabled pass's pair table
-    through read_state, and raises ValueError before computing anything when
-    ``prior_dir`` has no manifest, its manifest lacks one of them or names
-    a missing directory, or ``signed`` lacks a column an enabled pass reads
-    — composing against a missing or partial table would silently truncate
-    the next state.  The prior pair tables of ``extra_cluster_edges``
-    sources feed ``prior_extra_pairs``.
+    Composes only — state I/O is read_state's and write_state's.  Raises
+    ValueError before computing anything when ``prior`` lacks ``signed``,
+    ``clusters`` or an enabled pass's pair table, or ``signed`` lacks a
+    column an enabled pass reads — composing against a missing or partial
+    table would silently truncate the next state.  The prior pair tables
+    of ``extra_cluster_edges`` sources feed ``prior_extra_pairs``.
 
     Returns ``(res, next_state)``: the run_incremental_dedup result and the
     next state tables by name — ``signed`` (prior rows minus re-signed ones,
     plus the delta's), ``clusters`` and each pair table composed via
     compose_pair_state.  ``write_state`` commits them (plus any table the
-    caller adds) as the ``prior_dir`` of the next delta."""
+    caller adds) as the state the next delta folds into."""
     check_pass_options(
         extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
     )
     pairs = _pair_tables(with_containment, with_simhash_pass, containment_mode)
     sig_cols = _signed_columns(with_containment, with_simhash_pass)
-    prior: dict[str, DataFrame] = {}
     prior_extra = None
-    if prior_dir is not None:
-        state = read_state(spark, prior_dir)
+    if prior is None:
+        prior = {}
+    else:
         for name in ["signed", "clusters", *pairs]:
-            if name not in state:
+            if name not in prior:
                 raise ValueError(
-                    f"prior state {prior_dir!r} has no {name}/ table: it was "
-                    "written with that pass off or in another containment "
-                    "mode — rebuild it with a batch run that has the same "
-                    "passes on"
+                    f"prior state has no {name}/ table: it was written with "
+                    "that pass off or in another containment mode — rebuild "
+                    "it with a batch run that has the same passes on"
                 )
-            prior[name] = state[name]
         missing = [c for c in sig_cols if c not in prior["signed"].columns]
         if missing:
             raise ValueError(
-                f"prior state {prior_dir!r}: signed/ lacks {missing}, which "
-                "the enabled passes read — it was written with those passes "
-                "off"
+                f"prior state: signed/ lacks {missing}, which the enabled "
+                "passes read — it was written with those passes off"
             )
-        edge_table = {
-            "containment": "containment_prefix"
-            if containment_mode == "prefix" else "containment_pairs",
-            "simhash": "simhash_pairs",
-        }
-        legs = []
-        for source in extra_cluster_edges:
-            table = edge_table[source]
-            a, b = _PAIR_ENDS[table]
-            legs.append(
-                prior[table].select(F.col(a).alias("a_id"), F.col(b).alias("b_id"))
-            )
+        legs = _cluster_edge_legs(prior, extra_cluster_edges, containment_mode)
         if legs:
             prior_extra = reduce(DataFrame.unionByName, legs)
 

@@ -100,6 +100,9 @@ class StateLeaseError(RuntimeError):
 
 
 LEASE_FILENAME = ".writer.lease"
+# a lease lapses after this long even while its pid looks alive (the
+# cross-host fallback of the pid check); a holder's recorded ttl_s wins
+LEASE_TTL_S = 6 * 3600.0
 
 
 def _pid_alive(pid) -> bool:
@@ -114,31 +117,32 @@ def _pid_alive(pid) -> bool:
     return True
 
 
-def acquire_lease(
-    dir_path: str, ttl_s: float = 6 * 3600.0, owner: str = ""
-) -> None:
+def acquire_lease(dir_path: str, owner: str = "") -> None:
     """Advisory exclusive WRITER lease on a run/state directory.
 
-    The parquet+manifest state layer has no optimistic-concurrency story
-    (real Iceberg CASes the table pointer and retries; BASELINE.md gap
-    table #1): two jobs pointed at one run/state dir would interleave
-    their ``os.replace`` swaps with no detection.  This lease closes that
-    operational hazard the way the reference does — per-project job
-    exclusivity (apps/api/jobs/runner.py:145-151 refuses a second run
-    while one is active).  The first writer records (pid, acquired_at,
-    ttl, owner) in ``.writer.lease``; a second concurrent writer gets a
-    loud StateLeaseError.  A crashed holder is reclaimed once its pid is
-    dead (same-host check — this sandbox is single-host; on a real
-    cluster the ttl is the cross-host fallback) or its ttl expired.
-    Same-pid re-acquisition is a no-op: one process may legitimately
-    layer several RunContexts over a dir sequentially.
+    The state commit detects a second writer by itself: of two writers of
+    generation n, the second one's rename to ``_state/<n>.json`` fails
+    (``write_state``).  Two writes have no such check (real Iceberg CASes
+    the table pointer and retries; BASELINE.md gap table #1): a
+    ``RunContext``'s ``os.replace`` stage swaps in its run dir, and the
+    stream's ``_ckpt`` checkpoint in its state dir.  Two jobs pointed at one
+    such dir would interleave them with no detection.  This lease guards
+    those two the way the reference does — per-project job exclusivity
+    (apps/api/jobs/runner.py:145-151 refuses a second run while one is
+    active).  The first writer records (pid, acquired_at, ttl_s, owner) in
+    ``.writer.lease``; a second concurrent writer gets a loud
+    StateLeaseError.  A crashed holder is reclaimed once its pid is dead
+    (same-host check — this sandbox is single-host; on a real cluster the
+    ttl is the cross-host fallback) or its ttl (``LEASE_TTL_S``) expired.
+    Same-pid re-acquisition is a no-op: one process may legitimately layer
+    several RunContexts over a dir sequentially.
     """
     os.makedirs(dir_path, exist_ok=True)
     path = os.path.join(dir_path, LEASE_FILENAME)
     payload = {
         "pid": os.getpid(),
         "acquired_at": time.time(),
-        "ttl_s": ttl_s,
+        "ttl_s": LEASE_TTL_S,
         "owner": owner,
     }
     for _attempt in range(2):
@@ -153,7 +157,7 @@ def acquire_lease(
                 return  # re-entrant
             expired = (
                 time.time() - cur.get("acquired_at", 0.0)
-                > cur.get("ttl_s", ttl_s)
+                > cur.get("ttl_s", LEASE_TTL_S)
             )
             if _pid_alive(cur.get("pid")) and not expired:
                 raise StateLeaseError(

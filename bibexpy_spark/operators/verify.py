@@ -2,7 +2,8 @@
 
 The reference verifies candidates with staged predicates over normalized
 fields (compute_match, smart_merger.py:243-350); the north rule replaces
-Jaro-Winkler with exact Jaccard on k-shingle sets at a fixed threshold.
+its string similarities with exact Jaccard on k-shingle sets at a fixed
+threshold.
 
 The Jaccard itself is computed with built-in array functions
 (``array_intersect`` / set sizes), staying inside whole-stage codegen —

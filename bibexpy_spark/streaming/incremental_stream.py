@@ -20,11 +20,12 @@ State under ``state_dir``, committed per batch by ``incremental.write_state``
 (``_state/<n>.json`` names the tables of generation n under ``gen/``):
     signed · clusters · containment_prefix · containment_pairs ·
     simhash_pairs
-               the delta state, read and composed by
-               ``incremental.fold_state`` (the same layout every submit-job
-               output has; a pair table is present only when its pass is on,
-               and a restart with a pass whose table is missing fails the
-               batch before anything is written)
+               the delta state: the handler reads it once per batch with
+               ``incremental.read_state`` and ``incremental.fold_state``
+               composes it (the same layout every submit-job output has; a
+               pair table is present only when its pass is on, and a
+               restart with a pass whose table is missing fails the batch
+               before anything is written)
     turns      ingested turn rows (latest-wins on (conv_id, turn_idx)) —
                the prior_turns source for grown-conversation re-signing
     remaps     batch_id, old_cluster_id, cluster_id: every committed
@@ -108,14 +109,15 @@ def foreach_batch_incremental_dedup(
     the deterministic shape the equivalence test uses.
 
     The pass flags and ``extra_cluster_edges`` mean what they mean for
-    ``incremental.fold_state``, which each batch calls on ``state_dir``:
-    after any batch the pair state equals the batch pass over everything
-    ingested so far, and the clustering equals a full run with the same
-    edge sources."""
-    # exclusive writer lease on the state dir: a second stream/job pointed
-    # at the same state dir would race this one's commits (BASELINE.md
-    # Iceberg-gap #1).  Held for the driver process lifetime; a crashed
-    # holder is reclaimed by pid-death/ttl on the next acquire.
+    ``incremental.fold_state``, which each batch calls on the tables of
+    ``state_dir``: after any batch the pair state equals the batch pass
+    over everything ingested so far, and the clustering equals a full run
+    with the same edge sources."""
+    # exclusive writer lease on the state dir: a second stream pointed at
+    # the same state dir would share this one's _ckpt checkpoint (the
+    # state commit itself refuses a second writer of a generation).  Held
+    # for the driver process lifetime; a crashed holder is reclaimed by
+    # pid-death/ttl on the next acquire.
     from bibexpy_spark.lineage import acquire_lease
 
     acquire_lease(state_dir, owner="incremental_stream")
@@ -155,7 +157,7 @@ def foreach_batch_incremental_dedup(
             )
         prior_t = prior.get("turns")
         res, next_state = fold_state(
-            spark, batch_df, state_dir if prior else None, cfg=cfg,
+            spark, batch_df, prior or None, cfg=cfg,
             prior_turns=prior_t,
             with_containment=with_containment,
             with_simhash_pass=with_simhash_pass,

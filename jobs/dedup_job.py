@@ -197,8 +197,10 @@ def main(argv: list[str] | None = None) -> None:
     # signed = old ∪ new, pair tables = prior-minus-resigned ∪ delta, so
     # daily increments compose without re-reading the corpus), else a batch
     try:
+        prior = (incremental.read_state(spark, args.prior_state)
+                 if args.prior_state else None)
         res, state = incremental.fold_state(
-            spark, turns, args.prior_state, cfg=CANONICAL,
+            spark, turns, prior, cfg=CANONICAL,
             prior_turns=(spark.read.parquet(args.prior_turns)
                          if args.prior_turns else None),
             with_containment=args.containment,
@@ -208,7 +210,8 @@ def main(argv: list[str] | None = None) -> None:
             run=run,
         )
     except ValueError as e:
-        ap.error(str(e))
+        ap.error(f"--prior-state {args.prior_state}: {e}"
+                 if args.prior_state else str(e))
     state["cluster_remap"] = res["cluster_remap"]
     state["dup_edges"] = res["dup_edges_new"]
     n_clusters_bench = None

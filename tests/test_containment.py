@@ -308,7 +308,8 @@ def test_extra_edges_validation_and_simhash_monotone(spark, turns_df, tmp_path):
     incremental.write_state(str(tmp_path), state)
     with pytest.raises(ValueError, match="unknown containment_mode"):
         incremental.fold_state(
-            spark, turns_df, str(tmp_path), with_containment=True,
+            spark, turns_df, incremental.read_state(spark, str(tmp_path)),
+            with_containment=True,
             containment_mode="nope",
         )
     with pytest.raises(ValueError, match="unknown extra_cluster_edges"):

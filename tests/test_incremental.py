@@ -390,12 +390,12 @@ def _load_job():
 def test_fold_state_refuses_incomplete_prior_state(
     spark, split_corpus, tmp_path, capsys
 ):
-    """fold_state reads the whole state layout before it computes anything:
-    a prior state written without an enabled pass's pair table, whose
-    signed/ lacks a column an enabled pass reads, whose manifest names a
-    missing table, or with no manifest at all, raises — composing against
-    it would truncate the next state.  ``dedup_job.py`` turns the refusal
-    into exit code 2."""
+    """fold_state checks the whole state layout before it computes anything:
+    a prior state written without an enabled pass's pair table, or whose
+    signed/ lacks a column an enabled pass reads, raises; read_state raises
+    on a state whose manifest names a missing table, or with no manifest at
+    all — composing against it would truncate the next state.
+    ``dedup_job.py`` turns each refusal into exit code 2 naming the state."""
     old_turns, new_turns, _ = split_corpus
     kw = dict(with_containment=True, with_simhash_pass=False,
               containment_mode="prefix")
@@ -403,13 +403,29 @@ def test_fold_state_refuses_incomplete_prior_state(
     incremental.write_state(state, incremental.fold_state(spark, old_turns, None, **kw)[1])
     written = sorted(incremental.read_state(spark, state))
     assert written == ["clusters", "containment_prefix", "signed"]
+    job = _load_job()
+    delta, out = str(tmp_path / "delta"), str(tmp_path / "out")
+    new_turns.write.parquet(delta)
+
+    def fold(**over):
+        prior = incremental.read_state(spark, state)
+        return incremental.fold_state(spark, new_turns, prior, **{**kw, **over})
+
+    def job_refusal(*flags):
+        # exit code 2 before anything is written under --output
+        with pytest.raises(SystemExit) as exit_info:
+            job.main(["--input", delta, "--output", out, "--prior-state", state,
+                      "--containment", "--no-simhash", *flags])
+        assert exit_info.value.code == 2
+        assert not os.path.exists(out)
+        return capsys.readouterr().err
 
     with pytest.raises(ValueError, match="no containment_pairs/ table"):
-        incremental.fold_state(spark, new_turns, state, **{
-            **kw, "containment_mode": "general"})
+        fold(containment_mode="general")
+    assert f"--prior-state {state}: prior state has no containment_pairs/ table" \
+        in job_refusal("--containment-mode", "general")
     with pytest.raises(ValueError, match="no simhash_pairs/ table"):
-        incremental.fold_state(spark, new_turns, state, **{
-            **kw, "with_simhash_pass": True})
+        fold(with_simhash_pass=True)
     assert sorted(incremental.read_state(spark, state)) == written
     # the pair table exists, but signed/ was written without the pass
     incremental.write_state(state, {
@@ -417,29 +433,16 @@ def test_fold_state_refuses_incomplete_prior_state(
         "simhash_pairs": spark.createDataFrame([], "a_id string, b_id string, hamming int"),
     })
     with pytest.raises(ValueError, match="signed/ lacks \\['simhash'\\]"):
-        incremental.fold_state(spark, new_turns, state, **{
-            **kw, "with_simhash_pass": True})
+        fold(with_simhash_pass=True)
     # a table the manifest names was deleted after the commit
     shutil.rmtree(os.path.join(
         state, incremental.read_manifest(spark, state)["tables"]["simhash_pairs"]))
     with pytest.raises(ValueError, match="simhash_pairs, which is missing"):
-        incremental.fold_state(spark, new_turns, state, **kw)
-
-    # the job over a state that never committed exits with a usage error
-    # before it writes anything under --output
-    job = _load_job()
-    delta, out = str(tmp_path / "delta"), str(tmp_path / "out")
-    new_turns.write.parquet(delta)
-    argv = ["--input", delta, "--output", out, "--prior-state", state,
-            "--containment", "--no-simhash"]
-    for torn in ("simhash_pairs, which is missing", "has no manifest"):
-        if torn == "has no manifest":
-            shutil.rmtree(os.path.join(state, "_state"))
-        with pytest.raises(SystemExit) as exit_info:
-            job.main(argv)
-        assert exit_info.value.code == 2, torn
-        assert torn in capsys.readouterr().err
-        assert not os.path.exists(out), torn
+        fold()
+    assert "simhash_pairs, which is missing" in job_refusal()
+    # the state never committed
+    shutil.rmtree(os.path.join(state, "_state"))
+    assert f"state {state!r} has no manifest" in job_refusal()
 
 
 def test_job_relaunch_dying_mid_write_keeps_the_committed_state(
@@ -465,7 +468,8 @@ def test_job_relaunch_dying_mid_write_keeps_the_committed_state(
         job.main(["--input", y_p, "--output", out, "--no-simhash"])
 
     try:
-        res, state = incremental.fold_state(spark, z_turns, out)
+        res, state = incremental.fold_state(
+            spark, z_turns, incremental.read_state(spark, out))
     except ValueError:
         return
     x_turns = spark.read.parquet(x_p)

@@ -187,6 +187,42 @@ def test_stream_restart_with_missing_pair_table_fails(spark, tmp_path):
     assert len(os.listdir(os.path.join(state, "gen"))) == 1
 
 
+def test_stream_batch_reads_committed_state_once(spark, tmp_path, monkeypatch):
+    """A micro-batch over a committed state reads it once: the handler
+    hands the tables read_state returned to fold_state, which does no state
+    I/O of its own."""
+    import glob
+    import shutil
+
+    src = tmp_path / "feed"
+    src.mkdir()
+    state = str(tmp_path / "state")
+    turns = spark.read.parquet(corpus.corpus_path_for_sf("sf0.001"))
+    bucket = F.abs(F.xxhash64("conv_id")) % 2
+
+    def drop_and_run(i):
+        turns.filter(bucket == i).coalesce(1).write.parquet(str(tmp_path / f"part{i}"))
+        f = glob.glob(str(tmp_path / f"part{i}" / "part-*.parquet"))[0]
+        shutil.copy(f, str(src / f"delta_{i}.parquet"))
+        istream.foreach_batch_incremental_dedup(
+            spark, str(src), state, max_files_per_trigger=1
+        ).awaitTermination(300)
+
+    drop_and_run(0)
+    reads = []
+    read_state = incremental.read_state
+
+    def counted(spark_, state_dir):
+        reads.append(state_dir)
+        return read_state(spark_, state_dir)
+
+    monkeypatch.setattr(incremental, "read_state", counted)
+    monkeypatch.setattr(istream, "read_state", counted)
+    drop_and_run(1)
+    assert incremental.read_manifest(spark, state)["batch_id"] == 1
+    assert reads == [state]
+
+
 def test_stream_commit_survives_crash_at_every_point(spark, tmp_path, crash):
     """A batch's state is committed by one manifest.  A crash after any
     table write, or after the last one but before the manifest, leaves the

@@ -3,9 +3,9 @@
 The system's entry points are the batch pipeline, the delta fold, the
 stream, the spark-submit job, the benchmark and the measurement tools.
 Following their imports (module level and inside functions) must reach
-every module under ``bibexpy_spark/`` except the test references and the
-code listed as pending removal, no entry point may reach that pending code,
-and every ``DedupConfig`` field must be read by a reached module other than
+every module under ``bibexpy_spark/`` except the test references, every
+function a reference defines must be named by some test, and every
+``DedupConfig`` field must be read by a reached module other than
 ``config.py``.  Code or an option that nothing reaches fails here instead
 of lingering.
 """
@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import ast
 import dataclasses
+import re
 from pathlib import Path
 
 from bibexpy_spark.config import DedupConfig
@@ -40,13 +41,6 @@ REFERENCES = {
     PKG / "golden.py",
     PKG / "plans" / "__init__.py",
     PKG / "plans" / "inspect.py",
-}
-
-# bibliographic code that only the removed 50-query contract called; it
-# goes together with its own tests (ROADMAP item 4(b)).  The list may only
-# shrink: an entry whose file is gone must leave it.
-PENDING = {
-    PKG / "functions" / "bibex_norms.py",
 }
 
 
@@ -97,17 +91,40 @@ def test_every_package_module_is_reached():
     reached = _reached()
     unreached = sorted(
         str(f.relative_to(ROOT)) for f in PKG.rglob("*.py")
-        if f not in reached and f not in REFERENCES | PENDING
+        if f not in reached and f not in REFERENCES
     )
     assert not unreached, f"modules no entry point imports: {unreached}"
 
 
-def test_pending_removal_stays_unreached():
-    reached = _reached()
-    used = sorted(str(f.relative_to(ROOT)) for f in PENDING & reached)
-    assert not used, f"entry points import code pending removal: {used}"
-    gone = sorted(str(f.relative_to(ROOT)) for f in PENDING if not f.is_file())
-    assert not gone, f"deleted modules still listed as pending: {gone}"
+def _uncompared(ref: Path, test_names: set[str]) -> list[str]:
+    """Top-level functions of ``ref`` that no test names, directly or through
+    another function of ``ref`` that a test names."""
+    defs = {
+        node.name: node for node in ast.parse(ref.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    todo = [name for name in defs if name in test_names]
+    seen: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += [n.id for n in ast.walk(defs[name])
+                     if isinstance(n, ast.Name) and n.id in defs]
+    return sorted(defs.keys() - seen)
+
+
+def test_every_reference_function_is_compared():
+    # a reference whose comparison is gone outlives its kernel unnoticed
+    test_names = {
+        word for f in (ROOT / "tests").glob("*.py") if f.name != Path(__file__).name
+        for word in re.findall(r"\w+", f.read_text())
+    }
+    uncompared = sorted(
+        f"{ref.relative_to(ROOT)}:{name}"
+        for ref in REFERENCES for name in _uncompared(ref, test_names)
+    )
+    assert not uncompared, f"reference functions no test compares: {uncompared}"
 
 
 def test_every_config_field_is_read():
