@@ -1,224 +1,16 @@
-"""BibexPy scalar-function family as Spark Column expressions (SURVEY.md
-§2.8).  Native ``pyspark.sql.functions`` wherever possible (JVM, codegen);
-the Unicode-fold kernels go through the shared Arrow UDFs.
+"""Jaro-Winkler similarity, the last of the BibexPy scalar functions
+(SURVEY.md §2.8).  The bibliographic disambiguation that called it is gone;
+no entry point imports this module (tests/test_reachability.py PENDING) and
+it goes with golden.py's reference and their tests (ROADMAP item 4(b)).
 
-Reference parity (apps/api/services/smart_merger.py unless noted):
-  normalize_doi            :94-110
-  normalize_title          :113-127 (stopwords :66-69)
-  normalize_year           :130-141
-  normalize_author_surname :144-158
-  normalize_issn           :161-169
-  normalize_id_token       :172-178
-  normalize_name           disambiguation/similarity.py:16-24
-  name_initials            disambiguation/similarity.py:75-98
-  jaro_winkler             disambiguation/similarity.py:27-72
-  split_multivalue         blocking.py:32-33
-  strip_split_suffix       blocking.py:40-56
-  whitespace collapse      MergeDB.py:8-12
-  abstract cleanup         MergeDB.py:291-311
-  standardization maps     MergeDB.py:446-480,535-543,607-630
+Reference parity: disambiguation/similarity.py:27-72.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
-
-# Title-normalization stopword list (reference smart_merger.py:66-69 uses a
-# fixed 20-word English list; same semantic role here).
-TITLE_STOPWORDS = (
-    "a an and are as at be by for from has in is it of on or that the to",
-).__getitem__(0).split()
-
-
-def collapse_ws(col: Column) -> Column:
-    """re.sub(r'\\s+', ' ').strip() (MergeDB.py:8-12)."""
-    return F.trim(F.regexp_replace(col.cast("string"), r"\s+", " "))
-
-
-def normalize_doi(col: Column) -> Column:
-    """Lowercase, strip doi.org URL prefixes and trailing '/. ', require a
-    '10.' prefix else NULL (smart_merger.py:94-110)."""
-    s = F.lower(F.trim(col.cast("string")))
-    s = F.regexp_replace(s, r"^https?://(dx\.)?doi\.org/", "")
-    s = F.regexp_replace(s, r"^doi:\s*", "")
-    s = F.regexp_replace(s, r"[/\.\s]+$", "")
-    return F.when(s.startswith("10."), s)
-
-
-def normalize_year(col: Column) -> Column:
-    """int(float(s)) within [1900, 2100] else NULL (smart_merger.py:130-141).
-    try_cast: malformed inputs are NULL, not errors (ANSI-safe)."""
-    y = col.try_cast("double").try_cast("int")
-    return F.when(y.between(1900, 2100), y)
-
-
-def normalize_issn(col: Column) -> Column:
-    """Strip non-[0-9X] and require length 8 (smart_merger.py:161-169)."""
-    s = F.regexp_replace(F.upper(col.cast("string")), "[^0-9X]", "")
-    return F.when(F.length(s) == 8, s)
-
-
-def normalize_id_token(col: Column) -> Column:
-    """lower+trim, empty -> NULL (smart_merger.py:172-178)."""
-    s = F.lower(F.trim(col.cast("string")))
-    return F.when((s != "") & (s != "nan"), s)
-
-
-def split_multivalue(col: Column) -> Column:
-    """'; '-delimited cell -> trimmed array (blocking.py:32-33)."""
-    return F.filter(
-        F.transform(F.split(col.cast("string"), ";"), lambda x: F.trim(x)),
-        lambda x: x != "",
-    )
-
-
-def strip_split_suffix(col: Column) -> Column:
-    """Drop '(b)' / '(7)'-style disambiguation suffixes (blocking.py:40-56)."""
-    return F.trim(F.regexp_replace(col.cast("string"), r"\s*\(([a-z]|\d+)\)\s*$", ""))
-
-
-def has_split_suffix(col: Column) -> Column:
-    return col.cast("string").rlike(r"\(([a-z]|\d+)\)\s*$")
-
-
-def clean_abstract(col: Column) -> Column:
-    """Collapse whitespace and strip the '© … RESERVED'-style rights tail
-    (MergeDB.py:291-311)."""
-    s = collapse_ws(col)
-    s = F.regexp_replace(s, r"\s*(©|\(C\)|COPYRIGHT).*(RESERVED|reserved)\.?\s*$", "")
-    return F.trim(s)
-
-
-def map_standardize(col: Column, mapping: dict[str, str]) -> Column:
-    """Fixed-dict standardization with pass-through for unmapped values
-    (MergeDB.py:446-480 language, :535-543 doc type, :607-630 OA)."""
-    m = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
-    key = F.upper(F.trim(col.cast("string")))
-    return F.coalesce(m[key], key)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-UDF-backed (need Unicode folding / per-string algorithms)
-# ---------------------------------------------------------------------------
-
-def _fold_series(s: pd.Series) -> pd.Series:
-    return (
-        s.fillna("").astype(str)
-        .str.normalize("NFKD")
-        .str.encode("ascii", "ignore")
-        .str.decode("ascii")
-    )
-
-
-@pandas_udf(T.StringType())
-def normalize_title_udf(titles: pd.Series) -> pd.Series:
-    """NFKD fold, strip LaTeX-ish macros, lower, punct->space, collapse,
-    drop stopwords (smart_merger.py:113-127)."""
-    s = titles.fillna("").astype(str)
-    s = s.str.replace(r"\\[a-zA-Z]+\s*", " ", regex=True)  # \emph etc.
-    s = s.str.replace(r"[{}$]", " ", regex=True)
-    s = _fold_series(s).str.lower()
-    s = s.str.replace(r"[^a-z0-9]+", " ", regex=True)
-    pat = r"\b(?:" + "|".join(TITLE_STOPWORDS) + r")\b"
-    s = s.str.replace(pat, " ", regex=True)
-    return s.str.replace(r"\s+", " ", regex=True).str.strip()
-
-
-@pandas_udf(T.StringType())
-def normalize_name_udf(names: pd.Series) -> pd.Series:
-    """NFKD fold, lower, non-alnum->space, collapse (similarity.py:16-24)."""
-    s = _fold_series(names).str.lower()
-    s = s.str.replace(r"[^a-z0-9]+", " ", regex=True)
-    return s.str.replace(r"\s+", " ", regex=True).str.strip()
-
-
-@pandas_udf(T.StringType())
-def normalize_surname_udf(authors: pd.Series) -> pd.Series:
-    """First author of a ';'-list -> upper-ASCII surname
-    (smart_merger.py:144-158)."""
-    s = authors.fillna("").astype(str).str.split(";").str[0]
-    s = s.str.split(",").str[0]
-    s = _fold_series(s).str.upper()
-    s = s.str.replace(r"[^A-Z]+", " ", regex=True)
-    return s.str.replace(r"\s+", " ", regex=True).str.strip()
-
-
-_NAME_RE_COMMA = r"^\s*([^,]+)\s*,\s*(.+)$"
-
-
-@pandas_udf(
-    T.StructType(
-        [
-            T.StructField("surname", T.StringType()),
-            T.StructField("initials", T.StringType()),
-        ]
-    )
-)
-def name_initials_udf(names: pd.Series) -> pd.DataFrame:
-    """'Surname, Given M.' / 'Surname G M' -> (surname, initials)
-    (similarity.py:75-98).  Vectorized regex split + initial extraction."""
-    s = _fold_series(names).str.strip()
-    comma = s.str.extract(_NAME_RE_COMMA)
-    surname = comma[0]
-    given = comma[1]
-    nocomma = s[surname.isna()]
-    if len(nocomma):
-        parts = nocomma.str.split()
-        surname.loc[nocomma.index] = parts.str[0]
-        given.loc[nocomma.index] = parts.str[1:].str.join(" ")
-    initials = (
-        given.fillna("")
-        .str.replace(r"[.\-]", " ", regex=True)
-        .str.split()
-        .apply(lambda toks: "".join(t[0] for t in toks if t).upper() if isinstance(toks, list) else "")
-    )
-    return pd.DataFrame(
-        {"surname": surname.fillna("").str.upper().str.strip(), "initials": initials}
-    )
-
-
-def reference_key(col: Column) -> Column:
-    """``AUTHOR_year`` key from a citation string (MergeDB.py:231-255).
-
-    Handles both WoS style  ``Smith J, 2020, J DATA, V5, P10``  and
-    Scopus style  ``Smith J., Title here (2020) J Data, 5, 10``:
-    author = first comma segment (letters only, uppercased), year = first
-    standalone 19xx/20xx token anywhere in the string.  NULL when either
-    part is missing — unkeyed references never merge.
-    """
-    s = col.cast("string")
-    author = F.upper(
-        F.trim(F.regexp_replace(F.split(s, ",").getItem(0), r"[^A-Za-z ]", ""))
-    )
-    author = F.regexp_replace(author, r"\s+", " ")
-    year = F.regexp_extract(s, r"\b(19|20)\d{2}\b", 0)
-    return F.when(
-        (author != "") & (year != ""), F.concat(author, F.lit("_"), year)
-    )
-
-
-def dedup_references(df: DataFrame, id_col: str, cr_col: str = "CR") -> "DataFrame":
-    """Reference-string dedup (merge_references, MergeDB.py:210-278):
-    explode the ';'-separated citation list, key each citation, keep ONE
-    canonical string per key (the longest, ties broken lexicographically) —
-    the containment-ish semantics of the reference, order-independent."""
-    from pyspark.sql import DataFrame  # noqa: F811
-
-    refs = df.select(
-        F.col(id_col), F.explode(split_multivalue(F.col(cr_col))).alias("ref")
-    ).withColumn("ref_key", reference_key(F.col("ref")))
-    keyed = refs.filter(F.col("ref_key").isNotNull())
-    canonical = keyed.groupBy("ref_key").agg(
-        F.max_by("ref", F.struct(F.length("ref"), F.col("ref"))).alias("canonical_ref"),
-        F.count("*").alias("n_citations"),
-        F.countDistinct(id_col).alias("n_records"),
-    )
-    return canonical
 
 
 def _jaro(a: str, b: str) -> float:

@@ -1,89 +1,11 @@
-"""Unit tests for the BibexPy scalar-function family (SURVEY.md §2.8),
+"""Unit tests for the Jaro-Winkler scalar function (SURVEY.md §2.8),
 reference-style micro-fixtures."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from bibexpy_spark.functions import bibex_norms as bn
-
-
-def _one(spark, col_expr, value):
-    df = spark.createDataFrame([(value,)], ["x"])
-    return df.select(col_expr(F.col("x")).alias("y")).first()["y"]
-
-
-def test_normalize_doi(spark):
-    assert _one(spark, bn.normalize_doi, "https://doi.org/10.1234/ABC.5") == "10.1234/abc.5"
-    assert _one(spark, bn.normalize_doi, "http://dx.doi.org/10.99/x/") == "10.99/x"
-    assert _one(spark, bn.normalize_doi, "DOI: 10.1/Y.") == "10.1/y"
-    assert _one(spark, bn.normalize_doi, "not-a-doi") is None
-
-
-def test_normalize_year(spark):
-    assert _one(spark, bn.normalize_year, "2020.0") == 2020
-    assert _one(spark, bn.normalize_year, "1899") is None
-    assert _one(spark, bn.normalize_year, "2101") is None
-    assert _one(spark, bn.normalize_year, "n/a") is None
-
-
-def test_normalize_issn(spark):
-    assert _one(spark, bn.normalize_issn, "1234-567X") == "1234567X"
-    assert _one(spark, bn.normalize_issn, "12345") is None
-
-
-def test_normalize_id_token(spark):
-    assert _one(spark, bn.normalize_id_token, "  WOS:000123  ") == "wos:000123"
-    assert _one(spark, bn.normalize_id_token, "  ") is None
-    assert _one(spark, bn.normalize_id_token, "NaN") is None
-
-
-def test_split_multivalue(spark):
-    got = _one(spark, bn.split_multivalue, "a; b ;; c ")
-    assert got == ["a", "b", "c"]
-
-
-def test_strip_split_suffix(spark):
-    assert _one(spark, bn.strip_split_suffix, "Smith J (b)") == "Smith J"
-    assert _one(spark, bn.strip_split_suffix, "Smith J (12)") == "Smith J"
-    assert _one(spark, bn.strip_split_suffix, "Smith (J)") == "Smith (J)"
-
-
-def test_clean_abstract(spark):
-    s = "Results   are   good. © 2020 Elsevier. ALL RIGHTS RESERVED."
-    assert _one(spark, bn.clean_abstract, s) == "Results are good."
-
-
-def test_map_standardize(spark):
-    col = lambda c: bn.map_standardize(c, {"ENG": "ENGLISH", "GER": "GERMAN"})
-    assert _one(spark, col, " eng ") == "ENGLISH"
-    assert _one(spark, col, "french") == "FRENCH"  # pass-through
-
-
-def test_normalize_title_udf(spark):
-    df = spark.createDataFrame(
-        [("The \\emph{Naïve} Deduplication of a Corpus",)], ["t"]
-    )
-    got = df.select(bn.normalize_title_udf(F.col("t")).alias("y")).first()["y"]
-    assert got == "naive deduplication corpus"
-
-
-def test_normalize_surname_udf(spark):
-    df = spark.createDataFrame([("Çelik, Ahmet; Other, B.",)], ["a"])
-    got = df.select(bn.normalize_surname_udf(F.col("a")).alias("y")).first()["y"]
-    assert got == "CELIK"
-
-
-def test_name_initials_udf(spark):
-    df = spark.createDataFrame(
-        [("Smith, John M.",), ("Lee B",)], ["n"]
-    )
-    rows = df.select(bn.name_initials_udf(F.col("n")).alias("p")).collect()
-    assert rows[0]["p"]["surname"] == "SMITH"
-    assert rows[0]["p"]["initials"] == "JM"
-    assert rows[1]["p"]["surname"] == "LEE"
-    assert rows[1]["p"]["initials"] == "B"
 
 
 def test_jaro_winkler_values():
@@ -99,31 +21,3 @@ def test_jaro_winkler_udf(spark):
     got = df.select(bn.jaro_winkler_udf("a", "b").alias("jw")).first()["jw"]
     assert got == pytest.approx(0.9611, abs=1e-3)
 
-
-def test_reference_key(spark):
-    rows = [
-        ("Smith J, 2020, J DATA, V5, P10",),
-        ("Smith J., A title here (2020) J Data, 5, 10",),
-        ("No year at all, J DATA",),
-        ("2020, orphan year only",),
-    ]
-    df = spark.createDataFrame(rows, ["ref"])
-    got = [r["k"] for r in df.select(bn.reference_key(F.col("ref")).alias("k")).collect()]
-    assert got[0] == "SMITH J_2020"
-    assert got[1] == "SMITH J_2020"   # same work, both formats -> same key
-    assert got[2] is None
-    assert got[3] is None             # author part empty
-
-
-def test_dedup_references(spark):
-    rows = [
-        ("r1", "Smith J, 2020, J DATA, V5, P10; Lee B, 2019, J X"),
-        ("r2", "Smith J., Longer citation string here (2020) J Data, 5, 10"),
-        ("r3", "Lee B, 2019, J X, V1"),
-    ]
-    df = spark.createDataFrame(rows, ["UID", "CR"])
-    out = {r["ref_key"]: r for r in bn.dedup_references(df, "UID").collect()}
-    assert out["SMITH J_2020"]["n_citations"] == 2
-    assert out["SMITH J_2020"]["n_records"] == 2
-    assert "Longer citation" in out["SMITH J_2020"]["canonical_ref"]  # longest wins
-    assert out["LEE B_2019"]["n_citations"] == 2
