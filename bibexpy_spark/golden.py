@@ -1,12 +1,12 @@
 """Independent reference implementations of the engine kernels.
 
-Each function below recomputes one engine kernel (functions/kernels.py,
-bibex_norms.py) from its SPEC — seeds and mixing constants are the contract
-and appear verbatim; the code paths are deliberately naive (per-row loops,
+Each function below recomputes one engine kernel (functions/kernels.py)
+from its SPEC — seeds and mixing constants are the contract and appear
+verbatim; the code paths are deliberately naive (per-row loops,
 one-line numpy) so an implementation bug in the engine's blocked/buffered
 fast paths cannot be reproduced here.  tests/test_golden_independent.py
 checks engine-vs-golden bit-equality for normalization, sha256, shingles,
-MinHash, band hashes, SimHash and Jaro-Winkler.
+MinHash, band hashes and SimHash.
 
 This module imports NOTHING from bibexpy_spark.functions (enforced by
 tests/test_golden_independent.py): the golden side and the engine may share
@@ -142,39 +142,3 @@ def _g_simhash(norm: str) -> int:
         if 2 * ones[bit] > n:
             out |= 1 << bit
     return out
-
-
-def _g_jaro(a: str, b: str) -> float:
-    """Classic Jaro with the reference's float transposition halving
-    (similarity.py:27-60) — independent scalar rewrite."""
-    if a == b:
-        return 1.0
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        return 0.0
-    win = max(max(la, lb) // 2 - 1, 0)
-    used_a = [False] * la
-    used_b = [False] * lb
-    for i in range(la):
-        for j in range(max(0, i - win), min(lb, i + win + 1)):
-            if not used_b[j] and b[j] == a[i]:
-                used_a[i] = used_b[j] = True
-                break
-    a_matched = [a[i] for i in range(la) if used_a[i]]
-    b_matched = [b[j] for j in range(lb) if used_b[j]]
-    m = len(a_matched)
-    if m == 0:
-        return 0.0
-    # float transposition halving, exactly as the reference (similarity.py:57)
-    t = sum(1 for x, y in zip(a_matched, b_matched) if x != y) / 2
-    return (m / la + m / lb + (m - t) / m) / 3
-
-
-def _g_jaro_winkler(a: str, b: str, p: float = 0.1, max_prefix: int = 4) -> float:
-    j = _g_jaro(a, b)
-    prefix = 0
-    for ca, cb in zip(a[:max_prefix], b[:max_prefix]):
-        if ca != cb:
-            break
-        prefix += 1
-    return j + prefix * p * (1 - j)

@@ -62,65 +62,94 @@ def _prefix_keyed(df: DataFrame, cfg: DedupConfig, *extra) -> DataFrame:
     )
 
 
-def _short_len_df(keyed: DataFrame, c: int) -> DataFrame:
-    """One-column frame of the distinct SHORT inner key lengths (0 < klen
-    < C) present in ``keyed`` — ≤ C-1 rows, broadcast into the leg prune.
-    A DataFrame, not a driver collect: baking observed lengths into the
-    plan as literals would freeze them at build time, so a returned plan
-    re-executed over changed source data would silently miss pairs at
-    newly-appeared lengths (r4 review)."""
-    return (
-        keyed.filter((F.col("klen") > 0) & (F.col("klen") < c))
-        .select(F.col("klen").alias("L"))
-        .distinct()
+def _outer_legs(
+    keyed: DataFrame, c: int, lens_src: DataFrame | None = None
+) -> DataFrame:
+    """Outer-side legs for SHORT inners, (outer_id, L, okey): each doc
+    explodes over L ∈ [1, min(len-1, C-1)], keyed by its first L chars.
+    With ``lens_src`` a broadcast left-semi join on L drops the lengths no
+    short inner of ``lens_src`` has INSIDE the same stage — explode, probe,
+    substring all ride one WholeStageCodegen span, so only surviving legs
+    reach the exchange, and the length source is part of the plan (no
+    driver action, no staleness).  Carries NO text: a short inner's key is
+    its whole document, so the (L, okey) equi-join itself proves
+    ``startswith`` and the exploded copies stay a few dozen bytes wide."""
+    legs = keyed.filter(F.col("len") >= 2).withColumn(
+        "L", F.explode(F.sequence(F.lit(1), F.least(F.col("len") - 1, F.lit(c - 1))))
+    )
+    if lens_src is not None:
+        # ≤ C-1 rows from the plan, not a driver collect: lengths baked in
+        # as literals would freeze at build time, and a plan re-executed
+        # over changed data would miss pairs at new lengths (r4 review)
+        lens = lens_src.filter((F.col("klen") > 0) & (F.col("klen") < c)).select(
+            F.col("klen").alias("L")
+        )
+        legs = legs.join(F.broadcast(lens.distinct()), "L", "left_semi")
+    return legs.select(
+        F.col("conv_id").alias("outer_id"),
+        "L",
+        F.substring("norm_text", 1, F.col("L")).alias("okey"),
     )
 
 
-def _outer_legs_pruned(keyed: DataFrame, lens_src: DataFrame, c: int) -> DataFrame:
-    """Outer-side short legs, lazily pruned to the inner lengths observed
-    in ``lens_src``: each doc explodes over L ∈ [1, min(len-1, C-1)] and a
-    broadcast left-semi join on L drops unobserved lengths INSIDE the same
-    stage — explode, probe, substring all ride one WholeStageCodegen span,
-    so only surviving slim (id, L, first-L-chars) legs reach the exchange.
-    Same row set as the old literal-array explode, but the lens source is
-    part of the plan (no driver action, no staleness) and the prune is a
-    ≤C-1-row BroadcastHashJoin, not a nested loop."""
-    return (
-        keyed.filter(F.col("len") >= 2)
-        .withColumn(
-            "L",
-            F.explode(F.sequence(F.lit(1), F.least(F.col("len") - 1, F.lit(c - 1)))),
-        )
-        .join(F.broadcast(_short_len_df(lens_src, c)), "L", "left_semi")
-        .select(
-            "conv_id",
-            "L",
-            F.substring("norm_text", 1, F.col("L")).alias("okey"),
-        )
+def _short_inners(keyed: DataFrame, c: int) -> DataFrame:
+    """Inner side for SHORT inners (0 < len < C): keyed on the whole text."""
+    return keyed.filter((F.col("klen") < c) & (F.col("len") > 0)).select(
+        F.col("conv_id").alias("inner_id"),
+        F.col("klen").alias("L"),
+        F.col("pkey").alias("okey"),
     )
 
 
-def _outer_legs(keyed: DataFrame, lens: list[int]) -> DataFrame:
-    """Outer-side join legs for SHORT inner key lengths over a STATIC,
-    data-independent ``lens`` list (the delta op's full [1, C) range): one
-    row per (doc, L) for every L in ``lens`` with doc len > L, keyed by the
-    outer's first-L chars.  Exploding a literal length array stays inside
-    WholeStageCodegen (a broadcast ``len > L`` theta-join would plan as
-    BroadcastNestedLoopJoin).  Carries NO text: a short inner's key is its
-    whole document, so the equi-join itself proves ``startswith`` and the
-    exploded copies stay a few dozen bytes wide (ids + ≤C-char key) —
-    full documents never fan out ×|lens| through the exchange.  For
-    DATA-DEPENDENT length sets use :func:`_outer_legs_pruned`, which keeps
-    the length source inside the plan."""
-    legs = F.array(*[F.lit(int(l)) for l in lens]) if lens else F.array().cast("array<int>")
+def _short_pairs(inners: DataFrame, outers: DataFrame) -> DataFrame:
+    """The (L, okey) equi-join of short inners and outer legs — equal first
+    L chars with outer_len > L = inner_len is exactly strict prefix
+    containment, so the join is the verification."""
     return (
-        keyed.withColumn("L", F.explode(legs))
-        .filter(F.col("len") > F.col("L"))
-        .select(
-            "conv_id",
-            "L",
-            F.substring("norm_text", 1, F.col("L")).alias("okey"),
+        inners.join(outers, ["L", "okey"])
+        .filter(F.col("inner_id") != F.col("outer_id"))
+        .select("inner_id", "outer_id")
+    )
+
+
+def _long_pairs(keyed: DataFrame, c: int, new_col: str | None = None) -> DataFrame:
+    """LONG inners (≥ C chars): one row per doc on each side keyed on the
+    first C chars, ``startswith`` verifies the tail beyond the key — the
+    only leg that moves document text.
+
+    ``new_col`` (a boolean column) makes the join delta-driven: only pairs
+    with >= 1 new endpoint come out, and both sides are semi-joined to the
+    keys of new rows first.  Such a pair shares its key with that new row,
+    so the prune is lossless, and quiet old blocks never enter the join."""
+
+    def side(df: DataFrame, role: str) -> DataFrame:
+        return df.select(
+            F.col("conv_id").alias(f"{role}_id"),
+            F.col("norm_text").alias(f"{role}_text"),
+            F.col("len").alias(f"{role}_len"),
+            F.col("pkey").alias("okey"),
+            *([F.col(new_col).alias(f"_{role}_new")] if new_col else []),
         )
+
+    inner = side(keyed.filter(F.col("klen") == c), "inner")
+    outer = side(keyed.filter(F.col("len") > c), "outer")
+    keep = (F.col("inner_id") != F.col("outer_id")) & (
+        F.col("inner_len") < F.col("outer_len")
+    )
+    if new_col:
+        new_keys = (
+            inner.filter("_inner_new").select("okey")
+            .unionByName(outer.filter("_outer_new").select("okey"))
+            .distinct()
+        )
+        inner = inner.join(new_keys, "okey", "left_semi")
+        outer = outer.join(new_keys, "okey", "left_semi")
+        keep = keep & (F.col("_inner_new") | F.col("_outer_new"))
+    return (
+        inner.join(outer, "okey")
+        .filter(keep)
+        .filter(F.col("outer_text").startswith(F.col("inner_text")))
+        .select("inner_id", "outer_id")
     )
 
 
@@ -128,167 +157,60 @@ def prefix_containment_pairs(
     new: DataFrame, cfg: DedupConfig, old: DataFrame | None = None
 ) -> DataFrame:
     """Pairs (inner_id, outer_id) where inner's normalized doc is a strict
-    prefix-anchored substring of outer's — fully JVM-side.  With ``old``
-    (the prior corpus minus re-signed rows) only the pairs with >= 1
-    endpoint in ``new`` come out, through the delta plan of
-    :func:`_prefix_pairs_delta`; without it, the batch plan below.
+    prefix-anchored substring of outer's — fully JVM-side.
 
-    Two disjoint equi-join legs (split on inner key length, r4):
-
-      * LONG (klen = C, i.e. inner ≥ C chars): classic first-C-chars key,
-        one row per doc on each side, ``startswith`` verifies the tail
-        beyond the key — the only leg that moves document text;
-      * SHORT (0 < klen < C): the inner keys on its WHOLE text, the outer
-        emits one slim (id, L, first-L-chars) leg per observed short
-        length, and the (L, okey) equi-join IS the verification — equal
-        first-L chars with outer_len > L = inner_len is exactly strict
-        prefix containment, so no text crosses the exchange.
+    Two disjoint equi-join legs, split on inner key length (r4): LONG
+    (klen = C) through :func:`_long_pairs`, SHORT (0 < klen < C) through
+    :func:`_short_pairs`, where the inner keys on its WHOLE text and the
+    outer emits one slim leg per short length (:func:`_outer_legs`).
 
     LOSSLESS at every inner length: an inner with klen = L has its first L
     chars equal to the outer's first L chars (prefix property), and the
     outer emits a leg for every short L observed among docs plus the
     full-width leg (r4 review fix: the old first-N-token key missed inners
     shorter than N tokens and the exactly-N-token inner whose last token
-    char-extends in the outer)."""
-    if old is not None:
-        return _prefix_pairs_delta(old, new, cfg)
-    c = _prefix_chars(cfg)
-    keyed = _prefix_keyed(new, cfg)
+    char-extends in the outer).
 
-    a_long = keyed.filter(F.col("klen") == c).select(
-        F.col("conv_id").alias("inner_id"),
-        F.col("norm_text").alias("inner_text"),
-        F.col("len").alias("inner_len"),
-        F.col("pkey").alias("okey"),
-    )
-    b_long = keyed.filter(F.col("len") > c).select(
-        F.col("conv_id").alias("outer_id"),
-        F.col("norm_text").alias("outer_text"),
-        F.col("len").alias("outer_len"),
-        F.col("pkey").alias("okey"),
-    )
-    long_pairs = (
-        a_long.join(b_long, "okey")
-        .filter(
-            (F.col("inner_id") != F.col("outer_id"))
-            & (F.col("inner_len") < F.col("outer_len"))
-        )
-        .filter(F.col("outer_text").startswith(F.col("inner_text")))
-        .select("inner_id", "outer_id")
-    )
-
-    a_short = keyed.filter((F.col("klen") < c) & (F.col("len") > 0)).select(
-        F.col("conv_id").alias("inner_id"),
-        F.col("klen").alias("L"),
-        F.col("pkey").alias("okey"),
-    )
-    b_short = _outer_legs_pruned(keyed, keyed, c).select(
-        F.col("conv_id").alias("outer_id"), "L", "okey"
-    )
-    short_pairs = (
-        a_short.join(b_short, ["L", "okey"])
-        .filter(F.col("inner_id") != F.col("outer_id"))
-        .select("inner_id", "outer_id")
-    )
-    return long_pairs.unionByName(short_pairs)
-
-
-def _prefix_pairs_delta(
-    old_signed: DataFrame, new_signed: DataFrame, cfg: DedupConfig
-) -> DataFrame:
-    """Delta-driven prefix containment (incremental mode, r4): emit exactly
-    the pairs with >= 1 endpoint in ``new_signed``; old-old pairs already
-    live in the prior pair state, so
+    With ``old`` (the prior corpus minus re-signed rows) only the pairs
+    with >= 1 endpoint in ``new`` come out; old-old pairs already live in
+    the prior pair state, so
 
         prior_pairs(minus pairs touching re-signed ids) ∪ delta_pairs
             == prefix_containment_pairs(old ∪ new)
 
-    Scale shape: only pkey blocks CONTAINING a new row enter the join (the
-    semi-join prunes the old corpus's quiet blocks), so cost is
-    O(|delta| + touched blocks), never O(|corpus|²)."""
+    Scale shape: only blocks holding a new row enter a join, and the old
+    corpus is never scanned for its key lengths, so cost is O(|delta| +
+    touched blocks), never O(|corpus|²).  The short legs split into two
+    directions, disjoint by outer origin:
 
-    oldk = _prefix_keyed(old_signed, cfg, F.lit(False).alias("_is_new"))
-    newk = _prefix_keyed(new_signed, cfg, F.lit(True).alias("_is_new"))
-    allk = oldk.unionByName(newk)
+      * NEW short inners × OLD outers — old legs are pruned in-stage to the
+        lengths, then the (L, okey) keys, of new short inners, so a delta
+        without short docs makes the old corpus emit nothing;
+      * ALL short inners × NEW outers — new docs explode over the whole
+        1..C-1 range, inners semi-pruned to the new legs' keys; covers
+        new×new pairs too."""
     c = _prefix_chars(cfg)
-
-    # LONG leg (inner ≥ C chars) — same split as the batch op; a pair with
-    # >= 1 new endpoint shares its okey with that new row, so pruning both
-    # sides to keys observed on new rows is lossless for the delta contract
-    a_long = allk.filter(F.col("klen") == c).select(
-        F.col("conv_id").alias("inner_id"),
-        F.col("norm_text").alias("inner_text"),
-        F.col("len").alias("inner_len"),
-        F.col("_is_new").alias("_inner_new"),
-        F.col("pkey").alias("okey"),
-    )
-    b_long = allk.filter(F.col("len") > c).select(
-        F.col("conv_id").alias("outer_id"),
-        F.col("norm_text").alias("outer_text"),
-        F.col("len").alias("outer_len"),
-        F.col("_is_new").alias("_outer_new"),
-        F.col("pkey").alias("okey"),
-    )
-    new_keys_long = (
-        a_long.filter("_inner_new").select("okey")
-        .unionByName(b_long.filter("_outer_new").select("okey"))
-        .distinct()
-    )
-    long_pairs = (
-        a_long.join(new_keys_long, "okey", "left_semi")
-        .join(b_long.join(new_keys_long, "okey", "left_semi"), "okey")
-        .filter(
-            (F.col("inner_id") != F.col("outer_id"))
-            & (F.col("inner_len") < F.col("outer_len"))
-            & (F.col("_inner_new") | F.col("_outer_new"))
+    if old is None:
+        keyed = _prefix_keyed(new, cfg)
+        return _long_pairs(keyed, c).unionByName(
+            _short_pairs(_short_inners(keyed, c), _outer_legs(keyed, c, keyed))
         )
-        .filter(F.col("outer_text").startswith(F.col("inner_text")))
-        .select("inner_id", "outer_id")
+    oldk = _prefix_keyed(old, cfg, F.lit(False).alias("_is_new"))
+    newk = _prefix_keyed(new, cfg, F.lit(True).alias("_is_new"))
+    allk = oldk.unionByName(newk)
+    new_inners = _short_inners(newk, c)
+    old_outers = _outer_legs(oldk, c, newk).join(
+        new_inners.select("L", "okey").distinct(), ["L", "okey"], "left_semi"
     )
-
-    # SHORT legs (0 < inner len < C) — join-implied verification, no text.
-    # Two disjoint directions, NEITHER running any driver action nor
-    # exploding the quiet old corpus:
-    #   d1: NEW short inners × OLD outers — old-doc legs are pruned
-    #       in-stage (broadcast semi on L, then on (L, okey)) to key
-    #       lengths/keys observed among NEW inners, so when the delta
-    #       holds no short docs the old corpus emits nothing;
-    #   d2: ALL short inners × NEW outers — new docs explode over the
-    #       static 1..C-1 range (≤C-1 slim legs per DELTA doc; no lens scan
-    #       of the old corpus needed), inners semi-pruned to the new legs'
-    #       keys.  Covers new×new pairs too; disjoint from d1 by outer
-    #       origin (old vs new).
-    def _short_inners(df: DataFrame) -> DataFrame:
-        return df.filter((F.col("klen") < c) & (F.col("len") > 0)).select(
-            F.col("conv_id").alias("inner_id"),
-            F.col("klen").alias("L"),
-            F.col("pkey").alias("okey"),
-        )
-
-    a_new = _short_inners(newk)
-    new_inner_keys = a_new.select("L", "okey").distinct()
-    b_old = (
-        _outer_legs_pruned(oldk, newk, c)
-        .join(new_inner_keys, ["L", "okey"], "left_semi")
-        .select(F.col("conv_id").alias("outer_id"), "L", "okey")
+    new_outers = _outer_legs(newk, c)
+    all_inners = _short_inners(allk, c).join(
+        new_outers.select("L", "okey").distinct(), ["L", "okey"], "left_semi"
     )
-    d1 = (
-        a_new.join(b_old, ["L", "okey"])
-        .filter(F.col("inner_id") != F.col("outer_id"))
-        .select("inner_id", "outer_id")
+    return (
+        _long_pairs(allk, c, "_is_new")
+        .unionByName(_short_pairs(new_inners, old_outers))
+        .unionByName(_short_pairs(all_inners, new_outers))
     )
-
-    b_new = _outer_legs(newk, list(range(1, c))).select(
-        F.col("conv_id").alias("outer_id"), "L", "okey"
-    )
-    new_outer_keys = b_new.select("L", "okey").distinct()
-    a_all = _short_inners(allk).join(new_outer_keys, ["L", "okey"], "left_semi")
-    d2 = (
-        a_all.join(b_new, ["L", "okey"])
-        .filter(F.col("inner_id") != F.col("outer_id"))
-        .select("inner_id", "outer_id")
-    )
-    return long_pairs.unionByName(d1).unionByName(d2)
 
 
 def _oriented_containment_candidates(
@@ -541,7 +463,7 @@ def general_containment_pairs(
             == general_containment_pairs(old ∪ new)
 
     (tested for both backends).  Scale shape: the prefix leg prunes quiet
-    blocks by semi-join (see :func:`_prefix_pairs_delta`); the interior
+    blocks by semi-join (see :func:`prefix_containment_pairs`); the interior
     leg prunes both join sides to shingles occurring in a new row
     (losslessness argument in :func:`_oriented_containment_candidates`) —
     only the df-cap scan-agg touches the full corpus.

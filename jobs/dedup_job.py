@@ -9,7 +9,7 @@ The north rule's deployment contract: the pipeline runs via
         --output <output dir>           \\
         --run-dir <warehouse dir for checkpoint/resume> \\
         [--no-simhash] [--containment] [--containment-mode prefix|general|general_sa] \\
-        [--cluster-edges containment,simhash] [--shuffle-partitions N]
+        [--cluster-edges containment,simhash]
 
 Every run is one dedup pass (bibexpy_spark.incremental.fold_state) and
 writes the state the next run needs — signed signatures, clusters, and
@@ -29,7 +29,8 @@ makes them the state.  A run that dies before that leaves the directory's
 previous state in force, and a relaunch into the same --output completes.
 
 The script takes the ambient SparkSession from spark-submit (no master
-override — the cluster manager decides).  With --run-dir every stage
+override — the cluster manager decides); set Spark confs such as
+spark.sql.shuffle.partitions with spark-submit --conf.  With --run-dir every stage
 checkpoints with a manifest: a relaunch with the same run dir, input,
 prior state, prior turns and pass flags skips every stored stage.
 
@@ -86,7 +87,6 @@ def main(argv: list[str] | None = None) -> None:
              "passes stay separate signals.  With --prior-state the "
              "result equals a batch run with the same sources",
     )
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--prior-state", default=None,
                     help="state dir of an earlier run (its --output) to fold "
                          "--input into as a delta")
@@ -148,12 +148,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from pyspark.sql import SparkSession
 
-    builder = SparkSession.builder.appName("bibexpy_dedup")
-    if args.shuffle_partitions:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(args.shuffle_partitions)
-        )
-    spark = builder.getOrCreate()
+    spark = SparkSession.builder.appName("bibexpy_dedup").getOrCreate()
 
     from bibexpy_spark import incremental
     from bibexpy_spark.config import CANONICAL

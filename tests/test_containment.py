@@ -385,6 +385,13 @@ def test_prefix_leg_lossless_for_short_and_edge_inners(spark):
         ("tiny_in", "x"),                                  # 1-char inner
         ("tiny_out", "xy z " + long_tail),
         ("noise", "completely different text " + long_tail),
+        # long inners (>= C = 64 chars) key on their first C chars and are
+        # verified by startswith; the delta split below puts each one on
+        # the other side of its outer
+        ("long_in_old", "old long inner " + "w" * 49),     # exactly C chars
+        ("long_out_new", "old long inner " + "w" * 49 + "x tail"),
+        ("long_in_new", "new long inner " + long_tail),
+        ("long_out_old", "new long inner " + long_tail + " tok30"),
     ]
     signed = spark.createDataFrame(rows, "conv_id string, norm_text string")
     want = {
@@ -403,7 +410,7 @@ def test_prefix_leg_lossless_for_short_and_edge_inners(spark):
     assert ("tiny_in", "tiny_out") in got       # 1-char prefix
 
     # delta contract: split old/new, delta emits exactly the >=1-new pairs
-    new_ids = {"short_out", "edge_in", "tiny_in"}
+    new_ids = {"short_out", "edge_in", "tiny_in", "long_out_new", "long_in_new"}
     old = signed.filter(~F.col("conv_id").isin(*new_ids))
     new = signed.filter(F.col("conv_id").isin(*new_ids))
     got_d = {
@@ -414,6 +421,8 @@ def test_prefix_leg_lossless_for_short_and_edge_inners(spark):
     }
     want_d = {(a, b) for a, b in want if a in new_ids or b in new_ids}
     assert got_d == want_d
+    assert ("long_in_old", "long_out_new") in got_d   # old long inner, new outer
+    assert ("long_in_new", "long_out_old") in got_d   # new long inner, old outer
 
 
 def test_containment_index_stats_one_row(spark, turns_df, tmp_path):

@@ -18,12 +18,10 @@ import string
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from bibexpy_spark import golden
 from bibexpy_spark.config import CANONICAL
 from bibexpy_spark.functions import kernels
-from bibexpy_spark.functions.bibex_norms import jaro_winkler
 
 
 def _random_texts(n: int = 80, seed: int = 11) -> pd.Series:
@@ -90,24 +88,3 @@ def test_simhash_bit_equal():
 def test_sha256_bit_equal():
     texts = _random_texts(seed=67).fillna("").astype(str)
     assert kernels.content_sha256(texts).tolist() == golden._g_sha256_series(texts).tolist()
-
-
-@pytest.mark.parametrize(
-    "a,b",
-    [
-        ("", ""), ("a", ""), ("martha", "marhta"), ("dixon", "dicksonx"),
-        ("jellyfish", "smellyfish"), ("abcde", "abdce"), ("abc", "cba"),
-        ("university of oxford", "univ oxford"), ("aa", "aa"),
-        ("dwayne", "duane"), ("abcdef", "badcfe"),
-    ],
-)
-def test_jaro_winkler_bit_equal(a, b):
-    assert golden._g_jaro_winkler(a, b) == jaro_winkler(a, b)
-
-
-def test_jaro_winkler_random_bit_equal():
-    rng = random.Random(7)
-    for _ in range(300):
-        a = "".join(rng.choice("abcdef ") for _ in range(rng.randint(0, 12)))
-        b = "".join(rng.choice("abcdef ") for _ in range(rng.randint(0, 12)))
-        assert golden._g_jaro_winkler(a, b) == jaro_winkler(a, b), (a, b)

@@ -664,6 +664,30 @@ def test_delta_pass_job_budget(spark, split_corpus, tmp_path, spark_jobs):
     assert len(jobs) <= 39, jobs
 
 
+def test_batch_pass_job_budget(spark, split_corpus, tmp_path, spark_jobs):
+    """A batch pass shaped like the benchmark's (containment and SimHash
+    on, a RunContext, four output writes) runs at most 41 Spark jobs, the
+    count measured when ``contain_prefix`` took 4 of them.  A stage or
+    output that starts recomputing shows up here."""
+    from bibexpy_spark.lineage import RunContext
+
+    _, _, turns = split_corpus
+
+    def batch_pass():
+        run = RunContext(spark, cfg=CANONICAL, warehouse=str(tmp_path / "wh"))
+        try:
+            res = pipeline.run_dedup(
+                spark, turns, run=run, with_containment=True, with_simhash_pass=True
+            )
+            for key in ("clusters", "dup_edges", "containment_prefix", "simhash_pairs"):
+                res[key].write.parquet(str(tmp_path / key))
+        finally:
+            run.close()
+
+    _, jobs = spark_jobs(batch_pass)
+    assert len(jobs) <= 41, jobs
+
+
 def test_job_releases_its_stages(spark, split_corpus, tmp_path, monkeypatch):
     """``dedup_job.py`` without ``--run-dir`` holds its stages in memory;
     ``main`` releases them once the state is committed, so an in-process

@@ -3,9 +3,8 @@
 The system's entry points are the batch pipeline, the delta fold, the
 stream, the spark-submit job, the benchmark and the measurement tools.
 Following their imports (module level and inside functions) must reach
-every module under ``bibexpy_spark/`` except the test references and the
-code listed as pending removal, no entry point may reach that pending code,
-every function a reference defines must be named by some test, and every
+every module under ``bibexpy_spark/`` except the test references, every
+function a reference defines must be named by some test, and every
 ``DedupConfig`` field must be read by a reached module other than
 ``config.py``.  Code or an option that nothing reaches fails here instead
 of lingering.
@@ -42,14 +41,6 @@ REFERENCES = {
     PKG / "golden.py",
     PKG / "plans" / "__init__.py",
     PKG / "plans" / "inspect.py",
-}
-
-# Jaro-Winkler, the last of the bibliographic code that only the removed
-# 50-query contract called; it goes together with golden.py's reference and
-# their tests (ROADMAP item 4(b)).  The list may only shrink: an entry whose
-# file is gone must leave it.
-PENDING = {
-    PKG / "functions" / "bibex_norms.py",
 }
 
 
@@ -100,17 +91,9 @@ def test_every_package_module_is_reached():
     reached = _reached()
     unreached = sorted(
         str(f.relative_to(ROOT)) for f in PKG.rglob("*.py")
-        if f not in reached and f not in REFERENCES | PENDING
+        if f not in reached and f not in REFERENCES
     )
     assert not unreached, f"modules no entry point imports: {unreached}"
-
-
-def test_pending_removal_stays_unreached():
-    reached = _reached()
-    used = sorted(str(f.relative_to(ROOT)) for f in PENDING & reached)
-    assert not used, f"entry points import code pending removal: {used}"
-    gone = sorted(str(f.relative_to(ROOT)) for f in PENDING if not f.is_file())
-    assert not gone, f"deleted modules still listed as pending: {gone}"
 
 
 def _uncompared(ref: Path, test_names: set[str]) -> list[str]:
