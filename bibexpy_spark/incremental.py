@@ -20,9 +20,10 @@ retracted and re-signed: its full turn set is rebuilt latest-wins
 ((conv_id, turn_idx) keys from the delta override prior rows, so appends,
 re-deliveries AND turn edits all fold in), its ENTIRE prior cluster is
 dissolved (stale connectivity through the old signature must not survive),
-and the grown conversation plus its former co-members re-enter the
-candidate/verify/cluster path — co-members with their existing signatures,
-so re-signing stays O(|grown|).  Without ``prior_turns`` a grown delta is a
+and the grown conversation plus its former co-members re-enter every
+operator, the passes included, as new-side rows — co-members with their
+existing signatures, so re-signing stays O(|grown|) and the operators pay
+O(|retracted clusters|).  Without ``prior_turns`` a grown delta is a
 contract violation and raises (it would otherwise enter as a second row of
 the same conv_id with a different signature — silent corruption).
 
@@ -52,8 +53,9 @@ smart_merger.py:576-827):
 
   * ``grown``        delta conv_ids already in the prior state;
   * ``retracted`` / ``carried``  (grown deltas only) the prior assignments
-                     and signatures of the clusters a grown conversation
-                     dissolves;
+                     of the clusters a grown conversation dissolves, and
+                     the signed rows of their other members, which join
+                     the new side of every later stage;
     ``sign``         assemble the turns (window-ordered concat), normalize,
                      content sha, shingles, MinHash bands (+ SimHash) — the
                      only Python-UDF stage; counter ``duplicate_turn_keys``;
@@ -73,8 +75,8 @@ smart_merger.py:576-827):
                      the dup edges are then the stored empty candidate
                      frame's (a_id, b_id);
     ``contain_prefix`` / ``contain_general`` / ``fuzzy``  the pass pairs
-                     with >= 1 new endpoint (merge_references and fuzzy
-                     Stage-4 analogues); ``contain_general`` counts
+                     with >= 1 new or carried endpoint (merge_references
+                     and fuzzy Stage-4 analogues); ``contain_general`` counts
                      ``hot_shingles`` (dropped by the df cap),
                      ``indexed_shingles``; ``fuzzy`` counts
                      ``hot_chunk_buckets``, ``active_chunk_buckets``;
@@ -180,31 +182,10 @@ def _pair_tables(
     return tables
 
 
-def _cluster_edge_legs(
-    tables: dict[str, DataFrame],
-    extra_cluster_edges: tuple[str, ...],
-    containment_mode: str,
-    suffix: str = "",
-) -> list[DataFrame]:
-    """The ``(a_id, b_id)`` cluster edges of each extra edge source, read
-    from its pair table ``<table><suffix>`` in ``tables``: ``simhash_pairs``,
-    and for containment the complete pass's ``containment_pairs`` when the
-    mode runs it, else ``containment_prefix``."""
-    legs = []
-    for source in extra_cluster_edges:
-        table = "simhash_pairs" if source == "simhash" else (
-            "containment_prefix" if containment_mode == "prefix" else "containment_pairs"
-        )
-        a, b = _PAIR_ENDS[table]
-        legs.append(
-            tables[table + suffix].select(F.col(a).alias("a_id"), F.col(b).alias("b_id"))
-        )
-    return legs
-
-
 def _signed_columns(with_containment: bool, with_simhash_pass: bool) -> list[str]:
     """Columns of the ``signed`` state: the signature set plus what the
-    enabled passes read on the old side of a later delta."""
+    enabled passes read of a prior row in a later delta (on the old side,
+    or carried to the new side when its cluster is retracted)."""
     return (
         _SIG_COLS
         + (["norm_text"] if with_containment else [])
@@ -215,22 +196,22 @@ def _signed_columns(with_containment: bool, with_simhash_pass: bool) -> list[str
 def compose_pair_state(
     prior: DataFrame,
     delta: DataFrame,
-    resigned_ids: DataFrame,
+    retracted_ids: DataFrame,
     a: str,
     b: str,
 ) -> DataFrame:
     """The pair-state composition contract, single-sourced (it is
     equivalence-critical; fold_state applies it per pair table): prior
-    pairs MINUS pairs touching a re-signed conversation (their live
-    successors are re-emitted by the delta ops) UNION the delta pairs ==
-    the batch pass over old ∪ new (operators/containment.py +
+    pairs MINUS pairs touching a retracted conversation (a re-entered row:
+    the delta ops re-emit its live pairs) UNION the delta pairs == the
+    batch pass over old ∪ new (operators/containment.py +
     operators/simhash.py delta-op contract).
 
-    ``resigned_ids`` is a single-column ``conv_id`` frame; ``a``/``b`` name
+    ``retracted_ids`` is a single-column ``conv_id`` frame; ``a``/``b`` name
     the pair endpoint columns (inner_id/outer_id or a_id/b_id)."""
     return (
-        prior.join(F.broadcast(resigned_ids.withColumnRenamed("conv_id", a)), a, "left_anti")
-        .join(F.broadcast(resigned_ids.withColumnRenamed("conv_id", b)), b, "left_anti")
+        prior.join(F.broadcast(retracted_ids.withColumnRenamed("conv_id", a)), a, "left_anti")
+        .join(F.broadcast(retracted_ids.withColumnRenamed("conv_id", b)), b, "left_anti")
         .select(*delta.columns)
         .unionByName(delta)
     )
@@ -261,7 +242,6 @@ def run_incremental_dedup(
     with_simhash_pass: bool = False,
     containment_mode: str = "prefix",
     extra_cluster_edges: tuple[str, ...] = (),
-    prior_extra_pairs: DataFrame | None = None,
     run: RunContext | None = None,
 ) -> dict[str, Any]:
     """Cluster ``new_turns`` against the prior corpus state.
@@ -283,11 +263,11 @@ def run_incremental_dedup(
     result is the batch pass over ``new_turns``.
 
     With ``with_containment`` / ``with_simhash_pass`` the run also emits the
-    pass pairs with >= 1 endpoint among the new conversations —
-    ``containment_prefix_new`` / ``simhash_pairs_new``.  The caller keeps
+    pass pairs with >= 1 endpoint among the new or retracted conversations
+    — ``containment_prefix_new`` / ``simhash_pairs_new``.  The caller keeps
     the prior pair state; dropping its pairs that touch
-    ``resigned_prior_ids`` and unioning these reproduces the batch pass over
-    old ∪ new (equivalence pytest-gated).  These passes need
+    ``retracted_prior_ids`` and unioning these reproduces the batch pass
+    over old ∪ new (equivalence pytest-gated).  These passes need
     ``prior_signed`` to carry ``norm_text`` / ``simhash`` columns
     respectively.  ``containment_mode``: ``"prefix"`` (the lossless
     equi-join pass), ``"general"`` or ``"general_sa"`` (ALSO emit
@@ -303,12 +283,10 @@ def run_incremental_dedup(
     its container's group.  Against a prior state the result equals the
     batch run with the same sources over old ∪ new PROVIDED the prior state
     was itself built with them (quiet-cluster connectivity through those
-    pairs lives only in the prior assignments) and, when the delta grows
-    conversations, ``prior_extra_pairs`` supplies the maintained prior pair
-    state as a two-column (a_id, b_id) DataFrame: a dissolved cluster's
-    members re-enter clustering, and their surviving pair edges exist
-    nowhere else.  Quiet-old pairs are NOT re-read: they are contracted
-    inside the prior cluster super-nodes.
+    pairs lives only in the prior assignments).  A dissolved cluster's
+    members re-enter the passes too, so the delta pairs hold every live
+    pair edge they have; quiet-old pairs are NOT re-read: they are
+    contracted inside the prior cluster super-nodes.
 
     ``run``: each stage is checkpointed through ``run.materialize`` —
     manifests, ``metrics.jsonl``, and a relaunch with the same run skips
@@ -318,7 +296,9 @@ def run_incremental_dedup(
     re-signed over their merged turn set), exact_edges, candidate_pairs,
     dup_edges_new, clusters (full updated assignment over old ∪ new),
     cluster_remap (prior cluster_id -> new cluster_id, only rows that
-    changed), resigned_prior_ids, stats (one-row DataFrame of the counts
+    changed), retracted_prior_ids (every re-entered prior conv_id: the
+    grown conversations and the members of the clusters they dissolved;
+    empty without a grown delta), stats (one-row DataFrame of the counts
     observed while the stages were computed — reading it runs no Spark
     job), cleanup (callable releasing the run's in-memory stages; call it
     after the outputs are written), plus the optional pass pair sets above.
@@ -345,14 +325,13 @@ def run_incremental_dedup(
         return df
 
     prior = prior_signed is not None
-    # the prior rows the exact/LSH path and the passes compare against
-    # (None without a prior): prior frames are only ever scanned
-    old = old_full = None
-    carried: DataFrame | None = None
-    resigned_ids: DataFrame | None = None
+    sig_cols = _signed_columns(with_containment, with_simhash_pass)
+    # the prior rows every operator compares against (None without a
+    # prior): prior frames are only ever scanned
+    old = carried = retracted_ids = None
     sign_input = new_turns
     if prior:
-        old_full = prior_signed
+        old = prior_signed
         grown_ids = stage("grown", lambda: prior_signed.select("conv_id").join(
             F.broadcast(new_turns.select("conv_id")), "conv_id", "left_semi"
         ))
@@ -367,18 +346,7 @@ def run_incremental_dedup(
                 "retracted and re-signed (grown-conversation contract, "
                 "module docstring)"
             )
-        if n_grown and extra_cluster_edges and prior_extra_pairs is None:
-            raise ValueError(
-                "extra_cluster_edges with a grown delta needs "
-                "prior_extra_pairs (the maintained pair state): a "
-                "dissolved cluster's surviving pair edges exist "
-                "nowhere else"
-            )
         if n_grown:
-            # (a purely-new delta must NOT enter the grown path — `carried`
-            # would be an empty-but-not-None frame and spuriously trigger
-            # the prior_extra_pairs requirement)
-            resigned_ids = grown_ids
             # latest-wins merge of the grown conversations' turn sets:
             # delta rows override prior rows on (conv_id, turn_idx)
             merged_grown = merge_turns_latest_wins(
@@ -391,7 +359,7 @@ def run_incremental_dedup(
             # retract the grown conversations' ENTIRE prior clusters: stale
             # connectivity through a pre-growth signature must not survive,
             # and a retraction can legitimately SPLIT a cluster — so every
-            # former co-member re-enters the candidate/verify/cluster path
+            # former co-member re-enters every operator as a new-side row
             # (with its existing signature: re-signing stays O(|grown|)).
             # A cluster's id is its min member, so each retracted cluster
             # has exactly one member with conv_id == cluster_id.
@@ -407,27 +375,21 @@ def run_incremental_dedup(
                 F.sum((F.col("conv_id") == F.col("cluster_id")).cast("long"))
                 .alias("n_retracted_clusters"),
             )
-            members = F.broadcast(retracted.select("conv_id"))
-            carried = stage("carried", lambda: (
-                prior_signed.join(members, "conv_id", "left_semi")
-                .join(F.broadcast(grown_ids), "conv_id", "left_anti")
-                .select(*_SIG_COLS)
-            ))
-            # the passes run over ALL rows (not exact-dup reps): their old
-            # side only loses the re-signed conversations, whose stale
-            # pairs the caller drops via resigned_prior_ids
-            old_full = prior_signed.join(F.broadcast(grown_ids), "conv_id", "left_anti")
-            # grown rows always leave the old side, even if the prior state
+            # grown rows always count as retracted, even if the prior state
             # was inconsistent (signed without a cluster row)
-            prior_signed = (
-                prior_signed.join(members, "conv_id", "left_anti")
+            retracted_ids = retracted.select("conv_id").unionByName(grown_ids)
+            carried = stage("carried", lambda: (
+                prior_signed.join(
+                    F.broadcast(retracted.select("conv_id")), "conv_id", "left_semi"
+                )
                 .join(F.broadcast(grown_ids), "conv_id", "left_anti")
-            )
+                .select(*sig_cols)
+            ))
+            old = prior_signed.join(F.broadcast(retracted_ids), "conv_id", "left_anti")
             prior_clusters = prior_clusters.join(
                 F.broadcast(retracted.select("cluster_id").distinct()),
                 "cluster_id", "left_anti",
             )
-        old = prior_signed.select(*_SIG_COLS)
 
     duplicate_keys = Counters("duplicate_turn_keys")
 
@@ -442,12 +404,17 @@ def run_incremental_dedup(
         return s.drop("doc")
 
     signed_new = stage("sign", build_signed, duplicate_keys)
-    new = signed_new.select(*_SIG_COLS)
+    # every operator's new side is the delta plus the carried rows; the
+    # exact/LSH path reads only the signature columns, so ``reps`` stores
+    # no text
+    new_rows = signed_new
     if carried is not None:
-        new = new.unionByName(carried)
+        new_rows = signed_new.select(*sig_cols).unionByName(carried)
+    new = new_rows.select(*_SIG_COLS)
+    old_sigs = old.select(*_SIG_COLS) if prior else None
 
     exact_edges = stage(
-        "exact_edges", lambda: exact.exact_edges(new, old),
+        "exact_edges", lambda: exact.exact_edges(new, old_sigs),
         F.sum(F.col("cross").cast("long")).alias("cross_exact"),
     )
     reps = new_reps = exact.representatives(new, exact_edges)
@@ -462,11 +429,13 @@ def run_incremental_dedup(
                 F.posexplode("band_hashes").alias("band_idx", "band_hash")
             )
             hit_ids = (
-                old.select("conv_id", F.posexplode("band_hashes").alias("band_idx", "band_hash"))
+                old_sigs.select(
+                    "conv_id", F.posexplode("band_hashes").alias("band_idx", "band_hash")
+                )
                 .join(F.broadcast(new_bands), ["band_idx", "band_hash"], "left_semi")
                 .select("conv_id")
             )
-            hit = old.join(F.broadcast(hit_ids), "conv_id", "left_semi")
+            hit = old_sigs.join(F.broadcast(hit_ids), "conv_id", "left_semi")
             hit_rep_ids = (
                 hit.groupBy("content_sha").agg(F.min("conv_id").alias("conv_id"))
                 .select("conv_id")
@@ -505,7 +474,7 @@ def run_incremental_dedup(
     passes: dict[str, DataFrame] = {}
     if with_containment:
         prefix = stage("contain_prefix", lambda: (
-            containment.prefix_containment_pairs(signed_new, cfg, old_full)
+            containment.prefix_containment_pairs(new_rows, cfg, old)
         ))
         passes["containment_prefix_new"] = prefix
         backend = containment.MODE_BACKEND[containment_mode]
@@ -514,7 +483,7 @@ def run_incremental_dedup(
             passes["containment_pairs_new"] = stage(
                 "contain_general",
                 lambda: containment.general_containment_pairs(
-                    signed_new, cfg, old_full, backend=backend,
+                    new_rows, cfg, old, backend=backend,
                     # the prefix leg stored above — don't run its
                     # blocked self-join a second time
                     prefix_pairs=prefix,
@@ -527,41 +496,21 @@ def run_incremental_dedup(
         passes["simhash_pairs_new"] = stage(
             "fuzzy",
             lambda: simhash_op.simhash_pairs(
-                signed_new, cfg, old_full, bucket_counts=chunk_counts
+                new_rows, cfg, old, bucket_counts=chunk_counts
             ),
             chunk_counts,
         )
 
-    resigned = (
-        resigned_ids
-        if resigned_ids is not None
-        else signed_new.select("conv_id").filter(F.lit(False))
-    )
-    edge_legs = [
-        exact_edges.select("a_id", "b_id"), dup_edges,
-        *_cluster_edge_legs(passes, extra_cluster_edges, containment_mode, "_new"),
-    ]
-    if extra_cluster_edges and carried is not None:
-        # a dissolved cluster's members re-enter clustering; their
-        # surviving pair edges live ONLY in the maintained prior pair
-        # state (the pass ops emit >=1-new-endpoint pairs; quiet-old
-        # connectivity is contracted inside the prior super-nodes)
-        carried_ids = carried.select("conv_id")
-        pe = prior_extra_pairs.select("a_id", "b_id")
+    edge_legs = [exact_edges.select("a_id", "b_id"), dup_edges]
+    for source in extra_cluster_edges:
+        # containment's edges are the complete pass's pairs when the mode
+        # runs it, else the prefix pass's
+        table = "simhash_pairs" if source == "simhash" else (
+            "containment_prefix" if containment_mode == "prefix" else "containment_pairs"
+        )
+        a, b = _PAIR_ENDS[table]
         edge_legs.append(
-            pe.join(F.broadcast(carried_ids.withColumnRenamed("conv_id", "a_id")),
-                    "a_id", "left_semi")
-            .unionByName(
-                pe.join(F.broadcast(carried_ids.withColumnRenamed("conv_id", "b_id")),
-                        "b_id", "left_semi")
-            )
-            .dropDuplicates(["a_id", "b_id"])
-            # stale pairs of re-signed conversations: the pass ops
-            # re-emit their live successors
-            .join(F.broadcast(resigned.withColumnRenamed("conv_id", "a_id")),
-                  "a_id", "left_anti")
-            .join(F.broadcast(resigned.withColumnRenamed("conv_id", "b_id")),
-                  "b_id", "left_anti")
+            passes[table + "_new"].select(F.col(a).alias("a_id"), F.col(b).alias("b_id"))
         )
     raw = reduce(DataFrame.unionByName, edge_legs)
 
@@ -672,7 +621,10 @@ def run_incremental_dedup(
         "dup_edges_new": dup_edges,
         "clusters": clusters,
         "cluster_remap": remap,
-        "resigned_prior_ids": resigned,
+        "retracted_prior_ids": (
+            retracted_ids if retracted_ids is not None
+            else signed_new.select("conv_id").filter(F.lit(False))
+        ),
         "stats": stats,
         "cleanup": _cleanup,
         **passes,
@@ -801,20 +753,19 @@ def fold_state(
     ValueError before computing anything when ``prior`` lacks ``signed``,
     ``clusters`` or an enabled pass's pair table, or ``signed`` lacks a
     column an enabled pass reads — composing against a missing or partial
-    table would silently truncate the next state.  The prior pair tables
-    of ``extra_cluster_edges`` sources feed ``prior_extra_pairs``.
+    table would silently truncate the next state.
 
     Returns ``(res, next_state)``: the run_incremental_dedup result and the
     next state tables by name — ``signed`` (prior rows minus re-signed ones,
     plus the delta's), ``clusters`` and each pair table composed via
-    compose_pair_state.  ``write_state`` commits them (plus any table the
-    caller adds) as the state the next delta folds into."""
+    compose_pair_state over ``retracted_prior_ids``.  ``write_state``
+    commits them (plus any table the caller adds) as the state the next
+    delta folds into."""
     check_pass_options(
         extra_cluster_edges, with_containment, with_simhash_pass, containment_mode
     )
     pairs = _pair_tables(with_containment, with_simhash_pass, containment_mode)
     sig_cols = _signed_columns(with_containment, with_simhash_pass)
-    prior_extra = None
     if prior is None:
         prior = {}
     else:
@@ -831,9 +782,6 @@ def fold_state(
                 f"prior state: signed/ lacks {missing}, which the enabled "
                 "passes read — it was written with those passes off"
             )
-        legs = _cluster_edge_legs(prior, extra_cluster_edges, containment_mode)
-        if legs:
-            prior_extra = reduce(DataFrame.unionByName, legs)
 
     res = run_incremental_dedup(
         spark, new_turns, prior.get("signed"), prior.get("clusters"), cfg=cfg,
@@ -842,7 +790,6 @@ def fold_state(
         with_simhash_pass=with_simhash_pass,
         containment_mode=containment_mode,
         extra_cluster_edges=extra_cluster_edges,
-        prior_extra_pairs=prior_extra,
         run=run,
     )
     # upsert: a re-signed (grown) conversation replaces its prior row
@@ -858,7 +805,7 @@ def fold_state(
         delta = res[table + "_new"]
         next_state[table] = (
             compose_pair_state(
-                prior[table], delta, res["resigned_prior_ids"], *_PAIR_ENDS[table]
+                prior[table], delta, res["retracted_prior_ids"], *_PAIR_ENDS[table]
             )
             if prior
             else delta

@@ -280,7 +280,13 @@ class RunContext:
         df.write.mode("overwrite").parquet(tmp)
         observed = read()
         rows = observed.pop("rows")
-        # atomic-ish replace: stage tables are only visible once complete
+        # atomic-ish replace: stage tables are only visible once complete.
+        # The previous manifest goes first, so a crash before the new one is
+        # written never leaves it vouching for the new table
+        try:
+            os.remove(self._manifest_path(stage))
+        except FileNotFoundError:
+            pass
         if os.path.exists(path):
             import shutil
 

@@ -119,8 +119,9 @@ def _long_pairs(keyed: DataFrame, c: int, new_col: str | None = None) -> DataFra
 
     ``new_col`` (a boolean column) makes the join delta-driven: only pairs
     with >= 1 new endpoint come out, and both sides are semi-joined to the
-    keys of new rows first.  Such a pair shares its key with that new row,
-    so the prune is lossless, and quiet old blocks never enter the join."""
+    keys of new rows first (broadcast: the key set is delta-sized).  Such a
+    pair shares its key with that new row, so the prune is lossless, and
+    quiet old blocks never enter the join."""
 
     def side(df: DataFrame, role: str) -> DataFrame:
         return df.select(
@@ -142,8 +143,8 @@ def _long_pairs(keyed: DataFrame, c: int, new_col: str | None = None) -> DataFra
             .unionByName(outer.filter("_outer_new").select("okey"))
             .distinct()
         )
-        inner = inner.join(new_keys, "okey", "left_semi")
-        outer = outer.join(new_keys, "okey", "left_semi")
+        inner = inner.join(F.broadcast(new_keys), "okey", "left_semi")
+        outer = outer.join(F.broadcast(new_keys), "okey", "left_semi")
         keep = keep & (F.col("_inner_new") | F.col("_outer_new"))
     return (
         inner.join(outer, "okey")
@@ -171,16 +172,17 @@ def prefix_containment_pairs(
     shorter than N tokens and the exactly-N-token inner whose last token
     char-extends in the outer).
 
-    With ``old`` (the prior corpus minus re-signed rows) only the pairs
+    With ``old`` (the prior corpus minus retracted rows) only the pairs
     with >= 1 endpoint in ``new`` come out; old-old pairs already live in
     the prior pair state, so
 
-        prior_pairs(minus pairs touching re-signed ids) ∪ delta_pairs
+        prior_pairs(minus pairs touching retracted ids) ∪ delta_pairs
             == prefix_containment_pairs(old ∪ new)
 
     Scale shape: only blocks holding a new row enter a join, and the old
     corpus is never scanned for its key lengths, so cost is O(|delta| +
-    touched blocks), never O(|corpus|²).  The short legs split into two
+    touched blocks), never O(|corpus|²); every semi-join that prunes by
+    the new rows' keys broadcasts them.  The short legs split into two
     directions, disjoint by outer origin:
 
       * NEW short inners × OLD outers — old legs are pruned in-stage to the
@@ -200,11 +202,11 @@ def prefix_containment_pairs(
     allk = oldk.unionByName(newk)
     new_inners = _short_inners(newk, c)
     old_outers = _outer_legs(oldk, c, newk).join(
-        new_inners.select("L", "okey").distinct(), ["L", "okey"], "left_semi"
+        F.broadcast(new_inners.select("L", "okey").distinct()), ["L", "okey"], "left_semi"
     )
     new_outers = _outer_legs(newk, c)
     all_inners = _short_inners(allk, c).join(
-        new_outers.select("L", "okey").distinct(), ["L", "okey"], "left_semi"
+        F.broadcast(new_outers.select("L", "okey").distinct()), ["L", "okey"], "left_semi"
     )
     return (
         _long_pairs(allk, c, "_is_new")
@@ -238,16 +240,17 @@ def _oriented_containment_candidates(
     action that computes the pairs.
 
     Delta mode (``old`` given): ``old`` is the quiet prior corpus
-    (already minus re-signed rows) and only pairs with >= 1 endpoint in
+    (already minus retracted rows) and only pairs with >= 1 endpoint in
     ``new`` are generated.  Both join sides are semi-join-pruned to
-    shingles occurring in a NEW row, which drops NO qualifying hit: a
-    (new probe, *) hit uses a shingle from the new row's own sample, and a
-    (old probe, new index) hit uses a shingle from the new row's full set —
-    so quiet-old rows never enter the join and the pair set equals the batch
-    op's restricted to >= 1-new-endpoint pairs.  The df cap stays computed
-    on the FULL active index (one map-side-combined scan-agg, the only
-    full-corpus term — at 10^12 rows maintain shingle df as incremental
-    state instead) so batch and delta cap identically.
+    shingles occurring in a NEW row (a broadcast set), which drops NO
+    qualifying hit: a (new probe, *) hit uses a shingle from the new row's
+    own sample, and a (old probe, new index) hit uses a shingle from the
+    new row's full set — so quiet-old rows never enter the join and the
+    pair set equals the batch op's restricted to >= 1-new-endpoint pairs.
+    The df cap stays computed on the FULL active index (one
+    map-side-combined scan-agg, the only full-corpus term — at 10^12 rows
+    maintain shingle df as incremental state instead) so batch and delta
+    cap identically.
     """
 
     def _base(df: DataFrame, is_new: bool) -> DataFrame:
@@ -284,8 +287,8 @@ def _oriented_containment_candidates(
     )
     if old is not None:
         new_sh = new.select(F.explode("shingles").alias("sh")).distinct()
-        index = index.join(new_sh, "sh", "left_semi")
-        probe = probe.join(new_sh, "sh", "left_semi")
+        index = index.join(F.broadcast(new_sh), "sh", "left_semi")
+        probe = probe.join(F.broadcast(new_sh), "sh", "left_semi")
     index = index.select(
         F.col("conv_id").alias("idx_id"), F.col("_is_new").alias("_idx_new"), "sh"
     )
@@ -456,10 +459,10 @@ def general_containment_pairs(
     self-join a second time here.  ``shingle_counts`` observes the df cap's
     counters (see :func:`_oriented_containment_candidates`).
 
-    With ``old`` (the prior corpus minus re-signed rows) only the pairs
+    With ``old`` (the prior corpus minus retracted rows) only the pairs
     with >= 1 endpoint in ``new`` come out, so
 
-        prior_pairs(minus pairs touching re-signed ids) ∪ delta_pairs
+        prior_pairs(minus pairs touching retracted ids) ∪ delta_pairs
             == general_containment_pairs(old ∪ new)
 
     (tested for both backends).  Scale shape: the prefix leg prunes quiet

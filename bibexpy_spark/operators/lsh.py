@@ -61,11 +61,13 @@ def bucket_pairs(
     ``new_col`` (a boolean column) makes the join delta-driven: only
     buckets holding a new row take part, and only pairs with >= 1 new
     endpoint come out.  A bucket's key is carried by every member, so
-    semi-joining the rows to the new rows' keys BEFORE the bucket aggregate
-    keeps every member of a touched bucket (its size and rep equal the
-    unpruned aggregate's) while the old rows are only scanned, never
-    aggregated.  Without ``new_col`` every row counts as new: the batch
-    join is the same plan with the delta filters constant-folded away.
+    semi-joining the rows to the new rows' keys (a broadcast: the new rows
+    are delta-sized, the old ones may be the whole prior) BEFORE the
+    bucket aggregate keeps every member of a touched bucket (its size and
+    rep equal the unpruned aggregate's) while the old rows are only
+    scanned, never aggregated.  Without ``new_col`` every row counts as
+    new: the batch join is the same plan with the delta filters
+    constant-folded away.
 
     The star rep's carried values and new-flag ride the bucket aggregate
     (``min_by`` on the id), so the star is a filter over the member rows —
@@ -84,7 +86,8 @@ def bucket_pairs(
     )
     if new_col:
         rows = rows.join(
-            rows.filter(F.col("_new")).select(*keys).distinct(), keys, "left_semi"
+            F.broadcast(rows.filter(F.col("_new")).select(*keys).distinct()),
+            keys, "left_semi",
         )
     sizes = (
         rows.groupBy(*keys)

@@ -118,11 +118,11 @@ def simhash_pairs(
     :func:`_chunk_pairs`); below the cap the pair set is exactly the
     all-pairs-within-radius definition.
 
-    With ``old`` (the prior corpus minus re-signed rows) only the pairs
+    With ``old`` (the prior corpus minus retracted rows) only the pairs
     with >= 1 endpoint in ``new`` come out; old-old pairs live in the
     prior pair state, and
 
-        prior_pairs(minus pairs touching re-signed ids) ∪ delta_pairs
+        prior_pairs(minus pairs touching retracted ids) ∪ delta_pairs
             == simhash_pairs(old ∪ new).
 
     Only chunk buckets containing a new row enter the join (lsh.bucket_pairs

@@ -189,7 +189,7 @@ def main(argv: list[str] | None = None) -> None:
         t_bench = time.time()
 
     # one pass: against the prior state when given (the next state is
-    # signed = old ∪ new, pair tables = prior-minus-resigned ∪ delta, so
+    # signed = old ∪ new, pair tables = prior-minus-retracted ∪ delta, so
     # daily increments compose without re-reading the corpus), else a batch
     try:
         prior = (incremental.read_state(spark, args.prior_state)

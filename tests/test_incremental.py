@@ -188,7 +188,7 @@ def test_incremental_contain_simhash_equals_batch(spark, split_corpus, tmp_path)
     """VERDICT r3 ask #5: the incremental mode extended to the contain and
     fuzzy (SimHash) passes.  With a GROWN delta (the hardest shape):
 
-        prior_pairs minus pairs touching resigned ids ∪ delta_pairs
+        prior_pairs minus pairs touching retracted ids ∪ delta_pairs
             == batch pass over the final corpus
 
     for both pair sets, while cluster equivalence still holds."""
@@ -208,11 +208,14 @@ def test_incremental_contain_simhash_equals_batch(spark, split_corpus, tmp_path)
         )
         assert _cluster_set(incr["clusters"]) == _cluster_set(full["clusters"])
 
-        resigned = {r["conv_id"] for r in incr["resigned_prior_ids"].collect()}
-        assert resigned, "split produced no grown conversations"
+        retracted = {r["conv_id"] for r in incr["retracted_prior_ids"].collect()}
         delta_ids = {
             r["conv_id"] for r in delta.select("conv_id").distinct().collect()
         }
+        # the retracted ids are the grown conversations plus the other
+        # members of the clusters they dissolved
+        assert retracted & delta_ids, "split produced no grown conversations"
+        assert retracted - delta_ids, "no grown conversation had a co-member"
 
         for prior_key, delta_key, full_key, cols in (
             ("containment_prefix", "containment_prefix_new",
@@ -222,16 +225,15 @@ def test_incremental_contain_simhash_equals_batch(spark, split_corpus, tmp_path)
         ):
             p_prior = {
                 t for t in _pairset(prior[prior_key], cols)
-                if t[0] not in resigned and t[1] not in resigned
+                if t[0] not in retracted and t[1] not in retracted
             }
             p_delta = _pairset(incr[delta_key], cols)
             p_full = _pairset(full[full_key], cols)
             assert p_prior | p_delta == p_full, delta_key
             # the delta output really is a delta: every pair touches a
-            # delta conversation
-            assert all(
-                t[0] in delta_ids or t[1] in delta_ids for t in p_delta
-            ), delta_key
+            # delta or retracted conversation
+            touched = delta_ids | retracted
+            assert all(t[0] in touched or t[1] in touched for t in p_delta), delta_key
         incr["cleanup"]()
     finally:
         old_phase.unpersist()
@@ -267,10 +269,10 @@ def test_incremental_empty_delta_is_identity(spark, split_corpus):
 
 def test_incremental_extra_edges_equals_batch(spark, split_corpus, tmp_path):
     """Capstone: extra_cluster_edges in INCREMENTAL mode, grown delta, equals
-    the batch run folding the same sources.  The three edge legs compose:
-    quiet-cluster connectivity rides the contracted prior super-nodes, pairs
-    touching dissolved clusters come from the maintained prior pair state,
-    >=1-new-endpoint pairs from the delta ops."""
+    the batch run folding the same sources, with no pair state passed in.
+    Quiet-cluster connectivity rides the contracted prior super-nodes; the
+    members of dissolved clusters re-enter the passes, so every pair
+    touching them comes from the delta ops with the new rows' pairs."""
     _, _, all_turns = split_corpus
     old_phase, delta = _grown_split(all_turns)
     EDGES = ("containment", "simhash")
@@ -285,22 +287,12 @@ def test_incremental_extra_edges_equals_batch(spark, split_corpus, tmp_path):
             spark, old_phase, extra_cluster_edges=EDGES, **kw
         )
         prior_s, prior_c = _state_tables(spark, prior, tmp_path, "xe")
-        # the maintained pair state, normalized the way the job/stream would
-        # union their state tables
-        psp = str(tmp_path / "xe_pairs")
-        prior["containment_pairs"].select(
-            F.col("inner_id").alias("a_id"), F.col("outer_id").alias("b_id")
-        ).unionByName(
-            prior["simhash_pairs"].select("a_id", "b_id")
-        ).write.mode("overwrite").parquet(psp)
-
         incr = incremental.run_incremental_dedup(
             spark, delta, prior_s, prior_c, prior_turns=old_phase,
-            extra_cluster_edges=EDGES,
-            prior_extra_pairs=spark.read.parquet(psp),
-            **kw,
+            extra_cluster_edges=EDGES, **kw,
         )
         assert _cluster_set(incr["clusters"]) == _cluster_set(full["clusters"])
+        assert incr["stats"].first()["n_carried"] > 0
         # the fold genuinely coarsens vs the no-extra-edges run (otherwise
         # this test proves nothing about the extra legs)
         plain = pipeline.run_dedup(
@@ -315,38 +307,15 @@ def test_incremental_extra_edges_equals_batch(spark, split_corpus, tmp_path):
         delta.unpersist()
 
 
-def test_incremental_extra_edges_grown_requires_pair_state(
-    spark, split_corpus, tmp_path
-):
-    """A grown delta dissolves clusters; without the maintained pair state
-    their surviving extra edges are unrecoverable — must fail loudly."""
-    _, _, all_turns = split_corpus
-    old_phase, delta = _grown_split(all_turns)
-    try:
-        prior = pipeline.run_dedup(
-            spark, old_phase, with_containment=True, with_simhash_pass=False
-        )
-        prior_s, prior_c = _state_tables(spark, prior, tmp_path, "xr")
-        with pytest.raises(ValueError, match="prior_extra_pairs"):
-            incremental.run_incremental_dedup(
-                spark, delta, prior_s, prior_c, prior_turns=old_phase,
-                with_containment=True,
-                extra_cluster_edges=("containment",),
-            )
-    finally:
-        old_phase.unpersist()
-        delta.unpersist()
-
-
 def test_purely_new_delta_defensive_prior_turns_no_pair_state_needed(
     spark, split_corpus, tmp_path
 ):
-    """A delta of ONLY new conversations dissolves no cluster, so the
-    maintained pair state is legitimately unused — passing prior_turns
-    defensively (the docstring recommends it) must not trip the
-    prior_extra_pairs requirement.  Regression: `carried` used to become an
-    empty-but-not-None frame whenever prior_turns was supplied, spuriously
-    raising ValueError on a perfectly valid call."""
+    """A delta of ONLY new conversations dissolves no cluster: passing
+    prior_turns defensively (the docstring recommends it) with extra edge
+    sources on retracts nothing and equals the batch run.  Regression:
+    `carried` used to become an empty-but-not-None frame whenever
+    prior_turns was supplied, spuriously raising ValueError on a perfectly
+    valid call."""
     old_turns, new_turns, all_turns = split_corpus
     EDGES = ("containment",)
     kw = dict(
@@ -357,11 +326,89 @@ def test_purely_new_delta_defensive_prior_turns_no_pair_state_needed(
     prior_s, prior_c = _state_tables(spark, prior, tmp_path, "pn")
     incr = incremental.run_incremental_dedup(
         spark, new_turns, prior_s, prior_c, prior_turns=old_turns,
-        extra_cluster_edges=EDGES, prior_extra_pairs=None, **kw,
+        extra_cluster_edges=EDGES, **kw,
     )
     full = pipeline.run_dedup(spark, all_turns, extra_cluster_edges=EDGES, **kw)
     assert _cluster_set(incr["clusters"]) == _cluster_set(full["clusters"])
+    assert incr["retracted_prior_ids"].count() == 0
     incr["cleanup"]()
+
+
+# general containment and SimHash, both folded into the clusters: the
+# passes and edge sources of the grown-delta tests below
+_PASSES = dict(
+    with_containment=True, with_simhash_pass=True, containment_mode="general",
+    extra_cluster_edges=("containment", "simhash"),
+)
+
+
+def test_fold_chain_with_growing_delta_equals_batch(spark, split_corpus, tmp_path):
+    """Two deltas folded through the entry point the job and the stream
+    use: fold_state, write_state, then read_state for the next fold.  The
+    first delta brings new conversations only; the second grows
+    conversations the state clustered with others, re-delivers an edited
+    turn and brings an exact copy of a prior conversation.  After each
+    delta the committed clusters and every pair table equal the batch run
+    over the turns so far."""
+    _, _, all_turns = split_corpus
+    bucket = F.abs(F.xxhash64("conv_id")) % 10
+    grows = (bucket < 6) & (F.abs(F.xxhash64("conv_id", F.lit(1))) % 4 == 0)
+    t = all_turns.withColumn("_mx", F.max("turn_idx").over(W.partitionBy("conv_id")))
+    held = grows & (F.col("turn_idx") == F.col("_mx")) & (F.col("_mx") > 0)
+    phase0 = t.filter((bucket < 6) & ~held).drop("_mx")
+    delta1 = t.filter((bucket >= 6) & (bucket < 8)).drop("_mx")
+    turns1 = phase0.unionByName(delta1)
+    edit_id = phase0.filter(~grows).agg(F.min("conv_id")).first()[0]
+    copy_id = delta1.agg(F.min("conv_id")).first()[0]
+    delta2 = (
+        t.filter((bucket >= 8) | held).drop("_mx")
+        .unionByName(
+            turns1.filter((F.col("conv_id") == edit_id) & (F.col("turn_idx") == 0))
+            .withColumn("text", F.concat("text", F.lit(" edited tail marker")))
+        )
+        .unionByName(
+            turns1.filter(F.col("conv_id") == copy_id)
+            .withColumn("conv_id", F.lit(f"{copy_id}_copy"))
+        )
+    )
+    turns2 = (
+        turns1.join(
+            delta2.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"], "left_anti"
+        )
+        .unionByName(delta2)
+    )
+    pair_cols = {
+        "containment_prefix": ["inner_id", "outer_id"],
+        "containment_pairs": ["inner_id", "outer_id", "pos"],
+        "simhash_pairs": ["a_id", "b_id", "hamming"],
+    }
+    state = str(tmp_path / "state")
+
+    def fold(delta, prior_turns):
+        prior = incremental.read_state(spark, state) if prior_turns is not None else None
+        res, nxt = incremental.fold_state(
+            spark, delta, prior, prior_turns=prior_turns, **_PASSES
+        )
+        incremental.write_state(state, nxt)
+        res["cleanup"]()
+        return res
+
+    def assert_state_is_batch(turns):
+        got = incremental.read_state(spark, state)
+        full = pipeline.run_dedup(spark, turns, **_PASSES)
+        assert _cluster_set(got["clusters"]) == _cluster_set(full["clusters"])
+        for table, cols in pair_cols.items():
+            assert _pairset(got[table], cols) == _pairset(full[table], cols), table
+        full["cleanup"]()
+
+    fold(phase0, None)
+    stats1 = fold(delta1, phase0)["stats"].first()
+    assert stats1["n_carried"] == 0
+    assert_state_is_batch(turns1)
+    stats2 = fold(delta2, turns1)["stats"].first()
+    assert stats2["n_carried"] > 0 and stats2["n_retracted_clusters"] > 0
+    assert stats2["n_cross_exact"] > 0
+    assert_state_is_batch(turns2)
 
 
 def test_prior_signed_without_prior_clusters_raises(spark, split_corpus):
@@ -662,6 +709,38 @@ def test_delta_pass_job_budget(spark, split_corpus, tmp_path, spark_jobs):
     incr, jobs = spark_jobs(delta_pass)
     incr["cleanup"]()
     assert len(jobs) <= 39, jobs
+
+
+def test_grown_delta_job_budget(spark, split_corpus, tmp_path, spark_jobs):
+    """A grown delta (``_grown_split``) folded through ``fold_state`` and
+    committed with ``write_state``, general containment and SimHash on as
+    extra edge sources, runs at most 102 Spark jobs, the count measured
+    before the dissolved clusters' members re-entered the passes (when
+    their pair edges were read back from the prior pair state).  It pins
+    the cost of that re-entry rule."""
+    _, _, all_turns = split_corpus
+    old_phase, delta = _grown_split(all_turns)
+    state = str(tmp_path / "state")
+    try:
+        boot, first = incremental.fold_state(spark, old_phase, None, **_PASSES)
+        incremental.write_state(state, first)
+        boot["cleanup"]()
+        prior = incremental.read_state(spark, state)
+
+        def grown_pass():
+            res, nxt = incremental.fold_state(
+                spark, delta, prior, prior_turns=old_phase, **_PASSES
+            )
+            incremental.write_state(state, nxt)
+            return res
+
+        res, jobs = spark_jobs(grown_pass)
+        res["cleanup"]()
+        assert res["stats"].first()["n_carried"] > 0
+        assert len(jobs) <= 102, jobs
+    finally:
+        old_phase.unpersist()
+        delta.unpersist()
 
 
 def test_batch_pass_job_budget(spark, split_corpus, tmp_path, spark_jobs):

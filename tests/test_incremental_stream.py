@@ -55,7 +55,7 @@ def test_stream_of_deltas_equals_full_batch(spark, tmp_path):
 def test_stream_pair_state_equals_batch_passes(spark, tmp_path):
     """With the optional passes on, the streamed pair state after the last
     micro-batch equals the batch pipeline's containment/SimHash outputs
-    over everything ingested (composition: prior minus resigned ∪ delta)."""
+    over everything ingested (composition: prior minus retracted ∪ delta)."""
     src = tmp_path / "feed"
     src.mkdir()
     state = str(tmp_path / "state")
@@ -400,8 +400,8 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
     assert prior_set == {("a1", "a2"), ("a1", "a3"), ("a2", "a3")}
 
     delta = sh.simhash_pairs(new, cfg, old)     # bucket now 5 > cap: star
-    resigned = spark.createDataFrame([], "conv_id string")
-    composed = compose_pair_state(prior, delta, resigned, "a_id", "b_id")
+    retracted = spark.createDataFrame([], "conv_id string")
+    composed = compose_pair_state(prior, delta, retracted, "a_id", "b_id")
     chunk_counts = Counters("hot_chunk_buckets", "active_chunk_buckets")
     batch = sh.simhash_pairs(
         old.unionByName(new), cfg, bucket_counts=chunk_counts
@@ -464,9 +464,9 @@ def test_containment_df_cap_crossing_divergence_is_bounded_superset(spark):
 
     delta = ct.general_containment_pairs(
         new, CANONICAL, old, max_shingle_freq=cap)
-    resigned = spark.createDataFrame([], "conv_id string")
+    retracted = spark.createDataFrame([], "conv_id string")
     composed = compose_pair_state(
-        prior, delta, resigned, "inner_id", "outer_id")
+        prior, delta, retracted, "inner_id", "outer_id")
     shingle_counts = Counters("hot_shingles", "indexed_shingles")
     batch = ct.general_containment_pairs(
         old.unionByName(new), CANONICAL, max_shingle_freq=cap,

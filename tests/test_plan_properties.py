@@ -155,6 +155,43 @@ def test_general_containment_no_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_delta_semi_joins_broadcast_the_new_keys(spark):
+    """Every delta semi-join whose right side is built from the new rows
+    broadcasts it: with auto-broadcast off, the delta plans of the prefix
+    and general containment passes and of the SimHash pass hold no
+    sort-merge semi-join, so the old side is pruned where it is scanned
+    instead of being shuffled to meet a delta-sized key set."""
+    from bibexpy_spark import corpus
+    from bibexpy_spark.config import CANONICAL
+    from bibexpy_spark.functions import udfs
+    from bibexpy_spark.operators import assembly, containment, simhash
+
+    turns_pd = corpus.generate_transcripts(60, seed=7)
+    new_ids = sorted(set(turns_pd["conv_id"]))[::20]
+    conv = assembly.assemble_docs(spark.createDataFrame(turns_pd), include_roles_tools=True)
+    signed = simhash.with_simhash(
+        udfs.with_signature_columns(conv, CANONICAL, text_col="doc"), CANONICAL
+    )
+    is_new = F.col("conv_id").isin(new_ids)
+    old, new = signed.filter(~is_new), signed.filter(is_new)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for name, df in (
+            ("prefix", containment.prefix_containment_pairs(new, CANONICAL, old)),
+            ("general", containment.general_containment_pairs(new, CANONICAL, old)),
+            ("simhash", simhash.simhash_pairs(new, CANONICAL, old)),
+        ):
+            plan = df._jdf.queryExecution().sparkPlan().toString()
+            merge_semi = [
+                line for line in plan.splitlines()
+                if "SortMergeJoin" in line and "LeftSemi" in line
+            ]
+            assert not merge_semi, (name, merge_semi)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 def test_assembly_projection_is_codegen_native(spark):
     """The assemble stage's doc/roles/tools projection must not use
     HigherOrderFunctions (transform/filter lambdas are CodegenFallback and

@@ -267,3 +267,36 @@ def test_input_token_walks_partitioned_dirs(tmp_path):
     # cheap mode now at least sees size changes in leaf files
     f.write_bytes(b"lengthier")
     assert input_token_for_paths(str(root)) != t_cheap
+
+
+def test_crash_before_stage_manifest_leaves_no_stale_manifest(
+    spark, warehouse, monkeypatch
+):
+    """A run that replaces a stage's table and dies before writing the
+    stage's manifest must not leave the previous run's manifest vouching
+    for the new table: a relaunch with the first run's input token finds
+    the stage stale and rebuilds it, instead of reading the crashed run's
+    rows."""
+
+    def launch(token: str) -> RunContext:
+        return RunContext(spark, CANONICAL, warehouse, run_id="stale", input_token=token)
+
+    run_a = launch("A")
+    assert run_a.materialize("s", lambda: spark.range(3)).count() == 3
+    run_a.close()
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash")
+
+    run_b = launch("B")
+    with monkeypatch.context() as m:
+        m.setattr(RunContext, "_write_manifest", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_b.materialize("s", lambda: spark.range(7))
+    run_b.close()
+
+    relaunch = launch("A")
+    assert not relaunch.stage_fresh("s")
+    assert relaunch.materialize("s", lambda: spark.range(3)).count() == 3
+    assert [m["skipped"] for m in relaunch.metrics] == [False]
+    relaunch.close()

@@ -180,7 +180,7 @@ def test_spark_submit_incremental_mode(tmp_path):
     ).fetchone()[0]
     assert diff == 0, "incremental submit diverged from full-batch submit"
     # composed containment pair state == the full-batch pass over old ∪ new
-    # (prior pairs minus resigned-touching, union delta pairs — the delta-op
+    # (prior pairs minus retracted-touching, union delta pairs — the delta-op
     # equivalence contract, operationalized by the job's state composition)
     pair_diff = duckdb.sql(
         f"SELECT count(*) FROM ("
