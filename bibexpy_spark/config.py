@@ -23,8 +23,8 @@ class DedupConfig:
     (``kernels.normalize_text``: NFKD -> ASCII fold, lowercase,
     punctuation -> space, collapse whitespace; stopwords are kept).
 
-    ``b * r`` must equal ``num_perm``.  The default (32 bands x 4 rows,
-    128 perms) puts the LSH S-curve threshold at ~(1/32)^(1/4) ~= 0.42,
+    ``num_perm`` is ``bands * rows_per_band``.  The default (32 bands x 4
+    rows, 128 perms) puts the LSH S-curve threshold at ~(1/32)^(1/4) ~= 0.42,
     i.e. candidate-capture probability >0.9999999 at the verification
     threshold 0.8 -- that is what buys dup-pair recall >=0.99.
     """
@@ -33,7 +33,6 @@ class DedupConfig:
     shingle_k: int = 5                  # word k-grams; a row shorter than k still gets 1 shingle
 
     # -- MinHash
-    num_perm: int = 128
     minhash_seed: int = 0x5EED_CAFE
 
     # -- LSH banding
@@ -61,12 +60,12 @@ class DedupConfig:
     # -- containment (suffix pass)
     containment_prefix_tokens: int = 8  # blocking key = first N normalized tokens
 
+    @property
+    def num_perm(self) -> int:
+        """MinHash permutations: one per row of every LSH band."""
+        return self.bands * self.rows_per_band
+
     def __post_init__(self) -> None:
-        if self.bands * self.rows_per_band != self.num_perm:
-            raise ValueError(
-                f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) "
-                f"!= num_perm ({self.num_perm})"
-            )
         # pigeonhole preconditions (r4 review): two hashes within Hamming
         # distance d can disagree on at most d chunks, so d < chunks is
         # REQUIRED for the chunk equi-join to be lossless; chunks must also

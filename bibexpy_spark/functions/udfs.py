@@ -1,10 +1,11 @@
-"""Arrow-batched pandas UDFs wrapping the shared kernels.
+"""The Arrow-batched signing UDF wrapping the shared kernels.
 
-Every UDF here is Series->Series over Arrow batches (no per-row Python on
-the Spark side, per BASELINE.json ``input_hint``); the heavy lifting happens
-in vectorized numpy inside bibexpy_spark.functions.kernels, the exact same
-code the oracle runs.  uint64 kernel outputs are bit-pattern-viewed to int64
-for Spark ``LongType`` columns and viewed back on re-entry.
+One struct-returning pandas UDF per row signs a conversation: per Arrow
+batch it calls each kernel once (normalize, shingle, MinHash + band hashes
+and, optionally, SimHash), so no kernel output is recomputed for another
+column, and no per-row Python runs on the Spark side (BASELINE.json
+``input_hint``).  The kernels are the exact code the oracle runs.  uint64
+kernel outputs are bit-pattern-viewed to int64 for Spark ``LongType``.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ from functools import lru_cache
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from bibexpy_spark.config import DedupConfig
@@ -22,52 +22,57 @@ from bibexpy_spark.functions import kernels
 
 
 @lru_cache(maxsize=8)
-def for_config(cfg: DedupConfig):
-    """Build the UDF family for one config (cached; configs are frozen)."""
+def for_config(cfg: DedupConfig, with_simhash: bool):
+    """The signing UDF for one config (cached; configs are frozen):
+    ``doc`` (plus ``roles``, ``tools`` with ``with_simhash``) ->
+    struct<norm_text, shingles, band_hashes[, simhash]>.
 
-    @pandas_udf(T.StringType())
-    def normalize_udf(texts: pd.Series) -> pd.Series:
-        return kernels.normalize_text(texts, cfg)
+    The SimHash feature is the normalized doc, roles and tools joined by
+    spaces.  Normalization maps each character on its own except for the
+    final whitespace collapse, so this equals normalizing the joined raw
+    texts (tests/test_properties.py checks the identity) without a second
+    normalize of the doc; ``simhash64`` splits on whitespace, so an empty
+    part adds no token."""
+    schema = "norm_text string, shingles array<bigint>, band_hashes array<bigint>"
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def shingles_udf(norm: pd.Series) -> pd.Series:
+    @pandas_udf(schema + (", simhash bigint" if with_simhash else ""))
+    def sign(doc: pd.Series, *features: pd.Series) -> pd.DataFrame:
+        norm = kernels.normalize_text(doc, cfg)
         sets = kernels.shingle_sets(norm, cfg)
-        return pd.Series([s.view(np.int64) for s in sets])
+        bands = kernels.band_hashes(kernels.minhash_signatures(sets, cfg), cfg)
+        out = pd.DataFrame({
+            "norm_text": norm,
+            "shingles": [s.view(np.int64) for s in sets],
+            "band_hashes": list(bands),
+        })
+        if features:
+            parts = [kernels.normalize_text(f, cfg) for f in features]
+            out["simhash"] = kernels.simhash64(norm.str.cat(parts, sep=" "), cfg)
+        return out
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def bands_udf(shingles: pd.Series) -> pd.Series:
-        """shingle array (int64) -> LSH band hashes (one int64 per band)."""
-        sets = [np.asarray(s, dtype=np.int64).view(np.uint64) for s in shingles]
-        sig = kernels.minhash_signatures(sets, cfg)
-        bh = kernels.band_hashes(sig, cfg)
-        return pd.Series(list(bh))
-
-    @pandas_udf(T.LongType())
-    def simhash_udf(norm: pd.Series) -> pd.Series:
-        return pd.Series(kernels.simhash64(norm, cfg))
-
-    return {
-        "normalize": normalize_udf,
-        "shingles": shingles_udf,
-        "bands": bands_udf,
-        "simhash": simhash_udf,
-    }
+    return sign
 
 
-def with_signature_columns(df, cfg: DedupConfig, text_col: str = "doc"):
-    """doc -> norm_text, content_sha256 (native), shingles, band_hashes.
+def with_signature_columns(
+    df, cfg: DedupConfig, text_col: str = "doc", with_simhash: bool = False
+):
+    """doc -> norm_text, content_sha (native), shingles, band_hashes, and
+    with ``with_simhash`` a ``simhash`` over doc + ``roles`` + ``tools``.
 
     The strong content hash is computed JVM-side with ``sha2`` (the exact
     short-circuit analogous to the reference's Stage-1 DOI equality,
-    smart_merger.py:253-265); only shingling/MinHash go through Arrow.
-    The UDF stage inherits the upstream shuffle's partitioning, which AQE
-    coalescing sizes to the data (one task for a small delta, about one per
-    core for a corpus), so no extra repartition pass is needed.
+    smart_merger.py:253-265); only the kernels go through Arrow, in one UDF
+    call.  The UDF stage inherits the upstream shuffle's partitioning,
+    which AQE coalescing sizes to the data (one task for a small delta,
+    about one per core for a corpus), so no extra repartition pass is
+    needed.
     """
-    u = for_config(cfg)
-    return (
-        df.withColumn("norm_text", u["normalize"](F.col(text_col)))
-        .withColumn("content_sha", F.sha2(F.col("norm_text"), 256))
-        .withColumn("shingles", u["shingles"](F.col("norm_text")))
-        .withColumn("band_hashes", u["bands"](F.col("shingles")))
+    inputs = [text_col, "roles", "tools"] if with_simhash else [text_col]
+    return df.withColumn("_sig", for_config(cfg, with_simhash)(*inputs)).select(
+        *df.columns,
+        "_sig.norm_text",
+        F.sha2("_sig.norm_text", 256).alias("content_sha"),
+        "_sig.shingles",
+        "_sig.band_hashes",
+        *(["_sig.simhash"] if with_simhash else []),
     )

@@ -78,7 +78,8 @@ smart_merger.py:576-827):
                      with >= 1 new or carried endpoint (merge_references
                      and fuzzy Stage-4 analogues); ``contain_general`` counts
                      ``hot_shingles`` (dropped by the df cap),
-                     ``indexed_shingles``; ``fuzzy`` counts
+                     ``indexed_shingles`` (in a delta pass, of the
+                     delta's shingles only); ``fuzzy`` counts
                      ``hot_chunk_buckets``, ``active_chunk_buckets``;
   * ``edges``        every edge with its old endpoints contracted to their
                      prior cluster_id (already the min conv_id of its
@@ -398,10 +399,9 @@ def run_incremental_dedup(
             sign_input, include_roles_tools=with_simhash_pass,
             duplicate_keys=duplicate_keys,
         )
-        s = udfs.with_signature_columns(conv, cfg, text_col="doc")
-        if with_simhash_pass:
-            s = simhash_op.with_simhash(s, cfg)
-        return s.drop("doc")
+        return udfs.with_signature_columns(
+            conv, cfg, with_simhash=with_simhash_pass
+        ).drop("doc")
 
     signed_new = stage("sign", build_signed, duplicate_keys)
     # every operator's new side is the delta plus the carried rows; the

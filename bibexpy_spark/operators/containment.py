@@ -247,10 +247,12 @@ def _oriented_containment_candidates(
     own sample, and a (old probe, new index) hit uses a shingle from the
     new row's full set — so quiet-old rows never enter the join and the
     pair set equals the batch op's restricted to >= 1-new-endpoint pairs.
-    The df cap stays computed on the FULL active index (one
-    map-side-combined scan-agg, the only full-corpus term — at 10^12 rows
-    maintain shingle df as incremental state instead) so batch and delta
-    cap identically.
+    The index is pruned BEFORE the df aggregate: a kept shingle's df still
+    counts every old and new row holding it, so batch and delta cap
+    identically, while the aggregate's shuffle holds only the delta's
+    shingles.  The counters then count only those shingles.  The scan of
+    the old shingle arrays remains the one full-corpus term (at 10^12 rows
+    maintain shingle df as incremental state instead).
     """
 
     def _base(df: DataFrame, is_new: bool) -> DataFrame:
@@ -266,6 +268,9 @@ def _oriented_containment_candidates(
     if old is not None:
         base = _base(old, False).unionByName(base)
     index = base.select("conv_id", "_is_new", F.explode("shingles").alias("sh"))
+    if old is not None:
+        new_sh = new.select(F.explode("shingles").alias("sh")).distinct()
+        index = index.join(F.broadcast(new_sh), "sh", "left_semi")
     freq = index.groupBy("sh").agg(F.count("*").alias("df"))
     if shingle_counts is not None:
         metrics = (
@@ -286,8 +291,6 @@ def _oriented_containment_candidates(
         F.explode(F.slice(F.array_sort("shingles"), 1, sample_m)).alias("sh"),
     )
     if old is not None:
-        new_sh = new.select(F.explode("shingles").alias("sh")).distinct()
-        index = index.join(F.broadcast(new_sh), "sh", "left_semi")
         probe = probe.join(F.broadcast(new_sh), "sh", "left_semi")
     index = index.select(
         F.col("conv_id").alias("idx_id"), F.col("_is_new").alias("_idx_new"), "sh"
@@ -467,9 +470,10 @@ def general_containment_pairs(
 
     (tested for both backends).  Scale shape: the prefix leg prunes quiet
     blocks by semi-join (see :func:`prefix_containment_pairs`); the interior
-    leg prunes both join sides to shingles occurring in a new row
-    (losslessness argument in :func:`_oriented_containment_candidates`) —
-    only the df-cap scan-agg touches the full corpus.
+    leg prunes both join sides, and the df-cap aggregate, to shingles
+    occurring in a new row (losslessness argument in
+    :func:`_oriented_containment_candidates`) — only the scan of the old
+    shingle arrays touches the full corpus.
 
     Equality boundary (r4 review): the interior leg's candidate capture is
     df-dependent, so the equality above is exact only while no shingle's

@@ -2,7 +2,8 @@
 
 The reference's Stage-4 matches on fuzzy secondary fields (journal JW >= 0.90
 plus exact volume/page, smart_merger.py:309-334).  The transcript analogue:
-SimHash over text + role/tool-sequence features, pairs within Hamming
+SimHash over text + role/tool-sequence features (computed with the rest of
+the signature by ``udfs.with_signature_columns``), pairs within Hamming
 distance ``simhash_hamming_max``.
 
 Candidate generation uses the pigeonhole principle: split the 64-bit hash
@@ -19,27 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bibexpy_spark.config import DedupConfig
-from bibexpy_spark.functions import udfs
 from bibexpy_spark.lineage import Counters
 from bibexpy_spark.operators import lsh
-
-
-def with_simhash(conversations: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Add ``simhash`` over the normalized (doc + roles + tools) feature.
-
-    The intermediate normalized feature is dropped before returning (r4
-    review: leaving it aboard put a second full-text copy of every
-    conversation into the pipeline's persisted ``signed``/``grouped``
-    frames and every downstream shuffle, and nothing ever read it)."""
-    u = udfs.for_config(cfg)
-    feat = F.concat_ws(
-        " ", F.col("doc"), F.coalesce("roles", F.lit("")), F.coalesce("tools", F.lit(""))
-    )
-    return (
-        conversations.withColumn("fuzzy_feat", u["normalize"](feat))
-        .withColumn("simhash", u["simhash"](F.col("fuzzy_feat")))
-        .drop("fuzzy_feat")
-    )
 
 
 def _chunked(simmed: DataFrame, cfg: DedupConfig, *cols: str) -> DataFrame:

@@ -87,7 +87,7 @@ def test_band_hashes_structure():
 
 
 def test_band_agreement_iff_row_agreement():
-    cfg = DedupConfig(num_perm=8, bands=2, rows_per_band=4)
+    cfg = DedupConfig(bands=2, rows_per_band=4)
     sig_a = np.arange(8, dtype=np.uint64).reshape(1, 8)
     sig_b = sig_a.copy()
     sig_b[0, 7] += 1  # disturb last row of band 1 only

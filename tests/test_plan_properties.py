@@ -169,9 +169,7 @@ def test_delta_semi_joins_broadcast_the_new_keys(spark):
     turns_pd = corpus.generate_transcripts(60, seed=7)
     new_ids = sorted(set(turns_pd["conv_id"]))[::20]
     conv = assembly.assemble_docs(spark.createDataFrame(turns_pd), include_roles_tools=True)
-    signed = simhash.with_simhash(
-        udfs.with_signature_columns(conv, CANONICAL, text_col="doc"), CANONICAL
-    )
+    signed = udfs.with_signature_columns(conv, CANONICAL, with_simhash=True)
     is_new = F.col("conv_id").isin(new_ids)
     old, new = signed.filter(~is_new), signed.filter(is_new)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -190,6 +188,68 @@ def test_delta_semi_joins_broadcast_the_new_keys(spark):
             assert not merge_semi, (name, merge_semi)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_delta_df_cap_counts_only_new_shingles(spark):
+    """The general-containment df cap is aggregated after the broadcast
+    new-shingle semi-join in a delta: every ``sh``-keyed count aggregate
+    has a broadcast LeftSemi join beneath it, so the df shuffle holds the
+    delta's shingles, not every prior shingle."""
+    import re
+
+    from bibexpy_spark import corpus
+    from bibexpy_spark.config import CANONICAL
+    from bibexpy_spark.functions import udfs
+    from bibexpy_spark.operators import assembly, containment
+
+    turns_pd = corpus.generate_transcripts(60, seed=7)
+    new_ids = sorted(set(turns_pd["conv_id"]))[::20]
+    signed = udfs.with_signature_columns(
+        assembly.assemble_docs(spark.createDataFrame(turns_pd)), CANONICAL
+    )
+    is_new = F.col("conv_id").isin(new_ids)
+    df = containment.general_containment_pairs(
+        signed.filter(is_new), CANONICAL, signed.filter(~is_new)
+    )
+    lines = df._jdf.queryExecution().sparkPlan().toString().splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    aggs = [
+        i for i, line in enumerate(lines)
+        if re.search(r"HashAggregate\(keys=\[sh#\d+L\], functions=\[(partial_)?count", line)
+    ]
+    assert aggs
+    for i in aggs:
+        below = []
+        for line in lines[i + 1:]:
+            if depth(line) <= depth(lines[i]):
+                break
+            below.append(line)
+        assert any(
+            "BroadcastHashJoin" in line and "LeftSemi" in line for line in below
+        ), lines[i]
+
+
+def test_sign_plan_evaluates_one_udf(spark):
+    """The sign stage's projection runs ONE Python UDF in ONE
+    ArrowEvalPython node, with no UDF chained into another's input, so
+    each kernel runs once per batch."""
+    import re
+
+    from bibexpy_spark import corpus
+    from bibexpy_spark.config import CANONICAL
+    from bibexpy_spark.functions import udfs
+    from bibexpy_spark.operators import assembly
+
+    turns = spark.createDataFrame(corpus.generate_transcripts(20, seed=3))
+    conv = assembly.assemble_docs(turns, include_roles_tools=True)
+    signed = udfs.with_signature_columns(conv, CANONICAL, with_simhash=True)
+    plan = signed.drop("doc")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert len(set(re.findall(r"pythonUDF\d+#", plan))) == 1
+    assert plan.count("sign(") == 1
 
 
 def test_assembly_projection_is_codegen_native(spark):

@@ -35,6 +35,18 @@ def test_normalize_output_charset(texts):
         assert "  " not in v and v == v.strip()
 
 
+@given(st.lists(st.tuples(text_st, text_st, text_st), min_size=1, max_size=10))
+@settings(max_examples=100, deadline=None)
+def test_normalize_of_joined_parts_joins_normalized_parts(triples):
+    """Normalizing (doc, roles, tools) joined by spaces equals joining the
+    non-empty normalized parts: the identity that lets the signing UDF
+    build the SimHash feature from the already-normalized doc."""
+    joined = kernels.normalize_text(pd.Series([" ".join(t) for t in triples]), CANONICAL)
+    parts = [kernels.normalize_text(pd.Series(p), CANONICAL) for p in zip(*triples)]
+    want = [" ".join(filter(None, row)) for row in zip(*parts)]
+    assert joined.tolist() == want
+
+
 @given(st.lists(text_st, min_size=1, max_size=16))
 @settings(max_examples=30, deadline=None)
 def test_shingles_batch_equals_single(texts):

@@ -4,9 +4,10 @@ The system's entry points are the batch pipeline, the delta fold, the
 stream, the spark-submit job, the benchmark and the measurement tools.
 Following their imports (module level and inside functions) must reach
 every module under ``bibexpy_spark/`` except the test references, every
-function a reference defines must be named by some test, and every
-``DedupConfig`` field must be read by a reached module other than
-``config.py``.  Code or an option that nothing reaches fails here instead
+function a reference defines must be named by some test, every top-level
+function or class of a reached module must be named by reached code
+outside its own definition, and every ``DedupConfig`` field must be read
+by a reached module other than ``config.py``.  Code or an option that nothing reaches fails here instead
 of lingering.
 """
 
@@ -125,6 +126,50 @@ def test_every_reference_function_is_compared():
         for ref in REFERENCES for name in _uncompared(ref, test_names)
     )
     assert not uncompared, f"reference functions no test compares: {uncompared}"
+
+
+# top-level names only tests call, each with the reason it stays
+TEST_ONLY = {
+    # the path of a generated scale-factor corpus, a plan-test fixture
+    "corpus_path_for_sf",
+    # the driver-side spec of the JVM ``sha2`` content_sha column, which
+    # the golden tests compare both against
+    "content_sha256",
+    # the brute-force containment oracle the pass is compared against
+    "containment_pairs",
+}
+
+
+def _references(tree: ast.AST, local: bool) -> set[str]:
+    """Names code refers to: attributes and imported names, plus bare names
+    when ``local`` (the code shares the definer's module).  A docstring word,
+    a keyword argument or another module's local variable is no reference."""
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and local:
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_every_function_is_used_by_the_system():
+    # a function kept alive by tests alone is dead code with a test
+    trees = {f: ast.parse(f.read_text()) for f in _reached()}
+    unused = []
+    for f in sorted(trees.keys() - REFERENCES - set(ENTRY_POINTS)):
+        body = trees[f].body
+        used = set().union(*(_references(t, False) for g, t in trees.items() if g != f))
+        for node in body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            # other code of the same module counts, the definition does not
+            here = set().union(*(_references(o, True) for o in body if o is not node))
+            if node.name not in TEST_ONLY | used | here:
+                unused.append(f"{f.relative_to(ROOT)}:{node.name}")
+    assert not unused, f"functions only tests name: {unused}"
 
 
 def test_every_config_field_is_read():

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from bibexpy_spark import corpus, pipeline
 from bibexpy_spark.config import DedupConfig
+from bibexpy_spark.functions import udfs
 from bibexpy_spark.operators import assembly, exact, lsh, simhash
 
 
@@ -111,8 +112,9 @@ def test_star_fallback_bounds_candidates_and_keeps_recall(spark, skew_corpus):
         F.posexplode("band_hashes").alias("band_idx", "band_hash"),
     )
     simmed = _split(
-        simhash.with_simhash(
-            assembly.assemble_docs(skew_corpus, include_roles_tools=True), cfg
+        udfs.with_signature_columns(
+            assembly.assemble_docs(skew_corpus, include_roles_tools=True), cfg,
+            with_simhash=True,
         )
     )
     chunk_keyed = simhash._chunked(simmed, cfg, "conv_id", "simhash", "_is_new")
